@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is fully materialized through the `noop`
   * sink (a bare `count()` would let Catalyst prune most of the plan and time
@@ -19,37 +17,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Pin lifecycle (round 17): every execution releases its pinned
-    // localCheckpoint blocks once the noop sink has materialized. Without
-    // this the pins of 266 queries × 4 executions × 2 legs accumulate in
-    // the block manager for the life of the JVM — round 16's record showed
-    // the cost as a contiguous 5–17× regression band in the SECOND leg
-    // (q68–q83, incl. queries whose code hadn't changed), with q78 at
-    // 18.4 s median-of-3 vs 0.84 s solo.
-    def run(name: String, dir: String): Unit =
-      try SparkEntry.queries(name)(spark, dir)
-        .write.mode("overwrite").format("noop").save()
-      finally Pin.release(spark.sparkContext)
-
-    /** Warm up and time the full suite at one scale factor. */
-    // optional comma-separated subset for targeted local timing
-    // (driver leaves it unset → full suite)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
+    val sfDir = Runner.sfDir
+    val spark = Runner.session()
+    val names = Runner.selected
 
     // A suite pass returns (per-query medians, warmup wall, timed wall):
     // `warmup_wall` = table caching + the untimed warm-up execution of
@@ -60,66 +30,49 @@ object Bench {
     // record self-explaining: warm-up cost (JIT/codegen, paid once per
     // plan, amortized to nothing on a long-running cluster) is reported
     // apart from the steady-state cost capacity planning reads.
-    // SPARK_GRAFT_COLD=1 (round 20): skip the in-memory table cache so the
-    // timed runs pay the parquet scan — the leg that makes §6 I/O work
-    // (pushdown, pruning, split sizing) measurable at all. The DEFAULT
-    // (unset) keeps the historical hot-table methodology byte-for-byte, so
-    // the driver's round-over-round comparison stays like-for-like; the
-    // cold leg is a SEPARATE record cut locally (BENCH_r20_cold_local).
-    // Everything else (untimed per-query warmup for JIT/codegen,
-    // median-of-3) is identical in both modes.
-    val cold = sys.env.get("SPARK_GRAFT_COLD").exists(_.nonEmpty)
+    // Cold (SPARK_GRAFT_COLD, see Runner) and hot runs differ only in the
+    // table cache; warm-up and median-of-3 are identical in both modes.
+    def run(name: String, dir: String): Unit =
+      Runner.execute(spark, name, dir)(Runner.noop)
     def suite(dir: String): (Seq[(String, Double)], Double, Double) = {
-      // warmup: cache every input table in memory (columnar, pruned per
-      // query via CacheManager's canonicalized-plan matching — any query
-      // reading the same parquet path hits the cache automatically). Timed
-      // queries then measure operator compute, not repeated file scans; on
-      // a real cluster this is the hot-table pattern (cache / Delta caching
-      // / alluxio).
       val warm0 = System.nanoTime()
-      val tables = Seq(
-        Tables.lineitem(spark, dir), Tables.orders(spark, dir),
-        Tables.customer(spark, dir), Tables.part(spark, dir),
-        Tables.supplier(spark, dir), Tables.nation(spark, dir),
-        Tables.region(spark, dir), Tables.documents(spark, dir),
-        Tables.embeddings(spark, dir), Tables.events(spark, dir))
-      if (!cold) tables.foreach(t => t.cache().count())
-      // one untimed warm-up execution of EVERY query: the first run of a
-      // plan pays whole-stage-codegen compilation + JIT tiers (2-3× steady
-      // state — measured, not guessed). The timed MEDIAN-OF-3 below then
-      // reads steady-state operator compute with one-off stalls (GC, this
-      // container's measured 2× run-to-run noise — r6: q72 timed 0.09 s
-      // and 2.34 s on identical code) voted out, which is the number that
-      // projects to a long-running cluster where plans are compiled once
-      // and run for hours.
-      for (w <- names)
-        // name printed BEFORE the run so a hung/killed bench (rc=124) has
-        // an attributable tail — the round-10 q231 timeout was only
-        // root-caused by bisection because nothing named the query in flight
-        try { System.err.println(s"[bench] warmup $w"); run(w, dir) } catch {
-          // logged, not rethrown: a deterministically-failing query still
-          // gets its timed runs below (which report -1), but the warm-up
-          // failure must not be invisible in the bench tail
-          case e: Throwable => System.err.println(
-            s"[bench] warmup $w failed: ${e.getClass.getName}: ${e.getMessage}")
-        }
-      val timed0 = System.nanoTime()
-      val warmupWall = (timed0 - warm0) / 1e9
-      val results = names.map { name =>
-        System.err.println(s"[bench] timing $name")
-        val times = (1 to 3).flatMap { _ =>
-          val t0 = System.nanoTime()
-          try { run(name, dir); Some((System.nanoTime() - t0) / 1e9) } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
+      Runner.withHotTables(spark, dir) {
+        // one untimed warm-up execution of EVERY query: the first run of a
+        // plan pays whole-stage-codegen compilation + JIT tiers (2-3× steady
+        // state — measured, not guessed). The timed MEDIAN-OF-3 below then
+        // reads steady-state operator compute with one-off stalls (GC, this
+        // container's measured 2× run-to-run noise — r6: q72 timed 0.09 s
+        // and 2.34 s on identical code) voted out, which is the number that
+        // projects to a long-running cluster where plans are compiled once
+        // and run for hours.
+        for (w <- names)
+          // name printed BEFORE the run so a hung/killed bench (rc=124) has
+          // an attributable tail — the round-10 q231 timeout was only
+          // root-caused by bisection because nothing named the query in flight
+          try { System.err.println(s"[bench] warmup $w"); run(w, dir) } catch {
+            // logged, not rethrown: a deterministically-failing query still
+            // gets its timed runs below (which report -1), but the warm-up
+            // failure must not be invisible in the bench tail
+            case e: Throwable => System.err.println(
+              s"[bench] warmup $w failed: ${e.getClass.getName}: ${e.getMessage}")
           }
+        val timed0 = System.nanoTime()
+        val warmupWall = (timed0 - warm0) / 1e9
+        val results = names.map { name =>
+          System.err.println(s"[bench] timing $name")
+          val times = (1 to 3).flatMap { _ =>
+            val t0 = System.nanoTime()
+            try { run(name, dir); Some((System.nanoTime() - t0) / 1e9) } catch {
+              case e: Throwable =>
+                System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
+            }
+          }
+          // median of the successful runs (middle of 3, lower-middle of 2)
+          name -> (if (times.nonEmpty) times.sorted.apply((times.size - 1) / 2)
+                   else -1.0)
         }
-        // median of the successful runs (middle of 3, lower-middle of 2)
-        name -> (if (times.nonEmpty) times.sorted.apply((times.size - 1) / 2)
-                 else -1.0)
+        (results, warmupWall, (System.nanoTime() - timed0) / 1e9)
       }
-      if (!cold) tables.foreach(_.unpersist())
-      (results, warmupWall, (System.nanoTime() - timed0) / 1e9)
     }
 
     def json(rs: Seq[(String, Double)]): String =

@@ -26,11 +26,12 @@ import org.apache.spark.sql.DataFrame
   * accumulates every pin ever taken in the block manager; round 16
   * measured the fallout as a contiguous 5–17× wall regression band in the
   * second bench leg (q68–q83, queries whose code hadn't changed). The
-  * harness contract is therefore: the DRIVER of a query (Bench, Verify, a
-  * long-running service loop) calls `Pin.release(sc)` once the query's
-  * sink has materialized. Releasing is safe exactly then — each fresh
-  * query call re-derives and re-pins its own frames — and unsafe earlier
-  * (lineage is truncated, so a released pin cannot be recomputed).
+  * harness contract is therefore: the RUNNER of a query (the mains, through
+  * [[Runner.execute]]; a long-running service loop) calls `Pin.release(sc)`
+  * once the query's sink has materialized. Releasing is safe exactly then —
+  * each fresh query call re-derives and re-pins its own frames — and
+  * unsafe earlier (lineage is truncated, so a released pin cannot be
+  * recomputed).
   */
 object Pin {
   /** RDD ids persisted by [[apply]] since the last [[release]], scoped PER

@@ -595,12 +595,13 @@ object SparkEntry {
           graft.functions.ZOrder.zValue(col("l_partkey"), col("l_suppkey"))
             .as("zval"))),
     // per-file statistics manifest (the data-skipping metadata a lakehouse
-    // table format maintains) via input_file_name grouping — a scan-stage
-    // expression, so this query must stay a bare table scan (no Spread/
-    // repartition above it: input_file_name() is "" past an exchange)
+    // table format maintains) grouped by the file-source metadata column:
+    // unlike input_file_name() it is part of the scan's output, so it
+    // survives exchanges and keeps the scan off a cached copy of the table
+    // (input_file_name() reads "" on an InMemoryRelation)
     "q92_file_manifest" -> ((s: SparkSession, d: String) =>
       Tables.lineitem(s, d)
-        .groupBy(regexp_extract(input_file_name(), "[^/]+$", 0).as("file"))
+        .groupBy(col("_metadata.file_name").as("file"))
         .agg(count(lit(1)).as("n_rows"),
           min(col("l_orderkey")).as("min_orderkey"),
           max(col("l_orderkey")).as("max_orderkey"))),

@@ -4,6 +4,10 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
+  * Any failed query makes the run exit non-zero, naming the failed queries
+  * on stderr — after every other query's dump and oracle_sql.json are
+  * written.
+  *
   * `graft.Verify --oracle-only <outDir>` writes JUST oracle_sql.json (no
   * SparkSession, instant) — for re-checking an existing result dump after
   * an oracle-SQL-only edit, instead of re-running every query.
@@ -14,35 +18,34 @@ object Verify {
       writeOracleJson(args(1)); return
     }
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as ns longs (see Tables)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // optional comma-separated subset for local iteration (driver unsets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val spark = Runner.session()
+    val failed = try dump(spark, sfDir, outDir, Runner.selected)
+      finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} queries failed: ${failed.mkString(" ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes each named query's result to `<outDir>/<name>` and then
+    * oracle_sql.json; a failing query is logged and skipped. Returns the
+    * names of the queries that failed.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           names: Seq[String]): Seq[String] = {
+    val failed = names.filterNot { name =>
+      try {
+        Runner.execute(spark, name, sfDir)(
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        true
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        false
       }
-      // free this query's pinned localCheckpoint blocks (the Bench
-      // lifecycle contract — safe once the parquet sink materialized)
-      finally Pin.release(spark.sparkContext)
     }
     writeOracleJson(outDir)
-    spark.stop()
+    failed
   }
 
   private def writeOracleJson(outDir: String): Unit = {

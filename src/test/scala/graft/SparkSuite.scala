@@ -7,14 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * fan-out, ns-as-long parquet (events table).
   */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new GraftExtensions)
-    .master("local[4]")
+  lazy val spark: SparkSession = Runner.builder(4)
     .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir",
       s"/tmp/graft-warehouse-${sys.props.getOrElse("user.name", "x")}")
     .getOrCreate()
