@@ -61,11 +61,97 @@ object Assets {
   /** Stamp `digest` into `keyCol`'s metadata, PRESERVING the geometry
     * metadata the builders already wrote (k/bands/n/minJaccard).
     */
-  def stamp(asset: DataFrame, keyCol: String, digest: Long): DataFrame = {
-    val merged = new MetadataBuilder()
-      .withMetadata(asset.schema(keyCol).metadata)
-      .putLong(DigestKey, digest).build()
-    asset.withColumn(keyCol, col(keyCol).as(keyCol, merged))
+  def stamp(asset: DataFrame, keyCol: String, digest: Long): DataFrame =
+    withGeometry(asset, keyCol, Seq(DigestKey -> digest))
+
+  /** Stamp an asset's build GEOMETRY (the parameters a probe or an
+    * advance must match: k/bands/n/minJaccard, or the dHash raster's
+    * w/h/bands) into `keyCol`'s metadata, next to whatever the column
+    * already carries. Spark persists field metadata through parquet (the
+    * row.metadata footer), so a reloaded asset still names the geometry
+    * it was built with. Integral values are stored as longs, fractional
+    * ones as doubles.
+    */
+  private[graft] def withGeometry(asset: DataFrame, keyCol: String,
+                                  geom: Seq[(String, AnyVal)]): DataFrame = {
+    val b = new MetadataBuilder().withMetadata(asset.schema(keyCol).metadata)
+    for ((name, v) <- geom) stored(v) match {
+      case d: Double => b.putDouble(name, d)
+      case l: Long => b.putLong(name, l)
+    }
+    asset.withColumn(keyCol, col(keyCol).as(keyCol, b.build()))
+  }
+
+  /** A geometry value as metadata stores it: Double, or widened to Long. */
+  private def stored(v: AnyVal): AnyVal = v match {
+    case d: Double => d
+    case x => x.asInstanceOf[Number].longValue
+  }
+
+  /** Fails loudly unless `keyCol` carries every [[withGeometry]] entry of
+    * `geom` with the caller's value — checked in order, before any join
+    * runs. Probing (or advancing) an index with other parameters would
+    * silently match zero bands, union incomparable signatures, or mix
+    * clusterings; ABSENT metadata is an error too (round-17 hardening): a
+    * frame whose column metadata was stripped by a select/union transform
+    * or a non-Spark writer would otherwise skip the check.
+    */
+  private[graft] def requireGeometry(asset: DataFrame, keyCol: String,
+                                     what: String,
+                                     geom: Seq[(String, AnyVal)]): Unit = {
+    val meta = asset.schema(keyCol).metadata
+    for ((name, v) <- geom) {
+      require(meta.contains(name),
+        s"$what has no '$name' geometry metadata on '$keyCol' — rebuild it " +
+          "with its builder (or re-attach the metadata); an unlabeled " +
+          "asset cannot be validated")
+      val want = stored(v)
+      val got = want match {
+        case _: Double => meta.getDouble(name)
+        case _ => meta.getLong(name)
+      }
+      require(got == want,
+        s"$what was built with $name=$got, the caller has $name=$want — " +
+          "rebuild it or match the caller")
+    }
+  }
+
+  /** Loud id-disjointness guard shared by every advance: an admission
+    * delta re-containing an already-indexed id would leave TWO asset rows
+    * for one id after the union — a from-scratch build has one, so the
+    * advanced asset would silently fork from the rebuild (double-counted
+    * candidates, duplicate gate pairs). One broadcast anti-join probe
+    * over the asset's id column — index-grain, never corpus text; the
+    * advance publish rewrites the asset anyway, so the check does not
+    * change the cost class.
+    */
+  private[graft] def requireDisjointIds(asset: DataFrame, delta: DataFrame,
+                                        idCol: String, what: String): Unit = {
+    val overlap = asset.select(col(idCol))
+      .join(broadcast(delta.select(col(idCol)).distinct()), idCol)
+      .limit(1).collect()
+    require(overlap.isEmpty,
+      s"$what advance: delta re-contains indexed $idCol " +
+        s"${overlap.headOption.map(_.getLong(0)).getOrElse(-1L)} — a " +
+        "delta must be NEW rows only; rebuild the asset for a corpus " +
+        "rewrite")
+  }
+
+  /** The advance body of a PER-ROW asset (the MinHash band index, the
+    * dHash index): each row is a pure function of one document, so the
+    * new version is exactly the old rows plus `build(delta)` — value-
+    * identical to a from-scratch build on the grown corpus, at delta
+    * cost. Geometry rides from the old asset through the union; a
+    * geometry mismatch or an id the asset already holds fails loudly
+    * before any union.
+    */
+  private[graft] def advanceRows(asset: DataFrame, delta: DataFrame,
+                                 keyCol: String, what: String,
+                                 geom: Seq[(String, AnyVal)])
+                                (build: DataFrame => DataFrame): DataFrame = {
+    requireGeometry(asset, keyCol, what, geom)
+    requireDisjointIds(asset, delta, "doc_id", what)
+    asset.unionByName(build(delta))
   }
 
   /** Loud freshness gate: the asset must carry [[DigestKey]] metadata
@@ -77,8 +163,8 @@ object Assets {
     val meta = asset.schema(keyCol).metadata
     require(meta.contains(DigestKey),
       s"asset column '$keyCol' carries no '$DigestKey' metadata — build " +
-        "it through a Versioned builder (or Assets.stamp); an unstamped " +
-        "asset cannot be validated against the corpus")
+        "it through Assets.ensure/Assets.advance (or Assets.stamp); an " +
+        "unstamped asset cannot be validated against the corpus")
     require(meta.getLong(DigestKey) == digest,
       s"STALE asset: built at $DigestKey=${meta.getLong(DigestKey)}, the " +
         s"corpus is now at $digest — rebuild the asset (Assets.ensure " +

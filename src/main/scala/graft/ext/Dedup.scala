@@ -312,68 +312,87 @@ object Dedup {
   private[graft] def minhashNearDupsDistinct(docs: DataFrame, k: Int,
                                              bands: Int, n: Int,
                                              minJaccard: Double): DataFrame = {
-    // Verify = the array_intersect kernel on the per-doc DISTINCT code
-    // arrays (round 17 — the [[minhashNewVsIndex]] shape, one kernel for
-    // both verifiers): ONE row per candidate pair instead of the exploded
-    // shingle equi-join, whose |A∩B|-rows-per-pair intermediate amplified
-    // ~|shingles|× INSIDE its stage — invisible to AQE's byte heuristic,
-    // which coalesced the few-MB candidate exchange to 2 partitions and
-    // left 27 s of verify CPU on 2 of 32 cores (StageAudit, q264 at
-    // sf0.1). Integer-identical: the arrays are distinct, so
-    // size(array_intersect) IS the shingle-join match count and the
-    // jaccard division is the same IEEE op — every oracle hash unchanged.
-    // The explicit-count repartition pins the per-pair intersect's stage
+    // The explicit-count repartition pins the per-pair verify's stage
     // width (user repartitions are AQE-coalesce-exempt, the q206/IVF
-    // amplification discipline).
+    // amplification discipline): AQE's byte heuristic coalesced the
+    // few-MB candidate exchange to 2 partitions and left 27 s of verify
+    // CPU on 2 of 32 cores (StageAudit, q264 at sf0.1).
     val dp = docs.sparkSession.sparkContext.defaultParallelism
     // length(text) ≥ n ⟺ size(codes) > 0 (round 19): the size() form was
     // pushed down WITH the whole shingle_codes tree inlined, re-running
     // the kernel 3× per row (scan filter + FilterExec + project)
     val codes = docs.filter(length(col("text")) >= n)
       .select(col("doc_id"), shingleCodes(col("text"), n).as("codes"))
-    minhashLshCandidates(docs, k, bands, n)
+    jaccardVerified(minhashLshCandidates(docs, k, bands, n)
       .repartition(dp, col("doc_a"))
       .join(codes.select(col("doc_id").as("doc_a"),
         col("codes").as("codes_a")), "doc_a")
       .join(codes.select(col("doc_id").as("doc_b"),
-        col("codes").as("codes_b")), "doc_b")
-      // size-ratio prune BEFORE the intersect (round 20, guide §1.2
-      // per-task work): |A∩B| ≤ min and |A∪B| ≥ max, so J ≤ min/max —
-      // a candidate with min < t·max can never verify, and the exact
-      // intersect (a per-pair hash set over both arrays, the verify's
-      // whole cost) is skipped for it. The 1e-9 slack keeps the bound
-      // strictly NECESSARY against the jaccard division's last-ulp
-      // rounding (fp error ~1e-16 ≪ slack), so the surviving row set is
-      // provably unchanged. Sits below the inter projection, so Catalyst
-      // evaluates it first.
-      .filter(least(size(col("codes_a")), size(col("codes_b")))
-        .cast("double") >= (lit(minJaccard) - lit(1e-9)) *
-        greatest(size(col("codes_a")), size(col("codes_b"))).cast("double"))
-      .withColumn("inter",
-        size(array_intersect(col("codes_a"), col("codes_b"))).cast("long"))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("codes_a")) + size(col("codes_b")) - col("inter"))
-            .cast("double"))
-      .filter(col("jaccard") >= minJaccard)
+        col("codes").as("codes_b")), "doc_b"),
+      "codes_a", "codes_b", minJaccard)
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  /** Incremental near-dup pass (round 10): which NEW-batch docs are
-    * near-dups of an EXISTING corpus — the dedup-against-prior-crawl gate
-    * every refreshed training set runs before admitting a batch. Same
-    * banded-LSH prune + exact-Jaccard-on-candidates shape as
-    * [[minhashNearDups]], but the band join is NEW × CORPUS only:
-    * within-batch and within-corpus pairs never form. At 100 TB the
-    * corpus side's signatures and shingles are exactly the standing
-    * artifacts an incremental pipeline keeps materialized between
-    * batches — the per-batch cost is the new side's hashing plus one
-    * band join against a static table, independent of how many batches
-    * came before.
+  /** Exact-Jaccard verify of candidate pairs carrying two DISTINCT
+    * shingle-code arrays (columns `a`, `b`) — the one verify of every
+    * MinHash pair producer and gate, batch and streaming. Adds `inter`
+    * and `jaccard`, keeps rows with jaccard ≥ `minJaccard`.
     *
-    * @return (new_id, corpus_id, jaccard) for candidate pairs whose exact
-    *         shingle Jaccard ≥ `minJaccard`
+    * The array_intersect kernel (round 17) makes ONE row per candidate
+    * pair instead of the exploded shingle equi-join, whose
+    * |A∩B|-rows-per-pair intermediate amplified ~|shingles|× inside its
+    * stage. Integer-identical: the arrays are distinct, so
+    * size(array_intersect) IS the shingle-join match count and the
+    * jaccard division is the same IEEE op — every oracle hash unchanged.
+    *
+    * Size-ratio prune BEFORE the intersect (round 20): |A∩B| ≤ min and
+    * |A∪B| ≥ max, so J ≤ min/max — a candidate with min < t·max can
+    * never verify, and the exact intersect (a per-pair hash set over both
+    * arrays, the verify's whole cost) is skipped for it. The 1e-9 slack
+    * keeps the bound strictly NECESSARY against the jaccard division's
+    * last-ulp rounding (fp error ~1e-16 ≪ slack), so the surviving row
+    * set is provably unchanged. Per-row, so it is stream-safe.
     */
+  private[graft] def jaccardVerified(pairs: DataFrame, a: String, b: String,
+                                     minJaccard: Double): DataFrame = {
+    val (sa, sb) = (size(col(a)), size(col(b)))
+    pairs
+      .filter(least(sa, sb).cast("double") >=
+        (lit(minJaccard) - lit(1e-9)) * greatest(sa, sb).cast("double"))
+      .withColumn("inter", size(array_intersect(col(a), col(b))).cast("long"))
+      .withColumn("jaccard",
+        col("inter").cast("double") / (sa + sb - col("inter")).cast("double"))
+      .filter(col("jaccard") >= minJaccard)
+  }
+
+  /** The banded admission join shared by every new-×-corpus gate —
+    * MinHash and dHash, batch and streaming. `newSide` is (new_id,
+    * new_bands, …) and `corpusSide` is (corpus_id, corpus_bands, …): one
+    * array of `bands` band keys per doc; any other columns ride along.
+    * Both arrays explode and equi-join on (band, value), and a pair that
+    * matches in several bands is kept ONLY on its smallest matching band
+    * — decided per row from the two carried arrays, so every matching
+    * pair comes out exactly once with no aggregate. That makes the rule
+    * stateless on a stream (a streaming dropDuplicates would grow a state
+    * store forever) and spares a batch gate its pair-dedup shuffle.
+    *
+    * @return (new_id, new_bands, …, corpus_id, corpus_bands, …), one row
+    *         per pair sharing at least one band
+    */
+  private[graft] def bandPairs(newSide: DataFrame, corpusSide: DataFrame,
+                               bands: Int): DataFrame = {
+    def exploded(side: DataFrame, arr: String): DataFrame =
+      side.select(col("*"), posexplode(col(arr)).as(Seq("band", "v")))
+    exploded(newSide, "new_bands")
+      .join(exploded(corpusSide, "corpus_bands"), Seq("band", "v"))
+      .filter((0 until bands).map { j =>
+        when(col("band") > j,
+          element_at(col("new_bands"), j + 1) =!=
+            element_at(col("corpus_bands"), j + 1)).otherwise(lit(true))
+      }.reduce(_ && _))
+      .drop("band", "v")
+  }
+
   /** Near-duplicate CLUSTER readout: the [[minhashNearDups]] pair list
     * closed into connected components (transitive near-duplication — if
     * A≈B and B≈C, keeping both A and C still trains on the same content
@@ -400,6 +419,21 @@ object Dedup {
       minhashNearDupEdges(docs, k, bands, n, minJaccard),
       "n_docs", "docs_removed")
 
+  /** Incremental near-dup pass (round 10): which NEW-batch docs are
+    * near-dups of an EXISTING corpus — the dedup-against-prior-crawl gate
+    * every refreshed training set runs before admitting a batch. Same
+    * banded-LSH prune + exact-Jaccard-on-candidates shape as
+    * [[minhashNearDups]], but the band join is NEW × CORPUS only:
+    * within-batch and within-corpus pairs never form. At 100 TB the
+    * corpus side's signatures and shingles are exactly the standing
+    * artifacts an incremental pipeline keeps materialized between
+    * batches — the per-batch cost is the new side's hashing plus one
+    * band join against a static table, independent of how many batches
+    * came before.
+    *
+    * @return (new_id, corpus_id, jaccard) for candidate pairs whose exact
+    *         shingle Jaccard ≥ `minJaccard`
+    */
   def minhashNewVsCorpus(newDocs: DataFrame, corpus: DataFrame,
                          k: Int = 16, bands: Int = 4, n: Int = 3,
                          minJaccard: Double = 0.5): DataFrame = {
@@ -417,49 +451,41 @@ object Dedup {
       "new_id", "corpus_id", Seq("jaccard"))
   }
 
-  /** Uncollapsed gate body (see [[minhashNearDupsDistinct]]'s contract). */
+  /** Uncollapsed gate body (see [[minhashNearDupsDistinct]]'s contract):
+    * both sides as just-built band indexes, so the verify reads the same
+    * kernels a persisted index stores.
+    */
   private[graft] def minhashNewVsCorpusDistinct(
       newDocs: DataFrame, corpus: DataFrame, k: Int, bands: Int, n: Int,
-      minJaccard: Double): DataFrame = {
-    require(k % bands == 0, "band width must divide signature length")
-    // one-pass codegen'd band signatures (round 19, the
-    // minhashLshCandidates rewrite — see [[graft.functions.MinhashBandSigs]])
-    def banded(docs: DataFrame): DataFrame =
-      docs.select(
-        col("doc_id"),
-        posexplode(graft.functions.MinhashBandSigs
-          .bandSigsCol(col("text"), n, k, bands))
-          .as(Seq("band", "band_sig")))
-    val cands = banded(newDocs).as("x").join(banded(corpus).as("y"),
-        col("x.band") === col("y.band") &&
-          col("x.band_sig") === col("y.band_sig"))
-      .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("corpus_id"))
-      .distinct()
-      // explicit-count repartition before the per-pair verify — the
-      // minhashNearDupsDistinct AQE-blind-spot fix, same reasoning
-      .repartition(newDocs.sparkSession.sparkContext.defaultParallelism,
+      minJaccard: Double): DataFrame =
+    minhashIndexGate(buildBandIndex(newDocs, k, bands, n),
+      buildBandIndex(corpus, k, bands, n), bands, minJaccard)
+
+  /** The batch MinHash gate over two [[buildBandIndex]] frames:
+    * [[bandPairs]] on (id, band_sigs) only, then exact Jaccard on the
+    * stored code arrays. The code arrays never ride the bands× explode
+    * (round 17: that shape shuffled gigabytes for q270 at the 10× point);
+    * they re-attach per SIDE per PAIR after the band join, and parquet
+    * column pruning makes a persisted index's second scan read just
+    * (doc_id, codes). The explicit-count repartition before the per-pair
+    * verify is the [[minhashNearDupsDistinct]] AQE-blind-spot discipline.
+    */
+  private def minhashIndexGate(newIdx: DataFrame, corpusIdx: DataFrame,
+                               bands: Int, minJaccard: Double): DataFrame = {
+    val pairs = bandPairs(
+        newIdx.select(col("doc_id").as("new_id"),
+          col("band_sigs").as("new_bands")),
+        corpusIdx.select(col("doc_id").as("corpus_id"),
+          col("band_sigs").as("corpus_bands")), bands)
+      .select(col("new_id"), col("corpus_id"))
+      .repartition(newIdx.sparkSession.sparkContext.defaultParallelism,
         col("new_id"))
-    // verify = the array_intersect kernel on distinct code arrays (the
-    // one verify shape shared with minhashNearDupsDistinct and
-    // minhashNewVsIndex) — integer-identical to the shingle equi-join
-    def codesOf(docs: DataFrame): DataFrame = docs
-      // length form for the same reason as minhashNearDupsDistinct's
-      // codes frame (kernel would otherwise inline into the pushed filter)
-      .filter(length(col("text")) >= n)
-      .select(col("doc_id"), shingleCodes(col("text"), n).as("codes"))
-    cands
-      .join(codesOf(newDocs).select(col("doc_id").as("new_id"),
-        col("codes").as("codes_n")), "new_id")
-      .join(codesOf(corpus).select(col("doc_id").as("corpus_id"),
-        col("codes").as("codes_c")), "corpus_id")
-      .withColumn("inter",
-        size(array_intersect(col("codes_n"), col("codes_c"))).cast("long"))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("codes_n")) + size(col("codes_c")) - col("inter"))
-            .cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select("new_id", "corpus_id", "jaccard")
+      .join(newIdx.select(col("doc_id").as("new_id"),
+        col("codes").as("new_codes")), "new_id")
+      .join(corpusIdx.select(col("doc_id").as("corpus_id"),
+        col("codes").as("corpus_codes")), "corpus_id")
+    jaccardVerified(pairs, "new_codes", "corpus_codes", minJaccard)
+      .select(col("new_id"), col("corpus_id"), col("jaccard"))
   }
 
   /** The standing MinHash band INDEX of a corpus — the 100 TB asset shape.
@@ -481,12 +507,6 @@ object Dedup {
   def buildBandIndex(corpus: DataFrame, k: Int = 16, bands: Int = 4,
                      n: Int = 3): DataFrame = {
     require(k % bands == 0, "band width must divide signature length")
-    // the index GEOMETRY (k/bands/n) rides as column metadata — Spark
-    // persists field metadata through parquet (the row.metadata footer),
-    // so [[minhashNewVsIndex]] can fail loudly when probed with
-    // mismatched parameters instead of silently matching zero bands
-    val geom = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("k", k).putLong("bands", bands).putLong("n", n).build()
     // round 19: band_sigs via the one-pass codegen kernel (bit-parity
     // spec'd in MinhashKernelSpec), and the shingle-presence filter as a
     // cheap length() predicate — length(text) ≥ n ⟺ size(codes) > 0 (the
@@ -494,19 +514,25 @@ object Dedup {
     // dropped either way). The previous size(codes) > 0 form was pushed
     // into the parquet scan WITH the whole shingle_codes tree inlined,
     // re-evaluating it per row per consumer.
-    corpus
+    // The index GEOMETRY (k/bands/n) rides as band_sigs metadata, so
+    // [[minhashNewVsIndex]] fails loudly when probed with mismatched
+    // parameters instead of silently matching zero bands.
+    Assets.withGeometry(corpus
       .filter(length(col("text")) >= n)
       .select(col("doc_id"), shingleCodes(col("text"), n).as("codes"),
         graft.functions.MinhashBandSigs.bandSigsCol(col("text"), n, k, bands)
-          .as("band_sigs", geom))
+          .as("band_sigs")),
+      "band_sigs", bandGeometry(k, bands, n))
   }
+
+  private def bandGeometry(k: Int, bands: Int, n: Int): Seq[(String, AnyVal)] =
+    Seq("k" -> k, "bands" -> bands, "n" -> n)
 
   /** The admission gate against a PERSISTED [[buildBandIndex]] frame —
     * [[minhashNewVsCorpus]]'s exact output contract without touching
-    * corpus text. Candidates come from the stream-static-shaped band
-    * join; exact Jaccard comes from the STORED shingle sets
-    * (array_intersect on distinct code arrays ≡ the shingle-join
-    * count — integer-identical, so the division is the same IEEE op).
+    * corpus text. Candidates come from [[bandPairs]]; exact Jaccard
+    * comes from the STORED shingle sets ([[jaccardVerified]]). The index
+    * must carry the probe's k/bands/n geometry.
     * The NEW side still exact-collapses (a crawl refresh re-fetches
     * popular pages m× — reps ride the band join, members expand after);
     * the corpus side needs no collapse here because new×index candidate
@@ -515,95 +541,14 @@ object Dedup {
   def minhashNewVsIndex(newDocs: DataFrame, index: DataFrame, k: Int = 16,
                         bands: Int = 4, n: Int = 3,
                         minJaccard: Double = 0.5): DataFrame = {
-    // geometry cross-check against the metadata [[buildBandIndex]] wrote
-    // (survives the parquet round-trip): probing a k=16/bands=4/n=3 index
-    // with bands=8 would silently match zero band positions and drop
-    // every near-dup — the derive-vs-stored divergence class the IVF
-    // index's is_centroid flag guards against
-    val meta = index.schema("band_sigs").metadata
-    for ((name, want) <- Seq("k" -> k, "bands" -> bands, "n" -> n)) {
-      // absent metadata fails too (round-17 hardening): a frame whose
-      // column metadata was stripped (select/union transforms, non-Spark
-      // parquet writers) would otherwise SKIP the check — and a
-      // mis-parameterized probe against it silently matches zero bands,
-      // the exact failure this guard exists to prevent
-      require(meta.contains(name),
-        s"index has no '$name' geometry metadata — rebuild it with " +
-          "buildBandIndex (or re-attach the band_sigs metadata); probing " +
-          "an unlabeled index cannot be validated")
-      require(meta.getLong(name) == want,
-        s"index was built with $name=${meta.getLong(name)}, probed " +
-          s"with $name=$want — rebuild the index or match the caller")
-    }
+    Assets.requireGeometry(index, "band_sigs", "band index",
+      bandGeometry(k, bands, n))
     val (mNew, rNew) = textCollapsed(newDocs, n)
-    val newIdx = buildBandIndex(rNew, k, bands, n)
-    // the band join carries ONLY (id, band, band_sig) — round 17: the
-    // previous shape rode the full per-doc code array through the bands×
-    // explode and its shuffle (bands× duplication of kilobyte arrays; at
-    // the 10× sweep point that was gigabytes of shuffle for q270). Codes
-    // re-attach per SIDE per PAIR below, after multi-band dedup — parquet
-    // column pruning means the second index scan reads just (doc_id,
-    // codes), the columnar layout's whole point.
-    def bandsOnly(df: DataFrame, idAs: String): DataFrame =
-      df.select(col("doc_id").as(idAs),
-        posexplode(col("band_sigs")).as(Seq("band", "band_sig")))
-    val repPairs = bandsOnly(newIdx, "new_id")
-      .join(bandsOnly(index, "corpus_id"), Seq("band", "band_sig"))
-      .select(col("new_id"), col("corpus_id"))
-      // multi-band matches collapse here; codes are per-id constants so
-      // the pair key alone decides distinctness
-      .dropDuplicates("new_id", "corpus_id")
-      // explicit-count repartition before the per-pair verify (the
-      // minhashNearDupsDistinct AQE-blind-spot discipline)
-      .repartition(newDocs.sparkSession.sparkContext.defaultParallelism,
-        col("new_id"))
-      .join(newIdx.select(col("doc_id").as("new_id"),
-        col("codes").as("codes_new")), "new_id")
-      .join(index.select(col("doc_id").as("corpus_id"),
-        col("codes").as("codes_cor")), "corpus_id")
-      .withColumn("inter",
-        size(array_intersect(col("codes_new"), col("codes_cor")))
-          .cast("long"))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("codes_new")) + size(col("codes_cor")) - col("inter"))
-            .cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("new_id"), col("corpus_id"), col("jaccard"))
-    ExactCollapse.expandOrdered(repPairs, mNew,
-      index.select(col("doc_id"), col("doc_id")),
+    ExactCollapse.expandOrdered(
+      minhashIndexGate(buildBandIndex(rNew, k, bands, n), index, bands,
+        minJaccard),
+      mNew, index.select(col("doc_id"), col("doc_id")),
       "new_id", "corpus_id", Seq("jaccard"))
-  }
-
-  /** [[buildBandIndex]] stamped with the corpus's q222 content digest
-    * (round 18): the versioned form [[Assets.ensure]] persists once per
-    * (corpus digest, geometry) and serves to every later probe. Eager on
-    * the digest (one scan-bound aggregation) — build time, not probe time.
-    */
-  def buildBandIndexVersioned(corpus: DataFrame, k: Int = 16,
-                              bands: Int = 4, n: Int = 3): DataFrame =
-    Assets.stamp(buildBandIndex(corpus, k, bands, n), "band_sigs",
-      Assets.textDigest(corpus))
-
-  /** Loud id-disjointness guard shared by the advance builders: an
-    * admission delta re-containing an already-indexed id would leave TWO
-    * index rows for one doc after the union — a from-scratch build has
-    * one, so the advanced asset would silently fork from the rebuild
-    * (double-counted candidates, duplicate gate pairs). One broadcast
-    * anti-join probe over the asset's id column — index-grain, never
-    * corpus text; the advance publish rewrites the index anyway, so the
-    * check does not change the cost class.
-    */
-  private def requireDisjointIds(asset: DataFrame, delta: DataFrame,
-                                 what: String): Unit = {
-    val overlap = asset.select(col("doc_id"))
-      .join(broadcast(delta.select(col("doc_id")).distinct()), "doc_id")
-      .limit(1).collect()
-    require(overlap.isEmpty,
-      s"$what advance: delta re-contains indexed doc_id " +
-        s"${overlap.headOption.map(_.getLong(0)).getOrElse(-1L)} — a " +
-        "delta must be NEW docs only; rebuild the asset for a corpus " +
-        "rewrite")
   }
 
   /** Incremental maintenance of a standing [[buildBandIndex]] asset —
@@ -616,21 +561,12 @@ object Dedup {
     * through a real parquet round-trip; q276's oracle holds the probe to
     * the from-scratch hashes). Geometry metadata rides from the old
     * index through the union; a geometry-mismatched advance fails loudly
-    * below instead of unioning incomparable signatures.
+    * instead of unioning incomparable signatures ([[Assets.advanceRows]]).
     */
   def advanceBandIndex(index: DataFrame, delta: DataFrame, k: Int = 16,
-                       bands: Int = 4, n: Int = 3): DataFrame = {
-    val meta = index.schema("band_sigs").metadata
-    for ((name, want) <- Seq("k" -> k, "bands" -> bands, "n" -> n)) {
-      require(meta.contains(name) && meta.getLong(name) == want,
-        s"band index advance: index geometry '$name' is " +
-          s"${if (meta.contains(name)) meta.getLong(name).toString
-             else "absent"}, advancing with $name=$want would union " +
-          "incomparable signatures — match the index or rebuild")
-    }
-    requireDisjointIds(index, delta, "band index")
-    index.unionByName(buildBandIndex(delta, k, bands, n))
-  }
+                       bands: Int = 4, n: Int = 3): DataFrame =
+    Assets.advanceRows(index, delta, "band_sigs", "band index",
+      bandGeometry(k, bands, n))(buildBandIndex(_, k, bands, n))
 
   /** [[minhashNewVsIndex]] behind the freshness gate: `digest` is the
     * admitting corpus's CURRENT digest (catalog-served at scale, see
@@ -924,23 +860,35 @@ object Dedup {
 
   private def dhashPairsFromBands(hash: DataFrame, maxDist: Int): DataFrame = {
     val banded = hash.select(col("doc_id"),
-      posexplode(array((0 until DhashBands).map(b => col(s"b$b")): _*))
+      posexplode(dhashArray)
         .as(Seq("band", "v")))
     val cands = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.v") === col("y.v") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    val ha = hash.toDF("doc_a" +: (0 until DhashBands).map(b => s"a$b"): _*)
-    val hb = hash.toDF("doc_b" +: (0 until DhashBands).map(b => s"c$b"): _*)
-    cands.join(ha, "doc_a").join(hb, "doc_b")
-      .withColumn("hamming",
-        (0 until DhashBands)
-          .map(b => bit_count(col(s"a$b").bitwiseXOR(col(s"c$b"))))
-          .reduce(_ + _).cast("long"))
+    cands
+      .join(hash.select(col("doc_id").as("doc_a"), dhashArray.as("a")),
+        "doc_a")
+      .join(hash.select(col("doc_id").as("doc_b"), dhashArray.as("b")),
+        "doc_b")
+      .withColumn("hamming", hamming(col("a"), col("b")))
       .filter(col("hamming") <= maxDist)
       .select(col("doc_a"), col("doc_b"), col("hamming"))
   }
+
+  /** A (doc_id, b0..b3) frame's four band values as one array column. */
+  private def dhashArray: Column =
+    array((0 until DhashBands).map(b => col(s"b$b")): _*)
+
+  /** Exact 64-bit Hamming distance between two dHash band arrays — the
+    * one verify of every dHash pair producer and gate: 4 codegen'd
+    * XOR+popcount ops per candidate.
+    */
+  private def hamming(a: Column, b: Column): Column =
+    (1 to DhashBands)
+      .map(i => bit_count(element_at(a, i).bitwiseXOR(element_at(b, i))))
+      .reduce(_ + _).cast("long")
 
   /** Incremental PERCEPTUAL gate: which NEW-batch docs are dHash
     * near-dups of an EXISTING corpus — [[minhashNewVsCorpus]]'s
@@ -983,12 +931,12 @@ object Dedup {
     * discipline) so a probe from an engine with a different raster
     * contract fails loudly instead of joining incomparable band values.
     */
-  def buildDhashIndex(corpus: DataFrame): DataFrame = {
-    val geom = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("w", DhashW).putLong("h", DhashH)
-      .putLong("bands", DhashBands).build()
-    dhashTextBands(corpus).withColumn("b0", col("b0").as("b0", geom))
-  }
+  def buildDhashIndex(corpus: DataFrame): DataFrame =
+    Assets.withGeometry(dhashTextBands(corpus), "b0", DhashGeometry)
+
+  private val DhashGeometry: Seq[(String, AnyVal)] =
+    Seq("w" -> DhashW, "h" -> DhashH, "bands" -> DhashBands)
+  private val DhashIndex = "dhash index (raster-geometry w/h/bands)"
 
   /** The perceptual admission gate against a PERSISTED [[buildDhashIndex]]
     * frame — [[dhashNewVsCorpus]]'s exact output contract without
@@ -1000,29 +948,13 @@ object Dedup {
     */
   def dhashNewVsIndex(newDocs: DataFrame, index: DataFrame,
                       maxDist: Int = 16): DataFrame = {
-    val meta = index.schema("b0").metadata
-    for ((name, want) <- Seq("w" -> DhashW, "h" -> DhashH,
-        "bands" -> DhashBands)) {
-      require(meta.contains(name),
-        s"dhash index has no '$name' raster-geometry metadata — rebuild " +
-          "it with buildDhashIndex; probing an unlabeled index cannot be " +
-          "validated")
-      require(meta.getLong(name) == want,
-        s"dhash index was built with $name=${meta.getLong(name)}, this " +
-          s"engine rasters $name=$want — rebuild the index")
-    }
+    Assets.requireGeometry(index, "b0", DhashIndex, DhashGeometry)
     val (mNew, rNew) = dhashCollapsed(newDocs)
     ExactCollapse.expandOrdered(
       dhashGateFromBands(rNew, index, maxDist), mNew,
       index.select(col("doc_id"), col("doc_id")),
       "new_id", "corpus_id", Seq("hamming"))
   }
-
-  /** [[buildDhashIndex]] stamped with the corpus's q222 content digest —
-    * see [[buildBandIndexVersioned]].
-    */
-  def buildDhashIndexVersioned(corpus: DataFrame): DataFrame =
-    Assets.stamp(buildDhashIndex(corpus), "b0", Assets.textDigest(corpus))
 
   /** Incremental maintenance of a standing [[buildDhashIndex]] asset —
     * the [[Assets.advance]] step for the perceptual family. Like the
@@ -1031,18 +963,9 @@ object Dedup {
     * identical to `buildDhashIndex(corpus ∪ delta)` at delta-raster cost
     * (q279's oracle holds the probe to the from-scratch hashes).
     */
-  def advanceDhashIndex(index: DataFrame, delta: DataFrame): DataFrame = {
-    val meta = index.schema("b0").metadata
-    for ((name, want) <- Seq("w" -> DhashW, "h" -> DhashH,
-        "bands" -> DhashBands)) {
-      require(meta.contains(name) && meta.getLong(name) == want,
-        s"dhash index advance: index raster geometry '$name' is " +
-          s"${if (meta.contains(name)) meta.getLong(name).toString
-             else "absent"}, this engine rasters $name=$want — rebuild")
-    }
-    requireDisjointIds(index, delta, "dhash index")
-    index.unionByName(buildDhashIndex(delta))
-  }
+  def advanceDhashIndex(index: DataFrame, delta: DataFrame): DataFrame =
+    Assets.advanceRows(index, delta, "b0", DhashIndex, DhashGeometry)(
+      buildDhashIndex)
 
   /** [[dhashNewVsIndex]] behind the [[Assets]] freshness gate. */
   def dhashNewVsIndexFresh(newDocs: DataFrame, index: DataFrame,
@@ -1050,29 +973,21 @@ object Dedup {
     dhashNewVsIndex(newDocs, Assets.requireFresh(index, "b0", digest),
       maxDist)
 
+  /** The dHash gate over two (doc_id, b0..b3) hash frames: [[bandPairs]]
+    * on the four band values, then the exact Hamming verify on the same
+    * carried arrays. Pure per-row expressions plus one equi-join, so
+    * [[graft.streaming.StreamOps.dhashGateStream]] runs this very body on
+    * a stream.
+    */
   private def dhashGateFromBands(newHash: DataFrame, corpusHash: DataFrame,
-                                 maxDist: Int): DataFrame = {
-    def banded(hash: DataFrame, idName: String): DataFrame = {
-      val cols = (0 until DhashBands).map(b => s"${idName}_b$b")
-      hash.toDF(idName +: cols: _*)
-        .select(col(idName) +: cols.map(col) :+
-          posexplode(array(cols.map(col): _*)).as(Seq("band", "v")): _*)
-    }
-    banded(newHash, "new_id").as("x")
-      .join(banded(corpusHash, "corpus_id").as("y"),
-        col("x.band") === col("y.band") && col("x.v") === col("y.v"))
-      .select(Seq(col("new_id"), col("corpus_id")) ++
-        (0 until DhashBands).flatMap(b =>
-          Seq(col(s"new_id_b$b"), col(s"corpus_id_b$b"))): _*)
-      .distinct()
-      .withColumn("hamming",
-        (0 until DhashBands)
-          .map(b => bit_count(col(s"new_id_b$b")
-            .bitwiseXOR(col(s"corpus_id_b$b"))))
-          .reduce(_ + _).cast("long"))
+                                 maxDist: Int): DataFrame =
+    bandPairs(
+        newHash.select(col("doc_id").as("new_id"), dhashArray.as("new_bands")),
+        corpusHash.select(col("doc_id").as("corpus_id"),
+          dhashArray.as("corpus_bands")), DhashBands)
+      .withColumn("hamming", hamming(col("new_bands"), col("corpus_bands")))
       .filter(col("hamming") <= maxDist)
       .select(col("new_id"), col("corpus_id"), col("hamming"))
-  }
 
   /** Perceptual near-dup CLUSTER readout: [[dhashNearDups]] pairs closed
     * into connected components, rolled up as a cluster-size histogram
@@ -1278,24 +1193,16 @@ object Dedup {
   def buildClusterMap(corpus: DataFrame, k: Int = 16, bands: Int = 4,
                       n: Int = 5, minJaccard: Double = 0.5): DataFrame = {
     val comp = nearDupComponents(corpus, k, bands, n, minJaccard)
-    val geom = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("k", k).putLong("bands", bands).putLong("n", n)
-      .putDouble("minJaccard", minJaccard).build()
-    corpus.select(col("doc_id"))
+    Assets.withGeometry(corpus.select(col("doc_id"))
       .join(comp, Seq("doc_id"), "left")
       .select(col("doc_id"),
-        coalesce(col("component"), col("doc_id")).as("cluster_id", geom))
+        coalesce(col("component"), col("doc_id")).as("cluster_id")),
+      "cluster_id", clusterGeometry(k, bands, n, minJaccard))
   }
 
-  /** [[buildClusterMap]] stamped with the corpus's q222 content digest —
-    * see [[buildBandIndexVersioned]]; the two assets are built from the
-    * SAME corpus version, so one digest validates both.
-    */
-  def buildClusterMapVersioned(corpus: DataFrame, k: Int = 16,
-                               bands: Int = 4, n: Int = 5,
-                               minJaccard: Double = 0.5): DataFrame =
-    Assets.stamp(buildClusterMap(corpus, k, bands, n, minJaccard),
-      "cluster_id", Assets.textDigest(corpus))
+  private def clusterGeometry(k: Int, bands: Int, n: Int,
+                              minJaccard: Double): Seq[(String, AnyVal)] =
+    bandGeometry(k, bands, n) :+ ("minJaccard" -> minJaccard)
 
   /** Incremental maintenance of a standing [[buildClusterMap]] asset —
     * the [[Assets.advance]] step for the split family, and the one
@@ -1333,22 +1240,9 @@ object Dedup {
   def advanceClusterMap(oldMap: DataFrame, oldIndex: DataFrame,
                         delta: DataFrame, k: Int = 16, bands: Int = 4,
                         n: Int = 5, minJaccard: Double = 0.5): DataFrame = {
-    val meta = oldMap.schema("cluster_id").metadata
-    for ((name, want) <- Seq("k" -> k.toLong, "bands" -> bands.toLong,
-        "n" -> n.toLong)) {
-      require(meta.contains(name) && meta.getLong(name) == want,
-        s"cluster map advance: map geometry '$name' is " +
-          s"${if (meta.contains(name)) meta.getLong(name).toString
-             else "absent"}, advancing with $name=$want would mix " +
-          "clusterings — match the map or rebuild")
-    }
-    require(meta.contains("minJaccard") &&
-        meta.getDouble("minJaccard") == minJaccard,
-      "cluster map advance: map minJaccard is " +
-        s"${if (meta.contains("minJaccard")) meta.getDouble("minJaccard").toString
-           else "absent"}, advancing with $minJaccard would mix " +
-        "clusterings — match the map or rebuild")
-    requireDisjointIds(oldMap, delta, "cluster map")
+    val geom = clusterGeometry(k, bands, n, minJaccard)
+    Assets.requireGeometry(oldMap, "cluster_id", "cluster map", geom)
+    Assets.requireDisjointIds(oldMap, delta, "doc_id", "cluster map")
     // delta ↔ standing-cluster edges: the admission gate's pairs (member
     // grain on the delta side, corpus doc grain on the index side),
     // lifted to the corpus side's SUPER-NODE = standing cluster_id
@@ -1361,9 +1255,6 @@ object Dedup {
     val within = minhashNearDupEdges(delta, k, bands, n, minJaccard)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
     val comp = Components.connectedComponents(bridge.unionByName(within))
-    val geom = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong("k", k).putLong("bands", bands).putLong("n", n)
-      .putDouble("minJaccard", minJaccard).build()
     // standing rows: remap any cluster merged by a bridge (component of
     // its super-node), everything untouched keeps its id; delta rows:
     // component when connected, else a fresh singleton = own id — the
@@ -1377,8 +1268,7 @@ object Dedup {
       .join(comp.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("cluster_id"))
-    remapped.unionByName(admitted)
-      .select(col("doc_id"), col("cluster_id").as("cluster_id", geom))
+    Assets.withGeometry(remapped.unionByName(admitted), "cluster_id", geom)
   }
 
   /** [[leakageSafeSplit]] from a (persisted) [[buildClusterMap]] frame:
@@ -1408,25 +1298,6 @@ object Dedup {
     when(b < 8, lit("train")).when(b === 8, lit("val")).otherwise(lit("test"))
   }
 
-  /** Incremental leakage-safe split (round 16): assign each NEW-batch doc
-    * a split CONSISTENT with the corpus's cluster-grain assignment — the
-    * admission rule a refreshed training set runs so a re-crawl of a
-    * test-split page can never land in train. A new doc near-dup'd to
-    * the corpus inherits the split of the matched corpus CLUSTER (the
-    * minimum matched cluster id when a new doc bridges several —
-    * deterministic; a bridge would merge those clusters on the next full
-    * [[leakageSafeSplit]] rebuild, and min-id is exactly the id that
-    * merged cluster will carry). An unmatched doc opens its own
-    * singleton cluster and buckets by its own id — q264's rule verbatim,
-    * so gate + rebuild agree on every non-bridged doc.
-    *
-    * Scale shape: [[minhashNewVsCorpus]]'s rep×rep band join for the
-    * gate pairs (never new×corpus all-pairs), corpus components at the
-    * rep grain (replica-invariant), one min-aggregate at the new-doc
-    * grain, two equi-joins.
-    *
-    * @return one row per new doc: (doc_id, cluster_id, split, inherited)
-    */
   /** [[incrementalSplit]] from PERSISTED standing assets — the admission
     * gate a production corpus actually runs: the band index
     * ([[buildBandIndex]], corpus signatures computed once) supplies the
@@ -1450,7 +1321,8 @@ object Dedup {
                               minJaccard: Double = 0.5): DataFrame = {
     require(minJaccard <= 1.0,
       s"minJaccard $minJaccard > 1 would break exact-group inheritance")
-    requireClusterGeometry(clusterMap, k, bands, n, minJaccard)
+    Assets.requireGeometry(clusterMap, "cluster_id", "cluster map",
+      clusterGeometry(k, bands, n, minJaccard))
     val gate = minhashNewVsIndex(newDocs, bandIndex, k, bands, n, minJaccard)
     val inherited = gate
       .join(clusterMap.select(col("doc_id").as("corpus_id"),
@@ -1482,32 +1354,25 @@ object Dedup {
       Assets.requireFresh(clusterMap, "cluster_id", digest),
       k, bands, n, minJaccard)
 
-  /** Fails loudly unless `clusterMap` carries [[buildClusterMap]]'s
-    * geometry metadata AND it matches the caller's parameters — absent
-    * metadata (stripped by select/union transforms or a non-Spark parquet
-    * writer) is an error too, the [[minhashNewVsIndex]] discipline.
+  /** Incremental leakage-safe split (round 16): assign each NEW-batch doc
+    * a split CONSISTENT with the corpus's cluster-grain assignment — the
+    * admission rule a refreshed training set runs so a re-crawl of a
+    * test-split page can never land in train. A new doc near-dup'd to
+    * the corpus inherits the split of the matched corpus CLUSTER (the
+    * minimum matched cluster id when a new doc bridges several —
+    * deterministic; a bridge would merge those clusters on the next full
+    * [[leakageSafeSplit]] rebuild, and min-id is exactly the id that
+    * merged cluster will carry). An unmatched doc opens its own
+    * singleton cluster and buckets by its own id — q264's rule verbatim,
+    * so gate + rebuild agree on every non-bridged doc.
+    *
+    * Scale shape: [[minhashNewVsCorpus]]'s rep×rep band join for the
+    * gate pairs (never new×corpus all-pairs), corpus components at the
+    * rep grain (replica-invariant), one min-aggregate at the new-doc
+    * grain, two equi-joins.
+    *
+    * @return one row per new doc: (doc_id, cluster_id, split, inherited)
     */
-  private def requireClusterGeometry(clusterMap: DataFrame, k: Int,
-                                     bands: Int, n: Int,
-                                     minJaccard: Double): Unit = {
-    val meta = clusterMap.schema("cluster_id").metadata
-    for ((name, want) <- Seq("k" -> k, "bands" -> bands, "n" -> n)) {
-      require(meta.contains(name),
-        s"cluster map has no '$name' geometry metadata — rebuild it with " +
-          "buildClusterMap; probing an unlabeled map cannot be validated")
-      require(meta.getLong(name) == want,
-        s"cluster map was built with $name=${meta.getLong(name)}, probed " +
-          s"with $name=$want — rebuild the map or match the caller")
-    }
-    require(meta.contains("minJaccard"),
-      "cluster map has no 'minJaccard' geometry metadata — rebuild it " +
-        "with buildClusterMap")
-    require(meta.getDouble("minJaccard") == minJaccard,
-      s"cluster map was clustered at minJaccard=" +
-        s"${meta.getDouble("minJaccard")}, probed with " +
-        s"minJaccard=$minJaccard — rebuild the map or match the caller")
-  }
-
   def incrementalSplit(newDocs: DataFrame, corpus: DataFrame, k: Int = 16,
                        bands: Int = 4, n: Int = 5,
                        minJaccard: Double = 0.5): DataFrame = {

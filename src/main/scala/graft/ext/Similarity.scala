@@ -608,13 +608,7 @@ object Similarity {
         s"indexed (> ${maxDeltaFrac} drift guard) — the standing " +
         "centroid sample no longer represents the corpus; rebuild with " +
         "buildIvfIndex")
-    val overlap = index.select(col("vec_id"))
-      .join(broadcast(quantized.select(col("vec_id")).distinct()),
-        "vec_id").limit(1).collect()
-    require(overlap.isEmpty,
-      "IVF advance: delta re-contains indexed vec_id " +
-        s"${overlap.headOption.map(_.getLong(0)).getOrElse(-1L)} — a " +
-        "delta must be NEW vectors only; rebuild for a corpus rewrite")
+    graft.ext.Assets.requireDisjointIds(index, quantized, "vec_id", "IVF")
     val centroids = index.filter(col("is_centroid"))
       .select(col("vec_id").as("centroid_id"), col("q").as("cv"),
         col("vn").as("cn"))
@@ -629,14 +623,6 @@ object Similarity {
         .withColumn("is_centroid", lit(false))
         .select(index.columns.map(col): _*))
   }
-
-  /** [[buildIvfIndex]] stamped with [[embeddingDigest]] — the versioned
-    * form [[graft.ext.Assets.ensure]] persists once per (corpus digest,
-    * centroid geometry) and serves to every later probe.
-    */
-  def buildIvfIndexVersioned(emb: DataFrame, nCentroids: Int = 0): DataFrame =
-    graft.ext.Assets.stamp(buildIvfIndex(emb, nCentroids), "centroid_id",
-      embeddingDigest(emb))
 
   /** [[ivfTopKIndexed]] behind the freshness gate: a stale index answers
     * top-k from a corpus that no longer exists (missing new vectors,

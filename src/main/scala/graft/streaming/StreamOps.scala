@@ -955,7 +955,7 @@ object StreamOps {
     * whole-vs-split on the real documents fixture.
     *
     * Scale: the static side is band-keyed (broadcastable when small,
-    * shuffled once when not) and carries ONLY (band, band_sig, sigs) —
+    * shuffled once when not) and carries ONLY (id, band_sigs) —
     * the per-doc code arrays stay on a separate narrow (corpus_id, codes)
     * frame joined per surviving candidate (round 19; the batch index
     * gate's round-17 shape). Per-arriving-doc cost is hashing + one
@@ -965,103 +965,50 @@ object StreamOps {
   def dedupGateStream(newDocs: DataFrame, corpus: DataFrame, k: Int = 16,
                       bands: Int = 4, n: Int = 3,
                       minJaccard: Double = 0.5): DataFrame = {
-    require(k % bands == 0, "band width must divide signature length")
-    // ONE signature construction in the engine: buildBandIndex (stream-
-    // safe — pure per-row expressions, no aggregation). Three copies of
-    // the minhash arithmetic (here, minhashSignatures, the index) had to
-    // stay bit-identical by discipline alone; now they can't drift.
-    def banded(df: DataFrame, idName: String): DataFrame =
-      graft.ext.Dedup.buildBandIndex(df, k, bands, n)
-        .select(col("doc_id").as(idName), col("codes").as(s"codes_$idName"),
-          col("band_sigs").as(s"sigs_$idName"),
-          posexplode(col("band_sigs")).as(Seq("band", "band_sig")))
-    // the STATIC side is bands-only (round 19, guide §2.2 shuffle fewer
-    // bytes): the previous shape rode each corpus doc's full distinct-code
-    // array through the bands× explode and the band join — bands× the
-    // index bytes on the join's big side, exactly what minhashNewVsIndex's
-    // round-17 fix removed from the batch gate. Corpus codes re-attach
-    // AFTER the band match + per-pair dedup, via a second stream-STATIC
-    // equi-join on corpus_id (stateless, append-safe) against the narrow
-    // (corpus_id, codes) frame — the verify only ever needs codes for
-    // docs that matched a band. The NEW side keeps its codes inline: a
+    // The batch gates' own band join and verify
+    // ([[graft.ext.Dedup.bandPairs]], whose smallest-matching-band rule is
+    // already stateless, and [[graft.ext.Dedup.jaccardVerified]]); only
+    // the code arrays differ. The NEW side carries its codes inline: a
     // stream cannot re-join itself statelessly, and the arriving
-    // micro-batch is the small side by construction.
+    // micro-batch is the small side by construction. The STATIC side
+    // joins bands-only, and its codes re-attach after the band match via
+    // a second stream-static equi-join on corpus_id against the narrow
+    // (corpus_id, codes) frame (round 19, the batch gate's round-17 shape).
     //
-    // Round 20: both static branches derive STRUCTURALLY from ONE pinned
+    // Round 20: both static branches derive from ONE pinned
     // [[graft.ext.Dedup.buildBandIndex]] frame. The pin hashes the corpus
     // text exactly once at gate construction (stream-static sides are
     // otherwise re-evaluated EVERY trigger — two full corpus scans plus
-    // two kernel passes per micro-batch); each trigger now reads the
-    // materialized (doc_id, codes, band_sigs) blocks. And the codes
-    // branch is buildBandIndex's own rows/expressions by construction —
-    // the previous hand-copied `length(text) >= n` filter + shingleCodes
-    // projection stayed row-set-identical by discipline alone, so a
-    // drift there would have silently dropped band-matched pairs.
+    // two kernel passes per micro-batch), and the codes branch is the
+    // index's own rows by construction, so it cannot drift from the bands.
     val corpusIndex = graft.Pin(
       graft.ext.Dedup.buildBandIndex(corpus, k, bands, n))
-    val corpusBands = corpusIndex
-      .select(col("doc_id").as("corpus_id"),
-        col("band_sigs").as("sigs_corpus_id"),
-        posexplode(col("band_sigs")).as(Seq("band", "band_sig")))
-    val corpusCodes = corpusIndex
-      .select(col("doc_id").as("corpus_id"),
-        col("codes").as("codes_corpus_id"))
-    banded(newDocs, "new_id")
-      .join(corpusBands, Seq("band", "band_sig"))
-      // stateless per-pair dedup (a streaming dropDuplicates would grow a
-      // state store forever): a pair matching in several bands survives
-      // ONLY on its smallest matching band — decidable per row from the
-      // two full signature arrays, no cross-row state
-      .filter((0 until bands).map { j =>
-        when(col("band") > j,
-          element_at(col("sigs_new_id"), j + 1) =!=
-            element_at(col("sigs_corpus_id"), j + 1)).otherwise(lit(true))
-      }.reduce(_ && _))
-      .join(corpusCodes, "corpus_id")
-      .withColumn("inter",
-        size(array_intersect(col("codes_new_id"), col("codes_corpus_id")))
-          .cast("long"))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (size(col("codes_new_id")) + size(col("codes_corpus_id"))
-            - col("inter")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
+    val arriving = graft.ext.Dedup.buildBandIndex(newDocs, k, bands, n)
+    val pairs = graft.ext.Dedup.bandPairs(
+        arriving.select(col("doc_id").as("new_id"),
+          col("band_sigs").as("new_bands"), col("codes").as("new_codes")),
+        corpusIndex.select(col("doc_id").as("corpus_id"),
+          col("band_sigs").as("corpus_bands")), bands)
+      .join(corpusIndex.select(col("doc_id").as("corpus_id"),
+        col("codes").as("corpus_codes")), "corpus_id")
+    graft.ext.Dedup.jaccardVerified(pairs, "new_codes", "corpus_codes",
+        minJaccard)
       .select(col("new_id"), col("corpus_id"), col("jaccard"))
   }
 
   /** Streaming twin #18 of [[graft.ext.Dedup.dhashNewVsCorpus]]: the
     * PERCEPTUAL admission gate online — the image-raster sibling of
-    * [[dedupGateStream]], same stateless architecture (per-row dHash
-    * bands are pure column expressions, candidates from a stream-static
-    * band join, exact Hamming verify per row, multi-band matches deduped
-    * by the smallest-matching-band rule — zero state store). Emits
-    * (new_id, corpus_id, hamming) as each document lands.
+    * [[dedupGateStream]], same stateless architecture. It IS the batch
+    * gate's uncollapsed body: per-row dHash bands are pure column
+    * expressions, candidates come from the stream-static
+    * [[graft.ext.Dedup.bandPairs]] join (multi-band matches kept on the
+    * smallest matching band — zero state store), and the exact Hamming
+    * verify is per row. Emits (new_id, corpus_id, hamming) as each
+    * document lands.
     */
   def dhashGateStream(newDocs: DataFrame, corpus: DataFrame,
-                      maxDist: Int = 16): DataFrame = {
-    val nb = graft.ext.Dedup.DhashBands
-    def banded(df: DataFrame, idName: String): DataFrame = {
-      val cols = (0 until nb).map(b => s"${idName}_b$b")
-      graft.ext.Dedup.dhashTextBands(df).toDF(idName +: cols: _*)
-        .withColumn(s"arr_$idName", array(cols.map(col): _*))
-        .select(col(idName), col(s"arr_$idName"),
-          posexplode(col(s"arr_$idName")).as(Seq("band", "v")))
-    }
-    banded(newDocs, "new_id")
-      .join(banded(corpus, "corpus_id"), Seq("band", "v"))
-      .filter((0 until nb).map { j =>
-        when(col("band") > j,
-          element_at(col("arr_new_id"), j + 1) =!=
-            element_at(col("arr_corpus_id"), j + 1)).otherwise(lit(true))
-      }.reduce(_ && _))
-      .withColumn("hamming",
-        (0 until nb).map(b =>
-          bit_count(element_at(col("arr_new_id"), b + 1)
-            .bitwiseXOR(element_at(col("arr_corpus_id"), b + 1))))
-          .reduce(_ + _).cast("long"))
-      .filter(col("hamming") <= maxDist)
-      .select(col("new_id"), col("corpus_id"), col("hamming"))
-  }
+                      maxDist: Int = 16): DataFrame =
+    graft.ext.Dedup.dhashNewVsCorpusDistinct(newDocs, corpus, maxDist)
 
   // NOT private: state encoder codegen needs public accessors
   final case class PagerState(ctx: Long)
