@@ -17,7 +17,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *     time and CPU, shuffle read/write and spill — attributing super-linear
   *     scaling to a concrete exchange instead of guessing from wall clock;
   *  1. times three more noop-sink executions and prints them as one
-  *     `[inspect]` line.
+  *     `[inspect]` line, which also carries the first execution's Spark
+  *     job count (`jobs=`) and how many of those started before the sink
+  *     was entered (`construct=`: eager pins, collects, counts).
   *
   * Usage: runMain graft.Inspect <outDir> <suffix> <query> [query ...]
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS and SPARK_GRAFT_COLD, as for
@@ -27,45 +29,73 @@ object Inspect {
   // local property naming the query whose first execution is audited; jobs
   // inherit it, including those on Pin.parallel's and broadcast threads
   private val Audited = "graft.inspect.query"
+  // set when the audited execution enters its sink: jobs started without
+  // it are construction jobs
+  private val Sinking = "graft.inspect.sink"
 
   def main(args: Array[String]): Unit = {
     val Array(outDir, suffix) = args.take(2)
     val sfDir = Runner.sfDir
     val spark = Runner.session()
     val sc = spark.sparkContext
-    sc.addSparkListener(new StageLines)
+    val lines = new StageLines
+    sc.addSparkListener(lines)
     new java.io.File(outDir).mkdirs()
     Runner.withHotTables(spark, sfDir) {
       for (name <- args.drop(2)) {
         sc.setLocalProperty(Audited, name)
         try Runner.execute(spark, name, sfDir) { df =>
+          sc.setLocalProperty(Sinking, "1")
           val w = new java.io.PrintWriter(s"$outDir/${name}_$suffix.txt")
           try w.write(df.queryExecution.explainString(
             ExplainMode.fromString("formatted")))
           finally w.close()
           Runner.noop(df)
-        } finally sc.setLocalProperty(Audited, null)
+        } finally {
+          sc.setLocalProperty(Audited, null)
+          sc.setLocalProperty(Sinking, null)
+        }
         val times = (1 to 3).map { _ =>
           val t0 = System.nanoTime()
           Runner.execute(spark, name, sfDir)(Runner.noop)
           (System.nanoTime() - t0) / 1e9
         }
-        println(f"[inspect] $name%-28s ${times.map(t => f"$t%.2f").mkString(" ")}")
+        org.apache.spark.sql.GraftBridge.drainListeners(sc)
+        val (jobs, construct) = lines.jobs(name)
+        println(f"[inspect] $name%-28s jobs=$jobs construct=$construct " +
+          times.map(t => f"$t%.2f").mkString(" "))
       }
     }
     spark.stop()
   }
 
-  /** One line per completed stage of a job started under [[Audited]]. The
-    * job-start event carries the local property and its stage ids; events
-    * reach a listener in posting order, so the start precedes its stages.
+  /** One line per completed stage of a job started under [[Audited]], and
+    * per query the count of such jobs and of those among them started
+    * before [[Sinking]] was set. The job-start event carries the local
+    * properties and its stage ids; events reach a listener in posting
+    * order, so the start precedes its stages.
     */
   private class StageLines extends SparkListener {
     private val queryOf = scala.collection.mutable.Map.empty[Int, String]
+    private val counts = scala.collection.mutable.Map.empty[String, (Int, Int)]
+
+    /** (jobs, construction jobs) of `q`'s audited execution, once all its
+      * events were delivered.
+      */
+    def jobs(q: String): (Int, Int) =
+      synchronized(counts.remove(q).getOrElse((0, 0)))
 
     override def onJobStart(j: SparkListenerJobStart): Unit =
       Option(j.properties).flatMap(p => Option(p.getProperty(Audited)))
-        .foreach(q => j.stageIds.foreach(queryOf(_) = q))
+        .foreach { q =>
+          j.stageIds.foreach(queryOf(_) = q)
+          val construct =
+            if (j.properties.getProperty(Sinking) == null) 1 else 0
+          synchronized {
+            val (n, c) = counts.getOrElse(q, (0, 0))
+            counts(q) = (n + 1, c + construct)
+          }
+        }
 
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
       queryOf.remove(s.stageInfo.stageId).foreach { q =>

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 
 /** Uniform access to the driver test tables (`/root/testdata/sf*`, see
   * TESTDATA.md). One parquet file per table; at cluster scale these would be
@@ -19,10 +21,14 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
   * do exact integer arithmetic (the DuckDB oracle reads the same column via
   * `epoch_us(ts)`, so both sides agree in microseconds — see
   * `ext/Sessions.scala`).
+  *
+  * Every parquet read of the engine — tables, persisted assets, sink
+  * maintenance — goes through [[parquet]], which resolves the schema from
+  * one file's footer on the driver and runs no Spark job.
   */
 object Tables {
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, Seq(s"$sfDir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame   = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = t(s, d, "nation")
@@ -59,11 +65,39 @@ object Tables {
     */
   private def mapFooters[A](root: Path, conf: Configuration)
                            (f: (Path, ParquetFileReader) => A): Seq[A] =
-    parquetFiles(root, conf).map { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-      val r = ParquetFileReader.open(in)
-      try f(p, r) finally r.close()
-    }
+    parquetFiles(root, conf).map(footer(_, conf)(f))
+
+  private def footer[A](p: Path, conf: Configuration)
+                       (f: (Path, ParquetFileReader) => A): A = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
+    val r = ParquetFileReader.open(in)
+    try f(p, r) finally r.close()
+  }
+
+  /** The one parquet read: `paths` (files or table roots; `basePath` pins
+    * the root that Hive-style partition columns are discovered under)
+    * with the schema of the first data file under `paths.head`, resolved
+    * from its footer on the driver. `spark.read.parquet` would infer the
+    * same schema with a distributed job per read — Spark's non-merging
+    * inference also reads one footer — while this reads it in place and
+    * runs none. Spark's own footer conversion is used, so the serialized
+    * row schema wins when the file carries one and column metadata (the
+    * asset digest and geometry stamps) survives; a footer the session
+    * cannot convert (TIMESTAMP(NANOS) without `nanosAsLong`) throws
+    * Spark's AnalysisException, as inference does.
+    */
+  def parquet(spark: SparkSession, paths: Seq[String],
+              basePath: Option[String] = None): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val first = parquetFiles(new Path(paths.head), conf).headOption
+      .getOrElse(throw new IllegalArgumentException(
+        s"no parquet data file under ${paths.head}"))
+    val schema = footer(first, conf)((p, r) =>
+      ParquetFileFormat.readSchemaFromFooter(new Footer(p, r.getFooter),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    basePath.fold(spark.read)(spark.read.option("basePath", _))
+      .schema(schema).parquet(paths: _*)
+  }
 
   /** Row count of a table from parquet FOOTER metadata only — a driver-side
     * file-metadata read, NO Spark job. This is what operators that need a
@@ -132,8 +166,7 @@ object Tables {
     */
   private def readEvents(s: SparkSession, paths: Seq[String],
                          basePath: Option[String] = None): DataFrame =
-    try basePath.fold(s.read)(bp => s.read.option("basePath", bp))
-      .parquet(paths: _*) catch {
+    try parquet(s, paths, basePath) catch {
       case e: AnalysisException if e.getMessage.contains("NANOS") =>
         throw new IllegalArgumentException(
           "events.parquet carries TIMESTAMP(NANOS): build the SparkSession " +

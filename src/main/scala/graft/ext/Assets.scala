@@ -191,7 +191,7 @@ object Assets {
       val fs = fsOf(spark, path)
       if (!fs.exists(new Path(path, "_SUCCESS"))) None
       else {
-        val df = spark.read.parquet(path)
+        val df = graft.Tables.parquet(spark, Seq(path))
         val m = df.schema(keyCol).metadata
         if (m.contains(DigestKey) && m.getLong(DigestKey) == digest)
           Some(df)
@@ -239,7 +239,7 @@ object Assets {
           s"Assets.publish: cannot place asset at $path")
       }
     }
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, Seq(path))
   }
 
   /** Build-once/probe-many: if `path` already holds a PUBLISHED asset

@@ -376,13 +376,20 @@ object Dedup {
     * stateless on a stream (a streaming dropDuplicates would grow a state
     * store forever) and spares a batch gate its pair-dedup shuffle.
     *
+    * The explode is the OUTER one: under an inner generator Spark's
+    * InferFiltersFromGenerate adds `size(arr) > 0 AND isnotnull(arr)`,
+    * and with `arr` an inlined band-signature kernel call that Filter
+    * would run the kernel a second time per doc on each side. An empty or
+    * null array yields one (null, null) row, which the inner equi-join on
+    * (band, v) drops.
+    *
     * @return (new_id, new_bands, …, corpus_id, corpus_bands, …), one row
     *         per pair sharing at least one band
     */
   private[graft] def bandPairs(newSide: DataFrame, corpusSide: DataFrame,
                                bands: Int): DataFrame = {
     def exploded(side: DataFrame, arr: String): DataFrame =
-      side.select(col("*"), posexplode(col(arr)).as(Seq("band", "v")))
+      side.select(col("*"), posexplode_outer(col(arr)).as(Seq("band", "v")))
     exploded(newSide, "new_bands")
       .join(exploded(corpusSide, "corpus_bands"), Seq("band", "v"))
       .filter((0 until bands).map { j =>

@@ -90,7 +90,7 @@ object Sinks {
   def statsManifest(spark: SparkSession, path: String,
                     cols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{count, input_file_name, lit, max, min}
-    val df = spark.read.parquet(path)
+    val df = graft.Tables.parquet(spark, Seq(path))
     val aggs = cols.flatMap(c =>
       Seq(min(df.col(c)).as(s"${c}_min"), max(df.col(c)).as(s"${c}_max"))) :+
       count(lit(1)).as("n_rows")
@@ -121,7 +121,7 @@ object Sinks {
   def compact(spark: SparkSession, inPath: String, outPath: String,
               targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
     require(targetFileBytes > 0)
-    val df = spark.read.parquet(inPath)
+    val df = graft.Tables.parquet(spark, Seq(inPath))
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val n = ((bytes + targetFileBytes - 1) / targetFileBytes).toInt.max(1)
     df.repartition(n).write.mode("overwrite").parquet(outPath)
