@@ -16,6 +16,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *     stage (construction jobs included) with task count, executor run
   *     time and CPU, shuffle read/write and spill — attributing super-linear
   *     scaling to a concrete exchange instead of guessing from wall clock;
+  *  1. prints one `[cutover] <query> <gate> evidence=<n> (<source>)
+  *     threshold=<t> branch=<b>` line per [[Cutover]] decision that first
+  *     execution took;
   *  1. times three more noop-sink executions and prints them as one
   *     `[inspect]` line, which also carries the first execution's Spark
   *     job count (`jobs=`) and how many of those started before the sink
@@ -44,13 +47,15 @@ object Inspect {
     Runner.withHotTables(spark, sfDir) {
       for (name <- args.drop(2)) {
         sc.setLocalProperty(Audited, name)
-        try Runner.execute(spark, name, sfDir) { df =>
-          sc.setLocalProperty(Sinking, "1")
-          val w = new java.io.PrintWriter(s"$outDir/${name}_$suffix.txt")
-          try w.write(df.queryExecution.explainString(
-            ExplainMode.fromString("formatted")))
-          finally w.close()
-          Runner.noop(df)
+        val (_, decisions) = try Cutover.recorded {
+          Runner.execute(spark, name, sfDir) { df =>
+            sc.setLocalProperty(Sinking, "1")
+            val w = new java.io.PrintWriter(s"$outDir/${name}_$suffix.txt")
+            try w.write(df.queryExecution.explainString(
+              ExplainMode.fromString("formatted")))
+            finally w.close()
+            Runner.noop(df)
+          }
         } finally {
           sc.setLocalProperty(Audited, null)
           sc.setLocalProperty(Sinking, null)
@@ -62,6 +67,7 @@ object Inspect {
         }
         org.apache.spark.sql.GraftBridge.drainListeners(sc)
         val (jobs, construct) = lines.jobs(name)
+        decisions.foreach(d => println(s"[cutover] $name $d"))
         println(f"[inspect] $name%-28s jobs=$jobs construct=$construct " +
           times.map(t => f"$t%.2f").mkString(" "))
       }

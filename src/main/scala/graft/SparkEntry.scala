@@ -212,8 +212,8 @@ object SparkEntry {
         iterations = 3)),
     // FULL OUTER join with both null-extension directions live
     "q65_full_outer" -> Relational.q65FullOuter _,
-    // the percentile operator's 100 TB plan (histogram pruning), forced on
-    // and oracle-checked directly — not just its holistic shortcut
+    // the percentile operator's 100 TB plan (histogram pruning),
+    // oracle-checked directly
     "q66_percentiles_distributed" -> Relational.q66PercentilesDistributed _,
     // incremental aggregate maintenance: base ⊕ delta partial-state merge
     // verified against a from-scratch recompute (the oracle)
@@ -346,14 +346,13 @@ object SparkEntry {
     "q109_equidepth" -> ((s: SparkSession, d: String) =>
       Percentiles.equiDepthHistogram(
         Tables.lineitem(s, d).select(col("l_returnflag"), col("l_extendedprice")),
-        "l_returnflag", "l_extendedprice", bins = 8,
+        "l_returnflag", "l_extendedprice",
         // l_extendedprice is ~99% unique → window-sort cutpoints behind
-        // the adaptive scale gate (round 20, the q85 decision shape: the
-        // 3-group window sort is one task per group however big the
-        // table; above the cutover the bit-identical histogram-pruning
-        // plan takes over). Plan-decision cardinality is a footer read.
-        cutpointFn = (df, g, v, ps) => Percentiles.adaptivePercentiles(
-          df, g, v, ps, Tables.footerRowCount(s, d, "lineitem")))),
+        // the adaptive scale gate (the q85 decision shape: the 3-group
+        // window sort is one task per group however big the table; above
+        // the cutover the bit-identical histogram-pruning plan takes
+        // over). Plan-decision cardinality is a footer read.
+        Cutover.footer(Cutover.PercentileSort, s, d, "lineitem"), bins = 8)),
     // learned BPE merge table: 3 iterated argmax+rewrite rounds over the
     // piped vocabulary (boundary-safe at multi-char symbols)
     "q110_bpe_learn" -> ((s: SparkSession, d: String) =>
@@ -400,12 +399,10 @@ object SparkEntry {
       ext.Curation.distributionDrift(Tables.documents(s, d), "source",
         col("lang") === "en")),
     // systematic PPS sample: n equally spaced points on the cumulative
-    // token-weight line, pick counts in closed-form integer ceil-divs;
-    // the DISTRIBUTED bucketed prefix sum deliberately forced on (q66
-    // precedent: the 100 TB plan is the one the oracle checks)
+    // token-weight line, pick counts in closed-form integer ceil-divs
+    // over the distributed bucketed prefix sum
     "q123_systematic_sample" -> ((s: SparkSession, d: String) =>
-      ext.Curation.systematicSample(Tables.documents(s, d),
-        holisticMaxTotalRows = 0)),
+      ext.Curation.systematicSample(Tables.documents(s, d))),
     // rendezvous-hash resize 8→9 shards: per-key argmax assignment, the
     // movement matrix shows only ~1/9 of keys relocating
     "q124_rendezvous" -> ((s: SparkSession, d: String) =>

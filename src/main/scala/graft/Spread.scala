@@ -13,9 +13,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * repartition on the table key repairs it — but ONLY when the input is
   * actually narrow: at lake scale a table arrives as thousands of splits
   * and an unconditional repartition would be a full-table shuffle for
-  * nothing. Same adaptive-cutover shape as the engine's other
-  * data-derived plan decisions (Components.localSolveMaxEdges,
-  * Percentiles.holisticMaxTotalRows).
+  * nothing. Same small-input/large-input shape as the engine's
+  * data-derived plan decisions in [[Cutover]], decided from the planned
+  * partition count instead of a row count.
   *
   * Applied per-query where measurement showed pre-exchange map dominance
   * (a blanket spread in Tables was measured NET-NEGATIVE: the extra

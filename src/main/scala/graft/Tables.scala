@@ -100,13 +100,9 @@ object Tables {
   }
 
   /** Row count of a table from parquet FOOTER metadata only — a driver-side
-    * file-metadata read, NO Spark job. This is what operators that need a
-    * plan-decision cardinality (e.g. [[ops.Percentiles.exactPercentiles]]'s
-    * holistic-vs-distributed cutover) should use on a bare table scan:
-    * `df.count()` at plan-construction time is a blocking distributed job
-    * in the timed path, while the footer already knows the answer. At
-    * cluster scale this is the same footer enumeration the scan planner
-    * performs — O(files) driver work, zero executor time.
+    * file-metadata read, NO Spark job: the [[Cutover.footer]] evidence. At
+    * cluster scale this is the footer enumeration the scan planner performs
+    * anyway — O(files) driver work, zero executor time.
     */
   def footerRowCount(spark: SparkSession, sfDir: String, name: String): Long = {
     val conf = spark.sessionState.newHadoopConf()

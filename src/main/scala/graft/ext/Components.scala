@@ -39,30 +39,21 @@ object Components {
       .transform(graft.Pin.apply)
   }
 
-  /** @param edges two-column DataFrame of undirected pairs
-    * @param localSolveMaxEdges adaptive cutover: when the RAW edge count is
-    *        at most this many (and node ids are integral), the closure is
-    *        solved by union-find on the driver instead of the iterative join
-    *        loop. Same decision shape as AQE's broadcast threshold — the
-    *        EDGE LIST after near-dup pairing is typically minuscule next to
-    *        the corpus that produced it, and a driver-side union-find
-    *        replaces O(log diameter) shuffle rounds (each paying full job
-    *        latency) with one collect. The distributed loop remains the path
-    *        for genuinely large graphs; 0 disables the local path.
+  /** Below the [[graft.Cutover.ComponentsLocal]] cutover (and with
+    * integral node ids) the closure is union-find on the driver: the edge
+    * list after near-dup pairing is typically minuscule next to its
+    * corpus, and one collect replaces O(log diameter) shuffle rounds. The
+    * cutover counts the PINNED RAW edge list, before symmetrization, which
+    * only the iterative loop needs.
     *
-    *        Round 20: the cutover decides on the PINNED RAW edge list,
-    *        BEFORE symmetrization — union-find needs neither the flipped
-    *        copies nor the distinct (it unions the same sets either way), so
-    *        the local path no longer pays the union+distinct shuffle and its
-    *        second pin that only the iterative loop consumes.
+    * @param edges two-column DataFrame of undirected pairs
     * @return (node, component) — component = min node id reachable
     * @throws IllegalStateException when `maxIter` rounds pass without a
     *         fixpoint — an under-merged result returned silently would
     *         corrupt downstream dedup; raise maxIter for high-diameter
     *         graphs (rounds needed ≈ component diameter)
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20,
-                          localSolveMaxEdges: Long = 100000L): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     val Seq(aCol, bCol) = edges.columns.toSeq.take(2)
     val raw = graft.Pin(edges.select(col(aCol).as("src"), col(bCol).as("dst")))
 
@@ -75,8 +66,7 @@ object Components {
         case _ => false
       }
     }
-    if (integralIds && localSolveMaxEdges > 0 &&
-      raw.count() <= localSolveMaxEdges)
+    if (integralIds && graft.Cutover.count(graft.Cutover.ComponentsLocal, raw))
       return localComponents(raw)
 
     val sym = raw

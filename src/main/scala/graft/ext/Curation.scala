@@ -403,60 +403,60 @@ object Curation {
     * `ceil(cum·n/W) − ceil((cum−w)·n/W)` (integer ceil-div), so no
     * per-point explode and no fp grid anywhere.
     *
-    * Execution is adaptive, the [[graft.ops.Percentiles]] discipline:
-    * below `holisticMaxTotalRows` the prefix sum is one global window
-    * (optimal small-input latency); above it — or when forced with
-    * `holisticMaxTotalRows = 0` — the weight line is DISTRIBUTED: docs
-    * are bucketed by a fixed integer grid over w (value-range buckets,
+    * The weight line is DISTRIBUTED — no global window: docs are
+    * bucketed by a fixed integer grid over w (value-range buckets,
     * monotone in the sort key, no fp), per-bucket weight totals form an
     * O(nBuckets) frame whose prefix gives each bucket's below-offset, and
     * within-bucket prefix sums run per-bucket in parallel — below-offset
     * + local prefix IS the global cumulative weight, bit-identical to the
-    * window form (integer sums, ties on w never cross buckets). Same
-    * graceful degradation as Percentiles on duplicate-heavy w.
-    *
-    * @param rowCountHint caller-supplied row count of `docs` for the plan
-    *        decision (counted footer-cheap otherwise, as in Percentiles)
+    * one-window form [[systematicSampleWindow]] (integer sums, ties on w
+    * never cross buckets). Same graceful degradation as
+    * [[graft.ops.Percentiles]] on duplicate-heavy w.
     */
   def systematicSample(docs: DataFrame, n: Long = 100,
-                       holisticMaxTotalRows: Long = 8000000L,
-                       nBuckets: Int = 1024,
-                       rowCountHint: Option[Long] = None): DataFrame = {
-    val weighted = docs.select(col("doc_id"),
+                       nBuckets: Int = 1024): DataFrame = {
+    val weighted = sampleWeights(docs)
+    // 1-row extent frame: bucket grid coordinates + grand total
+    val ext = weighted.agg(min(col("w")).as("__lo"),
+      max(col("w")).as("__hi"), sum(col("w")).as("__total"))
+    val bucketed = weighted.crossJoin(broadcast(ext))
+      .withColumn("__b", expr(
+        s"(w - __lo) * $nBuckets div (__hi - __lo + 1)"))
+    val boff = bucketed.groupBy(col("__b"))
+      .agg(sum(col("w")).as("__bw"))
+      .withColumn("__below", coalesce(
+        sum(col("__bw")).over(Window.orderBy(col("__b"))
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select(col("__b"), col("__below"))
+    val wIn = Window.partitionBy(col("__b"))
+      .orderBy(col("w"), col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    samplePicks(bucketed
+      .withColumn("__loc", sum(col("w")).over(wIn))
+      .join(broadcast(boff), "__b")
+      .withColumn("cum", col("__below") + col("__loc"))
+      .withColumn("total", col("__total")), n)
+  }
+
+  /** [[systematicSample]] with the prefix sum as one global window: the
+    * reference its specs compare the distributed weight line against.
+    */
+  private[graft] def systematicSampleWindow(docs: DataFrame,
+                                            n: Long = 100): DataFrame = {
+    val wOrd = Window.orderBy(col("w"), col("doc_id"))
+    samplePicks(sampleWeights(docs)
+      .withColumn("cum", sum(col("w")).over(
+        wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("total", sum(col("w")).over(Window.partitionBy())), n)
+  }
+
+  private def sampleWeights(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
       size(TextStats.bpeIshTokens(col("text"))).cast("long").as("w"))
       .filter(col("w") > 0)
-    val small = holisticMaxTotalRows > 0 &&
-      rowCountHint.getOrElse(docs.count()) <= holisticMaxTotalRows
-    val lined =
-      if (small) {
-        val wOrd = Window.orderBy(col("w"), col("doc_id"))
-        val wAll = Window.partitionBy()
-        weighted
-          .withColumn("cum", sum(col("w")).over(
-            wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .withColumn("total", sum(col("w")).over(wAll))
-      } else {
-        // 1-row extent frame: bucket grid coordinates + grand total
-        val ext = weighted.agg(min(col("w")).as("__lo"),
-          max(col("w")).as("__hi"), sum(col("w")).as("__total"))
-        val bucketed = weighted.crossJoin(broadcast(ext))
-          .withColumn("__b", expr(
-            s"(w - __lo) * $nBuckets div (__hi - __lo + 1)"))
-        val boff = bucketed.groupBy(col("__b"))
-          .agg(sum(col("w")).as("__bw"))
-          .withColumn("__below", coalesce(
-            sum(col("__bw")).over(Window.orderBy(col("__b"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("__b"), col("__below"))
-        val wIn = Window.partitionBy(col("__b"))
-          .orderBy(col("w"), col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        bucketed
-          .withColumn("__loc", sum(col("w")).over(wIn))
-          .join(broadcast(boff), "__b")
-          .withColumn("cum", col("__below") + col("__loc"))
-          .withColumn("total", col("__total"))
-      }
+
+  /** Pick counts of the `n` sampling points over a (w, cum, total) line. */
+  private def samplePicks(lined: DataFrame, n: Long): DataFrame =
     lined
       // ceil(a/b) on positives as (a+b−1) div b: Spark `div` truncates and
       // DuckDB `//` floors — identical for non-negative operands only
@@ -465,7 +465,6 @@ object Curation {
            | - (((cum - w) * $n + total - 1) div total)""".stripMargin))
       .filter(col("n_picks") > 0)
       .select(col("doc_id"), col("w"), col("cum"), col("n_picks"))
-  }
 
   /** Per-source corpus-health scorecard — the one-row-per-source summary a
     * curation pipeline prints before a training run, composing the

@@ -1085,8 +1085,7 @@ object Dedup {
                        k: Int = 16, bands: Int = 4, n: Int = 5,
                        minJaccard: Double = 0.55, maxDist: Int = 16,
                        dim: Int = 64, bits: Int = 8,
-                       minCos: Double = 0.15,
-                       localSolveMaxEdges: Long = 100000L): DataFrame = {
+                       minCos: Double = 0.15): DataFrame = {
     // pinned: the three legs are the expensive subtrees (full-corpus
     // minhash, dHash and LSH band joins); both consumers below — the
     // modality mask and the CC closure inside canonicalMapping — would
@@ -1107,21 +1106,14 @@ object Dedup {
         .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"),
           lit(4L).as("m"))))
     val edges = text.unionByName(image).unionByName(embed)
-    // Round 20: the closure TAIL after the legs was a chain of small
-    // sequential driver jobs — CC's edge pin + sym pin + count + collect,
-    // the mask's explode/distinct/agg (re-derived inside the final join's
-    // broadcast build), then the keeper query — measured as ~2.4 s of
-    // q260's 3.9 s solo wall with every job reading the same tiny pinned
-    // edge list. Guide §2.4 (collapse the small-job chain): when the edge
-    // mass fits connectedComponents' own local-solve cutover, ONE collect
-    // of the pinned legs feeds BOTH the union-find closure and the
-    // modality mask, and the readout is a single job (local comp relation
-    // ⋈ docs + keeper windows + broadcast mask join). Values are
-    // bit-identical: union-find is Components' local path (min reachable
-    // id), and the mask is the same sum over the same distinct (doc, m)
-    // set — exact integer arithmetic either way. The distributed shape
-    // below remains the path for edge lists past the cutover.
-    if (localSolveMaxEdges > 0 && edges.count() <= localSolveMaxEdges) {
+    // Below the cutover ONE collect of the pinned legs feeds BOTH the
+    // union-find closure and the modality mask, and the readout is a
+    // single job — instead of a chain of small jobs over the same tiny edge
+    // list (CC's pins, count and collect, the mask's agg), measured as
+    // ~2.4 s of q260's 3.9 s. Values are bit-identical: union-find is
+    // Components' local path (min reachable id), and the mask is the same
+    // exact integer sum over the same distinct (doc, m) set.
+    if (graft.Cutover.count(graft.Cutover.CrossModalLocal, edges)) {
       val spark = docs.sparkSession
       import spark.implicits._
       val idType = edges.schema("doc_a").dataType

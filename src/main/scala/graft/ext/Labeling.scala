@@ -194,8 +194,7 @@ object Labeling {
     * @return event_type, n_games (decided), n_wins, strength (9-dp
     *         double, Σ = 1), rank (1 = strongest; ties by type)
     */
-  def bradleyTerry(events: DataFrame, iters: Int = 5,
-                   localSolveMaxPairs: Long = 100000L): DataFrame = {
+  def bradleyTerry(events: DataFrame, iters: Int = 5): DataFrame = {
     val p = preferenceBattles(events)
     // Pin the fixed frames once and the iterate each pass (the q64
     // PageRank / Components loop discipline): every MM pass references
@@ -211,20 +210,13 @@ object Labeling {
       .filter(col("n_ij") > 0L))
     val totals = graft.Pin(games.groupBy(col("i"))
       .agg(sum(col("wins_i")).as("n_wins"), sum(col("n_ij")).as("n_games")))
-    // Round 20 (guide §2.4, the CC-local-solve decision shape): the MM
-    // iterate is a |types|-row frame, so below the cutover the whole loop
-    // runs on the DRIVER from one collect of the pinned pair frame —
-    // replacing iters × (denom job + raw pin + sum + w pin), each paying
-    // full job latency on broadcast-sized frames. Arithmetic is the
-    // distributed loop verbatim: same double divisions, and the per-pass
-    // 9-dp round is Spark's own codegen formula
-    // (java.math.BigDecimal.valueOf(x).setScale(9, HALF_UP), NaN/Inf pass
-    // through). Summation order is fixed by an explicit (i, j) sort; the
-    // distributed sum's order is partition-dependent and the 9-dp round
-    // is what makes any order oracle-parity-safe — this path rides the
-    // same mask. The distributed loop remains for vocabularies past the
-    // cutover.
-    if (localSolveMaxPairs > 0 && games.count() <= localSolveMaxPairs) {
+    // Below the cutover the MM loop runs on the DRIVER from one collect of
+    // the pinned pair frame, instead of iters × (denom job + raw pin + sum
+    // + w pin). Arithmetic is the distributed loop verbatim: same double
+    // divisions, and the per-pass 9-dp round is Spark's own codegen formula
+    // (BigDecimal.valueOf(x).setScale(9, HALF_UP), NaN/Inf pass through),
+    // which makes the (i, j)-sorted summation order parity-safe.
+    if (graft.Cutover.count(graft.Cutover.BradleyTerryLocal, games)) {
       import org.apache.spark.sql.Row
       import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
       def round9(x: Double): Double =

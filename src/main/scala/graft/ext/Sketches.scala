@@ -154,12 +154,10 @@ object Sketches {
         count(lit(1)).as("n"))
     // the exact comparison column rides the DISTRIBUTED histogram-pruned
     // strategy (q66's plan), not a holistic per-group buffer: the readout
-    // must not be the one piece of the sketch query that stops scaling.
-    // rowCountHint = MaxValue forces the scale plan without a count job;
+    // must not be the one piece of the sketch query that stops scaling;
     // the interpolation doubles are the oracle-proven q37/q66 contract.
     val exact = graft.ops.Percentiles.exactPercentiles(
-      vals, "event_type", "value", ps,
-      holisticMaxTotalRows = 0L, rowCountHint = Some(Long.MaxValue))
+      vals, "event_type", "value", ps)
       .select(col("event_type").as("__et"), col("p").as("__pp"),
         col("value").as("exact"))
     val width = (col("hi") - col("lo")) / nBuckets

@@ -27,9 +27,6 @@ object TextStats {
   /** Token count (whitespace tokenizer). */
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** Distinct-token count — vocabulary size. */
-  def distinctTokenCount(text: Column): Column = size(array_distinct(tokens(text)))
-
   /** Quality features: exact arithmetic only.
     *  - avg_token_len: non-space chars / tokens
     *  - type_token_ratio: vocabulary / tokens (lexical diversity)

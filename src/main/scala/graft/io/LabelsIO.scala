@@ -1,6 +1,5 @@
 package graft.io
 
-import graft.schema.Schemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,15 +77,6 @@ object LabelsIO {
         tc(5, "double").as("height"))
       .na.drop(Seq("class_id", "x_center", "y_center", "width", "height")))
 
-  /** S9 — label sink: one text part per split partition, one line per box.
-    * The reference writes one file per image; at scale that is a small-files
-    * antipattern, so the engine's native sink is `partitionBy(split)` text
-    * with the image stem as a column. Exact per-image files remain available
-    * via `writePerImage` below for parity tooling.
-    */
-  def writeLabels(lines: DataFrame, outDir: String): Unit =
-    lines.write.mode("overwrite").partitionBy("split").text(outDir)
-
   /** Per-image label files (parity with converter_to_yolo_data.py:95-99):
     * executor-side `foreachPartition`, no driver collect.
     */
@@ -130,6 +120,4 @@ object LabelsIO {
       }
     (obs.get("files").asInstanceOf[Long], obs.get("bytes").asInstanceOf[Long])
   }
-
-  private[graft] def predSchema = Schemas.predLabel
 }

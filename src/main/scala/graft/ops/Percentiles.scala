@@ -4,67 +4,52 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Exact percentiles per group, with an adaptive execution strategy.
+/** Exact percentiles per group, in several bit-identical strategies.
   *
   * `percentile()` (Spark) / `quantile_cont()` (DuckDB) are HOLISTIC
   * aggregates: every value of a group is buffered on one reducer. That is
   * optimal at bench scale (one pass, one shuffle) and fatal for a 100 TB
-  * group. So, AQE-broadcast-threshold style, the operator picks its plan:
-  *
-  *  - input ≤ `holisticMaxTotalRows` (a parquet-footer-cheap count, no scan):
-  *    the built-in holistic aggregate — one pass, minimal latency;
-  *  - larger inputs: HISTOGRAM PRUNING — exact order statistics without any
-  *    per-group buffer:
-  *      1. per-group count/min/max                    (partial agg, 1 shuffle)
-  *      2. fixed-width histogram over nBuckets        (partial agg, 1 shuffle)
-  *      3. locate each target rank's bucket from the cumulative histogram
-  *         (histogram is O(groups · nBuckets) — tiny, broadcast back)
-  *      4. re-scan ONLY the located buckets (~1/nBuckets of the data), rank
-  *         within each by value, pick the order statistics, interpolate.
+  * group. [[exactPercentiles]] is the scale plan instead, HISTOGRAM
+  * PRUNING — exact order statistics without any per-group buffer:
+  *  1. per-group count/min/max                    (partial agg, 1 shuffle)
+  *  1. fixed-width histogram over nBuckets        (partial agg, 1 shuffle)
+  *  1. locate each target rank's bucket from the cumulative histogram
+  *     (histogram is O(groups · nBuckets) — tiny, broadcast back)
+  *  1. re-scan ONLY the located buckets (~1/nBuckets of the data), rank
+  *     within each by value, pick the order statistics, interpolate.
   *
   * Buckets partition the value range, so within-bucket rank + cumulative
   * count below the bucket IS the global rank: no global sort. One hot key
   * costs O(n_group/nBuckets) at the rank-resolution sort instead of
   * O(n_group); duplicate-heavy columns degrade gracefully.
   *
-  * Both paths use the same interpolation, Spark's `Percentile` formula
+  * Every strategy uses the same interpolation, Spark's `Percentile` formula
   * `(hi − pos)·v_lo + (pos − lo)·v_hi` with `pos = p·(n−1)` — which also
   * bit-matches DuckDB's `quantile_cont` on doubles (oracle-verified);
-  * AnalyticsSpec asserts the two paths are bit-identical on real data.
+  * AnalyticsSpec asserts histogram pruning is bit-identical to the
+  * holistic aggregate ([[exactPercentilesHolistic]]) on real data.
   */
 object Percentiles {
 
-  /** Exact percentiles of `valueCol` per `groupCol`.
+  /** Exact percentiles of `valueCol` per `groupCol` by histogram pruning
+    * (see object doc).
     *
     * @param ps percentile fractions in [0, 1]
-    * @param rowCountHint caller-supplied row count of `df` used for the plan
-    *        decision. Pass it when the count is already known (or when
-    *        calling repeatedly on the same input, as q37 does) — otherwise
-    *        the operator runs `df.count()` itself, which is footer-cheap for
-    *        a bare parquet scan but a real job for a derived/cached frame.
     * @return (groupCol, p, value) — one row per group × percentile; groups
     *         with only null values are absent (as with the aggregate form)
     */
   def exactPercentiles(df: DataFrame, groupCol: String, valueCol: String,
-                       ps: Seq[Double], nBuckets: Int = 1024,
-                       holisticMaxTotalRows: Long = 8000000L,
-                       rowCountHint: Option[Long] = None): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"percentile fractions must be in [0,1]: $ps")
-    val rows = df
-      .filter(col(valueCol).isNotNull)
-      .select(col(groupCol).as("__g"), col(valueCol).cast("double").as("__v"))
-    // count before the null filter upper-bounds every group size
-    val total = rowCountHint.getOrElse(df.count())
-    if (total <= holisticMaxTotalRows) holistic(rows, groupCol, ps)
-    else distributed(rows, groupCol, ps, nBuckets)
-  }
+                       ps: Seq[Double], nBuckets: Int = 1024): DataFrame =
+    distributed(nonNull(df, groupCol, valueCol, ps), groupCol, ps, nBuckets)
 
-  /** Small-input plan: the built-in holistic aggregate, exploded to the
-    * operator's (group, p, value) long format.
+  /** The built-in holistic aggregate, exploded to [[exactPercentiles]]'
+    * (group, p, value) long format: the reference its specs compare the
+    * scale plan against.
     */
-  private def holistic(rows: DataFrame, groupCol: String,
-                       ps: Seq[Double]): DataFrame = {
+  private[graft] def exactPercentilesHolistic(df: DataFrame, groupCol: String,
+                                              valueCol: String,
+                                              ps: Seq[Double]): DataFrame = {
+    val rows = nonNull(df, groupCol, valueCol, ps)
     val psSql = ps.map(p => s"${p}D").mkString("array(", ", ", ")")
     val pArr = array(ps.map(lit): _*)
     rows.groupBy(col("__g"))
@@ -75,7 +60,15 @@ object Percentiles {
         col("value"))
   }
 
-  /** Third strategy: VALUE-COUNT COMPRESSION — exact percentiles for
+  private def nonNull(df: DataFrame, groupCol: String, valueCol: String,
+                      ps: Seq[Double]): DataFrame = {
+    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
+      s"percentile fractions must be in [0,1]: $ps")
+    df.filter(col(valueCol).isNotNull)
+      .select(col(groupCol).as("__g"), col(valueCol).cast("double").as("__v"))
+  }
+
+  /** VALUE-COUNT COMPRESSION strategy — exact percentiles for
     * bounded value domains (2-dp prices, integral quantities, codes, day
     * buckets). Pre-aggregate to (group, value, count) with map-side combine,
     * then every order statistic is a weighted-rank lookup over the D
@@ -99,7 +92,7 @@ object Percentiles {
     weightedPercentiles(vc, groupCol, valueCol, "__cnt", ps)
   }
 
-  /** Fourth strategy: WINDOW-SORT — exact percentiles for near-unique
+  /** WINDOW-SORT strategy — exact percentiles for near-unique
     * continuous domains (prices, measurements) at small-to-moderate group
     * cardinality: rank raw rows by one per-group window sort and pick the
     * order statistics directly. No holistic buffer (the sort spills instead
@@ -111,10 +104,7 @@ object Percentiles {
     */
   def sortPercentiles(df: DataFrame, groupCol: String, valueCol: String,
                       ps: Seq[Double]): DataFrame = {
-    require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
-      s"percentile fractions must be in [0,1]: $ps")
-    val rows = df.filter(col(valueCol).isNotNull)
-      .select(col(groupCol).as("__g"), col(valueCol).cast("double").as("__v"))
+    val rows = nonNull(df, groupCol, valueCol, ps)
     val wOrd = Window.partitionBy(col("__g")).orderBy(col("__v"))
     val wAll = Window.partitionBy(col("__g"))
     // row_number (not a running sum) so duplicate values get distinct ranks
@@ -151,34 +141,26 @@ object Percentiles {
           .as("value"))
   }
 
-  /** The WINDOW-SORT strategy behind an adaptive scale gate (round 20 —
-    * the q85 decision shape, shared by every near-unique-domain caller):
-    * below `sortMaxTotalRows` the low-latency window-sort plan; above it,
-    * [[exactPercentiles]]' histogram-pruning plan forced past its holistic
-    * shortcut. The window sort runs ONE task per group however big the
-    * table (3 `l_returnflag` groups = 3 tasks), while histogram pruning's
-    * rank resolution parallelizes over located buckets regardless of group
-    * count. The 2M default brackets the MEASURED crossover on the
-    * single-pass lineitem consumers (q61/q106/q109 at local[32], with the
-    * distributed path's round-20 pins): at 600k rows the sort wins
-    * (~0.9 s vs ~1.3 s — histogram pruning pays 3 fixed scans), at 6M it
-    * loses ~2× (5.2–5.8 s vs 2.6–3.1 s) and at 18M ~2.7× (14–17 s vs
-    * 5.2–5.9 s), the gap growing with group size — the sort is serial per
-    * group. Every
+  /** The WINDOW-SORT strategy behind an adaptive scale gate (the q85
+    * decision shape, shared by every near-unique-domain caller): the
+    * low-latency window-sort plan when the caller's
+    * [[graft.Cutover.PercentileSort]] decision says the input is small,
+    * [[exactPercentiles]]' histogram-pruning plan otherwise. The window
+    * sort runs ONE task per group however big the table (3 `l_returnflag`
+    * groups = 3 tasks), while histogram pruning's rank resolution
+    * parallelizes over located buckets regardless of group count; the
+    * measured crossover is at [[graft.Cutover.SortMaxRows]]. Every
     * strategy emits the same bit-identical interpolation doubles
     * (AnalyticsSpec asserts it; the oracle hash is strategy-blind), so the
     * cutover can change the plan, never a value.
     *
-    * @param total row count of `df` for the plan decision — pass a footer
-    *        count ([[graft.Tables.footerRowCount]]) or other zero-job
-    *        upper bound when available
+    * @param sort the caller's decision, typically
+    *        `Cutover.footer(Cutover.PercentileSort, …)` on the input table
     */
   def adaptivePercentiles(df: DataFrame, groupCol: String, valueCol: String,
-                          ps: Seq[Double], total: Long,
-                          sortMaxTotalRows: Long = 2000000L): DataFrame =
-    if (total <= sortMaxTotalRows) sortPercentiles(df, groupCol, valueCol, ps)
-    else exactPercentiles(df, groupCol, valueCol, ps,
-      holisticMaxTotalRows = 0L, rowCountHint = Some(total))
+                          ps: Seq[Double], sort: Boolean): DataFrame =
+    if (sort) sortPercentiles(df, groupCol, valueCol, ps)
+    else exactPercentiles(df, groupCol, valueCol, ps)
 
   /** Exact percentiles over pre-aggregated (group, value, weight) rows —
     * the rank-resolution core of [[valueCountPercentiles]], public because
@@ -302,8 +284,8 @@ object Percentiles {
   /** Equi-depth histogram: `bins` buckets per group holding (approximately)
     * equal row counts — the optimizer-statistics / drift-monitoring shape,
     * where equi-WIDTH histograms collapse under skew. Cutpoints are the
-    * exact interior percentiles (i/bins), so the operator inherits whichever
-    * percentile strategy fits the input; rows then bin by how many cutpoints
+    * exact interior percentiles (i/bins) from [[adaptivePercentiles]]
+    * under the caller's `sort` decision; rows then bin by how many cutpoints
     * they exceed and collapse to per-(group, bin) count/min/max.
     *
     * Scale shape: cutpoints are O(groups·bins) — a broadcast — so binning
@@ -315,21 +297,10 @@ object Percentiles {
     * comparison; min/max/count are order-free.
     */
   def equiDepthHistogram(df: DataFrame, groupCol: String, valueCol: String,
-                         bins: Int = 8,
-                         rowCountHint: Option[Long] = None,
-                         cutpointFn: (DataFrame, String, String, Seq[Double])
-                           => DataFrame = null): DataFrame = {
+                         sort: Boolean, bins: Int = 8): DataFrame = {
     require(bins >= 2, s"need at least 2 bins: $bins")
     val ps = (1 until bins).map(_.toDouble / bins)
-    // every strategy emits the same bit-identical interpolation (asserted
-    // in AnalyticsSpec), so callers pick by value-domain shape alone —
-    // e.g. sortPercentiles for near-unique domains skips both the plan-
-    // decision count() and the holistic buffer
-    val cutRows =
-      if (cutpointFn != null) cutpointFn(df, groupCol, valueCol, ps)
-      else exactPercentiles(df, groupCol, valueCol, ps,
-        rowCountHint = rowCountHint)
-    val cuts = cutRows
+    val cuts = adaptivePercentiles(df, groupCol, valueCol, ps, sort)
       .groupBy(col(groupCol))
       .agg(sort_array(collect_list(col("value"))).as("__cuts"))
     df.filter(col(valueCol).isNotNull)

@@ -192,28 +192,31 @@ object Relational {
       // key to 0, conflating it with real user 0 (oracle keeps NULL keys)
       .na.fill(0L, Seq("click", "view", "purchase", "signup", "error"))
 
+  /** The percentile-sort decision of the near-unique l_extendedprice
+    * consumers (q37, q61, q85, q106), from lineitem's parquet footers with
+    * zero jobs: the 3-group window sort is one task per group however big
+    * the table, so past the cutover histogram pruning takes over,
+    * bit-identically ([[Percentiles.adaptivePercentiles]]).
+    */
+  private def sortFits(spark: SparkSession, d: String): Boolean =
+    graft.Cutover.footer(graft.Cutover.PercentileSort, spark, d, "lineitem")
+
   /** Exact interpolated percentiles per group — computed via VALUE-COUNT
     * compression ([[Percentiles.valueCountPercentiles]]): no per-group
     * holistic buffer, so the same plan survives a 100 TB group (and the
     * histogram-pruning plan remains for continuous domains, q66).
-    * Bit-identical to Spark's `percentile` ≡ DuckDB's `quantile_cont` (the
-    * holistic form stays available below; AnalyticsSpec asserts equality).
+    * Bit-identical to Spark's `percentile` ≡ DuckDB's `quantile_cont`
+    * (AnalyticsSpec asserts equality with the holistic aggregate).
     */
-  def q37Percentiles(spark: SparkSession, d: String,
-                     sortMaxTotalRows: Long = 2000000L): DataFrame = {
+  def q37Percentiles(spark: SparkSession, d: String): DataFrame = {
     val li = lineitem(spark, d)
-    // strategy picked per column domain: near-unique prices → window-sort
-    // exact plan behind the adaptive scale gate (round 20 — the q85
-    // decision shape; the 3-group window sort runs 3 tasks however big
-    // the table, so above the cutover the histogram-pruning plan takes
-    // over, bit-identically); 50-distinct quantities → value-count
+    // strategy picked per column domain: near-unique prices → the adaptive
+    // window-sort gate ([[sortFits]]); 50-distinct quantities → value-count
     // compression (the counting-sort plan, shuffling D rows instead of
-    // N, already group-count-free). The plan-decision cardinality is a
-    // parquet-footer read — zero jobs.
+    // N, already group-count-free)
     val price = Percentiles
       .adaptivePercentiles(li, "l_returnflag", "l_extendedprice",
-        Seq(0.5, 0.9), graft.Tables.footerRowCount(spark, d, "lineitem"),
-        sortMaxTotalRows)
+        Seq(0.5, 0.9), sortFits(spark, d))
       .groupBy(col("l_returnflag"))
       .agg(max(when(col("p") === 0.5, col("value"))).as("p50"),
         max(when(col("p") === 0.9, col("value"))).as("p90"))
@@ -227,34 +230,18 @@ object Relational {
       .select(col("l_returnflag"), col("p50"), col("p90"), col("qty_p25"))
   }
 
-  /** q37's percentile computation with the operator FORCED onto its
-    * distributed histogram-pruning plan (`holisticMaxTotalRows = 0`): the
-    * 100 TB path itself — per-group extent, fixed-width histogram, bucket
-    * location, rank resolution, interpolation — is what the DuckDB oracle
-    * hash-checks here, not just the small-input holistic shortcut.
+  /** q37's percentile computation on the distributed histogram-pruning
+    * plan ([[Percentiles.exactPercentiles]]): the 100 TB path itself —
+    * per-group extent, fixed-width histogram, bucket location, rank
+    * resolution, interpolation — is what the DuckDB oracle hash-checks.
     * Bit-identical output to the holistic form (AnalyticsSpec asserts it;
     * this query makes the driver assert it too).
     */
   def q66PercentilesDistributed(spark: SparkSession, d: String): DataFrame =
     Percentiles
       .exactPercentiles(lineitem(spark, d), "l_returnflag", "l_extendedprice",
-        Seq(0.25, 0.5, 0.9), holisticMaxTotalRows = 0L, rowCountHint = Some(1L))
+        Seq(0.25, 0.5, 0.9))
       .select(col("l_returnflag"), col("p"), col("value"))
-
-  /** The holistic aggregate form of q37 (single-reducer per group) — kept as
-    * the reference semantics the distributed operator must reproduce.
-    */
-  def q37PercentilesHolistic(spark: SparkSession, d: String): DataFrame =
-    lineitem(spark, d)
-      .groupBy(col("l_returnflag"))
-      .agg(
-        // one buffer for both price percentiles (array form), not two
-        expr("percentile(l_extendedprice, array(0.5D, 0.9D))").as("pe"),
-        expr("percentile(l_quantity, 0.25)").as("qty_p25"))
-      .select(col("l_returnflag"),
-        element_at(col("pe"), 1).as("p50"),
-        element_at(col("pe"), 2).as("p90"),
-        col("qty_p25"))
 
   /** Frame-spec window functions (beyond the reference's rank-only windows):
     * per-customer order history with lag, per-row delta, and a 3-row moving
@@ -382,17 +369,11 @@ object Relational {
     * join, no second shuffle of the data.
     */
   def q61IqrOutliers(spark: SparkSession, d: String,
-                     k: Double = 0.5,
-                     sortMaxTotalRows: Long = 2000000L): DataFrame = {
+                     k: Double = 0.5): DataFrame = {
     val li = lineitem(spark, d)
-    // near-unique price domain → window-sort exact strategy behind the
-    // adaptive scale gate (round 20, the q85 decision shape): one columnar
-    // sort shuffle at bench scale, histogram pruning past the cutover —
-    // the 3-group window sort is one task per group however big the table
     val fences = Percentiles
       .adaptivePercentiles(li, "l_returnflag", "l_extendedprice",
-        Seq(0.25, 0.75), graft.Tables.footerRowCount(spark, d, "lineitem"),
-        sortMaxTotalRows)
+        Seq(0.25, 0.75), sortFits(spark, d))
       .groupBy(col("l_returnflag"))
       .agg(max(when(col("p") === 0.25, col("value"))).as("p25"),
         max(when(col("p") === 0.75, col("value"))).as("p75"))
@@ -415,15 +396,15 @@ object Relational {
     * |x − med| — and rows with |x − med| > k·MAD are counted per group.
     *
     * Scale shape: each percentile pass is [[Percentiles.exactPercentiles]]
-    * (histogram pruning beyond the holistic cutover), and both tiny stat
+    * (window sort below the percentile cutover, histogram pruning past
+    * it), and both tiny stat
     * frames broadcast back over the fact scan — three scans total, no
     * second shuffle of the data. Parity: med/MAD are bit-identical to
     * quantile_cont (q37-verified), |x−med| and the k·MAD compare are
     * per-row IEEE doubles; only the REPORTED stats round at 6 dp.
     */
   def q85MadOutliers(spark: SparkSession, d: String,
-                     k: Double = 3.0,
-                     sortMaxTotalRows: Long = 2000000L): DataFrame = {
+                     k: Double = 3.0): DataFrame = {
     val li = lineitem(spark, d)
     // prices are ~99% unique, so both medians use the WINDOW-SORT exact
     // strategy (one columnar sort shuffle each, no holistic buffer, no
@@ -434,23 +415,14 @@ object Relational {
     // median sort per branch: exactly one sort per percentile, one final
     // aggregation pass
     //
-    // Round 20, the AQE-threshold decision shape: l_returnflag has 3
-    // values, so the window sort runs THREE tasks however big the table —
-    // the 10× scale record measured the fallout as 5.4× wall at 10× data
-    // (2.1 → 11.2 s) while the distributed family held ~2×. Above the
-    // cutover both passes switch to exactPercentiles' histogram-pruning
-    // plan (forced past its holistic shortcut): per-group rank resolution
-    // parallelizes over located buckets, and the interpolation is
-    // bit-identical across strategies (AnalyticsSpec asserts it; the
-    // oracle hash is strategy-blind).
-    // plan-decision cardinality from the parquet footer (round 20): the
-    // count() job this replaces was cheap under the hot cache but a real
-    // scan-shaped job against a bare 100 TB table; the footer already
-    // knows the answer with zero executor time
-    val n = graft.Tables.footerRowCount(spark, d, "lineitem")
+    // l_returnflag has 3 values, so the window sort runs THREE tasks however
+    // big the table (5.4× wall at 10× data, measured); past the cutover
+    // both passes are histogram pruning, bit-identically. ONE footer
+    // decision (zero jobs) serves both passes and the dev pin below
+    val sort = sortFits(spark, d)
     def med50(df: DataFrame, valueCol: String): DataFrame =
       Percentiles.adaptivePercentiles(df, "l_returnflag", valueCol,
-        Seq(0.5), n, sortMaxTotalRows)
+        Seq(0.5), sort)
     val med = med50(li, "l_extendedprice")
       .select(col("l_returnflag"), col("value").as("med"))
       .transform(graft.Pin.apply)
@@ -461,7 +433,7 @@ object Relational {
     // resolution) and the rollup a 4th time — pin the derived dev frame on
     // that branch so the join+abs runs once, not per scan; the sort branch
     // keeps the cheap 2-consumer lineage
-    val dev = if (n <= sortMaxTotalRows) dev0 else graft.Pin(dev0)
+    val dev = if (sort) dev0 else graft.Pin(dev0)
     val mad = med50(dev, "d")
       .select(col("l_returnflag"), col("value").as("mad"))
       .transform(graft.Pin.apply)
@@ -882,15 +854,11 @@ object Relational {
     * strategy and broadcast back over one fact scan; the clamped average is
     * an fp-ordered aggregate → 2-dp round per the parity rules.
     */
-  def q106WinsorizedMean(spark: SparkSession, d: String,
-                         sortMaxTotalRows: Long = 2000000L): DataFrame = {
+  def q106WinsorizedMean(spark: SparkSession, d: String): DataFrame = {
     val li = lineitem(spark, d)
-    // adaptive scale gate (round 20, the q85 decision shape): window sort
-    // at bench scale, histogram pruning past the cutover
     val fences = Percentiles
       .adaptivePercentiles(li, "l_returnflag", "l_extendedprice",
-        Seq(0.05, 0.95), graft.Tables.footerRowCount(spark, d, "lineitem"),
-        sortMaxTotalRows)
+        Seq(0.05, 0.95), sortFits(spark, d))
       .groupBy(col("l_returnflag"))
       .agg(max(when(col("p") === 0.05, col("value"))).as("lo"),
         max(when(col("p") === 0.95, col("value"))).as("hi"))

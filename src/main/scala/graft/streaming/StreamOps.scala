@@ -148,7 +148,8 @@ object StreamOps {
     val keyed = events.select(col("event_id"), col("user_id"),
       col("event_type"), col("ts_us"), batchKey.cast("long").as("batch"))
     val keyCols = Seq("user_id", "event_type")
-    var state: DataFrame = keyed.sparkSession.emptyDataFrame
+    // no state before batch 0: its first-per-key rows are admitted as is
+    var state: Option[DataFrame] = None
     val outs = (0 until batches).map { b =>
       // watermark the engine holds while batch b processes: ms-floored
       // max event time of everything seen before, minus the delay
@@ -156,21 +157,23 @@ object StreamOps {
       val wf = broadcast(keyed.filter(col("batch") < b)
         .agg(coalesce(greatest((mx - pmod(mx, lit(1000L))) - lit(delayUs),
           lit(0L)), lit(0L)).as("w_us")))
-      val live =
-        if (b == 0) keyed.filter(lit(false))
-          .select(keyCols.map(col) :+ col("ts_us").as("expiry_us"): _*)
-        else graft.Pin(state.crossJoin(wf)
-          .filter(col("expiry_us") > col("w_us"))
-          .select(keyCols.map(col) :+ col("expiry_us"): _*))
+      // the key columns are re-aliased before the pin: a pin keeps its
+      // input's attribute ids, and the state's ids are `keyed`'s, which the
+      // non-adaptive planner cannot tell apart in the anti-join below
+      val live = state.map(s => graft.Pin(s.crossJoin(wf)
+        .filter(col("expiry_us") > col("w_us"))
+        .select(keyCols.map(c => col(c).as(c)) :+ col("expiry_us"): _*)))
       val ranked = keyed.filter(col("batch") === b).crossJoin(wf)
         .filter(col("ts_us") > col("w_us")) // late rows never reach state
         .withColumn("rk", row_number().over(
           Window.partitionBy(keyCols.map(col): _*)
             .orderBy(col("ts_us"), col("event_id"))))
-      val admitted = ranked.filter(col("rk") === 1)
-        .join(live.select(keyCols.map(col): _*), keyCols, "left_anti")
-      state = live.unionByName(admitted.select(
-        keyCols.map(col) :+ (col("ts_us") + lit(delayUs)).as("expiry_us"): _*))
+      val first = ranked.filter(col("rk") === 1)
+      val admitted = live.fold(first)(l =>
+        first.join(l.select(keyCols.map(col): _*), keyCols, "left_anti"))
+      val entered = admitted.select(
+        keyCols.map(col) :+ (col("ts_us") + lit(delayUs)).as("expiry_us"): _*)
+      state = Some(live.fold(entered)(_.unionByName(entered)))
       admitted.select(col("event_id"), col("user_id"), col("event_type"),
         col("ts_us"), lit(b.toLong).as("batch"))
     }

@@ -174,19 +174,28 @@ class AnalyticsSpec extends SparkSuite {
       Seq(("aa", 4L, true, 4.0), ("bb", 2L, true, 2.0)))
   }
 
+  /** (l_returnflag, p50, p90) of l_extendedprice by the holistic
+    * aggregate — the reference every strategy must reproduce bit for bit.
+    */
+  private def holisticPrices(): Seq[(String, Double, Double)] = {
+    val m = graft.ops.Percentiles.exactPercentilesHolistic(
+        Tables.lineitem(spark, sf), "l_returnflag", "l_extendedprice",
+        Seq(0.5, 0.9))
+      .as[(String, Double, Double)].collect()
+      .map { case (g, p, v) => (g, p) -> v }.toMap
+    m.keys.map(_._1).toSeq.sorted.map(g => (g, m((g, 0.5)), m((g, 0.9))))
+  }
+
   test("histogram-pruned percentiles are bit-identical to the holistic aggregate") {
     import graft.ops.Percentiles
     val li = Tables.lineitem(spark, sf)
-    // holisticMaxTotalRows = 0 forces the distributed (histogram) plan
     val dist = Percentiles
-      .exactPercentiles(li, "l_returnflag", "l_extendedprice", Seq(0.5, 0.9),
-        holisticMaxTotalRows = 0L)
+      .exactPercentiles(li, "l_returnflag", "l_extendedprice", Seq(0.5, 0.9))
       .as[(String, Double, Double)].collect()
       .map { case (g, p, v) => (g, p) -> v }.toMap
-    val hol = Relational.q37PercentilesHolistic(spark, sf)
-      .as[(String, Double, Double, Double)].collect()
+    val hol = holisticPrices()
     assert(hol.nonEmpty)
-    hol.foreach { case (g, p50, p90, _) =>
+    hol.foreach { case (g, p50, p90) =>
       assert(dist((g, 0.5)) === p50) // exact ==: same order stats, same lerp
       assert(dist((g, 0.9)) === p90)
     }
@@ -199,10 +208,11 @@ class AnalyticsSpec extends SparkSuite {
       ("b", 5.0), // single-element group
       ("c", 3.0), ("c", 3.0), ("c", 3.0)) // degenerate range (lo == hi)
       .toDF("g", "v")
-    for (threshold <- Seq(0L, 1000000L)) { // both plans, same answers
-      val r = Percentiles.exactPercentiles(df, "g", "v", Seq(0.0, 0.5, 1.0),
-          nBuckets = 4, holisticMaxTotalRows = threshold)
-        .as[(String, Double, Double)].collect()
+    for (plan <- Seq( // both plans, same answers
+      Percentiles.exactPercentiles(df, "g", "v", Seq(0.0, 0.5, 1.0),
+        nBuckets = 4),
+      Percentiles.exactPercentilesHolistic(df, "g", "v", Seq(0.0, 0.5, 1.0)))) {
+      val r = plan.as[(String, Double, Double)].collect()
         .map { case (g, p, v) => (g, p) -> v }.toMap
       assert(r(("a", 0.0)) === 1.0 && r(("a", 1.0)) === 9.0)
       assert(r(("a", 0.5)) === 2.0) // pos=1.5 between the duplicate 2.0s
@@ -229,11 +239,9 @@ class AnalyticsSpec extends SparkSuite {
       .sortPercentiles(li, "l_returnflag", "l_extendedprice", Seq(0.5, 0.9))
       .as[(String, Double, Double)].collect()
       .map { case (g, p, v) => (g, p) -> v }.toMap
-    Relational.q37PercentilesHolistic(spark, sf)
-      .as[(String, Double, Double, Double)].collect()
-      .foreach { case (g, p50, p90, _) =>
-        assert(srt((g, 0.5)) === p50 && srt((g, 0.9)) === p90)
-      }
+    holisticPrices().foreach { case (g, p50, p90) =>
+      assert(srt((g, 0.5)) === p50 && srt((g, 0.9)) === p90)
+    }
   }
 
   test("value-count percentiles are bit-identical to the holistic aggregate") {
@@ -243,10 +251,9 @@ class AnalyticsSpec extends SparkSuite {
       .valueCountPercentiles(li, "l_returnflag", "l_extendedprice", Seq(0.5, 0.9))
       .as[(String, Double, Double)].collect()
       .map { case (g, p, v) => (g, p) -> v }.toMap
-    val hol = Relational.q37PercentilesHolistic(spark, sf)
-      .as[(String, Double, Double, Double)].collect()
+    val hol = holisticPrices()
     assert(hol.nonEmpty)
-    hol.foreach { case (g, p50, p90, _) =>
+    hol.foreach { case (g, p50, p90) =>
       assert(vcp((g, 0.5)) === p50) // exact ==: same order stats, same lerp
       assert(vcp((g, 0.9)) === p90)
     }

@@ -20,8 +20,9 @@ class ComponentsSpec extends SparkSuite {
   test("long path converges (diameter > 1 needs iteration)") {
     val edges = (0L until 12L).sliding(2).map(s => (s(0), s(1))).toSeq
       .toDF("a", "b")
-    // localSolveMaxEdges=0: the distributed join loop is what's under test
-    val r = Components.connectedComponents(edges, localSolveMaxEdges = 0L)
+    // threshold 0: the distributed join loop is what's under test
+    val r = Cutover.forcing(Cutover.ComponentsLocal -> 0L)(
+      Components.connectedComponents(edges))
       .as[(Long, Long)].collect()
     assert(r.forall(_._2 == 0L))
   }
@@ -31,11 +32,12 @@ class ComponentsSpec extends SparkSuite {
     val edges = Seq.fill(300)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))
       .filter { case (a, b) => a != b }
       .toDF("a", "b")
-    val local = Components.connectedComponents(edges)
-      .as[(Long, Long)].collect().toMap
-    val dist = Components.connectedComponents(edges, localSolveMaxEdges = 0L)
-      .as[(Long, Long)].collect().toMap
+    // threshold n − 1, n, n + 1 around the fixture's edge count n
+    val Seq(dist, local, above) = atBoundary(Cutover.ComponentsLocal,
+      "count")(Components.connectedComponents(edges))
+      .map(_.as[(Long, Long)].collect().toMap)
     assert(local == dist)
+    assert(above == local)
   }
 
   test("dedup groups from real near-dup pairs: canonical id is the group min") {
@@ -69,7 +71,8 @@ class ComponentsSpec extends SparkSuite {
     val edges = (0L until 30L).sliding(2).map(s => (s(0), s(1))).toSeq
       .toDF("a", "b")
     intercept[IllegalStateException] {
-      Components.connectedComponents(edges, maxIter = 3, localSolveMaxEdges = 0L)
+      Cutover.forcing(Cutover.ComponentsLocal -> 0L)(
+        Components.connectedComponents(edges, maxIter = 3))
         .collect()
     }
   }

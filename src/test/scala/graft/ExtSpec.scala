@@ -551,10 +551,9 @@ class ExtSpec extends SparkSuite {
     // and within-bucket ties; both plans must agree to the bit
     val docs = (1 to 200).map(i => (i.toLong, ("w " * (1 + i % 7)).trim))
       .toDF("doc_id", "text")
-    val window = ext.Curation.systematicSample(docs, n = 37)
+    val window = ext.Curation.systematicSampleWindow(docs, n = 37)
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val dist = ext.Curation.systematicSample(docs, n = 37,
-      holisticMaxTotalRows = 0, nBuckets = 4)
+    val dist = ext.Curation.systematicSample(docs, n = 37, nBuckets = 4)
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
     assert(dist === window)
   }
@@ -942,15 +941,17 @@ class ExtSpec extends SparkSuite {
 
   test("equiDepthHistogram: near-equal bin mass, ordered extents, full cover") {
     val df = (1 to 64).map(v => ("g", v.toDouble)).toDF("g", "v")
-    val r = ops.Percentiles.equiDepthHistogram(df, "g", "v", bins = 4)
-      .as[(String, Long, Long, Double, Double)].collect().sortBy(_._2)
-    assert(r.map(_._2).toSeq === Seq(0L, 1L, 2L, 3L))
-    assert(r.map(_._3).sum === 64L)
-    // cutpoints at p∈{.25,.5,.75} of 1..64: 16.75, 32.5, 48.25 → bin
-    // masses 16/16/16/16 and contiguous extents
-    assert(r.map(_._3).toSeq === Seq(16L, 16L, 16L, 16L))
-    assert(r(0)._4 === 1.0 && r(0)._5 === 16.0)
-    assert(r(3)._4 === 49.0 && r(3)._5 === 64.0)
+    for (sort <- Seq(true, false)) { // window-sort and histogram cutpoints
+      val r = ops.Percentiles.equiDepthHistogram(df, "g", "v", sort, bins = 4)
+        .as[(String, Long, Long, Double, Double)].collect().sortBy(_._2)
+      assert(r.map(_._2).toSeq === Seq(0L, 1L, 2L, 3L))
+      assert(r.map(_._3).sum === 64L)
+      // cutpoints at p∈{.25,.5,.75} of 1..64: 16.75, 32.5, 48.25 → bin
+      // masses 16/16/16/16 and contiguous extents
+      assert(r.map(_._3).toSeq === Seq(16L, 16L, 16L, 16L))
+      assert(r(0)._4 === 1.0 && r(0)._5 === 16.0)
+      assert(r(3)._4 === 49.0 && r(3)._5 === 64.0)
+    }
   }
 
   test("standardizeDims: exact per-dimension z-scores; constant dim → null z") {

@@ -93,6 +93,19 @@ class GeometrySpec extends SparkSuite {
     assert(df.select(Geometry.iou(a, b)).as[Double].head() == 0.0)
   }
 
+  test("golden: xyxy→xywh matches the reference server's w=x2−x1, h=y2−y1") {
+    // expected values are the reference's Python float results, including
+    // the last-ulp ones (0.3 − 0.1 and 0.7 − 0.2 are not 0.2 and 0.5)
+    val df = Seq((10.5, 20.25, 110.75, 220.5), (0.1, 0.2, 0.3, 0.7))
+      .toDF("x1", "y1", "x2", "y2")
+    val (x, y, w, h) = Geometry.xyxyToXYWH(Geometry.Box(
+      col("x1"), col("y1"), col("x2"), col("y2")))
+    val r = df.select(x, y, w, h).as[(Double, Double, Double, Double)]
+      .collect().toSeq
+    assert(r == Seq((10.5, 20.25, 100.25, 200.25),
+      (0.1, 0.2, 0.19999999999999998, 0.49999999999999994)))
+  }
+
   test("pyRound is HALF_EVEN (banker's), matching Python round") {
     val df = Seq((0.125, 0.135, 2.5, 3.5)).toDF("a", "b", "c", "d")
     val Array(r) = df.select(

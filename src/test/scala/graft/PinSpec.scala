@@ -18,7 +18,8 @@ class PinSpec extends SparkSuite {
       (2L, "brown dog brown dog quick quick fox")).toDF("doc_id", "text")
 
     def run(): (Seq[(Long, Long)], Seq[(Long, Double)], Seq[String]) = (
-      ext.Components.connectedComponents(edges, localSolveMaxEdges = 0)
+      Cutover.forcing(Cutover.ComponentsLocal -> 0L)(
+        ext.Components.connectedComponents(edges))
         .as[(Long, Long)].collect().sorted.toSeq,
       ext.Components.pageRank(edges).as[(Long, Long, Double)]
         .collect().sortBy(_._1).map(r => (r._1, r._3)).toSeq,

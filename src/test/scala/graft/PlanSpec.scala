@@ -309,8 +309,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("q123 distributed prefix sum: corpus window bucket-partitioned, no global corpus sort") {
-    val p = plan(ext.Curation.systematicSample(Tables.documents(spark, sf),
-      holisticMaxTotalRows = 0))
+    val p = plan(ext.Curation.systematicSample(Tables.documents(spark, sf)))
     // the corpus-scale window exchange hashes on the bucket id …
     assert(p.contains("hashpartitioning(__b"),
       s"corpus prefix sum not partitioned by bucket:\n$p")

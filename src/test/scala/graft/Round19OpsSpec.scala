@@ -407,4 +407,19 @@ class Round19OpsSpec extends SparkSuite {
       s"replay must match the state-store run:\n  stream: $streamed" +
         s"\n  replay: $replay")
   }
+
+  test("q282 with adaptive execution off returns the default session's " +
+    "rows") {
+    // batch 0's empty state once shared the batch's own lineage, and the
+    // non-adaptive planner failed to resolve the anti-join's conflicting
+    // references; the conf is set on a new session, never on the shared one
+    val q282 = SparkEntry.queries("q282_dedup_watermark_replay")
+    def rows(s: org.apache.spark.sql.SparkSession): Seq[String] =
+      q282(s, sf).collect().map(_.mkString("|")).toSeq.sorted
+    val expected = rows(spark)
+    val off = spark.newSession()
+    off.conf.set("spark.sql.adaptive.enabled", "false")
+    assert(expected.nonEmpty)
+    assert(rows(off) == expected)
+  }
 }

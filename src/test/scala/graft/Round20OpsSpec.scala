@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 
 /** Round-20 optimization equivalences: every adaptive local-solve path must
   * be BIT-IDENTICAL to the distributed shape it replaces (the cutovers are
-  * execution decisions, never semantic ones).
+  * execution decisions, never semantic ones). Each gate runs at its
+  * threshold n − 1, n and n + 1 around its fixture's evidence n.
   */
 class Round20OpsSpec extends SparkSuite {
 
@@ -14,56 +15,48 @@ class Round20OpsSpec extends SparkSuite {
       .collect().map(_.mkString("|")).toSet
   }
 
+  /** The three frames of [[atBoundary]] are row-identical. */
+  private def sameAcross(gate: Cutover.Gate, source: String, name: String)
+                        (mk: => DataFrame): Seq[DataFrame] = {
+    val runs = atBoundary(gate, source)(mk)
+    val Seq(large, small, above) = runs.map(rows)
+    assert(large == small && small == above, name)
+    runs
+  }
+
   test("bradleyTerry: driver MM loop ≡ distributed loop, bit-exact") {
     val events = Tables.events(spark, sf)
-    val local = ext.Labeling.bradleyTerry(events)
-    val dist = ext.Labeling.bradleyTerry(events, localSolveMaxPairs = 0L)
     // strings include the full double repr — any last-ulp divergence in
     // the 9-dp strengths (or a rank flip from one) fails here
-    assert(rows(local) == rows(dist))
+    val Seq(dist, local, _) = sameAcross(Cutover.BradleyTerryLocal, "count",
+      "bradleyTerry")(ext.Labeling.bradleyTerry(events))
     assert(local.count() == dist.count())
   }
 
   test("crossModalKeeper: fused local closure+mask ≡ distributed, bit-exact") {
     val docs = Tables.documents(spark, sf)
     val emb = Tables.embeddings(spark, sf)
-    val local = ext.Dedup.crossModalKeeper(docs, emb)
-    val dist = ext.Dedup.crossModalKeeper(docs, emb, localSolveMaxEdges = 0L)
-    assert(rows(local) == rows(dist))
+    val Seq(dist, local, _) = sameAcross(Cutover.CrossModalLocal, "count",
+      "crossModalKeeper")(ext.Dedup.crossModalKeeper(docs, emb))
     assert(local.count() == dist.count())
   }
 
   test("q85 MAD: distributed median gate ≡ window-sort path, bit-exact") {
-    val sorted = ops.Relational.q85MadOutliers(spark, sf)
-    val dist = ops.Relational.q85MadOutliers(spark, sf,
-      sortMaxTotalRows = 0L) // force the histogram-pruning pass
-    assert(rows(sorted) == rows(dist))
+    sameAcross(Cutover.PercentileSort, "footer", "q85")(
+      ops.Relational.q85MadOutliers(spark, sf))
   }
 
   test("q37/q61/q106: adaptive percentile gate ≡ window-sort path, bit-exact") {
-    for ((mk, name) <- Seq[((Long) => DataFrame, String)](
-      (c => ops.Relational.q37Percentiles(spark, sf, sortMaxTotalRows = c),
-        "q37"),
-      (c => ops.Relational.q61IqrOutliers(spark, sf, sortMaxTotalRows = c),
-        "q61"),
-      (c => ops.Relational.q106WinsorizedMean(spark, sf, sortMaxTotalRows = c),
-        "q106"))) {
-      assert(rows(mk(2000000L)) == rows(mk(0L)), name) // force distributed
-    }
+    for ((mk, name) <- Seq[(() => DataFrame, String)](
+      (() => ops.Relational.q37Percentiles(spark, sf), "q37"),
+      (() => ops.Relational.q61IqrOutliers(spark, sf), "q61"),
+      (() => ops.Relational.q106WinsorizedMean(spark, sf), "q106")))
+      sameAcross(Cutover.PercentileSort, "footer", name)(mk())
   }
 
   test("q109 equi-depth: adaptive cutpoints ≡ window-sort cutpoints, bit-exact") {
-    import org.apache.spark.sql.functions.col
-    val li = Tables.lineitem(spark, sf)
-      .select(col("l_returnflag"), col("l_extendedprice"))
-    val sorted = ops.Percentiles.equiDepthHistogram(li, "l_returnflag",
-      "l_extendedprice", bins = 8,
-      cutpointFn = ops.Percentiles.sortPercentiles)
-    val gated = ops.Percentiles.equiDepthHistogram(li, "l_returnflag",
-      "l_extendedprice", bins = 8,
-      cutpointFn = (df, g, v, ps) => ops.Percentiles.adaptivePercentiles(
-        df, g, v, ps, total = Long.MaxValue, sortMaxTotalRows = 0L))
-    assert(rows(sorted) == rows(gated))
+    sameAcross(Cutover.PercentileSort, "footer", "q109")(
+      SparkEntry.queries("q109_equidepth")(spark, sf))
   }
 
   test("minhash size-ratio prune ≡ unpruned verify (necessary condition)") {

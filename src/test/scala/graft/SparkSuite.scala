@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base: one local session per suite, UTC, small shuffle
@@ -17,4 +17,30 @@ trait SparkSuite extends AnyFunSuite {
     getClass.getResource(name).getPath
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Builds `mk` with `gate`'s threshold at n − 1, n and n + 1, where n is
+    * the evidence its decisions see (all from `source`), and asserts that
+    * the branch flips exactly between n − 1 and n. Returns the three
+    * frames, for the caller to compare.
+    */
+  def atBoundary(gate: Cutover.Gate, source: String)
+                (mk: => DataFrame): Seq[DataFrame] = {
+    def decisions(ds: Seq[Cutover.Decision]) = {
+      val own = ds.filter(_.gate == gate.name)
+      assert(own.nonEmpty, s"${gate.name} took no decision")
+      assert(own.forall(_.source == source), own)
+      own
+    }
+    val n = decisions(Cutover.recorded(mk)._2).head.evidence
+    val runs = Seq(n - 1, n, n + 1).map { t =>
+      val (df, ds) = Cutover.forcing(gate -> t)(Cutover.recorded(mk))
+      val own = decisions(ds)
+      assert(own.forall(d => d.evidence == n && d.threshold == t), own)
+      (own.map(_.branch).distinct, df)
+    }
+    assert(runs.map(_._1) ==
+      Seq(Seq(gate.large), Seq(gate.small), Seq(gate.small)),
+      s"${gate.name} at n=$n")
+    runs.map(_._2)
+  }
 }
