@@ -212,32 +212,21 @@ object Dedup {
       .select(col("doc_id") +: sigCols: _*)
   }
 
-  /** LSH banding: signatures → (band, band-signature string) rows; documents
-    * sharing any band signature are candidate near-duplicates. Candidates are
-    * then verified with exact Jaccard (`ngramJaccardPairs` restricted to the
-    * candidate set in a real pipeline; here re-verified directly).
+  /** LSH banding: documents sharing any band signature are candidate
+    * near-duplicates — the [[bandPairs]] self-join of ONE
+    * [[buildBandIndex]] frame, with doc_a < doc_b applied at the band join.
+    * Candidates are then verified with exact Jaccard
+    * ([[minhashNearDupsDistinct]]).
     *
-    * @return candidate pairs (doc_a < doc_b), distinct.
+    * @return candidate pairs (doc_a < doc_b), each exactly once: a pair
+    *         sharing several bands is kept on its smallest matching band
+    *         only (the [[bandPairs]] rule), so no pair-dedup aggregate runs
     */
   def minhashLshCandidates(docs: DataFrame, k: Int = 16, bands: Int = 4,
                            n: Int = 3): DataFrame = {
-    require(k % bands == 0, "band width must divide signature length")
-    // one-pass codegen'd band signatures (round 19): the per-column
-    // formulation (16 × array_min(transform(shingle_codes))) was inlined
-    // by CollapseProject/InferFiltersFromGenerate into every consumer AND
-    // into a pushed scan filter — ~50 shingle_codes evaluations per row
-    // (see [[graft.functions.MinhashBandSigs]]; bit-parity spec'd there).
-    // The kernel's empty array for sub-n docs makes posexplode drop them,
-    // exactly like the previous size(codes) > 0 filter.
-    val banded = docs.select(
-      col("doc_id"),
-      posexplode(graft.functions.MinhashBandSigs
-        .bandSigsCol(col("text"), n, k, bands)).as(Seq("band", "band_sig")))
-    banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.band_sig") === col("y.band_sig") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
+    val idx = buildBandIndex(docs, k, bands, n)
+    indexPairs(idx, idx, bands).filter(col("new_id") < col("corpus_id"))
+      .select(col("new_id").as("doc_a"), col("corpus_id").as("doc_b"))
   }
 
   /** Exact-duplicate pre-collapse for the MinHash family
@@ -305,32 +294,21 @@ object Dedup {
   }
 
   /** The uncollapsed pipeline body — candidate banding + exact-Jaccard
-    * verify over the given docs as-is. [[minhashNearDups]] runs this on
-    * exact-collapse representatives; the spec runs it on the full frame
-    * as the bit-equality reference.
+    * verify over the given docs as-is: [[minhashLshCandidates]]' band
+    * self-join, then the gates' [[codesVerified]] step on the same index
+    * frame. [[minhashNearDups]] runs this on exact-collapse
+    * representatives; the spec runs it on the full frame as the
+    * bit-equality reference.
     */
   private[graft] def minhashNearDupsDistinct(docs: DataFrame, k: Int,
                                              bands: Int, n: Int,
                                              minJaccard: Double): DataFrame = {
-    // The explicit-count repartition pins the per-pair verify's stage
-    // width (user repartitions are AQE-coalesce-exempt, the q206/IVF
-    // amplification discipline): AQE's byte heuristic coalesced the
-    // few-MB candidate exchange to 2 partitions and left 27 s of verify
-    // CPU on 2 of 32 cores (StageAudit, q264 at sf0.1).
-    val dp = docs.sparkSession.sparkContext.defaultParallelism
-    // length(text) ≥ n ⟺ size(codes) > 0 (round 19): the size() form was
-    // pushed down WITH the whole shingle_codes tree inlined, re-running
-    // the kernel 3× per row (scan filter + FilterExec + project)
-    val codes = docs.filter(length(col("text")) >= n)
-      .select(col("doc_id"), shingleCodes(col("text"), n).as("codes"))
-    jaccardVerified(minhashLshCandidates(docs, k, bands, n)
-      .repartition(dp, col("doc_a"))
-      .join(codes.select(col("doc_id").as("doc_a"),
-        col("codes").as("codes_a")), "doc_a")
-      .join(codes.select(col("doc_id").as("doc_b"),
-        col("codes").as("codes_b")), "doc_b"),
-      "codes_a", "codes_b", minJaccard)
-      .select("doc_a", "doc_b", "jaccard")
+    val idx = buildBandIndex(docs, k, bands, n)
+    codesVerified(
+      indexPairs(idx, idx, bands).filter(col("new_id") < col("corpus_id")),
+      idx, idx, minJaccard)
+      .select(col("new_id").as("doc_a"), col("corpus_id").as("doc_b"),
+        col("jaccard"))
   }
 
   /** Exact-Jaccard verify of candidate pairs carrying two DISTINCT
@@ -469,29 +447,54 @@ object Dedup {
       buildBandIndex(corpus, k, bands, n), bands, minJaccard)
 
   /** The batch MinHash gate over two [[buildBandIndex]] frames:
-    * [[bandPairs]] on (id, band_sigs) only, then exact Jaccard on the
-    * stored code arrays. The code arrays never ride the bands× explode
-    * (round 17: that shape shuffled gigabytes for q270 at the 10× point);
-    * they re-attach per SIDE per PAIR after the band join, and parquet
-    * column pruning makes a persisted index's second scan read just
-    * (doc_id, codes). The explicit-count repartition before the per-pair
-    * verify is the [[minhashNearDupsDistinct]] AQE-blind-spot discipline.
+    * [[indexPairs]], then [[codesVerified]].
     */
   private def minhashIndexGate(newIdx: DataFrame, corpusIdx: DataFrame,
-                               bands: Int, minJaccard: Double): DataFrame = {
-    val pairs = bandPairs(
+                               bands: Int, minJaccard: Double): DataFrame =
+    codesVerified(indexPairs(newIdx, corpusIdx, bands), newIdx, corpusIdx,
+      minJaccard)
+
+  /** [[bandPairs]] of two [[buildBandIndex]] frames on (id, band_sigs)
+    * only: the code arrays never ride the bands× explode (round 17: that
+    * shape shuffled gigabytes for q270 at the 10× point).
+    *
+    * @return (new_id, corpus_id), one row per pair sharing a band
+    */
+  private def indexPairs(newIdx: DataFrame, corpusIdx: DataFrame,
+                         bands: Int): DataFrame =
+    bandPairs(
         newIdx.select(col("doc_id").as("new_id"),
           col("band_sigs").as("new_bands")),
         corpusIdx.select(col("doc_id").as("corpus_id"),
           col("band_sigs").as("corpus_bands")), bands)
       .select(col("new_id"), col("corpus_id"))
+
+  /** Exact Jaccard of (new_id, corpus_id) pairs on the two index frames'
+    * stored code arrays — the verify step of every batch MinHash pair
+    * producer, self-join and gate. The arrays re-attach per SIDE per PAIR
+    * after the band join, and parquet column pruning makes a persisted
+    * index's second scan read just (doc_id, codes).
+    *
+    * The explicit-count repartition pins the per-pair verify's stage
+    * width (user repartitions are AQE-coalesce-exempt, the q206/IVF
+    * amplification discipline): AQE's byte heuristic coalesced the
+    * few-MB candidate exchange to 2 partitions and left 27 s of verify
+    * CPU on 2 of 32 cores (StageAudit, q264 at sf0.1).
+    *
+    * @return (new_id, corpus_id, jaccard) for pairs with jaccard ≥
+    *         `minJaccard`
+    */
+  private def codesVerified(pairs: DataFrame, newIdx: DataFrame,
+                            corpusIdx: DataFrame,
+                            minJaccard: Double): DataFrame = {
+    val withCodes = pairs
       .repartition(newIdx.sparkSession.sparkContext.defaultParallelism,
         col("new_id"))
       .join(newIdx.select(col("doc_id").as("new_id"),
         col("codes").as("new_codes")), "new_id")
       .join(corpusIdx.select(col("doc_id").as("corpus_id"),
         col("codes").as("corpus_codes")), "corpus_id")
-    jaccardVerified(pairs, "new_codes", "corpus_codes", minJaccard)
+    jaccardVerified(withCodes, "new_codes", "corpus_codes", minJaccard)
       .select(col("new_id"), col("corpus_id"), col("jaccard"))
   }
 
@@ -786,7 +789,9 @@ object Dedup {
     * land at distance 0; near-duplicates (small edits, crops of the
     * raster prefix) land low; unrelated docs that collide on one band
     * are cut by the exact verify — the canonical LSH prune → exact
-    * verify shape.
+    * verify shape. A pair sharing several bands is kept on its smallest
+    * matching band only ([[bandPairs]]), so each pair comes out once
+    * with no pair-dedup aggregate.
     *
     * RECALL CONTRACT (the LSH trade, stated precisely): the 4-band
     * pigeonhole GUARANTEES every pair within Hamming 3; pairs at
@@ -809,7 +814,9 @@ object Dedup {
 
   /** The collapse + band-join + expand pipeline over ANY (doc_id, b0..b3)
     * band frame — shared by the text-raster front ([[dhashNearDups]]) and
-    * the real-image front ([[graft.ext.Multimodal.imageNearDups]]).
+    * the real-image front ([[graft.ext.Multimodal.imageNearDups]]). The
+    * rep pairs are the [[dhashGateFromBands]] self-join, each pair kept
+    * once on its smallest matching band.
     *
     * Exact-collapse on the full 4-band hash ([[graft.ext.ExactCollapse]]):
     * m docs with one identical hash are one distance-0 clique and would
@@ -865,24 +872,15 @@ object Dedup {
                                            maxDist: Int): DataFrame =
     dhashPairsFromBands(dhashTextBands(docs), maxDist)
 
-  private def dhashPairsFromBands(hash: DataFrame, maxDist: Int): DataFrame = {
-    val banded = hash.select(col("doc_id"),
-      posexplode(dhashArray)
-        .as(Seq("band", "v")))
-    val cands = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.v") === col("y.v") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    cands
-      .join(hash.select(col("doc_id").as("doc_a"), dhashArray.as("a")),
-        "doc_a")
-      .join(hash.select(col("doc_id").as("doc_b"), dhashArray.as("b")),
-        "doc_b")
-      .withColumn("hamming", hamming(col("a"), col("b")))
-      .filter(col("hamming") <= maxDist)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-  }
+  /** [[dhashGateFromBands]] of one hash frame against itself with
+    * doc_a < doc_b applied at the band join: Hamming runs on the band
+    * arrays [[bandPairs]] already carries, and each pair comes out once.
+    */
+  private def dhashPairsFromBands(hash: DataFrame, maxDist: Int): DataFrame =
+    dhashGateFromBands(hash, hash, maxDist)
+      .filter(col("new_id") < col("corpus_id"))
+      .select(col("new_id").as("doc_a"), col("corpus_id").as("doc_b"),
+        col("hamming"))
 
   /** A (doc_id, b0..b3) frame's four band values as one array column. */
   private def dhashArray: Column =

@@ -62,6 +62,19 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** The vector prelude of every quantized-cosine operator: `df`'s rows
+    * (any frame with an `embedding` column) whose quantized image is
+    * nonzero, plus `q` = [[quantize]]d embedding, `n2` = qdot(q, q) and
+    * `vn` = √n2. Zero-norm vectors are dropped: cosine is undefined for
+    * them, and under ANSI mode the division would throw (DuckDB: NULL) —
+    * oracles carry the same n2 > 0 filter (exact integer compare).
+    */
+  private def quantizedVectors(df: DataFrame): DataFrame =
+    df.withColumn("q", quantize(col("embedding")))
+      .withColumn("n2", qdot(col("q"), col("q")))
+      .filter(col("n2") > 0L)
+      .withColumn("vn", sqrt(col("n2").cast("double")))
+
   /** Brute-force cosine top-k: for each query vector (`queryPred` selects the
     * query subset), the k nearest neighbors among all other vectors.
     * Deterministic: ties broken by neighbor id.
@@ -71,22 +84,18 @@ object Similarity {
     * bits are identical either way.
     */
   def cosineTopK(emb: DataFrame, queryPred: Column, k: Int = 5): DataFrame = {
-    // zero-norm vectors are dropped on BOTH sides: cosine is undefined for
-    // them, and under ANSI mode the division would throw (DuckDB: NULL) —
-    // oracles carry the same n2 > 0 filter (exact integer compare).
+    // zero-norm vectors are dropped on BOTH sides ([[quantizedVectors]]).
     // The pair join is a broadcast nested loop whose parallelism equals the
     // STREAMED side's partition count — a single-file query set would run the
     // whole |Q|×|N| loop on one core, so spread it explicitly (AQE never
     // coalesces a user-requested repartition).
-    val q = emb.withColumn("q", quantize(col("embedding")))
-      .withColumn("n2", qdot(col("q"), col("q")))
-      .filter(col("n2") > 0L)
+    val q = quantizedVectors(emb)
     val queries = q.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("q").as("qv"),
-        sqrt(col("n2").cast("double")).as("qn"))
+        col("vn").as("qn"))
       .repartition(emb.sparkSession.sparkContext.defaultParallelism)
     val cands = q.select(col("vec_id").as("neighbor_id"), col("q").as("nv"),
-      sqrt(col("n2").cast("double")).as("nn"))
+      col("vn").as("nn"))
     val scored = queries.join(cands, col("query_id") =!= col("neighbor_id"))
       .withColumn("cos",
         qdot(col("qv"), col("nv")).cast("double") / (col("qn") * col("nn")))
@@ -138,16 +147,11 @@ object Similarity {
     */
   def cosineTopKForQueries(emb: DataFrame, queries: DataFrame,
                            k: Int = 5): DataFrame = {
-    val cands = emb.withColumn("q", quantize(col("embedding")))
-      .withColumn("n2", qdot(col("q"), col("q")))
-      .filter(col("n2") > 0L)
+    val cands = quantizedVectors(emb)
       .select(col("vec_id").as("neighbor_id"), col("q").as("nv"),
-        sqrt(col("n2").cast("double")).as("nn"))
-    val qs = queries.withColumn("q", quantize(col("embedding")))
-      .withColumn("n2", qdot(col("q"), col("q")))
-      .filter(col("n2") > 0L)
-      .select(col("query_id"), col("q").as("qv"),
-        sqrt(col("n2").cast("double")).as("qn"))
+        col("vn").as("nn"))
+    val qs = quantizedVectors(queries)
+      .select(col("query_id"), col("q").as("qv"), col("vn").as("qn"))
       .repartition(emb.sparkSession.sparkContext.defaultParallelism)
     val scored = qs.crossJoin(cands)
       .withColumn("cos",
@@ -200,14 +204,7 @@ object Similarity {
   def lshNearPairs(emb: DataFrame, dim: Int, bits: Int = 8,
                    minCos: Double = 0.9): DataFrame = {
     val (members, reps) = lshCollapsed(emb, dim, bits)
-    val cross = ExactCollapse.expandUnordered(
-      lshPairsFromBucketed(reps, minCos),
-      members.select(col("rep"), col("vec_id")),
-      "vec_a", "vec_b", Seq("cos"))
-    val within = ExactCollapse.withinPairs(members, "vec_a", "vec_b",
-      Seq("cos"))
-      .filter(col("cos") >= minCos)
-    cross.unionByName(within)
+    expandedPairs(lshPairsFromBucketed(reps, minCos), members, minCos)
   }
 
   /** Connectivity-equivalent near-pair EDGE list for the cluster consumer
@@ -231,11 +228,7 @@ object Similarity {
         "selfCos of an identical group is 1.0 only up to ulp rounding; " +
         "use lshNearPairs (expanded pairs) for an exact-1.0 threshold")
     val (members, reps) = lshCollapsed(emb, dim, bits)
-    lshPairsFromBucketed(reps, minCos).select(col("vec_a"), col("vec_b"))
-      .unionByName(ExactCollapse.starEdges(
-        members.filter(col("cos") >= minCos)
-          .select(col("rep"), col("vec_id")),
-        "vec_a", "vec_b"))
+    pairEdges(lshPairsFromBucketed(reps, minCos), members, minCos)
   }
 
   /** (members (rep, vec_id, selfCos), reps — one bucketed row per distinct
@@ -245,23 +238,53 @@ object Similarity {
     * uncollapsed semantics and must not land in one group.
     */
   private def lshCollapsed(emb: DataFrame, dim: Int,
-                           bits: Int): (DataFrame, DataFrame) = {
-    val bucketed = emb
-      .withColumn("q", quantize(col("embedding")))
-      .withColumn("n2", qdot(col("q"), col("q")))
-      .filter(col("n2") > 0L)
-      .select(col("vec_id"), col("q"),
-        sqrt(col("n2").cast("double")).as("nv"),
-        lshBucket(col("embedding"), dim, bits).as("bucket"))
-    val keyed = ExactCollapse.withRepPinned(bucketed, "vec_id",
-      Seq(col("bucket"), col("q")))
+                           bits: Int): (DataFrame, DataFrame) =
+    vectorsCollapsed(lshBucketed(emb, dim, bits), Seq(col("bucket"), col("q")))
+
+  /** (vec_id, q, vn, bucket) per nonzero vector. */
+  private def lshBucketed(emb: DataFrame, dim: Int, bits: Int): DataFrame =
+    quantizedVectors(emb).select(col("vec_id"), col("q"), col("vn"),
+      lshBucket(col("embedding"), dim, bits).as("bucket"))
+
+  /** Exact-collapse of a (vec_id, q, vn, …) frame on `key`
+    * ([[graft.ext.ExactCollapse]]): (members (rep, vec_id, cos), reps).
+    * A member's cos is its group's selfCos qdot(q,q)/(vn·vn) — the exact
+    * expression the uncollapsed pair join evaluates for an identical pair.
+    */
+  private def vectorsCollapsed(vecs: DataFrame,
+                               key: Seq[Column]): (DataFrame, DataFrame) = {
+    val keyed = ExactCollapse.withRepPinned(vecs, "vec_id", key)
     (keyed.select(col("rep"), col("vec_id"),
-      (qdot(col("q"), col("q")).cast("double") / (col("nv") * col("nv")))
+      (qdot(col("q"), col("q")).cast("double") / (col("vn") * col("vn")))
         .as("cos")),
       keyed.filter(col("vec_id") === col("rep")).drop("rep"))
   }
 
-  /** Uncollapsed bucket-join body over a (vec_id, q, nv, bucket) frame
+  /** Rep-grain (vec_a, vec_b, cos) pairs expanded to every member
+    * combination, plus each identical group's within pairs at its selfCos
+    * — bit-identical to the uncollapsed pair list (ExactCollapseSpec).
+    */
+  private def expandedPairs(repPairs: DataFrame, members: DataFrame,
+                            minCos: Double): DataFrame =
+    ExactCollapse.expandUnordered(repPairs,
+        members.select(col("rep"), col("vec_id")),
+        "vec_a", "vec_b", Seq("cos"))
+      .unionByName(ExactCollapse.withinPairs(members, "vec_a", "vec_b",
+        Seq("cos")).filter(col("cos") >= minCos))
+
+  /** Rep-grain pairs plus m−1 star edges per identical group whose selfCos
+    * passes `minCos`: the connected components of [[expandedPairs]] at
+    * linear edge mass (callers hold `minCos` < 1.0).
+    */
+  private def pairEdges(repPairs: DataFrame, members: DataFrame,
+                        minCos: Double): DataFrame =
+    repPairs.select(col("vec_a"), col("vec_b"))
+      .unionByName(ExactCollapse.starEdges(
+        members.filter(col("cos") >= minCos)
+          .select(col("rep"), col("vec_id")),
+        "vec_a", "vec_b"))
+
+  /** Uncollapsed bucket-join body over a (vec_id, q, vn, bucket) frame
     * as-is; [[lshNearPairs]] runs it on exact-collapse reps, the spec on
     * the full frame as the bit-equality reference.
     */
@@ -270,7 +293,7 @@ object Similarity {
     bucketed.as("a").join(bucketed.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .withColumn("cos",
-        qdot(col("a.q"), col("b.q")).cast("double") / (col("a.nv") * col("b.nv")))
+        qdot(col("a.q"), col("b.q")).cast("double") / (col("a.vn") * col("b.vn")))
       .filter(col("cos") >= minCos)
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"), col("cos"))
 
@@ -280,13 +303,7 @@ object Similarity {
   private[graft] def lshNearPairsDistinct(emb: DataFrame, dim: Int,
                                           bits: Int,
                                           minCos: Double): DataFrame =
-    lshPairsFromBucketed(emb
-      .withColumn("q", quantize(col("embedding")))
-      .withColumn("n2", qdot(col("q"), col("q")))
-      .filter(col("n2") > 0L)
-      .select(col("vec_id"), col("q"),
-        sqrt(col("n2").cast("double")).as("nv"),
-        lshBucket(col("embedding"), dim, bits).as("bucket")), minCos)
+    lshPairsFromBucketed(lshBucketed(emb, dim, bits), minCos)
 
   /** SemDeDup-shaped SEMANTIC dedup cluster readout (Abbas et al. 2023,
     * public literature — near-duplicate semantics live in embedding space,
@@ -383,13 +400,10 @@ object Similarity {
     // deterministic pseudo-random sample via TakeOrdered. The hash is
     // engine-neutral integer arithmetic (not Murmur3/xxhash), so an
     // external oracle can reproduce the exact centroid set.
-    val quantized = emb
-      .withColumn("q", quantize(col("embedding")))
-      .withColumn("n2", qdot(col("q"), col("q")))
-      .filter(col("n2") > 0L)
+    val quantized = quantizedVectors(emb)
     val centroids = broadcast(
       quantized.select(col("vec_id").as("centroid_id"), col("q").as("cv"),
-          sqrt(col("n2").cast("double")).as("cn"))
+          col("vn").as("cn"))
         .orderBy(graft.functions.Hashing.knuthMod(col("centroid_id"),
           1000003L, offset = 17L), col("centroid_id"))
         .limit(nc))
@@ -397,8 +411,7 @@ object Similarity {
     // q206 gram-explode lesson): the corpus parquet arrives in a handful
     // of input splits, and without this the N·nc·dim assignment flops
     // serialize on them (StageAudit at the 10× point: 3.6 s in 2 tasks)
-    val vectors = quantized.select(col("vec_id"), col("q"),
-        sqrt(col("n2").cast("double")).as("vn"))
+    val vectors = quantized.select(col("vec_id"), col("q"), col("vn"))
       .repartition(col("vec_id"))
     val index = assignCells(centRowOf(centroids), vectors, 1)
       .join(broadcast(centroids.select(col("centroid_id").as("vec_id"),
@@ -448,11 +461,15 @@ object Similarity {
     */
   def ivfTopKIndexed(index: DataFrame, queryPred: Column, k: Int = 5,
                      nprobe: Int = 4): DataFrame =
-    ivfProbe(index,
-      centRowOf(index.filter(col("is_centroid"))
-        .select(col("vec_id").as("centroid_id"), col("q").as("cv"),
-          col("vn").as("cn"))),
-      queryPred, k, nprobe)
+    ivfProbe(index, centRowOf(storedCentroids(index)), queryPred, k, nprobe)
+
+  /** The centroid table (centroid_id, cv, cn) of a [[buildIvfIndex]]
+    * frame: its stored `is_centroid` rows.
+    */
+  private def storedCentroids(index: DataFrame): DataFrame =
+    index.filter(col("is_centroid"))
+      .select(col("vec_id").as("centroid_id"), col("q").as("cv"),
+        col("vn").as("cn"))
 
   /** LINEAR-build IVF (round 19) — the scale path past the exact build's
     * N·√N assignment, the scale story's only above-linear term (q268:
@@ -493,13 +510,8 @@ object Similarity {
     require(nCentroids > 0 && sampleSize >= nCentroids,
       s"sampled IVF needs 0 < nCentroids ($nCentroids) <= sampleSize " +
         s"($sampleSize)")
-    val quantized = emb
-      .withColumn("q", quantize(col("embedding")))
-      .withColumn("n2", qdot(col("q"), col("q")))
-      .filter(col("n2") > 0L)
-    val ordered = quantized
-      .select(col("vec_id"), col("q"),
-        sqrt(col("n2").cast("double")).as("vn"))
+    val quantized = quantizedVectors(emb)
+    val ordered = quantized.select(col("vec_id"), col("q"), col("vn"))
       .orderBy(graft.functions.Hashing.knuthMod(col("vec_id"),
         1000003L, offset = 17L), col("vec_id"))
     val sample = ordered.limit(sampleSize)
@@ -530,8 +542,7 @@ object Similarity {
           .otherwise(col("cn")).as("cn")))
     // repartition before the nc×-amplifying assignment (the ivfParts
     // discipline); ONE linear pass over the corpus
-    val vectors = quantized.select(col("vec_id"), col("q"),
-        sqrt(col("n2").cast("double")).as("vn"))
+    val vectors = quantized.select(col("vec_id"), col("q"), col("vn"))
       .repartition(col("vec_id"))
     (assignCells(centRowOf(centroids), vectors, 1), centroids)
   }
@@ -597,10 +608,7 @@ object Similarity {
     */
   def advanceIvfIndex(index: DataFrame, deltaEmb: DataFrame,
                       maxDeltaFrac: Double = 0.5): DataFrame = {
-    val quantized = deltaEmb
-      .withColumn("q", quantize(col("embedding")))
-      .withColumn("n2", qdot(col("q"), col("q")))
-      .filter(col("n2") > 0L)
+    val quantized = quantizedVectors(deltaEmb)
     val nOld = index.count()
     val nDelta = quantized.count()
     require(nDelta <= maxDeltaFrac * nOld,
@@ -609,17 +617,13 @@ object Similarity {
         "centroid sample no longer represents the corpus; rebuild with " +
         "buildIvfIndex")
     graft.ext.Assets.requireDisjointIds(index, quantized, "vec_id", "IVF")
-    val centroids = index.filter(col("is_centroid"))
-      .select(col("vec_id").as("centroid_id"), col("q").as("cv"),
-        col("vn").as("cn"))
     // same repartition-before-amplification discipline as ivfParts: the
     // delta arrives in a handful of input splits and the nc× assignment
     // transform would serialize on them
-    val vectors = quantized.select(col("vec_id"), col("q"),
-        sqrt(col("n2").cast("double")).as("vn"))
+    val vectors = quantized.select(col("vec_id"), col("q"), col("vn"))
       .repartition(col("vec_id"))
     index.unionByName(
-      assignCells(centRowOf(centroids), vectors, 1)
+      assignCells(centRowOf(storedCentroids(index)), vectors, 1)
         .withColumn("is_centroid", lit(false))
         .select(index.columns.map(col): _*))
   }
@@ -656,6 +660,31 @@ object Similarity {
       .select("query_id", "neighbor_id", "rnk", "cos")
   }
 
+  /** 6-dp cosine from exact quantized moments (the q31 argmax
+    * discipline): one division, two sqrts over association-free integers.
+    */
+  private def cos6(qa: Column, qb: Column, n2a: Column, n2b: Column): Column =
+    round(qdot(qa, qb).cast("double") /
+      (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double"))), 6)
+
+  /** The MMR candidate pool: top `candN` by query relevance via
+    * `orderBy().limit()` → TakeOrderedAndProject (per-partition heaps +
+    * driver merge, the q72 lesson) — NOT a global rank window, which
+    * would sort the whole corpus through one task. Exposed for the plan
+    * assertion; [[mmrSelect]] checkpoints it.
+    */
+  private[graft] def mmrPool(emb: DataFrame, queryId: Long,
+                             candN: Int): DataFrame = {
+    val vecs = quantizedVectors(emb).select(col("vec_id"), col("q"), col("n2"))
+    val qv = vecs.filter(col("vec_id") === queryId)
+      .select(col("q").as("qq"), col("n2").as("qn2"))
+    vecs.filter(col("vec_id") =!= queryId)
+      .crossJoin(broadcast(qv))
+      .withColumn("rel", cos6(col("q"), col("qq"), col("n2"), col("qn2")))
+      .orderBy(col("rel").desc, col("vec_id")).limit(candN)
+      .select(col("vec_id"), col("q"), col("n2"), col("rel"))
+  }
+
   /** Maximal Marginal Relevance: k results that balance query relevance
     * against redundancy — pick₁ = argmax rel, then each round takes
     * argmax λ·rel(c) − (1−λ)·max_{s∈selected} sim(c, s). THE diversified-
@@ -672,33 +701,6 @@ object Similarity {
     * tiny argmax jobs over checkpointed frames (the BFS-frontier pinning
     * lesson).
     */
-  /** 6-dp cosine from exact quantized moments (the q31 argmax
-    * discipline): one division, two sqrts over association-free integers.
-    */
-  private def cos6(qa: Column, qb: Column, n2a: Column, n2b: Column): Column =
-    round(qdot(qa, qb).cast("double") /
-      (sqrt(n2a.cast("double")) * sqrt(n2b.cast("double"))), 6)
-
-  /** The MMR candidate pool: top `candN` by query relevance via
-    * `orderBy().limit()` → TakeOrderedAndProject (per-partition heaps +
-    * driver merge, the q72 lesson) — NOT a global rank window, which
-    * would sort the whole corpus through one task. Exposed for the plan
-    * assertion; [[mmrSelect]] checkpoints it.
-    */
-  private[graft] def mmrPool(emb: DataFrame, queryId: Long,
-                             candN: Int): DataFrame = {
-    val vecs = emb.select(col("vec_id"), quantize(col("embedding")).as("q"))
-      .withColumn("n2", qdot(col("q"), col("q")))
-      .filter(col("n2") > 0)
-    val qv = vecs.filter(col("vec_id") === queryId)
-      .select(col("q").as("qq"), col("n2").as("qn2"))
-    vecs.filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(qv))
-      .withColumn("rel", cos6(col("q"), col("qq"), col("n2"), col("qn2")))
-      .orderBy(col("rel").desc, col("vec_id")).limit(candN)
-      .select(col("vec_id"), col("q"), col("n2"), col("rel"))
-  }
-
   def mmrSelect(emb: DataFrame, queryId: Long = 0L, k: Int = 5,
                 candN: Int = 40, lambdaTenths: Int = 7): DataFrame = {
     // λ·rel − (1−λ)·sim is EXACT DECIMAL arithmetic: rel/sim are 6-dp
@@ -770,35 +772,9 @@ object Similarity {
     // exact copies of a vector, that is the difference between a baseline
     // that survives a re-ingested corpus and one that quadratically
     // drowns. Cosine is group-constant, so expansion is bit-identical
-    // (ExactCollapseSpec); within-group pairs carry the same
-    // qdot(q,q)/(nv·nv) expression the uncollapsed join evaluates.
-    val q = emb.withColumn("q", quantize(col("embedding")))
-      .withColumn("n2", qdot(col("q"), col("q")))
-      .filter(col("n2") > 0L)
-      .select(col("vec_id"), col("q"),
-        sqrt(col("n2").cast("double")).as("nv"))
-    val keyed = ExactCollapse.withRepPinned(q, "vec_id", Seq(col("q")))
-    val members = keyed.select(col("rep"), col("vec_id"),
-      (qdot(col("q"), col("q")).cast("double") / (col("nv") * col("nv")))
-        .as("cos"))
-    val reps = keyed.filter(col("vec_id") === col("rep")).drop("rep")
-    // streamed side spread across cores — see cosineTopK; at 100 TB this
-    // becomes a block-partitioned matrix multiply, same declared shape
-    val a = reps.select(col("vec_id").as("vec_a"), col("q").as("va"),
-      col("nv").as("na"))
-      .repartition(emb.sparkSession.sparkContext.defaultParallelism)
-    val b = reps.select(col("vec_id").as("vec_b"), col("q").as("vb"),
-      col("nv").as("nb"))
-    val repPairs = a.join(b, col("vec_a") < col("vec_b"))
-      .withColumn("cos",
-        qdot(col("va"), col("vb")).cast("double") / (col("na") * col("nb")))
-      .filter(col("cos") >= minCos)
-      .select("vec_a", "vec_b", "cos")
-    ExactCollapse.expandUnordered(repPairs,
-        members.select(col("rep"), col("vec_id")),
-        "vec_a", "vec_b", Seq("cos"))
-      .unionByName(ExactCollapse.withinPairs(members, "vec_a", "vec_b",
-        Seq("cos")).filter(col("cos") >= minCos))
+    // (ExactCollapseSpec).
+    val (members, reps) = cosineCollapsed(emb)
+    expandedPairs(cosinePairs(reps, minCos), members, minCos)
   }
 
   /** Connectivity-equivalent EDGE list for the brute cosine baseline —
@@ -819,44 +795,35 @@ object Similarity {
       s"cosineNearDupEdges: minCos=$minCos outside the < 1.0 envelope — " +
         "selfCos of an identical group is 1.0 only up to ulp rounding; " +
         "use cosineNearDups (expanded pairs) for an exact-1.0 threshold")
-    val q = emb.withColumn("q", quantize(col("embedding")))
-      .withColumn("n2", qdot(col("q"), col("q")))
-      .filter(col("n2") > 0L)
-      .select(col("vec_id"), col("q"),
-        sqrt(col("n2").cast("double")).as("nv"))
-    val keyed = ExactCollapse.withRepPinned(q, "vec_id", Seq(col("q")))
-    val members = keyed.select(col("rep"), col("vec_id"),
-      (qdot(col("q"), col("q")).cast("double") / (col("nv") * col("nv")))
-        .as("cos"))
-    val reps = keyed.filter(col("vec_id") === col("rep")).drop("rep")
-    val a = reps.select(col("vec_id").as("vec_a"), col("q").as("va"),
-      col("nv").as("na"))
-      .repartition(emb.sparkSession.sparkContext.defaultParallelism)
-    val b = reps.select(col("vec_id").as("vec_b"), col("q").as("vb"),
-      col("nv").as("nb"))
-    a.join(b, col("vec_a") < col("vec_b"))
-      .filter(qdot(col("va"), col("vb")).cast("double") /
-        (col("na") * col("nb")) >= minCos)
-      .select(col("vec_a"), col("vec_b"))
-      .unionByName(ExactCollapse.starEdges(
-        members.filter(col("cos") >= minCos)
-          .select(col("rep"), col("vec_id")),
-        "vec_a", "vec_b"))
+    val (members, reps) = cosineCollapsed(emb)
+    pairEdges(cosinePairs(reps, minCos), members, minCos)
   }
 
   /** The uncollapsed all-pairs baseline applied to the full frame — the
     * spec's bit-equality reference for [[cosineNearDups]].
     */
   private[graft] def cosineNearDupsDistinct(emb: DataFrame,
-                                            minCos: Double): DataFrame = {
-    val q = emb.withColumn("q", quantize(col("embedding")))
-      .withColumn("n2", qdot(col("q"), col("q")))
-      .filter(col("n2") > 0L)
-    val a = q.select(col("vec_id").as("vec_a"), col("q").as("va"),
-      sqrt(col("n2").cast("double")).as("na"))
-      .repartition(emb.sparkSession.sparkContext.defaultParallelism)
-    val b = q.select(col("vec_id").as("vec_b"), col("q").as("vb"),
-      sqrt(col("n2").cast("double")).as("nb"))
+                                            minCos: Double): DataFrame =
+    cosinePairs(cosineVectors(emb), minCos)
+
+  /** (vec_id, q, vn) per nonzero vector. */
+  private def cosineVectors(emb: DataFrame): DataFrame =
+    quantizedVectors(emb).select(col("vec_id"), col("q"), col("vn"))
+
+  private def cosineCollapsed(emb: DataFrame): (DataFrame, DataFrame) =
+    vectorsCollapsed(cosineVectors(emb), Seq(col("q")))
+
+  /** The brute all-pairs cosine body over a (vec_id, q, vn) frame as-is:
+    * (vec_a < vec_b, cos) for pairs with cos ≥ `minCos`. The streamed
+    * side is spread across cores — see [[cosineTopK]]; at 100 TB this
+    * becomes a block-partitioned matrix multiply, same declared shape.
+    */
+  private def cosinePairs(vecs: DataFrame, minCos: Double): DataFrame = {
+    val a = vecs.select(col("vec_id").as("vec_a"), col("q").as("va"),
+      col("vn").as("na"))
+      .repartition(vecs.sparkSession.sparkContext.defaultParallelism)
+    val b = vecs.select(col("vec_id").as("vec_b"), col("q").as("vb"),
+      col("vn").as("nb"))
     a.join(b, col("vec_a") < col("vec_b"))
       .withColumn("cos",
         qdot(col("va"), col("vb")).cast("double") / (col("na") * col("nb")))
@@ -1241,9 +1208,7 @@ object Similarity {
     * @return (vec_id, q, n2, centroid_id) per nonzero vector
     */
   private def assignExactL2(emb: DataFrame, k: Int): DataFrame = {
-    val q = emb.select(col("vec_id"), quantize(col("embedding")).as("q"))
-      .withColumn("n2", qdot(col("q"), col("q")))
-      .filter(col("n2") > 0L)
+    val q = quantizedVectors(emb).select(col("vec_id"), col("q"), col("n2"))
     val centsRow = q.filter(col("vec_id") < k)
       .select(struct(col("vec_id").as("centroid_id"), col("q").as("cq")).as("c"))
       .agg(sort_array(collect_list(col("c"))).as("cents"))

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * out EXACTLY once — on its smallest matching band — and a pair matching
   * in no band never does, in batch and on a stream alike. The gates'
   * parity specs compare row sets, so only an exact row list can see a
-  * duplicate pair here.
+  * duplicate pair here. The self-join case (one frame on both sides, a <
+  * b) is how the MinHash and dHash near-dup pair producers use it.
   */
 class BandPairsSpec extends SparkSuite {
   import spark.implicits._
@@ -42,6 +43,36 @@ class BandPairsSpec extends SparkSuite {
     val got = pairs(newRows.toDF("new_id", "new_bands"))
       .as[(Long, Long)].collect().toSeq.sorted
     assert(got == expected)
+  }
+
+  // the self-join case (the MinHash and dHash near-dup pair producers):
+  // one frame on both sides. Every row matches itself in every band, and
+  // 1–2 / 1–3 / 5–6 match in several bands
+  private val selfRows: Seq[(Long, Seq[String])] = Seq(
+    1L -> Seq("x0", "x1", "y2", "z3"),
+    2L -> Seq("x0", "x1", "u2", "u3"),
+    3L -> Seq("p0", "x1", "y2", "p3"),
+    4L -> Seq("r0", "r1", "r2", "z3"),
+    5L -> Seq("s0", "s1", "s2", "s3"),
+    6L -> Seq("s0", "s1", "s2", "s3"),
+    7L -> Seq("t0", "t1", "t2", "t3"))
+
+  private def selfPairs(s: SparkSession): Seq[(Long, Long)] = {
+    import s.implicits._
+    val side = Pin(selfRows.toDF("id", "bands"))
+    ext.Dedup.bandPairs(side.toDF("new_id", "new_bands"),
+        side.toDF("corpus_id", "corpus_bands"), Bands)
+      .filter(col("new_id") < col("corpus_id"))
+      .select(col("new_id"), col("corpus_id"))
+      .as[(Long, Long)].collect().toSeq.sorted
+  }
+
+  test("self-join: each unordered pair exactly once, never (a, a), with and without AQE") {
+    val expected = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (5L, 6L))
+    assert(selfPairs(spark) == expected)
+    val off = spark.newSession()
+    off.conf.set("spark.sql.adaptive.enabled", "false")
+    assert(selfPairs(off) == expected)
   }
 
   test("stream: one trigger through a memory sink gives the same rows") {

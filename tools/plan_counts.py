@@ -13,9 +13,13 @@ under both suffixes this prints, per operator, `countA → countB`:
   hashagg   HashAggregate
   window    Window
   cartesian CartesianProduct
+  broadcast BroadcastExchange — under adaptive execution each one is its
+            own job, as each shuffle Exchange is; ReusedExchange never
+            counts
 
 Counts come from the numbered detail sections (`(N) Name ...`), so each
-operator counts once however the tree draws it. Standard library only.
+operator counts once however the tree draws it. Exits 1 when a query
+gained an operator of any column. Standard library only.
 """
 import os
 import re
@@ -26,7 +30,8 @@ PARTITIONING = re.compile(
     r"^Arguments: (hashpartitioning|rangepartitioning|SinglePartition|"
     r"RoundRobinPartitioning)")
 COLUMNS = [("exchange", "Exchange"), ("hashagg", "HashAggregate"),
-           ("window", "Window"), ("cartesian", "CartesianProduct")]
+           ("window", "Window"), ("cartesian", "CartesianProduct"),
+           ("broadcast", "BroadcastExchange")]
 
 
 def counts(path):
@@ -62,12 +67,18 @@ def main(argv):
     width = max(len(q) for q in both)
     print("%-*s  %s" % (width, "query  (%s → %s)" % (a, b),
                         "  ".join("%-9s" % c for c, _ in COLUMNS)))
+    gained = []
     for q in both:
         ca = counts(os.path.join(plan_dir, "%s_%s.txt" % (q, a)))
         cb = counts(os.path.join(plan_dir, "%s_%s.txt" % (q, b)))
         cells = ["%-9s" % ("%d → %d" % (ca[c], cb[c])) for c, _ in COLUMNS]
         print("%-*s  %s" % (width, q, "  ".join(cells)))
+        if any(cb[c] > ca[c] for c, _ in COLUMNS):
+            gained.append(q)
+    if gained:
+        print("gained operators: %s" % " ".join(gained))
+    return 1 if gained else 0
 
 
 if __name__ == "__main__":
-    main(sys.argv)
+    sys.exit(main(sys.argv))

@@ -1,4 +1,6 @@
 """Tests for tools/plan_counts.py: python3 -m unittest discover tools"""
+import contextlib
+import io
 import os
 import tempfile
 import unittest
@@ -44,8 +46,25 @@ class PlanCountsTest(unittest.TestCase):
                 f.write(PLAN)
             self.assertEqual(plan_counts.counts(path),
                              {"exchange": 2, "hashagg": 1, "window": 1,
-                              "cartesian": 1})
+                              "cartesian": 1, "broadcast": 1})
             self.assertEqual(plan_counts.queries(d, "before"), {"q1"})
+
+    def test_gained_operator_fails(self):
+        fewer = PLAN.replace("(8) HashAggregate", "(8) Project")
+        more = PLAN + "\n(10) BroadcastExchange\nInput [1]: [a#1L]\n"
+        with tempfile.TemporaryDirectory() as d:
+            for name, text in (("q1_before", PLAN), ("q1_fewer", fewer),
+                               ("q1_more", more)):
+                with open(os.path.join(d, name + ".txt"), "w") as f:
+                    f.write(text)
+            self.assertEqual(plan_counts.counts(
+                os.path.join(d, "q1_more.txt"))["broadcast"], 2)
+            main = plan_counts.main
+            with contextlib.redirect_stdout(io.StringIO()):
+                self.assertEqual(main(["p", d, "before", "fewer"]), 0)
+                self.assertEqual(main(["p", d, "before", "before"]), 0)
+                self.assertEqual(main(["p", d, "before", "more"]), 1)
+                self.assertEqual(main(["p", d, "fewer", "before"]), 1)
 
 
 if __name__ == "__main__":
