@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted}
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.{ExplainMode, SQLExecution}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Per-query inspection main — the feedback loop for plan tuning that
   * Bench (one number per query) can't give. For each query, in one warmed
@@ -11,7 +12,11 @@ import org.apache.spark.sql.execution.ExplainMode
   *  1. writes the FORMATTED plan, captured before execution (the
   *     AdaptiveSparkPlan initial plan: Exchange count, join strategy,
   *     PushedFilters, ReadSchema), to `<outDir>/<query>_<suffix>.txt` — the
-  *     structural evidence under `plans/`;
+  *     structural evidence under `plans/` — and after it, under one
+  *     `== Construction execution <id> ==` header each, the formatted
+  *     plans of the SQL executions whose jobs ran before the sink (pins,
+  *     collected inputs), so operators that never reach the sink plan
+  *     still show;
   *  1. during that first execution prints one `[stage]` line per completed
   *     stage (construction jobs included) with task count, executor run
   *     time and CPU, shuffle read/write and spill — attributing super-linear
@@ -67,6 +72,13 @@ object Inspect {
         }
         org.apache.spark.sql.GraftBridge.drainListeners(sc)
         val (jobs, construct) = lines.jobs(name)
+        val built = lines.constructionPlans(name)
+        if (built.nonEmpty) {
+          val w = new java.io.FileWriter(s"$outDir/${name}_$suffix.txt", true)
+          try built.foreach { case (id, plan) =>
+            w.write(s"\n== Construction execution $id ==\n$plan")
+          } finally w.close()
+        }
         decisions.foreach(d => println(s"[cutover] $name $d"))
         println(f"[inspect] $name%-28s jobs=$jobs construct=$construct " +
           times.map(t => f"$t%.2f").mkString(" "))
@@ -79,11 +91,16 @@ object Inspect {
     * per query the count of such jobs and of those among them started
     * before [[Sinking]] was set. The job-start event carries the local
     * properties and its stage ids; events reach a listener in posting
-    * order, so the start precedes its stages.
+    * order, so the start precedes its stages. A construction job's
+    * `spark.sql.execution.id` names the SQL execution it ran for, whose
+    * start event carried the formatted plan.
     */
   private class StageLines extends SparkListener {
     private val queryOf = scala.collection.mutable.Map.empty[Int, String]
     private val counts = scala.collection.mutable.Map.empty[String, (Int, Int)]
+    private val built =
+      scala.collection.mutable.Map.empty[String, Set[Long]]
+    private val plans = scala.collection.mutable.Map.empty[Long, String]
 
     /** (jobs, construction jobs) of `q`'s audited execution, once all its
       * events were delivered.
@@ -91,15 +108,37 @@ object Inspect {
     def jobs(q: String): (Int, Int) =
       synchronized(counts.remove(q).getOrElse((0, 0)))
 
+    /** (execution id, formatted plan) of each SQL execution that ran a
+      * construction job of `q`'s audited execution, in execution order.
+      * Forgets every plan seen so far.
+      */
+    def constructionPlans(q: String): Seq[(Long, String)] = synchronized {
+      val out = built.remove(q).getOrElse(Set.empty).toSeq.sorted
+        .flatMap(id => plans.get(id).map(id -> _))
+      plans.clear()
+      out
+    }
+
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        synchronized(plans(s.executionId) = s.physicalPlanDescription)
+      case _ =>
+    }
+
     override def onJobStart(j: SparkListenerJobStart): Unit =
       Option(j.properties).flatMap(p => Option(p.getProperty(Audited)))
         .foreach { q =>
           j.stageIds.foreach(queryOf(_) = q)
           val construct =
             if (j.properties.getProperty(Sinking) == null) 1 else 0
+          val execution = Option(
+            j.properties.getProperty(SQLExecution.EXECUTION_ID_KEY))
           synchronized {
             val (n, c) = counts.getOrElse(q, (0, 0))
             counts(q) = (n + 1, c + construct)
+            if (construct == 1) execution.foreach { id =>
+              built(q) = built.getOrElse(q, Set.empty[Long]) + id.toLong
+            }
           }
         }
 

@@ -669,7 +669,7 @@ object SparkEntry {
     // blocked*100 <= pct*total — bit-reproducible across engines
     "q164_blocklist" -> ((s: SparkSession, d: String) =>
       ext.Safety.blocklistScorecard(Tables.documents(s, d), col("text"),
-        Seq("slow", "big", "the"), maxPct = 10)),
+        Gate.blockWords, maxPct = Gate.maxPct)),
     // Bloom-filter join pruning with engine-neutral hashes: premium buyers
     // (the selective build side) → auto-sized filter (~10 bits per distinct
     // build key, Sketches.bloomBitsFor — round 10: a fixed width was
@@ -731,30 +731,11 @@ object SparkEntry {
     // fixed-point norm² envelope per label
     "q173_embedding_audit" -> ((s: SparkSession, d: String) =>
       ext.Similarity.embeddingAudit(Tables.embeddings(s, d), dim = 64)),
-    // URL canonicalization host rollup over a deterministic doc_id-keyed
-    // augmentation (q163's discipline: the NORMALIZER is what's tested —
-    // 7 raw shapes exercise case, default ports, utm params, fragments,
-    // and an already-canonical control)
-    "q174_url_canonical" -> ((s: SparkSession, d: String) => {
-      val sIdx = pmod(col("doc_id"), lit(5L)).cast("string")
-      val id = col("doc_id").cast("string")
-      val m = pmod(col("doc_id"), lit(7L))
-      val url = when(m === 0,
-          concat(lit("https://WWW.Site"), sIdx, lit(".COM/path/page")))
-        .when(m === 1, concat(lit("http://site"), sIdx, lit(".com:80/a/b")))
-        .when(m === 2, concat(lit("https://site"), sIdx,
-          lit(".com:443/x?utm_source=feed&id="), id))
-        .when(m === 3, concat(lit("http://blog.site"), sIdx,
-          lit(".org/post?id="), id, lit("&utm_campaign=x&ref=y")))
-        .when(m === 4, concat(lit("https://cdn.site"), sIdx,
-          lit(".net/img/large.png#sec"), id))
-        .when(m === 5, concat(lit("http://site"), sIdx,
-          lit(".com/search?utm_source=a&utm_medium=b")))
-        .otherwise(concat(lit("https://site"), sIdx, lit(".com/clean/"), id))
+    // URL canonicalization host rollup over the `syntheticUrl` shapes
+    "q174_url_canonical" -> ((s: SparkSession, d: String) =>
       ext.Urls.hostRollup(
-        Tables.documents(s, d).select(col("doc_id"), url.as("url")),
-        col("url"))
-    }),
+        Tables.documents(s, d).select(col("doc_id"), syntheticUrl.as("url")),
+        col("url"))),
     // SemDeDup-style semantic dedup (round 10): cluster-bucketed cosine
     // near-dup — the documented scale path for the |N|² brute pair scan
     // (q20 measured ~20× super-linear at the 10× point; bucketing bounds
@@ -818,7 +799,7 @@ object SparkEntry {
     // truncation (token proxy = props.k + 1, budget 500)
     "q180_dialogue_audit" -> ((s: SparkSession, d: String) =>
       ext.Dialogue.turnAudit(Tables.events(s, d),
-        get_json_object(col("props"), "$.k").cast("long") + 1L,
+        turnTokens,
         budget = 500L)),
     // cross-document duplication mass: per doc, gram occurrences whose
     // 3-gram lives in ≥2 docs — the span-dedup masking readout
@@ -842,12 +823,12 @@ object SparkEntry {
     // conversation with exact µs latency and response token mass
     "q184_turn_pairs" -> ((s: SparkSession, d: String) =>
       ext.Dialogue.turnPairs(Tables.events(s, d),
-        get_json_object(col("props"), "$.k").cast("long") + 1L)),
+        turnTokens)),
     // per-source data card (composition capstone): mass + boilerplate-
     // prefix dups + blocklist drops + majority lang, one row per source
     "q185_source_datacard" -> ((s: SparkSession, d: String) =>
       ext.Curation.sourceDataCard(Tables.documents(s, d),
-        blockWords = Seq("slow", "big", "the"), maxPct = 10)),
+        blockWords = Gate.blockWords, maxPct = Gate.maxPct)),
     // train-tokenizer → encode-corpus in one DAG: q110's learned merges
     // pivoted to one broadcast row, replayed over the DISTINCT vocab,
     // joined back onto (source, word) counts — fertility per source
@@ -893,8 +874,8 @@ object SparkEntry {
     // (weights chosen against measured feature ranges: ~50% keep rate)
     "q194_quality_gate" -> ((s: SparkSession, d: String) =>
       TextStats.linearQualityGate(Tables.documents(s, d),
-        bias = -60000000L, wTokens = 500000L, wStop = 2000000L,
-        wDistinct = 1000000L)),
+        bias = Gate.bias, wTokens = Gate.wTokens, wStop = Gate.wStop,
+        wDistinct = Gate.wDistinct)),
     // HTML → text extraction scorecard (q163's augmentation discipline:
     // docs wrapped in deterministic markup — scripts with content,
     // comments, entities — so the STRIPPER is what's tested)
@@ -917,29 +898,13 @@ object SparkEntry {
     }),
     // robots-style disallow filter over q174's URL shapes: literal path
     // prefixes per canonical host, broadcast rule probe
-    "q196_robots_filter" -> ((s: SparkSession, d: String) => {
-      val sIdx = pmod(col("doc_id"), lit(5L)).cast("string")
-      val id = col("doc_id").cast("string")
-      val m = pmod(col("doc_id"), lit(7L))
-      val url = when(m === 0,
-          concat(lit("https://WWW.Site"), sIdx, lit(".COM/path/page")))
-        .when(m === 1, concat(lit("http://site"), sIdx, lit(".com:80/a/b")))
-        .when(m === 2, concat(lit("https://site"), sIdx,
-          lit(".com:443/x?utm_source=feed&id="), id))
-        .when(m === 3, concat(lit("http://blog.site"), sIdx,
-          lit(".org/post?id="), id, lit("&utm_campaign=x&ref=y")))
-        .when(m === 4, concat(lit("https://cdn.site"), sIdx,
-          lit(".net/img/large.png#sec"), id))
-        .when(m === 5, concat(lit("http://site"), sIdx,
-          lit(".com/search?utm_source=a&utm_medium=b")))
-        .otherwise(concat(lit("https://site"), sIdx, lit(".com/clean/"), id))
+    "q196_robots_filter" -> ((s: SparkSession, d: String) =>
       ext.Urls.robotsFilter(
-        Tables.documents(s, d).select(col("doc_id"), url.as("url")),
+        Tables.documents(s, d).select(col("doc_id"), syntheticUrl.as("url")),
         col("doc_id"), col("url"),
         rules = Seq("site0.com" -> "/search", "site2.com" -> "/a",
           "cdn.site1.net" -> "/img", "site3.com" -> "/clean",
-          "blog.site4.org" -> "/post"))
-    }),
+          "blog.site4.org" -> "/post"))),
     // embedding snapshot drift per label: even/odd vec_id halves as two
     // snapshots; exact floor-mean per-dim deltas (shift-to-non-negative
     // so div ≡ // holds), drift² + max dim shift
@@ -953,47 +918,25 @@ object SparkEntry {
         expr("(n_chars div 4) + 1"), batchSize = 32)),
     // the capstone composition: HTML extract → blocklist → quality gate
     // → corpus-wide exact dedup, per-source survival funnel in one DAG
-    // (q195's markup augmentation feeds the real extractor first)
-    "q199_curation_funnel" -> ((s: SparkSession, d: String) => {
-      val html = concat(
-        lit("<html><body><h1>T</h1>"),
-        lit("<script>var x = \"a\";</script><p>"), col("text"),
-        lit("</p>"),
-        when(col("doc_id") % 3 === 0,
-          lit("<p>A &amp; B &lt;ok&gt;</p>"))
-          .when(col("doc_id") % 3 === 1,
-            lit("<!-- hidden --><p>Tail &quot;q&quot; &#39;s</p>"))
-          .otherwise(lit("")),
-        lit("</body></html>"))
+    // (the `wrappedHtml` markup feeds the real extractor first)
+    "q199_curation_funnel" -> ((s: SparkSession, d: String) =>
       ext.Curation.curationFunnel(
         Tables.documents(s, d).select(col("doc_id"), col("source"),
-          html.as("html")),
+          wrappedHtml.as("html")),
         ext.Html.htmlToText(col("html")),
-        blockWords = Seq("slow", "big", "the"), maxPct = 10,
-        bias = -60000000L, wTokens = 500000L, wStop = 2000000L,
-        wDistinct = 1000000L)
-    }),
+        blockWords = Gate.blockWords, maxPct = Gate.maxPct,
+        bias = Gate.bias, wTokens = Gate.wTokens, wStop = Gate.wStop,
+        wDistinct = Gate.wDistinct)),
     // the final manifest: q199's survivors through the group-aware
     // split — what actually ships to the trainer, and where
-    "q200_corpus_manifest" -> ((s: SparkSession, d: String) => {
-      val html = concat(
-        lit("<html><body><h1>T</h1>"),
-        lit("<script>var x = \"a\";</script><p>"), col("text"),
-        lit("</p>"),
-        when(col("doc_id") % 3 === 0,
-          lit("<p>A &amp; B &lt;ok&gt;</p>"))
-          .when(col("doc_id") % 3 === 1,
-            lit("<!-- hidden --><p>Tail &quot;q&quot; &#39;s</p>"))
-          .otherwise(lit("")),
-        lit("</body></html>"))
+    "q200_corpus_manifest" -> ((s: SparkSession, d: String) =>
       ext.Curation.corpusManifest(
         Tables.documents(s, d).select(col("doc_id"), col("source"),
-          html.as("html")),
+          wrappedHtml.as("html")),
         ext.Html.htmlToText(col("html")),
-        blockWords = Seq("slow", "big", "the"), maxPct = 10,
-        bias = -60000000L, wTokens = 500000L, wStop = 2000000L,
-        wDistinct = 1000000L)
-    }),
+        blockWords = Gate.blockWords, maxPct = Gate.maxPct,
+        bias = Gate.bias, wTokens = Gate.wTokens, wStop = Gate.wStop,
+        wDistinct = Gate.wDistinct)),
     // fill-in-the-middle example transform: deterministic cuts, 50% rate,
     // reassembly invariant + fingerprint of the RENDERED <PRE><SUF><MID>
     // string — pure per-row, zero shuffles
@@ -1004,7 +947,7 @@ object SparkEntry {
     // token offset — same conversation window as q180/q184
     "q202_loss_mask" -> ((s: SparkSession, d: String) =>
       ext.Dialogue.lossMask(Tables.events(s, d),
-        get_json_object(col("props"), "$.k").cast("long") + 1L)),
+        turnTokens)),
     // reference-LM fluency scoring: bigram model trained on the even-id
     // half, every doc scored by known-bigram mass — exact integer
     // sufficient statistics, no logs (NOTES parity rule)
@@ -1047,7 +990,7 @@ object SparkEntry {
     // gate with per-stage conversation/pair/token survival in one DAG
     "q209_sft_manifest" -> ((s: SparkSession, d: String) =>
       ext.Dialogue.sftManifest(Tables.events(s, d),
-        get_json_object(col("props"), "$.k").cast("long") + 1L)),
+        turnTokens)),
     // data-parallel shard balance: snake assignment off the distributed
     // descending grid rank — per-worker doc/char loads
     "q210_shard_balance" -> ((s: SparkSession, d: String) =>
@@ -1058,9 +1001,9 @@ object SparkEntry {
     // disagreement cells are the human-review queue
     "q211_gate_agreement" -> ((s: SparkSession, d: String) =>
       ext.Curation.gateAgreement(Tables.documents(s, d),
-        blockWords = Seq("slow", "big", "the"), maxPct = 10,
-        bias = -60000000L, wTokens = 500000L, wStop = 2000000L,
-        wDistinct = 1000000L, refPred = col("doc_id") % 2 === 0)),
+        blockWords = Gate.blockWords, maxPct = Gate.maxPct,
+        bias = Gate.bias, wTokens = Gate.wTokens, wStop = Gate.wStop,
+        wDistinct = Gate.wDistinct, refPred = col("doc_id") % 2 === 0)),
     // agentic-transcript bracket audit: tool results must answer pending
     // tool calls — running-balance window, orphan/unclosed counts.
     // click→call, purchase→result: the two ~equal-mass event types, so
@@ -1126,7 +1069,7 @@ object SparkEntry {
     // q214 digit-length bins (the uniform source column is a no-op)
     "q221_train_preflight" -> ((s: SparkSession, d: String) =>
       ext.Curation.trainPreflight(Tables.documents(s, d),
-        col("doc_id") % 20 === 0, Seq("slow", "big", "the"), maxPct = 10,
+        col("doc_id") % 20 === 0, Gate.blockWords, maxPct = Gate.maxPct,
         recipeGroup = concat(lit("len"),
           length(col("doc_id").cast("string")).cast("string")))),
     // per-source lineage digest: order-invariant content hash + masses —
@@ -1293,8 +1236,9 @@ object SparkEntry {
         .select(col("source"), ext.TextStats.tokens(col("text")).as("__t"))
         .select(col("source"),
           size(col("__t")).cast("decimal(18,0)").as("x"),
-          ext.TextStats.qualityLogitMicro(col("__t"), -60000000L,
-            500000L, 2000000L, 1000000L).cast("decimal(18,0)").as("y"))
+          ext.TextStats.qualityLogitMicro(col("__t"), Gate.bias,
+            Gate.wTokens, Gate.wStop, Gate.wDistinct)
+            .cast("decimal(18,0)").as("y"))
       ops.Relational.corrRegression(base, col("source"), col("x"),
           col("y"))
         .select(col("source"), col("n"), col("corr"),
@@ -1320,8 +1264,8 @@ object SparkEntry {
       val base = Tables.documents(s, d)
         .select(col("source"), col("lang"),
           ext.TextStats.qualityLogitMicro(
-            ext.TextStats.tokens(col("text")), -60000000L,
-            500000L, 2000000L, 1000000L).as("logit"))
+            ext.TextStats.tokens(col("text")), Gate.bias,
+            Gate.wTokens, Gate.wStop, Gate.wDistinct).as("logit"))
       ext.EvalMetrics.eceCalibration(base, col("source"), conf,
         col("lang") === "en")
         .withColumnRenamed("grp", "source")
@@ -1722,6 +1666,65 @@ object SparkEntry {
         .otherwise(lit("")))
   }
 
+  /** q174/q196's seven raw URL shapes over a doc_id-keyed augmentation
+    * (q163's discipline: the NORMALIZER is what's tested): case, default
+    * ports, utm params, fragments, and an already-canonical control.
+    */
+  private def syntheticUrl: Column = {
+    val sIdx = pmod(col("doc_id"), lit(5L)).cast("string")
+    val id = col("doc_id").cast("string")
+    val m = pmod(col("doc_id"), lit(7L))
+    when(m === 0,
+        concat(lit("https://WWW.Site"), sIdx, lit(".COM/path/page")))
+      .when(m === 1, concat(lit("http://site"), sIdx, lit(".com:80/a/b")))
+      .when(m === 2, concat(lit("https://site"), sIdx,
+        lit(".com:443/x?utm_source=feed&id="), id))
+      .when(m === 3, concat(lit("http://blog.site"), sIdx,
+        lit(".org/post?id="), id, lit("&utm_campaign=x&ref=y")))
+      .when(m === 4, concat(lit("https://cdn.site"), sIdx,
+        lit(".net/img/large.png#sec"), id))
+      .when(m === 5, concat(lit("http://site"), sIdx,
+        lit(".com/search?utm_source=a&utm_medium=b")))
+      .otherwise(concat(lit("https://site"), sIdx, lit(".com/clean/"), id))
+  }
+
+  /** q199/q200's markup around each document's text: a script with
+    * content, comments and entities, so the extractor is what's tested
+    * (q195's wrapper differs: it carries the doc id in the heading).
+    */
+  private def wrappedHtml: Column =
+    concat(
+      lit("<html><body><h1>T</h1>"),
+      lit("<script>var x = \"a\";</script><p>"), col("text"),
+      lit("</p>"),
+      when(col("doc_id") % 3 === 0,
+        lit("<p>A &amp; B &lt;ok&gt;</p>"))
+        .when(col("doc_id") % 3 === 1,
+          lit("<!-- hidden --><p>Tail &quot;q&quot; &#39;s</p>"))
+        .otherwise(lit("")),
+      lit("</body></html>"))
+
+  /** The dialogue family's per-message token proxy, props.k + 1
+    * (q180/q184/q202/q209).
+    */
+  private def turnTokens: Column =
+    get_json_object(col("props"), "$.k").cast("long") + 1L
+
+  /** The curation gates' one fixture. The blocklist (q164/q185/q199/q200/
+    * q211/q221) keeps a doc when at most `maxPct`% of its tokens are
+    * blocked words; the logit weights (q194/q199/q200/q211, and the
+    * q243/q246 audits of that logit) are frozen micro-units, chosen
+    * against measured feature ranges for a ~50% keep rate.
+    */
+  private object Gate {
+    val blockWords = Seq("slow", "big", "the")
+    val maxPct = 10
+    val bias = -60000000L
+    val wTokens = 500000L
+    val wStop = 2000000L
+    val wDistinct = 1000000L
+  }
+
   /** §3.2 pipeline demo on synthetic boxes: normalized prediction rows →
     * nested annotation documents (oracled on the count path; nested-assembly
     * values are unit-tested in PredictionsSpec).
@@ -1778,13 +1781,16 @@ object SparkEntry {
         element_at(col("lines"), 1).as("first_line"))
   }
 
-  /** DuckDB oracle SQL, matching column names/types per query. */
-  /** q110's oracle, generated per merge round: the same piped-vocabulary
-    * rewrite as [[graft.ext.TextStats.bpeLearnMerges]], one (pc, best, s)
-    * CTE triple per round, chained. Generated so the SQL and the Scala
-    * plan always iterate the same number of rounds.
+  /** The BPE merge replay of [[graft.ext.TextStats.bpeLearnMerges]]:
+    * `words(w, wcnt)`, the lowercase alphabetic words of ≥ 2 chars, and
+    * `s0`, their piped (`|a||b|`) spelling; then per round i the pair
+    * counts `pc<i>`, the top pair `best<i>` (`best` columns of it) and
+    * `s<i>`, the vocabulary with that pair merged. Every `s<i>` carries
+    * the word columns `carry`. Generated so the SQL and the Scala plan
+    * always iterate the same number of rounds.
     */
-  private def bpeLearnOracle(nMerges: Int): String = {
+  private def bpeRoundsSql(nMerges: Int, carry: Seq[String],
+                           best: String): String = {
     val words =
       """WITH words AS (
         |  SELECT w, count(*) AS wcnt FROM (
@@ -1792,8 +1798,9 @@ object SparkEntry {
         |    FROM documents WHERE length(trim(text)) > 0) u
         |  WHERE regexp_matches(w, '^[a-z]+$') AND length(w) >= 2
         |  GROUP BY 1),
-        |s0 AS (SELECT wcnt, regexp_replace(w, '(.)', '|\1|', 'g') AS piped
-        |       FROM words)""".stripMargin
+        |s0 AS (SELECT """.stripMargin + carry.mkString(", ") +
+        """, regexp_replace(w, '(.)', '|\1|', 'g') AS piped
+          |       FROM words)""".stripMargin
     val rounds = (1 to nMerges).map { i =>
       s"""pc$i AS (
          |  SELECT pa, pb, CAST(sum(wcnt) AS BIGINT) AS total FROM (
@@ -1804,18 +1811,22 @@ object SparkEntry {
          |            FROM s${i - 1}) x
          |      WHERE len(t) >= 2) u) v
          |  GROUP BY 1, 2),
-         |best$i AS (SELECT pa AS ba, pb AS bb, total FROM pc$i
+         |best$i AS (SELECT $best FROM pc$i
          |           ORDER BY total DESC, pa, pb LIMIT 1),
-         |s$i AS (SELECT s.wcnt,
+         |s$i AS (SELECT ${carry.map("s." + _).mkString(", ")},
          |  replace(s.piped, '|' || b.ba || '||' || b.bb || '|',
          |          '|' || b.ba || b.bb || '|') AS piped
          |  FROM s${i - 1} s CROSS JOIN best$i b)""".stripMargin
     }
-    val out = (1 to nMerges).map { i =>
-      s"SELECT CAST($i AS BIGINT) AS step, ba AS merged_a, bb AS merged_b, total FROM best$i"
-    }.mkString("\nUNION ALL ")
-    (words +: rounds).mkString(",\n") + "\n" + out
+    (words +: rounds).mkString(",\n")
   }
+
+  /** q110's oracle: the merge replay, one row per learned merge. */
+  private def bpeLearnOracle(nMerges: Int): String =
+    bpeRoundsSql(nMerges, Seq("wcnt"), "pa AS ba, pb AS bb, total") + "\n" +
+      (1 to nMerges).map { i =>
+        s"SELECT CAST($i AS BIGINT) AS step, ba AS merged_a, bb AS merged_b, total FROM best$i"
+      }.mkString("\nUNION ALL ")
 
   /** q199/q200's shared oracle chain: q195's extraction, q164's
     * normalized blocklist, q194's logit gate, q15's fingerprint over the
@@ -1889,32 +1900,6 @@ object SparkEntry {
     * — fertility as the one terminal IEEE division of exact longs.
     */
   private def bpeApplyOracle(nMerges: Int): String = {
-    val words =
-      """WITH words AS (
-        |  SELECT w, count(*) AS wcnt FROM (
-        |    SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS w
-        |    FROM documents WHERE length(trim(text)) > 0) u
-        |  WHERE regexp_matches(w, '^[a-z]+$') AND length(w) >= 2
-        |  GROUP BY 1),
-        |s0 AS (SELECT w, wcnt, regexp_replace(w, '(.)', '|\1|', 'g') AS piped
-        |       FROM words)""".stripMargin
-    val rounds = (1 to nMerges).map { i =>
-      s"""pc$i AS (
-         |  SELECT pa, pb, CAST(sum(wcnt) AS BIGINT) AS total FROM (
-         |    SELECT wcnt, (b).pa AS pa, (b).pb AS pb FROM (
-         |      SELECT wcnt, unnest(list_transform(generate_series(1, len(t) - 1),
-         |        i -> struct_pack(pa := t[i], pb := t[i + 1]))) AS b
-         |      FROM (SELECT wcnt, string_split(trim(piped, '|'), '||') AS t
-         |            FROM s${i - 1}) x
-         |      WHERE len(t) >= 2) u) v
-         |  GROUP BY 1, 2),
-         |best$i AS (SELECT pa AS ba, pb AS bb FROM pc$i
-         |           ORDER BY total DESC, pa, pb LIMIT 1),
-         |s$i AS (SELECT s.w, s.wcnt,
-         |  replace(s.piped, '|' || b.ba || '||' || b.bb || '|',
-         |          '|' || b.ba || b.bb || '|') AS piped
-         |  FROM s${i - 1} s CROSS JOIN best$i b)""".stripMargin
-    }
     val tail =
       s"""applied AS (SELECT w,
          |    CAST(len(string_split(trim(piped, '|'), '||')) AS BIGINT)
@@ -1932,49 +1917,15 @@ object SparkEntry {
          |  CAST(sum(cnt * n_sym) AS DOUBLE) / CAST(sum(cnt) AS DOUBLE)
          |    AS fertility
          |FROM wv JOIN applied USING (w) GROUP BY source""".stripMargin
-    (words +: rounds).mkString(",\n") + ",\n" + tail
+    bpeRoundsSql(nMerges, Seq("w", "wcnt"), "pa AS ba, pb AS bb") + ",\n" +
+      tail
   }
 
-  /** DuckDB replay of [[graft.ext.Similarity.mmrSelect]]'s greedy MMR
-    * loop: pick 1 is pure-relevance argmax, then one (pick, selall) CTE
-    * pair per round — generated so the SQL always unrolls exactly the
-    * rounds the Scala plan iterates (the q110 discipline). Cosines are
-    * 6 dp rounds of exact quantized moments on both sides, so every
-    * argmax compares identical doubles.
-    */
   /** Shared q104-style retrieval replay: CTEs through `ranked` (top-k per
     * query by token Jaccard) — the common prefix of the q152/q157 oracles.
     */
   private def retrievalRankedCtes(k: Int): String =
-    s"""base AS (
-       |  SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t
-       |  FROM documents WHERE length(trim(text)) > 0),
-       |dtok AS (SELECT doc_id, unnest(list_distinct(t)) AS term FROM base),
-       |dlen AS (SELECT doc_id,
-       |           CAST(len(list_distinct(t)) AS BIGINT) AS d_len
-       |         FROM base),
-       |nn AS (SELECT count(*) AS n FROM base),
-       |dfq AS (SELECT term, count(*) AS df FROM dtok GROUP BY 1),
-       |postings AS (
-       |  SELECT d.term, d.doc_id FROM dtok d JOIN dfq f USING (term), nn
-       |  WHERE f.df * 100 <= 79 * nn.n),
-       |queries AS (
-       |  SELECT doc_id AS query_id, list_distinct(t[1:5]) AS qt
-       |  FROM base WHERE doc_id % 97 = 3 AND doc_id < 2037),
-       |qtok AS (SELECT query_id, unnest(qt) AS term FROM queries),
-       |qlen AS (SELECT query_id, CAST(len(qt) AS BIGINT) AS q_len
-       |         FROM queries),
-       |ov AS (
-       |  SELECT q.query_id, p.doc_id, count(*) AS overlap
-       |  FROM qtok q JOIN postings p USING (term)
-       |  WHERE p.doc_id <> q.query_id
-       |  GROUP BY 1, 2),
-       |scored AS (
-       |  SELECT o.query_id, o.doc_id, o.overlap, ql.q_len, dl.d_len,
-       |    CAST(o.overlap AS DOUBLE)
-       |      / CAST(ql.q_len + dl.d_len - o.overlap AS DOUBLE) AS score
-       |  FROM ov o JOIN qlen ql USING (query_id)
-       |  JOIN dlen dl USING (doc_id)),
+    s"""$retrievalScoredSql,
        |ranked AS (
        |  SELECT query_id,
        |    row_number() OVER (PARTITION BY query_id
@@ -2052,18 +2003,16 @@ object SparkEntry {
        |  coalesce(CAST(1 AS DOUBLE) / g.first_rel_rank, 0.0) AS rr
        |FROM queries q LEFT JOIN g USING (query_id)""".stripMargin
 
+  /** DuckDB replay of [[graft.ext.Similarity.mmrSelect]]'s greedy MMR
+    * loop: pick 1 is pure-relevance argmax, then one (pick, selall) CTE
+    * pair per round — generated so the SQL always unrolls exactly the
+    * rounds the Scala plan iterates (the q110 discipline). Cosines are
+    * 6 dp rounds of exact quantized moments on both sides, so every
+    * argmax compares identical doubles.
+    */
   private def mmrOracle(k: Int, candN: Int): String = {
     val base =
-      s"""WITH qv AS (
-         |  SELECT vec_id,
-         |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE)
-         |      * 1000000.0 + 0.5) AS BIGINT)) AS q
-         |  FROM embeddings),
-         |nrm AS (
-         |  SELECT vec_id, q,
-         |    CAST(list_dot_product(q, q) AS BIGINT)
-         |      AS n2
-         |  FROM qv),
+      s"""WITH $qvNormsSql,
          |qq AS (SELECT q, n2 FROM nrm WHERE vec_id = 0 AND n2 > 0),
          |cand AS (
          |  SELECT vec_id, q, n2, rel FROM (
@@ -2147,6 +2096,7 @@ object SparkEntry {
   private def materializeCtes(sql: String): String =
     sql.replaceAll("""AS\s*\(\s*SELECT""", "AS MATERIALIZED (SELECT")
 
+  /** DuckDB oracle SQL, matching column names/types per query. */
   def oracleSql: Map[String, String] = rawOracleSql.map { case (k, v) =>
     k -> (if (materializedCteOracles(k)) materializeCtes(v) else v)
   }
@@ -2226,21 +2176,7 @@ object SparkEntry {
         |WHERE doc_id IN (SELECT max(doc_id) FROM documents GROUP BY text)""".stripMargin,
 
     "q11_sessionize" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-        |flagged AS (
-        |  SELECT user_id, event_id, ts_us,
-        |    CASE WHEN lag(ts_us) OVER w IS NULL
-        |              OR ts_us - lag(ts_us) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        |numbered AS (
-        |  SELECT user_id, ts_us,
-        |    CAST(sum(new_session) OVER (PARTITION BY user_id
-        |      ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |      AS session_id
-        |  FROM flagged)
+      s"""WITH $sessionsSql
         |SELECT user_id, session_id,
         |  count(*) AS n_events,
         |  min(ts_us) AS start_us,
@@ -2283,32 +2219,12 @@ object SparkEntry {
         |FROM documents""".stripMargin,
 
     "q14_langid" ->
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT doc_id, lang AS actual_lang,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('the','and','of','is','with'))) AS BIGINT) AS score_en,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('el','la','de','que','los'))) AS BIGINT) AS score_es,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('der','die','und','das','ist'))) AS BIGINT) AS score_de,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('le','la','et','les','des'))) AS BIGINT) AS score_fr,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('shi','bu','wo','de','ni'))) AS BIGINT) AS score_zh
+        |    $langScoresSql
         |  FROM documents)
         |SELECT doc_id, actual_lang, score_en, score_es, score_de, score_fr, score_zh,
-        |  CASE
-        |    WHEN score_en > 0 AND score_en >= score_es AND score_en >= score_de
-        |         AND score_en >= score_fr AND score_en >= score_zh THEN 'en'
-        |    WHEN score_es > 0 AND score_es >= score_en AND score_es >= score_de
-        |         AND score_es >= score_fr AND score_es >= score_zh THEN 'es'
-        |    WHEN score_de > 0 AND score_de >= score_en AND score_de >= score_es
-        |         AND score_de >= score_fr AND score_de >= score_zh THEN 'de'
-        |    WHEN score_fr > 0 AND score_fr >= score_en AND score_fr >= score_es
-        |         AND score_fr >= score_de AND score_fr >= score_zh THEN 'fr'
-        |    WHEN score_zh > 0 AND score_zh >= score_en AND score_zh >= score_es
-        |         AND score_zh >= score_de AND score_zh >= score_fr THEN 'zh'
-        |    ELSE 'unknown' END AS pred_lang
+        |  $langPredSql
         |FROM s""".stripMargin,
 
     // COALESCE: list_sum([]) is NULL in DuckDB but the Spark fold yields 0
@@ -2321,14 +2237,7 @@ object SparkEntry {
         |FROM documents""".stripMargin,
 
     "q16_ngram_jaccard" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 2),
-        |        i -> ascii(substr(text, i, 1)) * 65536
-        |           + ascii(substr(text, i + 1, 1)) * 256
-        |           + ascii(substr(text, i + 2, 1)))) AS s
-        |    FROM documents WHERE doc_id < 50) t),
+      s"""WITH ${shinglesSql("sh", 3, "WHERE doc_id < 50")},
         |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
         |pairs AS (
         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
@@ -2342,34 +2251,11 @@ object SparkEntry {
         |WHERE CAST(p.inter AS DOUBLE) / (sa.sz + sb.sz - p.inter) >= 0.5""".stripMargin,
 
     "q17_minhash_neardup" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 2),
-        |        i -> ascii(substr(text, i, 1)) * 65536
-        |           + ascii(substr(text, i + 1, 1)) * 256
-        |           + ascii(substr(text, i + 2, 1)))) AS s
-        |    FROM documents WHERE doc_id < 50) t),
-        |mh AS (
-        |  SELECT doc_id, t.j,
-        |    min(((2 * t.j + 1) * shingle + (97 + 31 * t.j)) % 2147483647) AS mh
-        |  FROM sh, generate_series(0, 15) t(j)
-        |  GROUP BY doc_id, t.j),
-        |bands AS (
-        |  SELECT doc_id, j // 4 AS band,
-        |    string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_sig
-        |  FROM mh GROUP BY doc_id, j // 4),
-        |cands AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.band_sig = y.band_sig AND x.doc_id < y.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-        |  FROM cands c
-        |  JOIN sh a ON a.doc_id = c.doc_a
-        |  JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-        |  GROUP BY c.doc_a, c.doc_b)
+      s"""WITH ${shinglesSql("sh", 3, "WHERE doc_id < 50")},
+        |${minhashSql("mh", "sh")},
+        |${bandSigSql("bands", "mh")},
+        |${bandCandidatesSql("cands", "bands", "band_sig")},
+        |${jaccardOverlapSql("cands")}
         |SELECT i.doc_a, i.doc_b,
         |  CAST(i.inter AS DOUBLE) / (sa.sz + sb.sz - i.inter) AS jaccard
         |FROM inter i
@@ -2378,14 +2264,7 @@ object SparkEntry {
         |WHERE CAST(i.inter AS DOUBLE) / (sa.sz + sb.sz - i.inter) >= 0.5""".stripMargin,
 
     "q18_simhash" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 2),
-        |        i -> ascii(substr(text, i, 1)) * 65536
-        |           + ascii(substr(text, i + 1, 1)) * 256
-        |           + ascii(substr(text, i + 2, 1)))) AS s
-        |    FROM documents WHERE doc_id < 50) t),
+      s"""WITH ${shinglesSql("sh", 3, "WHERE doc_id < 50")},
         |n AS (SELECT doc_id, count(*) AS n_shingles FROM sh GROUP BY doc_id),
         |bitc AS (
         |  SELECT doc_id, t.j,
@@ -2403,14 +2282,7 @@ object SparkEntry {
     // fixed-point quantized cosines (see Similarity's parity note): the
     // integer moments are exact, the derived double is raw — no round
     "q19_cosine_topk" ->
-      """WITH qv AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |nrm AS (
-        |  SELECT vec_id, q,
-        |    CAST(list_dot_product(q, q) AS BIGINT) AS n2
-        |  FROM qv),
+      s"""WITH $qvNormsSql,
         |scored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
         |    CAST(CAST(list_dot_product(q.q, c.q) AS BIGINT) AS DOUBLE)
@@ -2433,14 +2305,7 @@ object SparkEntry {
     // double-arithmetic fold is exact and order-independent — the same
     // value the BIGINT sum cast to DOUBLE produced.
     "q20_cosine_neardup" ->
-      """WITH qv AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |nrm AS (
-        |  SELECT vec_id, q,
-        |    CAST(list_dot_product(q, q) AS BIGINT) AS n2
-        |  FROM qv)
+      s"""WITH $qvNormsSql
         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
         |  list_dot_product(a.q, b.q)
         |    / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos
@@ -2451,25 +2316,7 @@ object SparkEntry {
         |      >= 0.18""".stripMargin,
 
     "q21_yolo_norm" ->
-      """WITH b AS (
-        |  SELECT p_partkey // 25 AS page,
-        |    p_partkey % 25 AS line_no,
-        |    CAST(p_partkey % 6 AS INTEGER) AS class_id,
-        |    CAST(p_partkey * 37 % 960 AS DOUBLE) AS x,
-        |    CAST(p_partkey * 59 % 480 AS DOUBLE) AS y,
-        |    CAST(64 + p_partkey * 13 % 128 AS DOUBLE) AS w,
-        |    CAST(48 + p_partkey * 17 % 96 AS DOUBLE) AS h
-        |  FROM part),
-        |c1 AS (
-        |  SELECT page, line_no, class_id,
-        |    greatest(0.0, least(x, 1024.0)) AS cx,
-        |    greatest(0.0, least(y, 512.0)) AS cy, w, h
-        |  FROM b),
-        |c2 AS (
-        |  SELECT page, line_no, class_id, cx, cy,
-        |    greatest(0.0, least(w, 1024.0 - cx)) AS cw,
-        |    greatest(0.0, least(h, 512.0 - cy)) AS ch
-        |  FROM c1)
+      s"""WITH $clippedBoxesSql
         |SELECT page, line_no, class_id,
         |  (cx + cw / 2.0) / 1024.0 AS x_center,
         |  (cy + ch / 2.0) / 512.0 AS y_center,
@@ -2478,31 +2325,7 @@ object SparkEntry {
         |FROM c2""".stripMargin,
 
     "q22_best_match" ->
-      """WITH g AS (
-        |  SELECT p_partkey // 25 AS page,
-        |    p_partkey % 25 AS gt_line,
-        |    CAST(p_partkey % 6 AS INTEGER) AS class_id,
-        |    CAST(p_partkey * 37 % 960 AS DOUBLE) AS gx,
-        |    CAST(p_partkey * 59 % 480 AS DOUBLE) AS gy,
-        |    CAST(64 + p_partkey * 13 % 128 AS DOUBLE) AS gw,
-        |    CAST(48 + p_partkey * 17 % 96 AS DOUBLE) AS gh
-        |  FROM part),
-        |p AS (
-        |  SELECT p_partkey // 25 AS page,
-        |    p_partkey % 25 AS pred_line,
-        |    CAST(p_partkey % 6 AS INTEGER) AS class_id,
-        |    CAST(p_partkey * 37 % 960 AS DOUBLE) + CAST(p_partkey % 7 AS DOUBLE) - 3.0 AS px,
-        |    CAST(p_partkey * 59 % 480 AS DOUBLE) + CAST(p_partkey % 11 AS DOUBLE) - 5.0 AS py,
-        |    CAST(64 + p_partkey * 13 % 128 AS DOUBLE) + CAST(p_partkey % 5 AS DOUBLE) - 2.0 AS pw,
-        |    CAST(48 + p_partkey * 17 % 96 AS DOUBLE) + CAST(p_partkey % 9 AS DOUBLE) - 4.0 AS ph
-        |  FROM part),
-        |cand AS (
-        |  SELECT p.page, p.class_id, p.pred_line, g.gt_line,
-        |    greatest(0.0, least(px + pw, gx + gw) - greatest(px, gx))
-        |      * greatest(0.0, least(py + ph, gy + gh) - greatest(py, gy)) AS inter,
-        |    greatest(0.0, pw) * greatest(0.0, ph) AS area_p,
-        |    greatest(0.0, gw) * greatest(0.0, gh) AS area_g
-        |  FROM p JOIN g ON p.page = g.page AND p.class_id = g.class_id),
+      s"""WITH $boxPairsSql,
         |scored AS (
         |  SELECT page, class_id, pred_line, gt_line,
         |    CASE WHEN area_p + area_g - inter > 0.0
@@ -2516,27 +2339,7 @@ object SparkEntry {
         |SELECT page, class_id, pred_line, gt_line, iou FROM best WHERE rk = 1""".stripMargin,
 
     "q24_lsh_cosine" ->
-      """WITH proj AS (
-        |  SELECT e.vec_id, t.j,
-        |    (SELECT sum(CAST(e.embedding[s.i] AS DOUBLE) *
-        |       ((((CAST(t.j AS BIGINT) * 1103515245 + 12345) * s.i)
-        |          + t.j * 2654435761) % 1000003
-        |         / 1000003.0 - 0.5))
-        |     FROM generate_series(1, 64) s(i)) AS pr
-        |  FROM embeddings e, generate_series(0, 7) t(j)),
-        |bkt AS (
-        |  SELECT vec_id,
-        |    CAST(sum(CASE WHEN pr > 0.0 THEN CAST(1 AS BIGINT) << j ELSE 0 END)
-        |         AS BIGINT) AS bucket
-        |  FROM proj GROUP BY vec_id),
-        |qv AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |nrm AS (
-        |  SELECT v.vec_id, b.bucket, v.q,
-        |    CAST(list_dot_product(v.q, v.q) AS BIGINT) AS n2
-        |  FROM qv v JOIN bkt b ON b.vec_id = v.vec_id)
+      s"""WITH $lshBucketsSql
         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
         |  CAST(CAST(list_dot_product(a.q, b.q) AS BIGINT) AS DOUBLE)
         |    / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) AS cos
@@ -2719,25 +2522,7 @@ object SparkEntry {
     // exactly representable, so decimal-repr vs binary-expansion rounding
     // cannot diverge — SURVEY §7.4.1), ordered first-line, neutral split
     "q26_convert_pipeline" ->
-      """WITH b AS (
-        |  SELECT p_partkey // 25 AS page,
-        |    p_partkey % 25 AS line_no,
-        |    CAST(p_partkey % 6 AS INTEGER) AS class_id,
-        |    CAST(p_partkey * 37 % 960 AS DOUBLE) AS x,
-        |    CAST(p_partkey * 59 % 480 AS DOUBLE) AS y,
-        |    CAST(64 + p_partkey * 13 % 128 AS DOUBLE) AS w,
-        |    CAST(48 + p_partkey * 17 % 96 AS DOUBLE) AS h
-        |  FROM part),
-        |c1 AS (
-        |  SELECT page, line_no, class_id,
-        |    greatest(0.0, least(x, 1024.0)) AS cx,
-        |    greatest(0.0, least(y, 512.0)) AS cy, w, h
-        |  FROM b),
-        |c2 AS (
-        |  SELECT page, line_no, class_id, cx, cy,
-        |    greatest(0.0, least(w, 1024.0 - cx)) AS cw,
-        |    greatest(0.0, least(h, 512.0 - cy)) AS ch
-        |  FROM c1),
+      s"""WITH $clippedBoxesSql,
         |lines AS (
         |  SELECT page, line_no,
         |    printf('%d %.6f %.6f %.6f %.6f', class_id,
@@ -2777,54 +2562,13 @@ object SparkEntry {
     // nprobe=4 probe, exact rerank — deterministic end to end, so the
     // approximate index IS oracle-checkable
     "q31_ivf_topk" ->
-      ivfTopkOracle,
+      ivfTopkOracle(""),
 
     // MinHash-LSH pairs (q17's chain) → transitive closure via recursive CTE
     // (min reachable id ≡ the engine's min-label-propagation fixpoint)
     "q36_dedup_groups" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 2),
-        |        i -> ascii(substr(text, i, 1)) * 65536
-        |           + ascii(substr(text, i + 1, 1)) * 256
-        |           + ascii(substr(text, i + 2, 1)))) AS s
-        |    FROM documents WHERE doc_id < 50) t),
-        |mh AS (
-        |  SELECT doc_id, t.j,
-        |    min(((2 * t.j + 1) * shingle + (97 + 31 * t.j)) % 2147483647) AS mh
-        |  FROM sh, generate_series(0, 15) t(j)
-        |  GROUP BY doc_id, t.j),
-        |bands AS (
-        |  SELECT doc_id, j // 4 AS band,
-        |    string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_sig
-        |  FROM mh GROUP BY doc_id, j // 4),
-        |cands AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.band_sig = y.band_sig
-        |       AND x.doc_id < y.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-        |  FROM cands c
-        |  JOIN sh a ON a.doc_id = c.doc_a
-        |  JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-        |  GROUP BY c.doc_a, c.doc_b),
-        |pairs AS (
-        |  SELECT i.doc_a, i.doc_b
-        |  FROM inter i
-        |  JOIN sizes sa ON sa.doc_id = i.doc_a
-        |  JOIN sizes sb ON sb.doc_id = i.doc_b
-        |  WHERE CAST(i.inter AS DOUBLE) / (sa.sz + sb.sz - i.inter) >= 0.5),
-        |edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT src AS node, src AS comp FROM edges
-        |  UNION
-        |  SELECT e.src AS node, r.comp FROM edges e
-        |  JOIN reach r ON e.dst = r.node)
+      s"""WITH RECURSIVE ${docs50PairsSql(0.5)},
+        |${closureSql("pairs", "doc")}
         |SELECT node, min(comp) AS canonical_id FROM reach GROUP BY node""".stripMargin,
 
     "q28_argmax" ->
@@ -3019,7 +2763,7 @@ object SparkEntry {
         |FROM f""".stripMargin,
 
     "q30_curation_pipeline" ->
-      """WITH q AS (
+      raw"""WITH q AS (
         |  SELECT doc_id, lang, text,
         |    CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS n_tokens,
         |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
@@ -3032,30 +2776,10 @@ object SparkEntry {
         |  WHERE doc_id IN (SELECT max(doc_id) FROM f GROUP BY text)),
         |s AS (
         |  SELECT doc_id, lang AS actual_lang, n_tokens, stopword_ratio,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('the','and','of','is','with'))) AS BIGINT) AS score_en,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('el','la','de','que','los'))) AS BIGINT) AS score_es,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('der','die','und','das','ist'))) AS BIGINT) AS score_de,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('le','la','et','les','des'))) AS BIGINT) AS score_fr,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('shi','bu','wo','de','ni'))) AS BIGINT) AS score_zh
+        |    $langScoresSql
         |  FROM kept)
         |SELECT doc_id, actual_lang,
-        |  CASE
-        |    WHEN score_en > 0 AND score_en >= score_es AND score_en >= score_de
-        |         AND score_en >= score_fr AND score_en >= score_zh THEN 'en'
-        |    WHEN score_es > 0 AND score_es >= score_en AND score_es >= score_de
-        |         AND score_es >= score_fr AND score_es >= score_zh THEN 'es'
-        |    WHEN score_de > 0 AND score_de >= score_en AND score_de >= score_es
-        |         AND score_de >= score_fr AND score_de >= score_zh THEN 'de'
-        |    WHEN score_fr > 0 AND score_fr >= score_en AND score_fr >= score_es
-        |         AND score_fr >= score_de AND score_fr >= score_zh THEN 'fr'
-        |    WHEN score_zh > 0 AND score_zh >= score_en AND score_zh >= score_es
-        |         AND score_zh >= score_de AND score_zh >= score_fr THEN 'zh'
-        |    ELSE 'unknown' END AS pred_lang,
+        |  $langPredSql,
         |  n_tokens, stopword_ratio
         |FROM s""".stripMargin,
 
@@ -3355,41 +3079,7 @@ object SparkEntry {
     // count is written out). (1.0 - 0.85) stays an explicit subtraction —
     // a 0.15 literal is a DIFFERENT double than the engine-side 1.0 − 0.85.
     "q64_pagerank" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 2),
-        |        i -> ascii(substr(text, i, 1)) * 65536
-        |           + ascii(substr(text, i + 1, 1)) * 256
-        |           + ascii(substr(text, i + 2, 1)))) AS s
-        |    FROM documents WHERE doc_id < 50) t),
-        |mh AS (
-        |  SELECT doc_id, t.j,
-        |    min(((2 * t.j + 1) * shingle + (97 + 31 * t.j)) % 2147483647) AS mh
-        |  FROM sh, generate_series(0, 15) t(j)
-        |  GROUP BY doc_id, t.j),
-        |bands AS (
-        |  SELECT doc_id, j // 4 AS band,
-        |    string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_sig
-        |  FROM mh GROUP BY doc_id, j // 4),
-        |cands AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.band_sig = y.band_sig
-        |       AND x.doc_id < y.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-        |  FROM cands c
-        |  JOIN sh a ON a.doc_id = c.doc_a
-        |  JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-        |  GROUP BY c.doc_a, c.doc_b),
-        |pairs AS (
-        |  SELECT i.doc_a, i.doc_b
-        |  FROM inter i
-        |  JOIN sizes sa ON sa.doc_id = i.doc_a
-        |  JOIN sizes sb ON sb.doc_id = i.doc_b
-        |  WHERE CAST(i.inter AS DOUBLE) / (sa.sz + sb.sz - i.inter) >= 0.5),
+      s"""WITH ${docs50PairsSql(0.5)},
         |edges AS (
         |  SELECT doc_a AS src, doc_b AS dst FROM pairs
         |  UNION SELECT doc_b, doc_a FROM pairs),
@@ -3635,58 +3325,10 @@ object SparkEntry {
     // q36's MinHash→LSH→Jaccard→closure replay, extended by the keeper
     // choice: longest text first, doc_id ties — per component
     "q78_canonical_dedup" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 2),
-        |        i -> ascii(substr(text, i, 1)) * 65536
-        |           + ascii(substr(text, i + 1, 1)) * 256
-        |           + ascii(substr(text, i + 2, 1)))) AS s
-        |    FROM documents WHERE doc_id < 50) t),
-        |mh AS (
-        |  SELECT doc_id, t.j,
-        |    min(((2 * t.j + 1) * shingle + (97 + 31 * t.j)) % 2147483647) AS mh
-        |  FROM sh, generate_series(0, 15) t(j)
-        |  GROUP BY doc_id, t.j),
-        |bands AS (
-        |  SELECT doc_id, j // 4 AS band,
-        |    string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_sig
-        |  FROM mh GROUP BY doc_id, j // 4),
-        |cands AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.band_sig = y.band_sig
-        |       AND x.doc_id < y.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-        |  FROM cands c
-        |  JOIN sh a ON a.doc_id = c.doc_a
-        |  JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-        |  GROUP BY c.doc_a, c.doc_b),
-        |pairs AS (
-        |  SELECT i.doc_a, i.doc_b
-        |  FROM inter i
-        |  JOIN sizes sa ON sa.doc_id = i.doc_a
-        |  JOIN sizes sb ON sb.doc_id = i.doc_b
-        |  WHERE CAST(i.inter AS DOUBLE) / (sa.sz + sb.sz - i.inter) >= 0.5),
-        |edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT src AS node, src AS comp FROM edges
-        |  UNION
-        |  SELECT e.src AS node, r.comp FROM edges e
-        |  JOIN reach r ON e.dst = r.node),
-        |comp AS (SELECT node, min(comp) AS comp FROM reach GROUP BY node),
-        |sel AS (
-        |  SELECT c.node AS doc_id, c.comp, d.n_chars,
-        |    count(*) OVER (PARTITION BY c.comp) AS group_size,
-        |    first_value(c.node) OVER (PARTITION BY c.comp
-        |      ORDER BY d.n_chars DESC, c.node
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |      AS keep_doc
-        |  FROM comp c JOIN documents d ON d.doc_id = c.node)
+      s"""WITH RECURSIVE ${docs50PairsSql(0.5)},
+        |${closureSql("pairs", "doc")},
+        |$compSql,
+        |$keeperSql
         |SELECT doc_id, comp, n_chars, group_size, keep_doc,
         |  doc_id = keep_doc AS is_kept
         |FROM sel""".stripMargin,
@@ -3790,14 +3432,7 @@ object SparkEntry {
 
     // q16's shingle base, asymmetric |A∩B|/|A| instead of Jaccard
     "q84_containment" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 2),
-        |        i -> ascii(substr(text, i, 1)) * 65536
-        |           + ascii(substr(text, i + 1, 1)) * 256
-        |           + ascii(substr(text, i + 2, 1)))) AS s
-        |    FROM documents WHERE doc_id < 50) t),
+      s"""WITH ${shinglesSql("sh", 3, "WHERE doc_id < 50")},
         |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1),
         |inter AS (
         |  SELECT a.doc_id AS inner_doc, b.doc_id AS outer_doc,
@@ -4013,19 +3648,7 @@ object SparkEntry {
         |    AND (b.price < a.price OR b."size" < a."size"))""".stripMargin,
 
     "q101_khop_bfs" ->
-      """WITH RECURSIVE nn AS (SELECT max(s_suppkey) AS n FROM supplier),
-        |e0 AS (
-        |  SELECT s_suppkey AS src, s_suppkey % n + 1 AS dst
-        |  FROM supplier, nn
-        |  UNION ALL
-        |  SELECT s_suppkey, (s_suppkey + 1) % n + 1 FROM supplier, nn
-        |  UNION ALL
-        |  SELECT s_suppkey, (s_suppkey * 7 + 1) % n + 1 FROM supplier, nn),
-        |sym AS (
-        |  SELECT DISTINCT src, dst FROM (
-        |    SELECT src, dst FROM e0 WHERE src <> dst
-        |    UNION ALL
-        |    SELECT dst, src FROM e0 WHERE src <> dst) u),
+      s"""WITH RECURSIVE $supplierGraphSql,
         |bfs(node, dist) AS (
         |  SELECT CAST(1 AS BIGINT) AS node, CAST(0 AS BIGINT) AS dist
         |  UNION ALL
@@ -4034,19 +3657,7 @@ object SparkEntry {
         |SELECT node, min(dist) AS dist FROM bfs GROUP BY node""".stripMargin,
 
     "q102_triangles" ->
-      """WITH nn AS (SELECT max(s_suppkey) AS n FROM supplier),
-        |e0 AS (
-        |  SELECT s_suppkey AS src, s_suppkey % n + 1 AS dst
-        |  FROM supplier, nn
-        |  UNION ALL
-        |  SELECT s_suppkey, (s_suppkey + 1) % n + 1 FROM supplier, nn
-        |  UNION ALL
-        |  SELECT s_suppkey, (s_suppkey * 7 + 1) % n + 1 FROM supplier, nn),
-        |sym AS (
-        |  SELECT DISTINCT src, dst FROM (
-        |    SELECT src, dst FROM e0 WHERE src <> dst
-        |    UNION ALL
-        |    SELECT dst, src FROM e0 WHERE src <> dst) u),
+      s"""WITH $supplierGraphSql,
         |canon AS (SELECT src AS a, dst AS b FROM sym WHERE src < dst),
         |tri AS (
         |  SELECT x.a AS a, x.b AS b, y.b AS c
@@ -4099,35 +3710,7 @@ object SparkEntry {
         |FROM merged WHERE action <> 'delete'""".stripMargin,
 
     "q104_retrieval" ->
-      """WITH base AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |dtok AS (SELECT doc_id, unnest(list_distinct(t)) AS term FROM base),
-        |dlen AS (SELECT doc_id,
-        |           CAST(len(list_distinct(t)) AS BIGINT) AS d_len
-        |         FROM base),
-        |nn AS (SELECT count(*) AS n FROM base),
-        |dfq AS (SELECT term, count(*) AS df FROM dtok GROUP BY 1),
-        |postings AS (
-        |  SELECT d.term, d.doc_id FROM dtok d JOIN dfq f USING (term), nn
-        |  WHERE f.df * 100 <= 79 * nn.n),
-        |queries AS (
-        |  SELECT doc_id AS query_id, list_distinct(t[1:5]) AS qt
-        |  FROM base WHERE doc_id % 97 = 3 AND doc_id < 2037),
-        |qtok AS (SELECT query_id, unnest(qt) AS term FROM queries),
-        |qlen AS (SELECT query_id, CAST(len(qt) AS BIGINT) AS q_len
-        |         FROM queries),
-        |ov AS (
-        |  SELECT q.query_id, p.doc_id, count(*) AS overlap
-        |  FROM qtok q JOIN postings p USING (term)
-        |  WHERE p.doc_id <> q.query_id
-        |  GROUP BY 1, 2),
-        |scored AS (
-        |  SELECT o.query_id, o.doc_id, o.overlap, ql.q_len, dl.d_len,
-        |    CAST(o.overlap AS DOUBLE)
-        |      / CAST(ql.q_len + dl.d_len - o.overlap AS DOUBLE) AS score
-        |  FROM ov o JOIN qlen ql USING (query_id)
-        |  JOIN dlen dl USING (doc_id))
+      s"""WITH $retrievalScoredSql
         |SELECT query_id,
         |  row_number() OVER (PARTITION BY query_id
         |                     ORDER BY score DESC, doc_id) AS "rank",
@@ -4363,19 +3946,7 @@ object SparkEntry {
 
     // q101's synthetic edge CTE + a per-node argmax over neighbor labels
     "q114_label_prop" ->
-      """WITH nn AS (SELECT max(s_suppkey) AS n FROM supplier),
-        |e0 AS (
-        |  SELECT s_suppkey AS src, s_suppkey % n + 1 AS dst
-        |  FROM supplier, nn
-        |  UNION ALL
-        |  SELECT s_suppkey, (s_suppkey + 1) % n + 1 FROM supplier, nn
-        |  UNION ALL
-        |  SELECT s_suppkey, (s_suppkey * 7 + 1) % n + 1 FROM supplier, nn),
-        |sym AS (
-        |  SELECT DISTINCT src, dst FROM (
-        |    SELECT src, dst FROM e0 WHERE src <> dst
-        |    UNION ALL
-        |    SELECT dst, src FROM e0 WHERE src <> dst) u),
+      s"""WITH $supplierGraphSql,
         |labels AS (
         |  SELECT s_suppkey AS node, s_suppkey % 3 AS label FROM supplier),
         |nbr AS (
@@ -4467,19 +4038,7 @@ object SparkEntry {
         |WHERE n_ab * 50 >= n_baskets""".stripMargin,
 
     "q134_link_predict" ->
-      """WITH nn AS (SELECT max(s_suppkey) AS n FROM supplier),
-        |e0 AS (
-        |  SELECT s_suppkey AS src, s_suppkey % n + 1 AS dst
-        |  FROM supplier, nn
-        |  UNION ALL
-        |  SELECT s_suppkey, (s_suppkey + 1) % n + 1 FROM supplier, nn
-        |  UNION ALL
-        |  SELECT s_suppkey, (s_suppkey * 7 + 1) % n + 1 FROM supplier, nn),
-        |sym AS (
-        |  SELECT DISTINCT src, dst FROM (
-        |    SELECT src, dst FROM e0 WHERE src <> dst
-        |    UNION ALL
-        |    SELECT dst, src FROM e0 WHERE src <> dst) u),
+      s"""WITH $supplierGraphSql,
         |deg AS (SELECT src AS node, count(*) AS deg FROM sym GROUP BY 1),
         |wedges AS (
         |  SELECT x.dst AS a, y.dst AS b, count(*) AS common
@@ -4637,21 +4196,7 @@ object SparkEntry {
         |FROM lat GROUP BY 1""".stripMargin,
 
     "q140_max_concurrency" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-        |flagged AS (
-        |  SELECT user_id, event_id, ts_us,
-        |    CASE WHEN lag(ts_us) OVER w IS NULL
-        |              OR ts_us - lag(ts_us) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        |numbered AS (
-        |  SELECT user_id, ts_us,
-        |    CAST(sum(new_session) OVER (PARTITION BY user_id
-        |      ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |      AS session_id
-        |  FROM flagged),
+      s"""WITH $sessionsSql,
         |sess AS (
         |  SELECT user_id, session_id, min(ts_us) AS start_us,
         |    max(ts_us) AS end_us
@@ -4778,23 +4323,9 @@ object SparkEntry {
         |FROM cum CROSS JOIN tot GROUP BY n1, n2""".stripMargin,
 
     "q147_langid_kappa" ->
-      """WITH s AS (
+      s"""WITH s AS (
         |  SELECT doc_id, lang AS actual,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('the','and','of','is','with'))) AS BIGINT)
-        |      AS score_en,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('el','la','de','que','los'))) AS BIGINT)
-        |      AS score_es,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('der','die','und','das','ist'))) AS BIGINT)
-        |      AS score_de,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('le','la','et','les','des'))) AS BIGINT)
-        |      AS score_fr,
-        |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-        |      t -> t IN ('shi','bu','wo','de','ni'))) AS BIGINT)
-        |      AS score_zh
+        |    $langScoresSql
         |  FROM documents),
         |p AS (
         |  SELECT actual,
@@ -4885,14 +4416,7 @@ object SparkEntry {
     // q16's exact ground truth + q17's LSH replay, full-outer joined on
     // the pair key; recall/precision are single integer divisions
     "q158_lsh_quality" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 2),
-        |        i -> ascii(substr(text, i, 1)) * 65536
-        |           + ascii(substr(text, i + 1, 1)) * 256
-        |           + ascii(substr(text, i + 2, 1)))) AS s
-        |    FROM documents WHERE doc_id < 50) t),
+      s"""WITH ${shinglesSql("sh", 3, "WHERE doc_id < 50")},
         |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
         |tp AS (
         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
@@ -4904,21 +4428,9 @@ object SparkEntry {
         |  JOIN sizes sa ON sa.doc_id = p.doc_a
         |  JOIN sizes sb ON sb.doc_id = p.doc_b
         |  WHERE CAST(p.inter AS DOUBLE) / (sa.sz + sb.sz - p.inter) >= 0.5),
-        |mh AS (
-        |  SELECT doc_id, t.j,
-        |    min(((2 * t.j + 1) * shingle + (97 + 31 * t.j)) % 2147483647)
-        |      AS mh
-        |  FROM sh, generate_series(0, 15) t(j)
-        |  GROUP BY doc_id, t.j),
-        |bands AS (
-        |  SELECT doc_id, j // 4 AS band,
-        |    string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_sig
-        |  FROM mh GROUP BY doc_id, j // 4),
-        |cands AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.band_sig = y.band_sig
-        |    AND x.doc_id < y.doc_id),
+        |${minhashSql("mh", "sh")},
+        |${bandSigSql("bands", "mh")},
+        |${bandCandidatesSql("cands", "bands", "band_sig")},
         |ci AS (
         |  SELECT c.doc_a, c.doc_b, count(*) AS inter
         |  FROM cands c
@@ -4948,31 +4460,7 @@ object SparkEntry {
     // q22's synthetic-box replay + a LEFT-JOIN existence rollup; bins and
     // confidence sums ride the exact integer conf_pct (p_partkey % 100)
     "q160_calibration" ->
-      """WITH g AS (
-        |  SELECT p_partkey // 25 AS page,
-        |    p_partkey % 25 AS gt_line,
-        |    CAST(p_partkey % 6 AS INTEGER) AS class_id,
-        |    CAST(p_partkey * 37 % 960 AS DOUBLE) AS gx,
-        |    CAST(p_partkey * 59 % 480 AS DOUBLE) AS gy,
-        |    CAST(64 + p_partkey * 13 % 128 AS DOUBLE) AS gw,
-        |    CAST(48 + p_partkey * 17 % 96 AS DOUBLE) AS gh
-        |  FROM part),
-        |p AS (
-        |  SELECT p_partkey // 25 AS page,
-        |    p_partkey % 25 AS pred_line,
-        |    CAST(p_partkey % 6 AS INTEGER) AS class_id,
-        |    CAST(p_partkey * 37 % 960 AS DOUBLE) + CAST(p_partkey % 7 AS DOUBLE) - 3.0 AS px,
-        |    CAST(p_partkey * 59 % 480 AS DOUBLE) + CAST(p_partkey % 11 AS DOUBLE) - 5.0 AS py,
-        |    CAST(64 + p_partkey * 13 % 128 AS DOUBLE) + CAST(p_partkey % 5 AS DOUBLE) - 2.0 AS pw,
-        |    CAST(48 + p_partkey * 17 % 96 AS DOUBLE) + CAST(p_partkey % 9 AS DOUBLE) - 4.0 AS ph
-        |  FROM part),
-        |cand AS (
-        |  SELECT p.page, p.class_id, p.pred_line, g.gt_line,
-        |    greatest(0.0, least(px + pw, gx + gw) - greatest(px, gx))
-        |      * greatest(0.0, least(py + ph, gy + gh) - greatest(py, gy)) AS inter,
-        |    greatest(0.0, pw) * greatest(0.0, ph) AS area_p,
-        |    greatest(0.0, gw) * greatest(0.0, gh) AS area_g
-        |  FROM p JOIN g ON p.page = g.page AND p.class_id = g.class_id),
+      s"""WITH $boxPairsSql,
         |scored AS (
         |  SELECT page, pred_line, gt_line,
         |    CASE WHEN area_p + area_g - inter > 0.0
@@ -5678,29 +5166,7 @@ object SparkEntry {
     // q104's sparse CTEs + q19's dense CTEs on the shared query set, then
     // the fixed two-term RRF expression (no aggregation → no fp drift)
     "q117_hybrid_rrf" ->
-      """WITH base AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |dtok AS (SELECT doc_id, unnest(list_distinct(t)) AS term FROM base),
-        |dlen AS (SELECT doc_id,
-        |           CAST(len(list_distinct(t)) AS BIGINT) AS d_len
-        |         FROM base),
-        |nn AS (SELECT count(*) AS n FROM base),
-        |dfq AS (SELECT term, count(*) AS df FROM dtok GROUP BY 1),
-        |postings AS (
-        |  SELECT d.term, d.doc_id FROM dtok d JOIN dfq f USING (term), nn
-        |  WHERE f.df * 100 <= 79 * nn.n),
-        |queries AS (
-        |  SELECT doc_id AS query_id, list_distinct(t[1:5]) AS qt
-        |  FROM base WHERE doc_id % 97 = 3 AND doc_id < 2037),
-        |qtok AS (SELECT query_id, unnest(qt) AS term FROM queries),
-        |qlen AS (SELECT query_id, CAST(len(qt) AS BIGINT) AS q_len
-        |         FROM queries),
-        |ov AS (
-        |  SELECT q.query_id, p.doc_id, count(*) AS overlap
-        |  FROM qtok q JOIN postings p USING (term)
-        |  WHERE p.doc_id <> q.query_id
-        |  GROUP BY 1, 2),
+      raw"""WITH $retrievalOverlapSql,
         |sscored AS (
         |  SELECT o.query_id, o.doc_id,
         |    CAST(o.overlap AS DOUBLE)
@@ -5713,14 +5179,7 @@ object SparkEntry {
         |      ORDER BY score DESC, doc_id) AS BIGINT) AS sparse_rank
         |  FROM sscored
         |  QUALIFY sparse_rank <= 5),
-        |qv AS (
-        |  SELECT vec_id, list_transform(embedding, x ->
-        |    CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |nrm AS (
-        |  SELECT vec_id, q,
-        |    CAST(list_dot_product(q, q) AS BIGINT) AS n2
-        |  FROM qv),
+        |$qvNormsSql,
         |dscored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
         |    CAST(CAST(list_dot_product(q.q, c.q) AS BIGINT) AS DOUBLE)
@@ -5775,21 +5234,7 @@ object SparkEntry {
 
     // q11's session CTE + generate_series over the touched hour buckets
     "q94_occupancy" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-        |flagged AS (
-        |  SELECT user_id, event_id, ts_us,
-        |    CASE WHEN lag(ts_us) OVER w IS NULL
-        |              OR ts_us - lag(ts_us) OVER w > 1800000000
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM e
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        |numbered AS (
-        |  SELECT user_id, ts_us,
-        |    CAST(sum(new_session) OVER (PARTITION BY user_id
-        |      ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT)
-        |      AS session_id
-        |  FROM flagged),
+      s"""WITH $sessionsSql,
         |sessions AS (
         |  SELECT user_id, session_id,
         |    min(ts_us) // 3600000000 AS b0, max(ts_us) // 3600000000 AS b1
@@ -6010,22 +5455,9 @@ object SparkEntry {
     // ⇒ engine-identical), then q141's integer largest-remainder replay;
     // selection is the spread() priority with doc_id tie-break
     "q170_temperature_mixture" ->
-      """WITH n AS (SELECT source, count(*) AS n_docs FROM documents
+      s"""WITH n AS (SELECT source, count(*) AS n_docs FROM documents
         |  GROUP BY source),
-        |w AS (SELECT source, n_docs,
-        |    CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1e6 + 0.5) AS BIGINT)
-        |      AS w FROM n),
-        |q AS (SELECT source, n_docs, w,
-        |    sum(w) OVER () AS wsum,
-        |    (sum(n_docs) OVER () * 1) // 2 AS budget FROM w),
-        |l AS (SELECT *, (w * budget) // wsum AS base,
-        |    (w * budget) % wsum AS remainder FROM q),
-        |r AS (SELECT *, budget - sum(base) OVER () AS leftover,
-        |    row_number() OVER (ORDER BY remainder DESC, source) AS rk
-        |  FROM l),
-        |quota AS (SELECT source, n_docs,
-        |    base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS quota
-        |  FROM r),
+        |${quotaSql("n", 1, 2)},
         |pri AS (SELECT d.source, d.n_chars,
         |    row_number() OVER (PARTITION BY d.source ORDER BY
         |      (d.doc_id * 2654435761 + 1013904223) % 2147483648, d.doc_id)
@@ -6107,24 +5539,7 @@ object SparkEntry {
     // split_part/strpos/list arithmetic (NO regex — byte parity with the
     // Spark substring_index/instr/filter chain)
     "q174_url_canonical" ->
-      """WITH u AS (SELECT doc_id,
-        |  CASE doc_id % 7
-        |    WHEN 0 THEN 'https://WWW.Site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.COM/path/page'
-        |    WHEN 1 THEN 'http://site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.com:80/a/b'
-        |    WHEN 2 THEN 'https://site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.com:443/x?utm_source=feed&id=' || CAST(doc_id AS VARCHAR)
-        |    WHEN 3 THEN 'http://blog.site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.org/post?id=' || CAST(doc_id AS VARCHAR)
-        |      || '&utm_campaign=x&ref=y'
-        |    WHEN 4 THEN 'https://cdn.site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.net/img/large.png#sec' || CAST(doc_id AS VARCHAR)
-        |    WHEN 5 THEN 'http://site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.com/search?utm_source=a&utm_medium=b'
-        |    ELSE 'https://site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.com/clean/' || CAST(doc_id AS VARCHAR)
-        |  END AS url FROM documents),
+      s"""WITH $urlShapesSql,
         |p1 AS (SELECT url,
         |    lower(split_part(split_part(url, '#', 1), '://', 1)) AS scheme,
         |    split_part(split_part(url, '#', 1), '://', 2) AS rest
@@ -6166,14 +5581,7 @@ object SparkEntry {
     // the exact inequality den²·dot² ≥ num²·n2a·n2b in HUGEINT — no fp in
     // any decision on either engine
     "q175_semantic_dedup" ->
-      """WITH qv AS (SELECT vec_id,
-        |    list_transform(embedding, x ->
-        |      CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))
-        |      AS q
-        |  FROM embeddings),
-        |nrm AS (SELECT vec_id, q,
-        |    CAST(list_dot_product(q, q) AS BIGINT) AS n2
-        |  FROM qv),
+      s"""WITH $qvNormsSql,
         |ok AS (SELECT * FROM nrm WHERE n2 > 0),
         |cent AS (SELECT vec_id AS centroid_id, q AS cq
         |         FROM ok WHERE vec_id < 8),
@@ -6329,11 +5737,7 @@ object SparkEntry {
     // conversation = user, order = (ts, event_id); same role mapping,
     // lag/cumsum/row_number over one window; prefix-truncation at 500
     "q180_dialogue_audit" ->
-      """WITH m AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    CASE WHEN event_type IN ('click', 'purchase', 'signup')
-        |      THEN 'user' ELSE 'assistant' END AS role,
-        |    CAST(json_extract_string(props, '$.k') AS BIGINT) + 1 AS toks
-        |  FROM events),
+      s"""WITH $turnsSql,
         |w AS (SELECT *,
         |    lag(role) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |      AS prev_role,
@@ -6463,11 +5867,7 @@ object SparkEntry {
     // q180's role/toks mapping; pairs via lead over the same window;
     // latency in exact µs (the ns contract divides out bit-for-bit)
     "q184_turn_pairs" ->
-      """WITH m AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    CASE WHEN event_type IN ('click', 'purchase', 'signup')
-        |      THEN 'user' ELSE 'assistant' END AS role,
-        |    CAST(json_extract_string(props, '$.k') AS BIGINT) + 1 AS toks
-        |  FROM events),
+      s"""WITH $turnsSql,
         |w AS (SELECT *,
         |    lead(role) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |      AS next_role,
@@ -6567,16 +5967,7 @@ object SparkEntry {
     // q19's brute chain + q31's IVF chain (CTEs renamed), compared by a
     // full-outer join on (query, neighbor) → one-row recall/precision
     "q189_ivf_quality" ->
-      """WITH qv AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x ->
-        |      CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))
-        |      AS q
-        |  FROM embeddings),
-        |nrm AS (
-        |  SELECT vec_id, q,
-        |    CAST(list_dot_product(q, q) AS BIGINT) AS n2
-        |  FROM qv),
+      s"""WITH $qvNormsSql,
         |bscored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
         |    CAST(CAST(list_dot_product(q.q, c.q) AS BIGINT) AS DOUBLE)
@@ -6591,32 +5982,8 @@ object SparkEntry {
         |      ORDER BY cos DESC, neighbor_id) AS rnk
         |  FROM bscored),
         |truth AS (SELECT query_id, neighbor_id FROM branked WHERE rnk <= 5),
-        |ok AS (SELECT vec_id, q, sqrt(CAST(n2 AS DOUBLE)) AS nv
-        |       FROM nrm WHERE n2 > 0),
-        |nc AS (SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) AS k
-        |       FROM embeddings),
-        |crk0 AS (
-        |  SELECT vec_id AS centroid_id, q AS cv, nv AS cn,
-        |    row_number() OVER (
-        |      ORDER BY ((vec_id + 17) * 2654435761) % 1000003, vec_id) AS cr
-        |  FROM ok),
-        |cent AS (SELECT centroid_id, cv, cn FROM crk0, nc WHERE cr <= nc.k),
-        |asg AS (
-        |  SELECT o.vec_id, o.q, o.nv, c.centroid_id,
-        |    CAST(CAST(list_dot_product(o.q, c.cv) AS BIGINT) AS DOUBLE)
-        |      / (o.nv * c.cn) AS ccos
-        |  FROM ok o, cent c),
-        |cranked AS (
-        |  SELECT vec_id, q, nv, centroid_id,
-        |    row_number() OVER (PARTITION BY vec_id
-        |                       ORDER BY ccos DESC, centroid_id) AS crk
-        |  FROM asg),
-        |idx AS (SELECT centroid_id, vec_id AS neighbor_id, q AS nev,
-        |          nv AS nn
-        |        FROM cranked WHERE crk = 1),
-        |probes AS (SELECT centroid_id, vec_id AS query_id, q AS pqv,
-        |             nv AS qn
-        |           FROM cranked WHERE crk <= 4 AND vec_id % 10 = 0),
+        |${ivfCentroidsSql("")},
+        |${ivfAssignSql("cranked")},
         |iscored AS (
         |  SELECT p.query_id, ne.neighbor_id,
         |    CAST(CAST(list_dot_product(p.pqv, ne.nev) AS BIGINT) AS DOUBLE)
@@ -6800,24 +6167,7 @@ object SparkEntry {
 
     // q174's canonicalization chain + literal-prefix rule probe
     "q196_robots_filter" ->
-      """WITH u AS (SELECT doc_id,
-        |  CASE doc_id % 7
-        |    WHEN 0 THEN 'https://WWW.Site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.COM/path/page'
-        |    WHEN 1 THEN 'http://site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.com:80/a/b'
-        |    WHEN 2 THEN 'https://site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.com:443/x?utm_source=feed&id=' || CAST(doc_id AS VARCHAR)
-        |    WHEN 3 THEN 'http://blog.site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.org/post?id=' || CAST(doc_id AS VARCHAR)
-        |      || '&utm_campaign=x&ref=y'
-        |    WHEN 4 THEN 'https://cdn.site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.net/img/large.png#sec' || CAST(doc_id AS VARCHAR)
-        |    WHEN 5 THEN 'http://site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.com/search?utm_source=a&utm_medium=b'
-        |    ELSE 'https://site' || CAST(doc_id % 5 AS VARCHAR)
-        |      || '.com/clean/' || CAST(doc_id AS VARCHAR)
-        |  END AS url FROM documents),
+      s"""WITH $urlShapesSql,
         |p1 AS (SELECT doc_id, url,
         |    lower(split_part(split_part(url, '#', 1), '://', 1)) AS scheme,
         |    split_part(split_part(url, '#', 1), '://', 2) AS rest
@@ -6974,11 +6324,7 @@ object SparkEntry {
     // q180's window replay; a span starts where an assistant message
     // follows a user message (or opens the conversation)
     "q202_loss_mask" ->
-      """WITH m AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    CASE WHEN event_type IN ('click', 'purchase', 'signup')
-        |      THEN 'user' ELSE 'assistant' END AS role,
-        |    CAST(json_extract_string(props, '$.k') AS BIGINT) + 1 AS toks
-        |  FROM events),
+      s"""WITH $turnsSql,
         |w AS (SELECT *,
         |    lag(role) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |      AS prev_role,
@@ -7065,21 +6411,7 @@ object SparkEntry {
     // fingerprint replay keys the surrogate; entity grain first so
     // collisions are counted, not silently merged
     "q205_pseudonymize" ->
-      """WITH aug AS (SELECT doc_id, text || ' contact person'
-        |      || CAST(doc_id % 40 AS VARCHAR) || '@example'
-        |      || CAST(doc_id % 40 % 7 AS VARCHAR) || '.com'
-        |      || CASE WHEN doc_id % 3 = 0 THEN ' cc person'
-        |           || CAST(doc_id % 40 AS VARCHAR) || '@example'
-        |           || CAST(doc_id % 40 % 7 AS VARCHAR) || '.com'
-        |         ELSE '' END
-        |      || CASE WHEN doc_id % 5 = 0 THEN ' also person'
-        |           || CAST((doc_id * 3 + 1) % 40 AS VARCHAR) || '@example'
-        |           || CAST((doc_id * 3 + 1) % 40 % 7 AS VARCHAR) || '.com'
-        |         ELSE '' END AS text
-        |  FROM documents),
-        |m AS (SELECT doc_id, unnest(regexp_extract_all(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS email
-        |  FROM aug),
+      s"""WITH ${entityMentionsSql("doc_id")},
         |pe AS (SELECT email, count(*) AS n_mentions,
         |    count(DISTINCT doc_id) AS n_docs FROM m GROUP BY 1),
         |sg AS (SELECT 'user_' || CAST(
@@ -7147,35 +6479,7 @@ object SparkEntry {
     // negatives re-joined to the FULL positive token set for the
     // false-negative safety check
     "q208_hard_negatives" ->
-      """WITH base AS (
-        |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |dtok AS (SELECT doc_id, unnest(list_distinct(t)) AS term FROM base),
-        |dlen AS (SELECT doc_id,
-        |           CAST(len(list_distinct(t)) AS BIGINT) AS d_len
-        |         FROM base),
-        |nn AS (SELECT count(*) AS n FROM base),
-        |dfq AS (SELECT term, count(*) AS df FROM dtok GROUP BY 1),
-        |postings AS (
-        |  SELECT d.term, d.doc_id FROM dtok d JOIN dfq f USING (term), nn
-        |  WHERE f.df * 100 <= 79 * nn.n),
-        |queries AS (
-        |  SELECT doc_id AS query_id, list_distinct(t[1:5]) AS qt
-        |  FROM base WHERE doc_id % 97 = 3 AND doc_id < 2037),
-        |qtok AS (SELECT query_id, unnest(qt) AS term FROM queries),
-        |qlen AS (SELECT query_id, CAST(len(qt) AS BIGINT) AS q_len
-        |         FROM queries),
-        |ov AS (
-        |  SELECT q.query_id, p.doc_id, count(*) AS overlap
-        |  FROM qtok q JOIN postings p USING (term)
-        |  WHERE p.doc_id <> q.query_id
-        |  GROUP BY 1, 2),
-        |scored AS (
-        |  SELECT o.query_id, o.doc_id, o.overlap, ql.q_len, dl.d_len,
-        |    CAST(o.overlap AS DOUBLE)
-        |      / CAST(ql.q_len + dl.d_len - o.overlap AS DOUBLE) AS score
-        |  FROM ov o JOIN qlen ql USING (query_id)
-        |  JOIN dlen dl USING (doc_id)),
+      s"""WITH $retrievalScoredSql,
         |negs AS (
         |  SELECT query_id, doc_id AS neg_id,
         |    row_number() OVER (PARTITION BY query_id
@@ -7202,11 +6506,7 @@ object SparkEntry {
     // q180/q184's window chain, three monotone stages over one
     // conversation-grain frame
     "q209_sft_manifest" ->
-      """WITH m AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-        |    CASE WHEN event_type IN ('click', 'purchase', 'signup')
-        |      THEN 'user' ELSE 'assistant' END AS role,
-        |    CAST(json_extract_string(props, '$.k') AS BIGINT) + 1 AS toks
-        |  FROM events),
+      s"""WITH $turnsSql,
         |w AS (SELECT *,
         |    lag(role) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
         |      AS prev_role,
@@ -7302,11 +6602,12 @@ object SparkEntry {
 
     // running balance over (ts, event_id) order; orphans = deepest dip
     // below zero, unclosed = final balance re-based by the dip
-    "q212_toolcall_audit" ->
-      """WITH m AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
+    "q212_toolcall_audit" -> {
+      val m = eventsUsSql("m", """,
         |    CASE WHEN event_type = 'click' THEN 1
-        |         WHEN event_type = 'purchase' THEN -1 ELSE 0 END AS d
-        |  FROM events),
+        |         WHEN event_type = 'purchase' THEN -1 ELSE 0 END AS d"""
+        .stripMargin)
+      s"""WITH $m,
         |w AS (SELECT *, sum(d) OVER (PARTITION BY user_id
         |    ORDER BY ts_us, event_id) AS bal FROM m),
         |c AS (SELECT user_id,
@@ -7319,26 +6620,13 @@ object SparkEntry {
         |  CAST(orph AS BIGINT) AS n_orphan_results,
         |  CAST(n_calls - n_results + orph AS BIGINT) AS n_unclosed_calls,
         |  (orph = 0 AND n_calls = n_results) AS ok
-        |FROM c""".stripMargin,
+        |FROM c""".stripMargin
+    },
 
     // q205's augmentation + extraction; delete set = every 5th planted
     // entity; per-source blast radius via a doc-grain left join
     "q213_forget_audit" ->
-      """WITH aug AS (SELECT doc_id, source, text || ' contact person'
-        |      || CAST(doc_id % 40 AS VARCHAR) || '@example'
-        |      || CAST(doc_id % 40 % 7 AS VARCHAR) || '.com'
-        |      || CASE WHEN doc_id % 3 = 0 THEN ' cc person'
-        |           || CAST(doc_id % 40 AS VARCHAR) || '@example'
-        |           || CAST(doc_id % 40 % 7 AS VARCHAR) || '.com'
-        |         ELSE '' END
-        |      || CASE WHEN doc_id % 5 = 0 THEN ' also person'
-        |           || CAST((doc_id * 3 + 1) % 40 AS VARCHAR) || '@example'
-        |           || CAST((doc_id * 3 + 1) % 40 % 7 AS VARCHAR) || '.com'
-        |         ELSE '' END AS text
-        |  FROM documents),
-        |m AS (SELECT doc_id, unnest(regexp_extract_all(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS email
-        |  FROM aug),
+      s"""WITH ${entityMentionsSql("doc_id, source")},
         |del AS (SELECT 'person' || CAST(i AS VARCHAR) || '@example'
         |      || CAST(i % 7 AS VARCHAR) || '.com' AS email
         |  FROM (SELECT unnest(generate_series(0, 39)) AS i) s
@@ -7357,24 +6645,11 @@ object SparkEntry {
     // q170's apportionment fragment over digit-length bins, re-read as
     // repeat factors at a 3× budget; permille epochs via exact int div
     "q214_mixture_epochs" ->
-      """WITH n AS (SELECT 'len' ||
+      s"""WITH n AS (SELECT 'len' ||
         |    CAST(length(CAST(doc_id AS VARCHAR)) AS VARCHAR) AS source,
         |    count(*) AS n_docs
         |  FROM documents GROUP BY 1),
-        |w AS (SELECT source, n_docs,
-        |    CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1e6 + 0.5) AS BIGINT)
-        |      AS w FROM n),
-        |q AS (SELECT source, n_docs, w,
-        |    sum(w) OVER () AS wsum,
-        |    (sum(n_docs) OVER () * 3) // 1 AS budget FROM w),
-        |l AS (SELECT *, (w * budget) // wsum AS base,
-        |    (w * budget) % wsum AS remainder FROM q),
-        |r AS (SELECT *, budget - sum(base) OVER () AS leftover,
-        |    row_number() OVER (ORDER BY remainder DESC, source) AS rk
-        |  FROM l),
-        |quota AS (SELECT source, n_docs,
-        |    base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS quota
-        |  FROM r)
+        |${quotaSql("n", 3, 1)}
         |SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
         |  CAST(quota AS BIGINT) AS quota,
         |  CAST((quota * 1000) // n_docs AS BIGINT) AS epochs_x1000,
@@ -7592,7 +6867,7 @@ object SparkEntry {
     // four already-oracled readouts (q50 / q171 / q214 / q164 fragments)
     // folded to the 4-row checklist; pass computed on the union
     "q221_train_preflight" ->
-      """SELECT "check", "value", threshold,
+      raw"""SELECT "check", "value", threshold,
         |  "value" <= threshold AS pass FROM (
         |SELECT * FROM (
         |  WITH toks AS (
@@ -7644,20 +6919,7 @@ object SparkEntry {
         |      CAST(length(CAST(doc_id AS VARCHAR)) AS VARCHAR) AS source,
         |      count(*) AS n_docs
         |    FROM documents GROUP BY 1),
-        |  w AS (SELECT source, n_docs,
-        |      CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1e6 + 0.5)
-        |        AS BIGINT) AS w FROM n),
-        |  q AS (SELECT source, n_docs, w,
-        |      sum(w) OVER () AS wsum,
-        |      (sum(n_docs) OVER () * 3) // 1 AS budget FROM w),
-        |  l AS (SELECT *, (w * budget) // wsum AS base,
-        |      (w * budget) % wsum AS remainder FROM q),
-        |  r AS (SELECT *, budget - sum(base) OVER () AS leftover,
-        |      row_number() OVER (ORDER BY remainder DESC, source) AS rk
-        |    FROM l),
-        |  quota AS (SELECT source, n_docs,
-        |      base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS quota
-        |    FROM r)
+        |  ${quotaSql("n", 3, 1)}
         |  SELECT 'max_epochs_x1000',
         |    CAST(max((quota * 1000) // n_docs) AS BIGINT),
         |    CAST(4000 AS BIGINT) FROM quota) c
@@ -7672,7 +6934,7 @@ object SparkEntry {
         |      len(list_filter(t, x -> list_contains(['slow','big','the'],
         |        regexp_replace(translate(x,
         |          'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'),
-        |        '^[^a-z0-9]+|[^a-z0-9]+$', '', 'g')))) AS n_blocked
+        |        '^[^a-z0-9]+|[^a-z0-9]+$$', '', 'g')))) AS n_blocked
         |    FROM toks)
         |  SELECT 'blocked_rate_ppm',
         |    CAST(CASE WHEN count(*) = 0 THEN 0
@@ -7754,24 +7016,11 @@ object SparkEntry {
 
     // q214's quota chain + per-group spread-hash rank → doc exposure
     "q225_epoch_exposure" ->
-      """WITH n AS (SELECT doc_id, 'len' ||
+      s"""WITH n AS (SELECT doc_id, 'len' ||
         |    CAST(length(CAST(doc_id AS VARCHAR)) AS VARCHAR) AS source
         |  FROM documents),
         |g AS (SELECT source, count(*) AS n_docs FROM n GROUP BY 1),
-        |w AS (SELECT source, n_docs,
-        |    CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1e6 + 0.5) AS BIGINT)
-        |      AS w FROM g),
-        |q AS (SELECT source, n_docs, w,
-        |    sum(w) OVER () AS wsum,
-        |    (sum(n_docs) OVER () * 3) // 1 AS budget FROM w),
-        |l AS (SELECT *, (w * budget) // wsum AS base,
-        |    (w * budget) % wsum AS remainder FROM q),
-        |r AS (SELECT *, budget - sum(base) OVER () AS leftover,
-        |    row_number() OVER (ORDER BY remainder DESC, source) AS rk
-        |  FROM l),
-        |quota AS (SELECT source, n_docs,
-        |    base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS quota
-        |  FROM r),
+        |${quotaSql("g", 3, 1)},
         |dr AS (SELECT doc_id, source,
         |    row_number() OVER (PARTITION BY source
         |      ORDER BY (doc_id * 2654435761 + 1013904223) % 2147483648,
@@ -8401,61 +7650,10 @@ object SparkEntry {
     // the q36 closure at threshold 0.55, plus singleton clusters and
     // the size histogram
     "q245_neardup_clusters" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 2),
-        |        i -> ascii(substr(text, i, 1)) * 65536
-        |           + ascii(substr(text, i + 1, 1)) * 256
-        |           + ascii(substr(text, i + 2, 1)))) AS s
-        |    FROM documents WHERE doc_id < 50) t),
-        |mh AS (
-        |  SELECT doc_id, t.j,
-        |    min(((2 * t.j + 1) * shingle + (97 + 31 * t.j)) % 2147483647)
-        |      AS mh
-        |  FROM sh, generate_series(0, 15) t(j)
-        |  GROUP BY doc_id, t.j),
-        |bands AS (
-        |  SELECT doc_id, j // 4 AS band,
-        |    string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_sig
-        |  FROM mh GROUP BY doc_id, j // 4),
-        |cands AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.band_sig = y.band_sig
-        |       AND x.doc_id < y.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-        |  FROM cands c
-        |  JOIN sh a ON a.doc_id = c.doc_a
-        |  JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-        |  GROUP BY c.doc_a, c.doc_b),
-        |pairs AS (
-        |  SELECT i.doc_a, i.doc_b
-        |  FROM inter i
-        |  JOIN sizes sa ON sa.doc_id = i.doc_a
-        |  JOIN sizes sb ON sb.doc_id = i.doc_b
-        |  WHERE CAST(i.inter AS DOUBLE) / (sa.sz + sb.sz - i.inter)
-        |    >= 0.55),
-        |edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT src AS node, src AS comp FROM edges
-        |  UNION
-        |  SELECT e.src AS node, r.comp FROM edges e
-        |  JOIN reach r ON e.dst = r.node),
-        |comp AS (SELECT node, min(comp) AS comp FROM reach GROUP BY node),
-        |assign AS (SELECT d.doc_id, coalesce(c.comp, d.doc_id) AS comp
-        |  FROM (SELECT doc_id FROM documents WHERE doc_id < 50) d
-        |  LEFT JOIN comp c ON c.node = d.doc_id),
-        |cs AS (SELECT comp, CAST(count(*) AS BIGINT) AS cluster_size
-        |  FROM assign GROUP BY 1)
-        |SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
-        |  CAST(cluster_size * count(*) AS BIGINT) AS n_docs,
-        |  CAST((cluster_size - 1) * count(*) AS BIGINT) AS docs_removed
-        |FROM cs GROUP BY 1""".stripMargin,
+      s"""WITH RECURSIVE ${docs50PairsSql(0.55)},
+        |${closureSql("pairs", "doc")},
+        |$compSql,
+        |${clusterSizesSql("WHERE doc_id < 50")}""".stripMargin,
 
     // q194 logit -> fixed linear squash to [0,1e6]; per-decile exact
     // integer gaps; worst bin via the packed-BIGINT argmax
@@ -8626,26 +7824,8 @@ object SparkEntry {
     // dHash over the 9×8 text raster: bit (r,c) = luma(r,c) < luma(r,c+1),
     // kept as four 16-bit bands; band-equality join → exact Hamming ≤ 16
     "q252_dhash_neardup" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |    list_transform(generate_series(1, 72),
-        |      i -> CAST(ascii(substr(text, CAST(i AS INT), 1)) AS BIGINT))
-        |      AS px
-        |  FROM documents WHERE n_chars >= 72),
-        |bands AS (
-        |  SELECT doc_id, b.b AS band, CAST(
-        |    (SELECT sum(CASE WHEN px[CAST(r*9+c+1 AS BIGINT)]
-        |                        < px[CAST(r*9+c+2 AS BIGINT)]
-        |       THEN CAST(1 AS BIGINT) << CAST((r % 2) * 8 + c AS INT)
-        |       ELSE 0 END)
-        |     FROM (SELECT unnest(generate_series(0, 7)) c) cs,
-        |          (SELECT b.b * 2 AS r UNION ALL SELECT b.b * 2 + 1) rs)
-        |    AS BIGINT) AS v
-        |  FROM g, (SELECT unnest(generate_series(0, 3)) b) b),
-        |cand AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.v = y.v AND x.doc_id < y.doc_id),
+      s"""WITH ${dhashBandsSql("bands")},
+        |${bandCandidatesSql("cand", "bands", "v")},
         |ham AS (
         |  SELECT c.doc_a, c.doc_b,
         |    CAST(sum(bit_count(xor(xa.v, ya.v))) AS BIGINT) AS hamming
@@ -8656,56 +7836,13 @@ object SparkEntry {
         |SELECT doc_a, doc_b, hamming FROM ham WHERE hamming <= 16""".stripMargin,
 
     "q253_dhash_clusters" ->
-      """WITH RECURSIVE g AS (
-        |  SELECT doc_id,
-        |    list_transform(generate_series(1, 72),
-        |      i -> CAST(ascii(substr(text, CAST(i AS INT), 1)) AS BIGINT))
-        |      AS px
-        |  FROM documents WHERE n_chars >= 72),
-        |bands AS (
-        |  SELECT doc_id, b.b AS band, CAST(
-        |    (SELECT sum(CASE WHEN px[CAST(r*9+c+1 AS BIGINT)]
-        |                        < px[CAST(r*9+c+2 AS BIGINT)]
-        |       THEN CAST(1 AS BIGINT) << CAST((r % 2) * 8 + c AS INT)
-        |       ELSE 0 END)
-        |     FROM (SELECT unnest(generate_series(0, 7)) c) cs,
-        |          (SELECT b.b * 2 AS r UNION ALL SELECT b.b * 2 + 1) rs)
-        |    AS BIGINT) AS v
-        |  FROM g, (SELECT unnest(generate_series(0, 3)) b) b),
-        |cand AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.v = y.v AND x.doc_id < y.doc_id),
-        |pairs AS (
-        |  SELECT c.doc_a, c.doc_b
-        |  FROM cand c
-        |  JOIN bands xa ON xa.doc_id = c.doc_a
-        |  JOIN bands ya ON ya.doc_id = c.doc_b AND ya.band = xa.band
-        |  GROUP BY c.doc_a, c.doc_b
-        |  HAVING sum(bit_count(xor(xa.v, ya.v))) <= 16),
-        |edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT src AS node, src AS comp FROM edges
-        |  UNION
-        |  SELECT e.src AS node, r.comp FROM edges e
-        |  JOIN reach r ON e.dst = r.node),
-        |comp AS (SELECT node, min(comp) AS comp FROM reach GROUP BY node),
-        |assign AS (SELECT d.doc_id, coalesce(c.comp, d.doc_id) AS comp
-        |  FROM (SELECT doc_id FROM documents WHERE n_chars >= 72) d
-        |  LEFT JOIN comp c ON c.node = d.doc_id),
-        |cs AS (SELECT comp, CAST(count(*) AS BIGINT) AS cluster_size
-        |  FROM assign GROUP BY 1)
-        |SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
-        |  CAST(cluster_size * count(*) AS BIGINT) AS n_docs,
-        |  CAST((cluster_size - 1) * count(*) AS BIGINT) AS docs_removed
-        |FROM cs GROUP BY 1""".stripMargin,
+      s"""$dhashClosureSql,
+        |${clusterSizesSql("WHERE n_chars >= 72")}""".stripMargin,
 
     // q214 quota chain → q225 exposure pick → pass explode → q89 greedy
     // pack (recursive) → q222 digest with pass mixed per term
     "q254_train_run_prep" ->
-      """WITH RECURSIVE d AS (
+      raw"""WITH RECURSIVE d AS (
         |  SELECT doc_id,
         |    'len' || CAST(length(CAST(doc_id AS VARCHAR)) AS VARCHAR)
         |      AS source,
@@ -8720,19 +7857,7 @@ object SparkEntry {
         |      % 2147483648 AS inr
         |  FROM documents),
         |n AS (SELECT source, count(*) AS n_docs FROM d GROUP BY 1),
-        |w AS (SELECT source, n_docs,
-        |    CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1e6 + 0.5) AS BIGINT)
-        |      AS w FROM n),
-        |q AS (SELECT source, n_docs, w, sum(w) OVER () AS wsum,
-        |    (sum(n_docs) OVER () * 3) // 1 AS budget FROM w),
-        |l AS (SELECT *, (w * budget) // wsum AS base,
-        |    (w * budget) % wsum AS remainder FROM q),
-        |r AS (SELECT *, budget - sum(base) OVER () AS leftover,
-        |    row_number() OVER (ORDER BY remainder DESC, source) AS rk
-        |  FROM l),
-        |quota AS (SELECT source, n_docs,
-        |    base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS quota
-        |  FROM r),
+        |${quotaSql("n", 3, 1)},
         |rkd AS (SELECT d.*, row_number() OVER (PARTITION BY d.source
         |    ORDER BY (d.doc_id * 2654435761 + 1013904223) % 2147483648,
         |      d.doc_id) AS rk
@@ -8791,50 +7916,8 @@ object SparkEntry {
     // q252's band/pair chain closed to components (q78's keeper policy:
     // longest text, min doc_id ties) — only docs in ≥1 pair appear
     "q255_dhash_keeper" ->
-      """WITH RECURSIVE g AS (
-        |  SELECT doc_id,
-        |    list_transform(generate_series(1, 72),
-        |      i -> CAST(ascii(substr(text, CAST(i AS INT), 1)) AS BIGINT))
-        |      AS px
-        |  FROM documents WHERE n_chars >= 72),
-        |bands AS (
-        |  SELECT doc_id, b.b AS band, CAST(
-        |    (SELECT sum(CASE WHEN px[CAST(r*9+c+1 AS BIGINT)]
-        |                        < px[CAST(r*9+c+2 AS BIGINT)]
-        |       THEN CAST(1 AS BIGINT) << CAST((r % 2) * 8 + c AS INT)
-        |       ELSE 0 END)
-        |     FROM (SELECT unnest(generate_series(0, 7)) c) cs,
-        |          (SELECT b.b * 2 AS r UNION ALL SELECT b.b * 2 + 1) rs)
-        |    AS BIGINT) AS v
-        |  FROM g, (SELECT unnest(generate_series(0, 3)) b) b),
-        |cand AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM bands x JOIN bands y
-        |    ON x.band = y.band AND x.v = y.v AND x.doc_id < y.doc_id),
-        |pairs AS (
-        |  SELECT c.doc_a, c.doc_b
-        |  FROM cand c
-        |  JOIN bands xa ON xa.doc_id = c.doc_a
-        |  JOIN bands ya ON ya.doc_id = c.doc_b AND ya.band = xa.band
-        |  GROUP BY c.doc_a, c.doc_b
-        |  HAVING sum(bit_count(xor(xa.v, ya.v))) <= 16),
-        |edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach AS (
-        |  SELECT src AS node, src AS comp FROM edges
-        |  UNION
-        |  SELECT e.src AS node, r.comp FROM edges e
-        |  JOIN reach r ON e.dst = r.node),
-        |comp AS (SELECT node, min(comp) AS comp FROM reach GROUP BY node),
-        |sel AS (
-        |  SELECT c.node AS doc_id, c.comp, d.n_chars,
-        |    count(*) OVER (PARTITION BY c.comp) AS group_size,
-        |    first_value(c.node) OVER (PARTITION BY c.comp
-        |      ORDER BY d.n_chars DESC, c.node
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |      AS keep_doc
-        |  FROM comp c JOIN documents d ON d.doc_id = c.node)
+      s"""$dhashClosureSql,
+        |$keeperSql
         |SELECT doc_id, comp, n_chars, group_size, keep_doc,
         |  doc_id = keep_doc AS is_kept
         |FROM sel""".stripMargin,
@@ -8842,45 +7925,10 @@ object SparkEntry {
     // q24's projection/bucket/cosine chain → pairs → recursive CC →
     // cluster-size histogram over every embedding row
     "q256_embed_dedup_clusters" ->
-      """WITH RECURSIVE proj AS (
-        |  SELECT e.vec_id, t.j,
-        |    (SELECT sum(CAST(e.embedding[s.i] AS DOUBLE) *
-        |       ((((CAST(t.j AS BIGINT) * 1103515245 + 12345) * s.i)
-        |          + t.j * 2654435761) % 1000003
-        |         / 1000003.0 - 0.5))
-        |     FROM generate_series(1, 64) s(i)) AS pr
-        |  FROM embeddings e, generate_series(0, 7) t(j)),
-        |bkt AS (
-        |  SELECT vec_id,
-        |    CAST(sum(CASE WHEN pr > 0.0 THEN CAST(1 AS BIGINT) << j
-        |             ELSE 0 END) AS BIGINT) AS bucket
-        |  FROM proj GROUP BY vec_id),
-        |qv AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding,
-        |      x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5)
-        |           AS BIGINT)) AS q
-        |  FROM embeddings),
-        |nrm AS (
-        |  SELECT v.vec_id, b.bucket, v.q,
-        |    CAST(list_dot_product(v.q, v.q) AS BIGINT) AS n2
-        |  FROM qv v JOIN bkt b ON b.vec_id = v.vec_id),
-        |pairs AS (
-        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |  FROM nrm a JOIN nrm b ON a.bucket = b.bucket
-        |    AND a.vec_id < b.vec_id AND a.n2 > 0 AND b.n2 > 0
-        |  WHERE CAST(CAST(list_dot_product(a.q, b.q) AS BIGINT) AS DOUBLE)
-        |        / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE)))
-        |        >= 0.15),
-        |edges AS (
-        |  SELECT vec_a AS src, vec_b AS dst FROM pairs
-        |  UNION SELECT vec_b, vec_a FROM pairs),
-        |reach AS (
-        |  SELECT src AS node, src AS comp FROM edges
-        |  UNION
-        |  SELECT e.src AS node, r.comp FROM edges e
-        |  JOIN reach r ON e.dst = r.node),
-        |comp AS (SELECT node, min(comp) AS comp FROM reach GROUP BY node),
+      s"""WITH RECURSIVE $lshBucketsSql,
+        |${lshPairsSql("pairs", "vec")},
+        |${closureSql("pairs", "vec")},
+        |$compSql,
         |assign AS (SELECT v.vec_id, coalesce(c.comp, v.vec_id) AS comp
         |  FROM (SELECT vec_id FROM embeddings) v
         |  LEFT JOIN comp c ON c.node = v.vec_id),
@@ -8926,127 +7974,29 @@ object SparkEntry {
     // 1/2/4, unioned into ONE transitive closure and ONE keeper window;
     // modality_mask = Σ distinct tags per doc
     "q260_crossmodal_keeper" ->
-      """WITH RECURSIVE sh AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 4),
-        |        i -> ascii(substr(text, i, 1)) * 4294967296
-        |           + ascii(substr(text, i + 1, 1)) * 16777216
-        |           + ascii(substr(text, i + 2, 1)) * 65536
-        |           + ascii(substr(text, i + 3, 1)) * 256
-        |           + ascii(substr(text, i + 4, 1)))) AS s
-        |    FROM documents) t),
-        |mh AS (
-        |  SELECT doc_id, t.j,
-        |    min(((2 * t.j + 1) * shingle + (97 + 31 * t.j)) % 2147483647) AS mh
-        |  FROM sh, generate_series(0, 15) t(j)
-        |  GROUP BY doc_id, t.j),
-        |mbands AS (
-        |  SELECT doc_id, j // 4 AS band,
-        |    string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_sig
-        |  FROM mh GROUP BY doc_id, j // 4),
-        |mcand AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM mbands x JOIN mbands y
-        |    ON x.band = y.band AND x.band_sig = y.band_sig
-        |       AND x.doc_id < y.doc_id),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-        |  FROM mcand c
-        |  JOIN sh a ON a.doc_id = c.doc_a
-        |  JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-        |  GROUP BY c.doc_a, c.doc_b),
-        |tpairs AS (
-        |  SELECT i.doc_a, i.doc_b
-        |  FROM inter i
-        |  JOIN sizes sa ON sa.doc_id = i.doc_a
-        |  JOIN sizes sb ON sb.doc_id = i.doc_b
-        |  WHERE CAST(i.inter AS DOUBLE) / (sa.sz + sb.sz - i.inter) >= 0.55),
-        |g AS (
-        |  SELECT doc_id,
-        |    list_transform(generate_series(1, 72),
-        |      i -> CAST(ascii(substr(text, CAST(i AS INT), 1)) AS BIGINT))
-        |      AS px
-        |  FROM documents WHERE n_chars >= 72),
-        |dbands AS (
-        |  SELECT doc_id, b.b AS band, CAST(
-        |    (SELECT sum(CASE WHEN px[CAST(r*9+c+1 AS BIGINT)]
-        |                        < px[CAST(r*9+c+2 AS BIGINT)]
-        |       THEN CAST(1 AS BIGINT) << CAST((r % 2) * 8 + c AS INT)
-        |       ELSE 0 END)
-        |     FROM (SELECT unnest(generate_series(0, 7)) c) cs,
-        |          (SELECT b.b * 2 AS r UNION ALL SELECT b.b * 2 + 1) rs)
-        |    AS BIGINT) AS v
-        |  FROM g, (SELECT unnest(generate_series(0, 3)) b) b),
-        |dcand AS (
-        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        |  FROM dbands x JOIN dbands y
-        |    ON x.band = y.band AND x.v = y.v AND x.doc_id < y.doc_id),
-        |dpairs AS (
-        |  SELECT c.doc_a, c.doc_b
-        |  FROM dcand c
-        |  JOIN dbands xa ON xa.doc_id = c.doc_a
-        |  JOIN dbands ya ON ya.doc_id = c.doc_b AND ya.band = xa.band
-        |  GROUP BY c.doc_a, c.doc_b
-        |  HAVING sum(bit_count(xor(xa.v, ya.v))) <= 16),
-        |proj AS (
-        |  SELECT e.vec_id, t.j,
-        |    (SELECT sum(CAST(e.embedding[s.i] AS DOUBLE) *
-        |       ((((CAST(t.j AS BIGINT) * 1103515245 + 12345) * s.i)
-        |          + t.j * 2654435761) % 1000003
-        |         / 1000003.0 - 0.5))
-        |     FROM generate_series(1, 64) s(i)) AS pr
-        |  FROM embeddings e, generate_series(0, 7) t(j)),
-        |bkt AS (
-        |  SELECT vec_id,
-        |    CAST(sum(CASE WHEN pr > 0.0 THEN CAST(1 AS BIGINT) << j
-        |             ELSE 0 END) AS BIGINT) AS bucket
-        |  FROM proj GROUP BY vec_id),
-        |qv AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding,
-        |      x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5)
-        |           AS BIGINT)) AS q
-        |  FROM embeddings),
-        |nrm AS (
-        |  SELECT v.vec_id, b.bucket, v.q,
-        |    CAST(list_dot_product(v.q, v.q) AS BIGINT) AS n2
-        |  FROM qv v JOIN bkt b ON b.vec_id = v.vec_id),
-        |epairs AS (
-        |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-        |  FROM nrm a JOIN nrm b ON a.bucket = b.bucket
-        |    AND a.vec_id < b.vec_id AND a.n2 > 0 AND b.n2 > 0
-        |  WHERE CAST(CAST(list_dot_product(a.q, b.q) AS BIGINT) AS DOUBLE)
-        |        / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE)))
-        |        >= 0.15),
+      s"""WITH RECURSIVE ${shinglesSql("sh", 5, "")},
+        |${minhashSql("mh", "sh")},
+        |${bandSigSql("mbands", "mh")},
+        |${bandCandidatesSql("mcand", "mbands", "band_sig")},
+        |${jaccardPairsSql("tpairs", "mcand", 0.55)},
+        |${dhashBandsSql("dbands")},
+        |${bandCandidatesSql("dcand", "dbands", "v")},
+        |${hammingPairsSql("dpairs", "dcand", "dbands")},
+        |$lshBucketsSql,
+        |${lshPairsSql("epairs", "doc")},
         |tagged AS (
         |  SELECT doc_a, doc_b, 1 AS m FROM tpairs
         |  UNION ALL SELECT doc_a, doc_b, 2 FROM dpairs
         |  UNION ALL SELECT doc_a, doc_b, 4 FROM epairs),
-        |edges AS (
-        |  SELECT doc_a AS src, doc_b AS dst FROM tagged
-        |  UNION SELECT doc_b, doc_a FROM tagged),
-        |reach AS (
-        |  SELECT src AS node, src AS comp FROM edges
-        |  UNION
-        |  SELECT e.src AS node, r.comp FROM edges e
-        |  JOIN reach r ON e.dst = r.node),
-        |comp AS (SELECT node, min(comp) AS comp FROM reach GROUP BY node),
+        |${closureSql("tagged", "doc")},
+        |$compSql,
         |modal AS (
         |  SELECT doc_id, CAST(sum(m) AS BIGINT) AS modality_mask FROM (
         |    SELECT DISTINCT doc_id, m FROM (
         |      SELECT doc_a AS doc_id, m FROM tagged
         |      UNION ALL SELECT doc_b AS doc_id, m FROM tagged) u) du
         |  GROUP BY 1),
-        |sel AS (
-        |  SELECT c.node AS doc_id, c.comp, d.n_chars,
-        |    count(*) OVER (PARTITION BY c.comp) AS group_size,
-        |    first_value(c.node) OVER (PARTITION BY c.comp
-        |      ORDER BY d.n_chars DESC, c.node
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |      AS keep_doc
-        |  FROM comp c JOIN documents d ON d.doc_id = c.node)
+        |$keeperSql
         |SELECT s.doc_id, s.comp, s.n_chars, s.group_size, s.keep_doc,
         |  s.doc_id = s.keep_doc AS is_kept, m.modality_mask
         |FROM sel s JOIN modal m ON m.doc_id = s.doc_id""".stripMargin,
@@ -9098,14 +8048,7 @@ object SparkEntry {
     // round 18: per-pair dot = ONE list_dot_product (the q20 rewrite —
     // exact-fold argument there; rows bit-identical at both SFs)
     "q262_cosine_neardup_edges" ->
-      """WITH qv AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |nrm AS (
-        |  SELECT vec_id, q,
-        |    CAST(list_dot_product(q, q) AS BIGINT) AS n2
-        |  FROM qv),
+      s"""WITH $qvNormsSql,
         |grp AS (
         |  SELECT vec_id, q, n2,
         |    min(vec_id) OVER (PARTITION BY CAST(q AS VARCHAR)) AS rep
@@ -9131,40 +8074,12 @@ object SparkEntry {
     // dedup ≡ DISTINCT), verified with exact shingle Jaccard — the
     // minhashNewVsCorpus oracle pattern on a ≥50 / <50 doc split
     "q263_stream_dedup_gate" ->
-      """WITH shn AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 2),
-        |        i -> ascii(substr(text, i, 1)) * 65536
-        |           + ascii(substr(text, i + 1, 1)) * 256
-        |           + ascii(substr(text, i + 2, 1)))) AS s
-        |    FROM documents WHERE doc_id >= 50) t),
-        |shc AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 2),
-        |        i -> ascii(substr(text, i, 1)) * 65536
-        |           + ascii(substr(text, i + 1, 1)) * 256
-        |           + ascii(substr(text, i + 2, 1)))) AS s
-        |    FROM documents WHERE doc_id < 50) t),
-        |mhn AS (
-        |  SELECT doc_id, t.j,
-        |    min(((2 * t.j + 1) * shingle + (97 + 31 * t.j)) % 2147483647) AS mh
-        |  FROM shn, generate_series(0, 15) t(j)
-        |  GROUP BY doc_id, t.j),
-        |mhc AS (
-        |  SELECT doc_id, t.j,
-        |    min(((2 * t.j + 1) * shingle + (97 + 31 * t.j)) % 2147483647) AS mh
-        |  FROM shc, generate_series(0, 15) t(j)
-        |  GROUP BY doc_id, t.j),
-        |bn AS (
-        |  SELECT doc_id, j // 4 AS band,
-        |    string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_sig
-        |  FROM mhn GROUP BY doc_id, j // 4),
-        |bc AS (
-        |  SELECT doc_id, j // 4 AS band,
-        |    string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_sig
-        |  FROM mhc GROUP BY doc_id, j // 4),
+      s"""WITH ${shinglesSql("shn", 3, "WHERE doc_id >= 50")},
+        |${shinglesSql("shc", 3, "WHERE doc_id < 50")},
+        |${minhashSql("mhn", "shn")},
+        |${minhashSql("mhc", "shc")},
+        |${bandSigSql("bn", "mhn")},
+        |${bandSigSql("bc", "mhc")},
         |cands AS (
         |  SELECT DISTINCT n.doc_id AS new_id, c.doc_id AS corpus_id
         |  FROM bn n JOIN bc c
@@ -9227,13 +8142,13 @@ object SparkEntry {
     // verbatim — the index is an evaluation strategy, not a semantics
     // change (Round16/17OpsSpec prove bit-equality through real parquet)
     "q267_band_index_gate" -> bandIndexGateOracle,
-    "q268_ivf_index_probe" -> ivfTopkOracle,
+    "q268_ivf_index_probe" -> ivfTopkOracle(""),
     // round 18 Assets seam: versioned forms share their unversioned
     // twins' oracles verbatim — the digest gate + parquet round-trip must
     // not move a hash
     "q271_band_index_versioned" -> bandIndexGateOracle,
     "q272_split_assets_versioned" -> incrementalSplitOracle,
-    "q273_ivf_index_versioned" -> ivfTopkOracle,
+    "q273_ivf_index_versioned" -> ivfTopkOracle(""),
     "q270_incremental_split_indexed" -> incrementalSplitOracle,
 
     // streaming twin #20 batch replay: one micro-batch carrying every doc
@@ -9267,7 +8182,7 @@ object SparkEntry {
     // geometry.
     "q276_band_index_advance" -> bandIndexGateOracle,
     "q277_cluster_map_advance" -> leakageSafeSplitOracle,
-    "q278_ivf_index_advance" -> ivfAdvanceOracle,
+    "q278_ivf_index_advance" -> ivfTopkOracle("WHERE vec_id % 4 <> 3"),
     "q279_dhash_index_advance" -> dhashGateOracle,
     "q280_ivf_sampled_build" -> ivfSampledOracle,
 
@@ -9358,14 +8273,7 @@ object SparkEntry {
     * oracles.
     */
   private val ivfSampledOracle: String =
-    """WITH qv AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |nrm AS (
-        |  SELECT vec_id, q,
-        |    CAST(list_dot_product(q, q) AS BIGINT) AS n2
-        |  FROM qv),
+    s"""WITH $qvNormsSql,
         |ok AS (SELECT vec_id, q, sqrt(CAST(n2 AS DOUBLE)) AS nv,
         |         row_number() OVER (
         |           ORDER BY ((vec_id + 17) * 2654435761) % 1000003,
@@ -9397,32 +8305,8 @@ object SparkEntry {
         |    CASE WHEN v.mn2 > 0 THEN sqrt(CAST(v.mn2 AS DOUBLE))
         |         ELSE i.cn END AS cn
         |  FROM init i LEFT JOIN mv v USING (centroid_id)),
-        |asg AS (
-        |  SELECT o.vec_id, o.q, o.nv, c.centroid_id,
-        |    CAST(CAST(list_dot_product(o.q, c.cv) AS BIGINT) AS DOUBLE)
-        |      / (o.nv * c.cn) AS ccos
-        |  FROM ok o, cent c),
-        |ranked AS (
-        |  SELECT vec_id, q, nv, centroid_id,
-        |    row_number() OVER (PARTITION BY vec_id
-        |                       ORDER BY ccos DESC, centroid_id) AS crk
-        |  FROM asg),
-        |idx AS (SELECT centroid_id, vec_id AS neighbor_id, q AS nev, nv AS nn
-        |        FROM ranked WHERE crk = 1),
-        |probes AS (SELECT centroid_id, vec_id AS query_id, q AS pqv, nv AS qn
-        |           FROM ranked WHERE crk <= 4 AND vec_id % 10 = 0),
-        |scored AS (
-        |  SELECT p.query_id, ne.neighbor_id,
-        |    CAST(CAST(list_dot_product(p.pqv, ne.nev) AS BIGINT) AS DOUBLE)
-        |      / (p.qn * ne.nn) AS cos
-        |  FROM probes p JOIN idx ne ON ne.centroid_id = p.centroid_id
-        |  WHERE p.query_id <> ne.neighbor_id),
-        |rr AS (
-        |  SELECT query_id, neighbor_id, cos,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rnk
-        |  FROM scored)
-        |SELECT query_id, neighbor_id, rnk, cos FROM rr WHERE rnk <= 5""".stripMargin
+        |${ivfAssignSql("ranked")},
+        |$ivfTopkSql""".stripMargin
 
   /** q264's oracle (5-gram near-dup closure → cluster id = min node →
     * multiplicative split hash), shared verbatim by q277: a cluster map
@@ -9448,137 +8332,30 @@ object SparkEntry {
         |       ELSE 'test' END AS split
         |FROM base""".stripMargin
 
-  /** q278's oracle — [[ivfTopkOracle]] with ONE change: centroids are
-    * sampled from (and sized by) the STANDING corpus (vec_id % 4 ≠ 3),
-    * never the grown one, because advance keeps the standing geometry by
-    * contract; every vector (standing + delta) is then assigned to those
-    * centroids — exactly the advanced index's content — and the probe
-    * replays on top. Assignment of a standing vector to standing
-    * centroids is the same arithmetic the old index stored, so the
-    * union-with-delta and the all-vectors replay agree row for row.
+  /** q31's oracle, shared verbatim by q268/q273 — ivfTopKIndexed probing
+    * a just-built buildIvfIndex IS ivfTopK's one-plan form (the stored
+    * is_centroid set equals the sampled centroid set by construction) —
+    * and, with `standing = "WHERE vec_id % 4 <> 3"`, q278's: centroids
+    * are sampled from (and sized by) the STANDING corpus, never the grown
+    * one, because advance keeps the standing geometry by contract; every
+    * vector (standing + delta) is then assigned to those centroids —
+    * exactly the advanced index's content — and the probe replays on
+    * top. Assignment of a standing vector to standing centroids is the
+    * same arithmetic the old index stored, so the union-with-delta and
+    * the all-vectors replay agree row for row.
     */
-  private val ivfAdvanceOracle: String =
-    """WITH qv AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |nrm AS (
-        |  SELECT vec_id, q,
-        |    CAST(list_dot_product(q, q) AS BIGINT) AS n2
-        |  FROM qv),
-        |ok AS (SELECT vec_id, q, sqrt(CAST(n2 AS DOUBLE)) AS nv
-        |       FROM nrm WHERE n2 > 0),
-        |nc AS (SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) AS k
-        |       FROM embeddings WHERE vec_id % 4 <> 3),
-        |crk0 AS (
-        |  SELECT vec_id AS centroid_id, q AS cv, nv AS cn,
-        |    row_number() OVER (
-        |      ORDER BY ((vec_id + 17) * 2654435761) % 1000003, vec_id) AS cr
-        |  FROM ok WHERE vec_id % 4 <> 3),
-        |cent AS (SELECT centroid_id, cv, cn FROM crk0, nc WHERE cr <= nc.k),
-        |asg AS (
-        |  SELECT o.vec_id, o.q, o.nv, c.centroid_id,
-        |    CAST(CAST(list_dot_product(o.q, c.cv) AS BIGINT) AS DOUBLE)
-        |      / (o.nv * c.cn) AS ccos
-        |  FROM ok o, cent c),
-        |ranked AS (
-        |  SELECT vec_id, q, nv, centroid_id,
-        |    row_number() OVER (PARTITION BY vec_id
-        |                       ORDER BY ccos DESC, centroid_id) AS crk
-        |  FROM asg),
-        |idx AS (SELECT centroid_id, vec_id AS neighbor_id, q AS nev, nv AS nn
-        |        FROM ranked WHERE crk = 1),
-        |probes AS (SELECT centroid_id, vec_id AS query_id, q AS pqv, nv AS qn
-        |           FROM ranked WHERE crk <= 4 AND vec_id % 10 = 0),
-        |scored AS (
-        |  SELECT p.query_id, ne.neighbor_id,
-        |    CAST(CAST(list_dot_product(p.pqv, ne.nev) AS BIGINT) AS DOUBLE)
-        |      / (p.qn * ne.nn) AS cos
-        |  FROM probes p JOIN idx ne ON ne.centroid_id = p.centroid_id
-        |  WHERE p.query_id <> ne.neighbor_id),
-        |rr AS (
-        |  SELECT query_id, neighbor_id, cos,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rnk
-        |  FROM scored)
-        |SELECT query_id, neighbor_id, rnk, cos FROM rr WHERE rnk <= 5""".stripMargin
+  private def ivfTopkOracle(standing: String): String =
+    s"""WITH $qvNormsSql,
+        |${ivfCentroidsSql(standing)},
+        |${ivfAssignSql("ranked")},
+        |$ivfTopkSql""".stripMargin
 
-  /** q31's oracle, shared verbatim by q268 — ivfTopKIndexed probing a
-    * just-built buildIvfIndex IS ivfTopK's one-plan form (the stored
-    * is_centroid set equals the sampled centroid set by construction).
-    */
-  private val ivfTopkOracle: String =
-    """WITH qv AS (
-        |  SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS q
-        |  FROM embeddings),
-        |nrm AS (
-        |  SELECT vec_id, q,
-        |    CAST(list_dot_product(q, q) AS BIGINT) AS n2
-        |  FROM qv),
-        |ok AS (SELECT vec_id, q, sqrt(CAST(n2 AS DOUBLE)) AS nv
-        |       FROM nrm WHERE n2 > 0),
-        |nc AS (SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) AS k
-        |       FROM embeddings),
-        |crk0 AS (
-        |  SELECT vec_id AS centroid_id, q AS cv, nv AS cn,
-        |    row_number() OVER (
-        |      ORDER BY ((vec_id + 17) * 2654435761) % 1000003, vec_id) AS cr
-        |  FROM ok),
-        |cent AS (SELECT centroid_id, cv, cn FROM crk0, nc WHERE cr <= nc.k),
-        |asg AS (
-        |  SELECT o.vec_id, o.q, o.nv, c.centroid_id,
-        |    CAST(CAST(list_dot_product(o.q, c.cv) AS BIGINT) AS DOUBLE)
-        |      / (o.nv * c.cn) AS ccos
-        |  FROM ok o, cent c),
-        |ranked AS (
-        |  SELECT vec_id, q, nv, centroid_id,
-        |    row_number() OVER (PARTITION BY vec_id
-        |                       ORDER BY ccos DESC, centroid_id) AS crk
-        |  FROM asg),
-        |idx AS (SELECT centroid_id, vec_id AS neighbor_id, q AS nev, nv AS nn
-        |        FROM ranked WHERE crk = 1),
-        |probes AS (SELECT centroid_id, vec_id AS query_id, q AS pqv, nv AS qn
-        |           FROM ranked WHERE crk <= 4 AND vec_id % 10 = 0),
-        |scored AS (
-        |  SELECT p.query_id, ne.neighbor_id,
-        |    CAST(CAST(list_dot_product(p.pqv, ne.nev) AS BIGINT) AS DOUBLE)
-        |      / (p.qn * ne.nn) AS cos
-        |  FROM probes p JOIN idx ne ON ne.centroid_id = p.centroid_id
-        |  WHERE p.query_id <> ne.neighbor_id),
-        |rr AS (
-        |  SELECT query_id, neighbor_id, cos,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |      ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rnk
-        |  FROM scored)
-        |SELECT query_id, neighbor_id, rnk, cos FROM rr WHERE rnk <= 5""".stripMargin
-
-  /** q169's oracle, shared verbatim by q267 — minhashNewVsIndex against a
-    * just-built buildBandIndex reproduces minhashNewVsCorpus's output
-    * contract exactly (Round16OpsSpec proves bit-equality through a real
-    * parquet round-trip; the driver row checks the in-plan form).
-    */
   /** q259's oracle, shared verbatim by q275 — the perceptual admission
     * gate fed from the PERSISTED dhash band index must hash-match the
     * full-recompute form.
     */
   private val dhashGateOracle: String =
-    """WITH g AS (
-      |  SELECT doc_id,
-      |    list_transform(generate_series(1, 72),
-      |      i -> CAST(ascii(substr(text, CAST(i AS INT), 1)) AS BIGINT))
-      |      AS px
-      |  FROM documents WHERE n_chars >= 72),
-      |bands AS (
-      |  SELECT doc_id, b.b AS band, CAST(
-      |    (SELECT sum(CASE WHEN px[CAST(r*9+c+1 AS BIGINT)]
-      |                        < px[CAST(r*9+c+2 AS BIGINT)]
-      |       THEN CAST(1 AS BIGINT) << CAST((r % 2) * 8 + c AS INT)
-      |       ELSE 0 END)
-      |     FROM (SELECT unnest(generate_series(0, 7)) c) cs,
-      |          (SELECT b.b * 2 AS r UNION ALL SELECT b.b * 2 + 1) rs)
-      |    AS BIGINT) AS v
-      |  FROM g, (SELECT unnest(generate_series(0, 3)) b) b),
+    s"""WITH ${dhashBandsSql("bands")},
       |cand AS (
       |  SELECT DISTINCT x.doc_id AS new_id, y.doc_id AS corpus_id
       |  FROM bands x JOIN bands y ON x.band = y.band AND x.v = y.v
@@ -9593,24 +8370,15 @@ object SparkEntry {
       |SELECT new_id, corpus_id, hamming FROM ham
       |WHERE hamming <= 16""".stripMargin
 
+  /** q169's oracle, shared verbatim by q267 — minhashNewVsIndex against a
+    * just-built buildBandIndex reproduces minhashNewVsCorpus's output
+    * contract exactly (Round16OpsSpec proves bit-equality through a real
+    * parquet round-trip; the driver row checks the in-plan form).
+    */
   private val bandIndexGateOracle: String =
-    """WITH sh AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 2),
-        |        i -> ascii(substr(text, i, 1)) * 65536
-        |           + ascii(substr(text, i + 1, 1)) * 256
-        |           + ascii(substr(text, i + 2, 1)))) AS s
-        |    FROM documents WHERE doc_id < 50) t),
-        |mh AS (
-        |  SELECT doc_id, t.j,
-        |    min(((2 * t.j + 1) * shingle + (97 + 31 * t.j)) % 2147483647) AS mh
-        |  FROM sh, generate_series(0, 15) t(j)
-        |  GROUP BY doc_id, t.j),
-        |bands AS (
-        |  SELECT doc_id, j // 4 AS band,
-        |    string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_sig
-        |  FROM mh GROUP BY doc_id, j // 4),
+    s"""WITH ${shinglesSql("sh", 3, "WHERE doc_id < 50")},
+        |${minhashSql("mh", "sh")},
+        |${bandSigSql("bands", "mh")},
         |cands AS (
         |  SELECT DISTINCT x.doc_id AS new_id, y.doc_id AS corpus_id
         |  FROM bands x JOIN bands y
@@ -9636,32 +8404,15 @@ object SparkEntry {
     */
   private def incrementalSplitOracle: String =
     (nearDupClosureSql(0.5, "WHERE doc_id % 2 = 0") +
-        """,
+        s""",
           |ccl AS (
           |  SELECT d.doc_id AS corpus_id,
           |    coalesce(c.comp, d.doc_id) AS corpus_cluster
           |  FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
           |  WHERE d.doc_id % 2 = 0),
-          |shx AS (
-          |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-          |    SELECT doc_id,
-          |      unnest(list_transform(generate_series(1, length(text) - 4),
-          |        i -> ascii(substr(text, i, 1)) * 4294967296
-          |           + ascii(substr(text, i + 1, 1)) * 16777216
-          |           + ascii(substr(text, i + 2, 1)) * 65536
-          |           + ascii(substr(text, i + 3, 1)) * 256
-          |           + ascii(substr(text, i + 4, 1)))) AS s
-          |    FROM documents WHERE doc_id % 2 = 1) t),
-          |mhx AS (
-          |  SELECT doc_id, t.j,
-          |    min(((2 * t.j + 1) * shingle + (97 + 31 * t.j)) % 2147483647)
-          |      AS mh
-          |  FROM shx, generate_series(0, 15) t(j)
-          |  GROUP BY doc_id, t.j),
-          |bx AS (
-          |  SELECT doc_id, j // 4 AS band,
-          |    string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_sig
-          |  FROM mhx GROUP BY doc_id, j // 4),
+          |${shinglesSql("shx", 5, "WHERE doc_id % 2 = 1")},
+          |${minhashSql("mhx", "shx")},
+          |${bandSigSql("bx", "mhx")},
           |candx AS (
           |  SELECT DISTINCT x.doc_id AS new_id, y.doc_id AS corpus_id
           |  FROM bx x JOIN mbands y
@@ -9710,54 +8461,563 @@ object SparkEntry {
     */
   private def nearDupClosureSql(minJaccard: Double,
                                 where: String = ""): String =
-    s"""WITH RECURSIVE sh AS (
+    "WITH RECURSIVE " + Seq(
+      shinglesSql("sh", 5, where),
+      minhashSql("mh", "sh"),
+      bandSigSql("mbands", "mh"),
+      bandCandidatesSql("mcand", "mbands", "band_sig"),
+      jaccardPairsSql("pairs", "mcand", minJaccard),
+      closureSql("pairs", "doc"),
+      compSql).mkString(",\n")
+
+  /** q36's chain on the 50-doc slice (3-grams, 16 hashes in 4 bands): CTEs
+    * `sh`, `mh`, `bands`, `cands`, `sizes`, `inter` and `pairs(doc_a,
+    * doc_b)` at `minJaccard` — the uncollapsed replay of
+    * [[graft.ext.Dedup.minhashNearDupEdges]] on `docs50`.
+    */
+  private def docs50PairsSql(minJaccard: Double): String =
+    Seq(
+      shinglesSql("sh", 3, "WHERE doc_id < 50"),
+      minhashSql("mh", "sh"),
+      bandSigSql("bands", "mh"),
+      bandCandidatesSql("cands", "bands", "band_sig"),
+      jaccardPairsSql("pairs", "cands", minJaccard)).mkString(",\n")
+
+  /** q252's dHash chain closed to components (q253/q255): CTEs `g`,
+    * `bands`, `cand`, `pairs` (Hamming ≤ 16), the closure and `comp`.
+    */
+  private def dhashClosureSql: String =
+    "WITH RECURSIVE " + Seq(
+      dhashBandsSql("bands"),
+      bandCandidatesSql("cand", "bands", "v"),
+      hammingPairsSql("pairs", "cand", "bands"),
+      closureSql("pairs", "doc"),
+      compSql).mkString(",\n")
+
+  // ---- oracle kernels: one SQL fragment per engine kernel or shared
+  // fixture. Each returns CTE definitions (no WITH, no trailing comma) or
+  // select-list items. Callers splice them into `stripMargin` literals,
+  // so no fragment line may start with `|` (`||` goes at line ends).
+
+  /** `cte(doc_id, shingle)`: the distinct character `n`-grams of each
+    * `documents` row that `rows` keeps, packed base 256 into one BIGINT —
+    * the replay of [[graft.ext.Dedup.docShingles]].
+    */
+  private def shinglesSql(cte: String, n: Int, rows: String): String = {
+    val packed = (0 until n).map { k =>
+      val c = if (k == 0) "ascii(substr(text, i, 1))"
+        else s"ascii(substr(text, i + $k, 1))"
+      if (k == n - 1) c else s"$c * ${1L << (8 * (n - 1 - k))}"
+    }.mkString("\n           + ")
+    s"""$cte AS (
        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
        |    SELECT doc_id,
-       |      unnest(list_transform(generate_series(1, length(text) - 4),
-       |        i -> ascii(substr(text, i, 1)) * 4294967296
-       |           + ascii(substr(text, i + 1, 1)) * 16777216
-       |           + ascii(substr(text, i + 2, 1)) * 65536
-       |           + ascii(substr(text, i + 3, 1)) * 256
-       |           + ascii(substr(text, i + 4, 1)))) AS s
-       |    FROM documents $where) t),
-       |mh AS (
+       |      unnest(list_transform(generate_series(1, length(text) - ${n - 1}),
+       |        i -> $packed)) AS s
+       |    FROM documents $rows) t)""".stripMargin
+  }
+
+  /** `cte(doc_id, j, mh)`: 16 MinHash values of each shingle set in `sh`,
+    * h_j(x) = ((2j + 1)·x + 97 + 31j) mod (2³¹ − 1) — the replay of
+    * [[graft.ext.Dedup.minhashSignatures]].
+    */
+  private def minhashSql(cte: String, sh: String): String =
+    s"""$cte AS (
        |  SELECT doc_id, t.j,
        |    min(((2 * t.j + 1) * shingle + (97 + 31 * t.j)) % 2147483647) AS mh
-       |  FROM sh, generate_series(0, 15) t(j)
-       |  GROUP BY doc_id, t.j),
-       |mbands AS (
+       |  FROM $sh, generate_series(0, 15) t(j)
+       |  GROUP BY doc_id, t.j)""".stripMargin
+
+  /** `cte(doc_id, band, band_sig)`: `mh`'s signature cut into 4 bands of
+    * 4 rows, each band one string key.
+    */
+  private def bandSigSql(cte: String, mh: String): String =
+    s"""$cte AS (
        |  SELECT doc_id, j // 4 AS band,
        |    string_agg(CAST(mh AS VARCHAR), '_' ORDER BY j) AS band_sig
-       |  FROM mh GROUP BY doc_id, j // 4),
-       |mcand AS (
+       |  FROM $mh GROUP BY doc_id, j // 4)""".stripMargin
+
+  /** `cte(doc_a, doc_b)`: each pair doc_a < doc_b that agrees on at least
+    * one band of `bands`, whose band key column is `sig` (MinHash
+    * `band_sig`, dHash `v`) — the replay of a [[graft.ext.Dedup.bandPairs]]
+    * self-join.
+    */
+  private def bandCandidatesSql(cte: String, bands: String,
+                                sig: String): String =
+    s"""$cte AS (
        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-       |  FROM mbands x JOIN mbands y
-       |    ON x.band = y.band AND x.band_sig = y.band_sig
-       |       AND x.doc_id < y.doc_id),
-       |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+       |  FROM $bands x JOIN $bands y
+       |    ON x.band = y.band AND x.$sig = y.$sig AND x.doc_id < y.doc_id)"""
+      .stripMargin
+
+  /** `sizes(doc_id, sz)`, the shingle-set sizes of `sh`, and
+    * `inter(doc_a, doc_b, inter)`, each `cands` pair's exact intersection.
+    */
+  private def jaccardOverlapSql(cands: String): String =
+    s"""sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
        |inter AS (
        |  SELECT c.doc_a, c.doc_b, count(*) AS inter
-       |  FROM mcand c
+       |  FROM $cands c
        |  JOIN sh a ON a.doc_id = c.doc_a
        |  JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-       |  GROUP BY c.doc_a, c.doc_b),
-       |pairs AS (
-       |  SELECT i.doc_a, i.doc_b
-       |  FROM inter i
-       |  JOIN sizes sa ON sa.doc_id = i.doc_a
-       |  JOIN sizes sb ON sb.doc_id = i.doc_b
-       |  WHERE CAST(i.inter AS DOUBLE) / (sa.sz + sb.sz - i.inter)
-       |    >= $minJaccard),
-       |edges AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION SELECT doc_b, doc_a FROM pairs),
+       |  GROUP BY c.doc_a, c.doc_b)""".stripMargin
+
+  /** The exact-Jaccard verify: [[jaccardOverlapSql]], then `cte(doc_a,
+    * doc_b)`, the `cands` pairs whose shingle Jaccard reaches `minJaccard`.
+    */
+  private def jaccardPairsSql(cte: String, cands: String,
+                              minJaccard: Double): String =
+    jaccardOverlapSql(cands) +
+      s""",
+         |$cte AS (
+         |  SELECT i.doc_a, i.doc_b
+         |  FROM inter i
+         |  JOIN sizes sa ON sa.doc_id = i.doc_a
+         |  JOIN sizes sb ON sb.doc_id = i.doc_b
+         |  WHERE CAST(i.inter AS DOUBLE) / (sa.sz + sb.sz - i.inter)
+         |    >= $minJaccard)""".stripMargin
+
+  /** `edges(src, dst)`, the `pairs` (`<id>_a`, `<id>_b`) both ways, and
+    * `reach(node, comp)`, the recursive min-label closure over them:
+    * min(comp) per node is [[graft.ext.Components]]' fixpoint. Needs
+    * `WITH RECURSIVE`.
+    */
+  private def closureSql(pairs: String, id: String): String =
+    s"""edges AS (
+       |  SELECT ${id}_a AS src, ${id}_b AS dst FROM $pairs
+       |  UNION SELECT ${id}_b, ${id}_a FROM $pairs),
        |reach AS (
        |  SELECT src AS node, src AS comp FROM edges
        |  UNION
        |  SELECT e.src AS node, r.comp FROM edges e
-       |  JOIN reach r ON e.dst = r.node),
-       |comp AS (SELECT node, min(comp) AS comp FROM reach GROUP BY node)"""
+       |  JOIN reach r ON e.dst = r.node)""".stripMargin
+
+  /** `comp(node, comp)`: each node's component id off [[closureSql]]. */
+  private def compSql: String =
+    "comp AS (SELECT node, min(comp) AS comp FROM reach GROUP BY node)"
+
+  /** `g(doc_id, px)`, the first 72 code points of each document of ≥ 72
+    * chars as a 9×8 luma raster, and `cte(doc_id, band, v)`: its dHash
+    * (bit (r, c) = px(r, c) < px(r, c + 1)) cut into four 16-bit bands —
+    * the text-raster twin of the engine's dHash bands.
+    */
+  private def dhashBandsSql(cte: String): String =
+    s"""g AS (
+       |  SELECT doc_id,
+       |    list_transform(generate_series(1, 72),
+       |      i -> CAST(ascii(substr(text, CAST(i AS INT), 1)) AS BIGINT))
+       |      AS px
+       |  FROM documents WHERE n_chars >= 72),
+       |$cte AS (
+       |  SELECT doc_id, b.b AS band, CAST(
+       |    (SELECT sum(CASE WHEN px[CAST(r*9+c+1 AS BIGINT)]
+       |                        < px[CAST(r*9+c+2 AS BIGINT)]
+       |       THEN CAST(1 AS BIGINT) << CAST((r % 2) * 8 + c AS INT)
+       |       ELSE 0 END)
+       |     FROM (SELECT unnest(generate_series(0, 7)) c) cs,
+       |          (SELECT b.b * 2 AS r UNION ALL SELECT b.b * 2 + 1) rs)
+       |    AS BIGINT) AS v
+       |  FROM g, (SELECT unnest(generate_series(0, 3)) b) b)""".stripMargin
+
+  /** `cte(doc_a, doc_b)`: the `cands` pairs whose full 64-bit dHashes in
+    * `bands` lie within Hamming distance 16.
+    */
+  private def hammingPairsSql(cte: String, cands: String,
+                              bands: String): String =
+    s"""$cte AS (
+       |  SELECT c.doc_a, c.doc_b
+       |  FROM $cands c
+       |  JOIN $bands xa ON xa.doc_id = c.doc_a
+       |  JOIN $bands ya ON ya.doc_id = c.doc_b AND ya.band = xa.band
+       |  GROUP BY c.doc_a, c.doc_b
+       |  HAVING sum(bit_count(xor(xa.v, ya.v))) <= 16)""".stripMargin
+
+  /** `qv(vec_id, q)`: each embedding in 1e-6 fixed point — the replay of
+    * Similarity's quantized-vector prelude.
+    */
+  private def qvSql: String =
+    """qv AS (
+      |  SELECT vec_id,
+      |    list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS q
+      |  FROM embeddings)""".stripMargin
+
+  /** [[qvSql]] plus `nrm(vec_id, q, n2)`, each vector's exact squared
+    * norm.
+    */
+  private def qvNormsSql: String =
+    qvSql + """,
+      |nrm AS (
+      |  SELECT vec_id, q,
+      |    CAST(list_dot_product(q, q) AS BIGINT) AS n2
+      |  FROM qv)""".stripMargin
+
+  /** IVF centroids over `nrm`: `ok(vec_id, q, nv)`, the non-zero vectors
+    * with their L2 norm; `nc(k)` = ⌈√N⌉; and `cent(centroid_id, cv, cn)`,
+    * the k vectors of lowest knuth hash — N and the sample both over the
+    * `embeddings` rows `standing` keeps.
+    */
+  private def ivfCentroidsSql(standing: String): String =
+    s"""ok AS (SELECT vec_id, q, sqrt(CAST(n2 AS DOUBLE)) AS nv
+       |       FROM nrm WHERE n2 > 0),
+       |nc AS (SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) AS k
+       |       FROM embeddings $standing),
+       |crk0 AS (
+       |  SELECT vec_id AS centroid_id, q AS cv, nv AS cn,
+       |    row_number() OVER (
+       |      ORDER BY ((vec_id + 17) * 2654435761) % 1000003, vec_id) AS cr
+       |  FROM ok $standing),
+       |cent AS (SELECT centroid_id, cv, cn FROM crk0, nc WHERE cr <= nc.k)"""
       .stripMargin
+
+  /** IVF assignment of every `ok` vector to the `cent` cells: `asg`, then
+    * `ranked(vec_id, q, nv, centroid_id, crk)` by cosine, `idx` (each
+    * vector in its nearest cell) and `probes` (every 10th vector's 4
+    * nearest cells).
+    */
+  private def ivfAssignSql(ranked: String): String =
+    s"""asg AS (
+       |  SELECT o.vec_id, o.q, o.nv, c.centroid_id,
+       |    CAST(CAST(list_dot_product(o.q, c.cv) AS BIGINT) AS DOUBLE)
+       |      / (o.nv * c.cn) AS ccos
+       |  FROM ok o, cent c),
+       |$ranked AS (
+       |  SELECT vec_id, q, nv, centroid_id,
+       |    row_number() OVER (PARTITION BY vec_id
+       |                       ORDER BY ccos DESC, centroid_id) AS crk
+       |  FROM asg),
+       |idx AS (SELECT centroid_id, vec_id AS neighbor_id, q AS nev, nv AS nn
+       |        FROM $ranked WHERE crk = 1),
+       |probes AS (SELECT centroid_id, vec_id AS query_id, q AS pqv, nv AS qn
+       |           FROM $ranked WHERE crk <= 4 AND vec_id % 10 = 0)"""
+      .stripMargin
+
+  /** The IVF probe readout: each probe's top 5 cell members by cosine. */
+  private def ivfTopkSql: String =
+    """scored AS (
+      |  SELECT p.query_id, ne.neighbor_id,
+      |    CAST(CAST(list_dot_product(p.pqv, ne.nev) AS BIGINT) AS DOUBLE)
+      |      / (p.qn * ne.nn) AS cos
+      |  FROM probes p JOIN idx ne ON ne.centroid_id = p.centroid_id
+      |  WHERE p.query_id <> ne.neighbor_id),
+      |rr AS (
+      |  SELECT query_id, neighbor_id, cos,
+      |    CAST(row_number() OVER (PARTITION BY query_id
+      |      ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rnk
+      |  FROM scored)
+      |SELECT query_id, neighbor_id, rnk, cos FROM rr WHERE rnk <= 5""".stripMargin
+
+  /** `proj`, `bkt(vec_id, bucket)` — 8 random-hyperplane sign bits per
+    * embedding — then [[qvSql]] and `nrm(vec_id, bucket, q, n2)`: the
+    * replay of [[graft.ext.Similarity.lshNearPairs]]' bucketing.
+    */
+  private def lshBucketsSql: String =
+    s"""proj AS (
+       |  SELECT e.vec_id, t.j,
+       |    (SELECT sum(CAST(e.embedding[s.i] AS DOUBLE) *
+       |       ((((CAST(t.j AS BIGINT) * 1103515245 + 12345) * s.i)
+       |          + t.j * 2654435761) % 1000003
+       |         / 1000003.0 - 0.5))
+       |     FROM generate_series(1, 64) s(i)) AS pr
+       |  FROM embeddings e, generate_series(0, 7) t(j)),
+       |bkt AS (
+       |  SELECT vec_id,
+       |    CAST(sum(CASE WHEN pr > 0.0 THEN CAST(1 AS BIGINT) << j ELSE 0 END)
+       |         AS BIGINT) AS bucket
+       |  FROM proj GROUP BY vec_id),
+       |$qvSql,
+       |nrm AS (
+       |  SELECT v.vec_id, b.bucket, v.q,
+       |    CAST(list_dot_product(v.q, v.q) AS BIGINT) AS n2
+       |  FROM qv v JOIN bkt b ON b.vec_id = v.vec_id)""".stripMargin
+
+  /** `cte(<id>_a, <id>_b)`: the same-bucket pairs of [[lshBucketsSql]]
+    * with cosine ≥ 0.15.
+    */
+  private def lshPairsSql(cte: String, id: String): String =
+    s"""$cte AS (
+       |  SELECT a.vec_id AS ${id}_a, b.vec_id AS ${id}_b
+       |  FROM nrm a JOIN nrm b ON a.bucket = b.bucket
+       |    AND a.vec_id < b.vec_id AND a.n2 > 0 AND b.n2 > 0
+       |  WHERE CAST(CAST(list_dot_product(a.q, b.q) AS BIGINT) AS DOUBLE)
+       |        / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE)))
+       |        >= 0.15)""".stripMargin
+
+  /** q104's sparse retrieval core: `base(doc_id, t)`, the df-capped
+    * (≤ 79% of docs) inverted index `postings`, 5-token prefix queries
+    * of every 97th doc, and `ov(query_id, doc_id, overlap)` — the replay
+    * of [[graft.ext.Retrieval]]'s inverted-index probe.
+    */
+  private def retrievalOverlapSql: String =
+    """base AS (
+      |  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS t
+      |  FROM documents WHERE length(trim(text)) > 0),
+      |dtok AS (SELECT doc_id, unnest(list_distinct(t)) AS term FROM base),
+      |dlen AS (SELECT doc_id,
+      |           CAST(len(list_distinct(t)) AS BIGINT) AS d_len
+      |         FROM base),
+      |nn AS (SELECT count(*) AS n FROM base),
+      |dfq AS (SELECT term, count(*) AS df FROM dtok GROUP BY 1),
+      |postings AS (
+      |  SELECT d.term, d.doc_id FROM dtok d JOIN dfq f USING (term), nn
+      |  WHERE f.df * 100 <= 79 * nn.n),
+      |queries AS (
+      |  SELECT doc_id AS query_id, list_distinct(t[1:5]) AS qt
+      |  FROM base WHERE doc_id % 97 = 3 AND doc_id < 2037),
+      |qtok AS (SELECT query_id, unnest(qt) AS term FROM queries),
+      |qlen AS (SELECT query_id, CAST(len(qt) AS BIGINT) AS q_len
+      |         FROM queries),
+      |ov AS (
+      |  SELECT q.query_id, p.doc_id, count(*) AS overlap
+      |  FROM qtok q JOIN postings p USING (term)
+      |  WHERE p.doc_id <> q.query_id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** [[retrievalOverlapSql]] plus `scored`, each candidate's token
+    * Jaccard with its query.
+    */
+  private def retrievalScoredSql: String =
+    retrievalOverlapSql + """,
+      |scored AS (
+      |  SELECT o.query_id, o.doc_id, o.overlap, ql.q_len, dl.d_len,
+      |    CAST(o.overlap AS DOUBLE)
+      |      / CAST(ql.q_len + dl.d_len - o.overlap AS DOUBLE) AS score
+      |  FROM ov o JOIN qlen ql USING (query_id)
+      |  JOIN dlen dl USING (doc_id))""".stripMargin
+
+  /** The synthetic supplier graph: `nn(n)`, `e0(src, dst)` — three
+    * out-edges per supplier — and `sym(src, dst)`, its distinct
+    * undirected edges without self-loops.
+    */
+  private def supplierGraphSql: String =
+    """nn AS (SELECT max(s_suppkey) AS n FROM supplier),
+      |e0 AS (
+      |  SELECT s_suppkey AS src, s_suppkey % n + 1 AS dst
+      |  FROM supplier, nn
+      |  UNION ALL
+      |  SELECT s_suppkey, (s_suppkey + 1) % n + 1 FROM supplier, nn
+      |  UNION ALL
+      |  SELECT s_suppkey, (s_suppkey * 7 + 1) % n + 1 FROM supplier, nn),
+      |sym AS (
+      |  SELECT DISTINCT src, dst FROM (
+      |    SELECT src, dst FROM e0 WHERE src <> dst
+      |    UNION ALL
+      |    SELECT dst, src FROM e0 WHERE src <> dst) u)""".stripMargin
+
+  /** √-temperature quotas over `counts(source, n_docs)`: weights
+    * ⌊√n·1e6 + 0.5⌋, a budget of `num`/`den` × the corpus, and the
+    * integer largest-remainder split ending at `quota(source, n_docs,
+    * quota)` — the replay of Curation's temperature quotas.
+    */
+  private def quotaSql(counts: String, num: Int, den: Int): String =
+    s"""w AS (SELECT source, n_docs,
+       |    CAST(floor(sqrt(CAST(n_docs AS DOUBLE)) * 1e6 + 0.5) AS BIGINT)
+       |      AS w FROM $counts),
+       |q AS (SELECT source, n_docs, w,
+       |    sum(w) OVER () AS wsum,
+       |    (sum(n_docs) OVER () * $num) // $den AS budget FROM w),
+       |l AS (SELECT *, (w * budget) // wsum AS base,
+       |    (w * budget) % wsum AS remainder FROM q),
+       |r AS (SELECT *, budget - sum(base) OVER () AS leftover,
+       |    row_number() OVER (ORDER BY remainder DESC, source) AS rk
+       |  FROM l),
+       |quota AS (SELECT source, n_docs,
+       |    base + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS quota
+       |  FROM r)""".stripMargin
+
+  /** q174/q196's `u(doc_id, url)`: the oracle twin of `syntheticUrl`. */
+  private def urlShapesSql: String =
+    """u AS (SELECT doc_id,
+      |  CASE doc_id % 7
+      |    WHEN 0 THEN 'https://WWW.Site' || CAST(doc_id % 5 AS VARCHAR) ||
+      |      '.COM/path/page'
+      |    WHEN 1 THEN 'http://site' || CAST(doc_id % 5 AS VARCHAR) ||
+      |      '.com:80/a/b'
+      |    WHEN 2 THEN 'https://site' || CAST(doc_id % 5 AS VARCHAR) ||
+      |      '.com:443/x?utm_source=feed&id=' || CAST(doc_id AS VARCHAR)
+      |    WHEN 3 THEN 'http://blog.site' || CAST(doc_id % 5 AS VARCHAR) ||
+      |      '.org/post?id=' || CAST(doc_id AS VARCHAR) ||
+      |      '&utm_campaign=x&ref=y'
+      |    WHEN 4 THEN 'https://cdn.site' || CAST(doc_id % 5 AS VARCHAR) ||
+      |      '.net/img/large.png#sec' || CAST(doc_id AS VARCHAR)
+      |    WHEN 5 THEN 'http://site' || CAST(doc_id % 5 AS VARCHAR) ||
+      |      '.com/search?utm_source=a&utm_medium=b'
+      |    ELSE 'https://site' || CAST(doc_id % 5 AS VARCHAR) ||
+      |      '.com/clean/' || CAST(doc_id AS VARCHAR)
+      |  END AS url FROM documents)""".stripMargin
+
+  /** q205/q213's `aug(<cols>, text)`, the oracle twin of
+    * `entityAugmented`, and `m(doc_id, email)`, every email mention in
+    * it.
+    */
+  private def entityMentionsSql(cols: String): String =
+    s"""aug AS (SELECT $cols, text || ' contact person' ||
+       |      CAST(doc_id % 40 AS VARCHAR) || '@example' ||
+       |      CAST(doc_id % 40 % 7 AS VARCHAR) || '.com' ||
+       |      CASE WHEN doc_id % 3 = 0 THEN ' cc person' ||
+       |           CAST(doc_id % 40 AS VARCHAR) || '@example' ||
+       |           CAST(doc_id % 40 % 7 AS VARCHAR) || '.com'
+       |         ELSE '' END ||
+       |      CASE WHEN doc_id % 5 = 0 THEN ' also person' ||
+       |           CAST((doc_id * 3 + 1) % 40 AS VARCHAR) || '@example' ||
+       |           CAST((doc_id * 3 + 1) % 40 % 7 AS VARCHAR) || '.com'
+       |         ELSE '' END AS text
+       |  FROM documents),
+       |m AS (SELECT doc_id, unnest(regexp_extract_all(text,
+       |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}')) AS email
+       |  FROM aug)""".stripMargin
+
+  /** The stopword language-ID scores `score_en` … `score_zh` (select
+    * list items over `text`) — the replay of [[graft.ext.TextStats.langId]].
+    */
+  private def langScoresSql: String =
+    """CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+      |      t -> t IN ('the','and','of','is','with'))) AS BIGINT) AS score_en,
+      |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+      |      t -> t IN ('el','la','de','que','los'))) AS BIGINT) AS score_es,
+      |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+      |      t -> t IN ('der','die','und','das','ist'))) AS BIGINT) AS score_de,
+      |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+      |      t -> t IN ('le','la','et','les','des'))) AS BIGINT) AS score_fr,
+      |    CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
+      |      t -> t IN ('shi','bu','wo','de','ni'))) AS BIGINT) AS score_zh"""
+      .stripMargin
+
+  /** `pred_lang`: the argmax of [[langScoresSql]], 'unknown' when no
+    * stopword hits.
+    */
+  private def langPredSql: String =
+    """CASE
+      |    WHEN score_en > 0 AND score_en >= score_es AND score_en >= score_de
+      |         AND score_en >= score_fr AND score_en >= score_zh THEN 'en'
+      |    WHEN score_es > 0 AND score_es >= score_en AND score_es >= score_de
+      |         AND score_es >= score_fr AND score_es >= score_zh THEN 'es'
+      |    WHEN score_de > 0 AND score_de >= score_en AND score_de >= score_es
+      |         AND score_de >= score_fr AND score_de >= score_zh THEN 'de'
+      |    WHEN score_fr > 0 AND score_fr >= score_en AND score_fr >= score_es
+      |         AND score_fr >= score_de AND score_fr >= score_zh THEN 'fr'
+      |    WHEN score_zh > 0 AND score_zh >= score_en AND score_zh >= score_es
+      |         AND score_zh >= score_de AND score_zh >= score_fr THEN 'zh'
+      |    ELSE 'unknown' END AS pred_lang""".stripMargin
+
+  /** The synthetic page boxes off `part` (`b`), clipped to the 1024×512
+    * page (`c1`, `c2(page, line_no, class_id, cx, cy, cw, ch)`) — the
+    * replay of SyntheticBoxes over the geometry clip.
+    */
+  private def clippedBoxesSql: String =
+    """b AS (
+      |  SELECT p_partkey // 25 AS page,
+      |    p_partkey % 25 AS line_no,
+      |    CAST(p_partkey % 6 AS INTEGER) AS class_id,
+      |    CAST(p_partkey * 37 % 960 AS DOUBLE) AS x,
+      |    CAST(p_partkey * 59 % 480 AS DOUBLE) AS y,
+      |    CAST(64 + p_partkey * 13 % 128 AS DOUBLE) AS w,
+      |    CAST(48 + p_partkey * 17 % 96 AS DOUBLE) AS h
+      |  FROM part),
+      |c1 AS (
+      |  SELECT page, line_no, class_id,
+      |    greatest(0.0, least(x, 1024.0)) AS cx,
+      |    greatest(0.0, least(y, 512.0)) AS cy, w, h
+      |  FROM b),
+      |c2 AS (
+      |  SELECT page, line_no, class_id, cx, cy,
+      |    greatest(0.0, least(w, 1024.0 - cx)) AS cw,
+      |    greatest(0.0, least(h, 512.0 - cy)) AS ch
+      |  FROM c1)""".stripMargin
+
+  /** The synthetic ground-truth (`g`) and jittered prediction (`p`)
+    * boxes off `part`, and `cand(page, class_id, pred_line, gt_line,
+    * inter, area_p, area_g)`: every same-page same-class pair's
+    * intersection and areas.
+    */
+  private def boxPairsSql: String =
+    """g AS (
+      |  SELECT p_partkey // 25 AS page,
+      |    p_partkey % 25 AS gt_line,
+      |    CAST(p_partkey % 6 AS INTEGER) AS class_id,
+      |    CAST(p_partkey * 37 % 960 AS DOUBLE) AS gx,
+      |    CAST(p_partkey * 59 % 480 AS DOUBLE) AS gy,
+      |    CAST(64 + p_partkey * 13 % 128 AS DOUBLE) AS gw,
+      |    CAST(48 + p_partkey * 17 % 96 AS DOUBLE) AS gh
+      |  FROM part),
+      |p AS (
+      |  SELECT p_partkey // 25 AS page,
+      |    p_partkey % 25 AS pred_line,
+      |    CAST(p_partkey % 6 AS INTEGER) AS class_id,
+      |    CAST(p_partkey * 37 % 960 AS DOUBLE) + CAST(p_partkey % 7 AS DOUBLE) - 3.0 AS px,
+      |    CAST(p_partkey * 59 % 480 AS DOUBLE) + CAST(p_partkey % 11 AS DOUBLE) - 5.0 AS py,
+      |    CAST(64 + p_partkey * 13 % 128 AS DOUBLE) + CAST(p_partkey % 5 AS DOUBLE) - 2.0 AS pw,
+      |    CAST(48 + p_partkey * 17 % 96 AS DOUBLE) + CAST(p_partkey % 9 AS DOUBLE) - 4.0 AS ph
+      |  FROM part),
+      |cand AS (
+      |  SELECT p.page, p.class_id, p.pred_line, g.gt_line,
+      |    greatest(0.0, least(px + pw, gx + gw) - greatest(px, gx))
+      |      * greatest(0.0, least(py + ph, gy + gh) - greatest(py, gy)) AS inter,
+      |    greatest(0.0, pw) * greatest(0.0, ph) AS area_p,
+      |    greatest(0.0, gw) * greatest(0.0, gh) AS area_g
+      |  FROM p JOIN g ON p.page = g.page AND p.class_id = g.class_id)""".stripMargin
+
+  /** `cte(user_id, event_id, ts_us<cols>)`: the events at µs precision,
+    * plus the caller's `cols`.
+    */
+  private def eventsUsSql(cte: String, cols: String): String =
+    s"$cte AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us$cols FROM events)"
+
+  /** q11's sessionization (30-minute gap): `e`, `flagged` and
+    * `numbered(user_id, ts_us, session_id)`.
+    */
+  private def sessionsSql: String =
+    eventsUsSql("e", "") + """,
+      |flagged AS (
+      |  SELECT user_id, event_id, ts_us,
+      |    CASE WHEN lag(ts_us) OVER w IS NULL
+      |              OR ts_us - lag(ts_us) OVER w > 1800000000
+      |         THEN 1 ELSE 0 END AS new_session
+      |  FROM e
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
+      |numbered AS (
+      |  SELECT user_id, ts_us,
+      |    CAST(sum(new_session) OVER (PARTITION BY user_id
+      |      ORDER BY ts_us, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT)
+      |      AS session_id
+      |  FROM flagged)""".stripMargin
+
+  /** The dialogue family's message stream `m(user_id, event_id, ts_us,
+    * role, toks)`: click/purchase/signup are user turns, the token proxy
+    * is props.k + 1.
+    */
+  private def turnsSql: String =
+    eventsUsSql("m", """,
+      |    CASE WHEN event_type IN ('click', 'purchase', 'signup')
+      |      THEN 'user' ELSE 'assistant' END AS role,
+      |    CAST(json_extract_string(props, '$.k') AS BIGINT) + 1 AS toks"""
+      .stripMargin)
+
+  /** q78's keeper choice per component: `sel(doc_id, comp, n_chars,
+    * group_size, keep_doc)`, longest text first, doc_id ties.
+    */
+  private def keeperSql: String =
+    """sel AS (
+      |  SELECT c.node AS doc_id, c.comp, d.n_chars,
+      |    count(*) OVER (PARTITION BY c.comp) AS group_size,
+      |    first_value(c.node) OVER (PARTITION BY c.comp
+      |      ORDER BY d.n_chars DESC, c.node
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+      |      AS keep_doc
+      |  FROM comp c JOIN documents d ON d.doc_id = c.node)""".stripMargin
+
+  /** q245's cluster-size histogram over the `documents` rows `rows`
+    * keeps: a doc outside every pair is a singleton cluster.
+    */
+  private def clusterSizesSql(rows: String): String =
+    s"""assign AS (SELECT d.doc_id, coalesce(c.comp, d.doc_id) AS comp
+       |  FROM (SELECT doc_id FROM documents $rows) d
+       |  LEFT JOIN comp c ON c.node = d.doc_id),
+       |cs AS (SELECT comp, CAST(count(*) AS BIGINT) AS cluster_size
+       |  FROM assign GROUP BY 1)
+       |SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters,
+       |  CAST(cluster_size * count(*) AS BIGINT) AS n_docs,
+       |  CAST((cluster_size - 1) * count(*) AS BIGINT) AS docs_removed
+       |FROM cs GROUP BY 1""".stripMargin
 
   /** The q257 oracle: greedy max-coverage replayed as k UNROLLED rounds
     * of chained CTEs (the q231 fixed-iteration discipline — recursive
@@ -9769,15 +9029,8 @@ object SparkEntry {
     */
   private def greedyCoverageOracle(k: Int): String = {
     val sh =
-      """WITH sh AS (
-        |  SELECT DISTINCT doc_id, CAST(s AS BIGINT) AS shingle FROM (
-        |    SELECT doc_id,
-        |      unnest(list_transform(generate_series(1, length(text) - 2),
-        |        i -> ascii(substr(text, i, 1)) * 65536
-        |           + ascii(substr(text, i + 1, 1)) * 256
-        |           + ascii(substr(text, i + 2, 1)))) AS s
-        |    FROM documents WHERE doc_id < 50) t),
-        |c0 AS (SELECT CAST(NULL AS BIGINT) AS shingle WHERE 1 = 0)""".stripMargin
+      s"""WITH ${shinglesSql("sh", 3, "WHERE doc_id < 50")},
+         |c0 AS (SELECT CAST(NULL AS BIGINT) AS shingle WHERE 1 = 0)""".stripMargin
     val rounds = (1 to k).map { i =>
       val notSel =
         if (i == 1) ""
