@@ -2,6 +2,7 @@ package graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
@@ -67,10 +68,14 @@ object Tables {
                            (f: (Path, ParquetFileReader) => A): Seq[A] =
     parquetFiles(root, conf).map(footer(_, conf)(f))
 
+  /** Reads with the caller's Hadoop conf: `ParquetFileReader.open(in)`
+    * alone builds its read options on a fresh Hadoop `Configuration`,
+    * which re-parses the `core-*.xml` resources on every call.
+    */
   private def footer[A](p: Path, conf: Configuration)
                        (f: (Path, ParquetFileReader) => A): A = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
-    val r = ParquetFileReader.open(in)
+    val r = ParquetFileReader.open(in, HadoopReadOptions.builder(conf, p).build())
     try f(p, r) finally r.close()
   }
 

@@ -398,8 +398,7 @@ object Components {
     * rather than max degree; the join shape below is unchanged by it.
     */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val sym = pinnedSym(edges)
-    val canon = sym.filter(col("src") < col("dst")).transform(graft.Pin.apply)
+    val canon = pinnedSym(edges).filter(col("src") < col("dst"))
     val tri = canon.select(col("src").as("a"), col("dst").as("b"))
       .join(canon.select(col("src").as("b"), col("dst").as("c")), "b")
       .join(canon.select(col("src").as("a"), col("dst").as("c")),

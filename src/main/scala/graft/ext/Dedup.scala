@@ -748,9 +748,9 @@ object Dedup {
     * 64-bit scalar would put bit 63 in the sign and make div/mod banding
     * engine-dependent.
     */
-  private val DhashW = 9
-  private val DhashH = 8
-  val DhashBands = 4
+  private val DhashW = graft.functions.DhashBand.Width
+  private val DhashH = graft.functions.DhashBand.Height
+  val DhashBands: Int = graft.functions.DhashBand.Bands
 
   /** Per-document dHash bands over the DETERMINISTIC text raster: the
     * first 72 chars of `text` read as a 9×8 luma grid (row-major, one
@@ -759,9 +759,13 @@ object Dedup {
     * than one full raster are excluded (a real image always has a full
     * raster; a short doc's zero-padded tail rows would all collide on
     * band value 0 and quadratically flood the band join with junk
-    * candidates). ASCII envelope as q27: `ascii` reads codepoints, the
-    * engine-side bytes are UTF-8 — identical only for ASCII text, which
-    * the fixture is.
+    * candidates). ASCII envelope as q27: a cell's luma is its code point
+    * (the oracle's `ascii`), the engine-side bytes are UTF-8 — identical
+    * only for ASCII text, which the fixture is.
+    *
+    * Each band is one [[graft.functions.DhashBand]] kernel, a single walk
+    * over the band's 18 code points (its scaladoc says why it is not a
+    * column expression; DhashKernelSpec holds the parity).
     *
     * The REAL-image sibling is [[Multimodal.imageDHash]] (ImageIO decode,
     * area-averaged grid — not oracle-expressible, spec-covered); this
@@ -770,17 +774,10 @@ object Dedup {
     *
     * @return doc_id, b0..b3 (each a 16-bit value in a BIGINT)
     */
-  def dhashTextBands(docs: DataFrame): DataFrame = {
-    def px(i: Int): Column = ascii(substring(col("text"), i, 1)).cast("long")
-    val bandCols = (0 until DhashBands).map { b =>
-      (for (r <- Seq(2 * b, 2 * b + 1); c <- 0 until DhashW - 1) yield
-        when(px(r * DhashW + c + 1) < px(r * DhashW + c + 2),
-          lit(1L << ((r % 2) * (DhashW - 1) + c))).otherwise(lit(0L))
-      ).reduce(_ + _).as(s"b$b")
-    }
+  def dhashTextBands(docs: DataFrame): DataFrame =
     docs.filter(col("n_chars") >= DhashW * DhashH)
-      .select(col("doc_id") +: bandCols: _*)
-  }
+      .select(col("doc_id") +: (0 until DhashBands).map(b =>
+        graft.functions.DhashBand.bandCol(col("text"), b).as(s"b$b")): _*)
 
   /** Perceptual near-dup pairs by dHash: band-equality LSH join (never
     * all-pairs — the same banding discipline as [[minhashLshCandidates]])
