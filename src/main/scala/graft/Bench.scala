@@ -8,8 +8,8 @@ package graft
   * 3 timed runs (this container shows 2× run-to-run noise on identical
   * code); the suite's raw wall-clock is reported separately as `wall`.
   *
-  * A SECOND scale point is timed when available — `SPARK_GRAFT_SF_DIR2`, or
-  * the sibling sf0.01 directory when the primary is sf0.1 — and reported in
+  * A SECOND scale point is timed when available — the sibling sf0.01
+  * directory when the primary is sf0.1 — and reported in
   * the same JSON line under `sf2`/`queries2`/`value2`. Two points separate
   * the fixed JVM/plan floor from data-dependent cost: a query whose time
   * doesn't move 10× the data is floor-bound; one that scales super-linearly
@@ -92,10 +92,9 @@ object Bench {
     // cost) and `timed_wall` (the 3 timed runs) components. Regression
     // reads use medians; capacity planning reads timed_wall.
     val (primary, wall1) = timed(suite(sfDir))
-    // second scale point: explicit env var, else the sibling sf0.01 dir
-    val sfDir2 = sys.env.get("SPARK_GRAFT_SF_DIR2")
-      .orElse(Option(sfDir.replace("sf0.1", "sf0.01"))
-        .filter(d => d != sfDir && new java.io.File(d).isDirectory))
+    // second scale point: the sibling sf0.01 dir
+    val sfDir2 = Option(sfDir.replace("sf0.1", "sf0.01"))
+      .filter(d => d != sfDir && new java.io.File(d).isDirectory)
     val secondary = sfDir2.map(d => { val (rs, w) = timed(suite(d)); (d, rs, w) })
     val extra = secondary.map { case (d, (rs, ww, tw), w) =>
       s""","value2":${total(rs)},"queries2":${json(rs)},"sf2":"$d","wall2":$w""" +

@@ -3,14 +3,14 @@ package graft
 import graft.functions.{BlocklistCounts, FloatVecDot, ShingleCodes, StringFingerprint}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.{GraftBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 
 /** `SparkSessionExtensions` entry point: makes the engine's native
   * expressions SQL-callable cluster-wide via
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)` at builder time) — the standard
-  * deployment seam for a library on a shared cluster, no code changes in
-  * user jobs. Also injects the engine's optimizer rules
+  * `.withExtensions(new GraftExtensions)` at builder time, as
+  * [[Runner.builder]] does) — the standard deployment seam for a library
+  * on a shared cluster, no code changes in user jobs. Also injects the engine's optimizer rules
   * ([[graft.plans.MarkerHitsRule]]).
   *
   * Deliberate envelope note: the extension ladder stops at Expressions +
@@ -66,17 +66,5 @@ object GraftExtensions {
         "blocklist_counts: words must be non-null string literals")
       v.toString
     }
-  }
-
-  /** Register on an already-built session (tests, driver-owned sessions). */
-  def register(spark: SparkSession): Unit = {
-    GraftBridge.registerFunction(spark, "float_vec_dot",
-      args => FloatVecDot(args(0), args(1)))
-    GraftBridge.registerFunction(spark, "string_fingerprint",
-      args => StringFingerprint(args(0)))
-    GraftBridge.registerFunction(spark, "shingle_codes",
-      args => ShingleCodes(args(0), args(1).eval().asInstanceOf[Int]))
-    GraftBridge.registerFunction(spark, "blocklist_counts",
-      args => BlocklistCounts(args(0), wordArgs(args.tail)))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage-truncating materialization for iterative operators (CC label
   * propagation, PageRank, BFS, BPE rounds, MMR rounds, pinned stat frames).
@@ -50,21 +51,18 @@ object Pin {
     if (sc.getCheckpointDir.isDefined)
       df.checkpoint()
     else {
-      // localCheckpoint (eager) registers its block-backed RDD in the
-      // context's persistent-RDD registry inside the call — the id diff
-      // identifies the pin's blocks, never a caller's .cache(). The
-      // materialization itself runs OUTSIDE the lock (round 19) so that
-      // independent pins taken from [[parallel]]'s driver threads overlap
-      // instead of serializing on this object's monitor; concurrent diffs
-      // can only OVER-attribute an id to more than one window (harmless —
-      // `tracked` is one per-context set and [[release]] drops it whole),
-      // never miss one (every pin's own id lands inside its own window).
-      val before = synchronized { sc.getPersistentRDDs.keySet }
+      // Dataset.localCheckpoint persists exactly the RDD it wraps in the
+      // result's LogicalRDD, so that RDD's id names the pin's blocks —
+      // never a caller's .cache(), nor a pin another driver thread of
+      // [[parallel]] takes meanwhile. Only the bookkeeping is locked; the
+      // materialization runs outside it, so parallel pins overlap.
       val out = df.localCheckpoint()
+      val id = out.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd.id
+      }
       synchronized {
-        val ids = tracked.computeIfAbsent(
-          sc, _ => scala.collection.mutable.Set.empty[Int])
-        ids ++= (sc.getPersistentRDDs.keySet -- before)
+        tracked.computeIfAbsent(
+          sc, _ => scala.collection.mutable.Set.empty[Int]) += id
       }
       out
     }

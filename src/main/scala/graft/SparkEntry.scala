@@ -1460,44 +1460,38 @@ object SparkEntry {
     // (bench warm-up + 3 timed runs, any other query on the same corpus
     // version) reads it back and pays probe cost only — the build-once/
     // probe-many amortization a standing 100 TB index actually delivers.
-    // Freshness is loud: a stale or unstamped asset throws before any
-    // join runs (Round18OpsSpec). Oracles are q267/q270/q268's verbatim —
-    // the versioned path must not move a single hash.
+    // Freshness is loud: Assets.ensure serves only an asset stamped with
+    // the caller's digest, and Assets.requireFresh rejects a stale or
+    // unstamped one (Round18OpsSpec). Oracles are q267/q270/q268's
+    // verbatim — the versioned path must not move a single hash.
     "q271_band_index_versioned" -> ((s: SparkSession, d: String) => {
       val corpus = docs50(s, d).filter(col("doc_id") < 25)
-      val digest = ext.Assets.textDigest(corpus)
-      val index = ext.Assets.ensure(s,
-        ext.Assets.assetPath("band_q271", digest, "k16b4n3"),
-        "band_sigs", digest)(
+      val index = ext.Assets.ensure(s, "q271", ext.Dedup.bandIndex(16, 4, 3),
+        ext.Assets.textDigest(corpus))(
         ext.Dedup.buildBandIndex(corpus, k = 16, bands = 4, n = 3))
-      ext.Dedup.minhashNewVsIndexFresh(
-        docs50(s, d).filter(col("doc_id") >= 25), index, digest,
+      ext.Dedup.minhashNewVsIndex(
+        docs50(s, d).filter(col("doc_id") >= 25), index,
         k = 16, bands = 4, n = 3, minJaccard = 0.5)
     }),
     "q272_split_assets_versioned" -> ((s: SparkSession, d: String) => {
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(pmod(col("doc_id"), lit(2L)) === 0)
       val digest = ext.Assets.textDigest(corpus)
-      val idx = ext.Assets.ensure(s,
-        ext.Assets.assetPath("band_q272", digest, "k16b4n5"),
-        "band_sigs", digest)(
-        ext.Dedup.buildBandIndex(corpus, k = 16, bands = 4, n = 5))
-      val cmap = ext.Assets.ensure(s,
-        ext.Assets.assetPath("cmap_q272", digest, "k16b4n5j05"),
-        "cluster_id", digest)(
+      val idx = ext.Assets.ensure(s, "q272", ext.Dedup.bandIndex(16, 4, 5),
+        digest)(ext.Dedup.buildBandIndex(corpus, k = 16, bands = 4, n = 5))
+      val cmap = ext.Assets.ensure(s, "q272",
+        ext.Dedup.clusterMap(16, 4, 5, 0.5), digest)(
         ext.Dedup.buildClusterMap(corpus))
-      ext.Dedup.incrementalSplitFresh(
-        docs.filter(pmod(col("doc_id"), lit(2L)) === 1), idx, cmap, digest)
+      ext.Dedup.incrementalSplitIndexed(
+        docs.filter(pmod(col("doc_id"), lit(2L)) === 1), idx, cmap)
     }),
     "q273_ivf_index_versioned" -> ((s: SparkSession, d: String) => {
       val emb = Tables.embeddings(s, d)
-      val digest = ext.Similarity.embeddingDigest(emb)
-      val index = ext.Assets.ensure(s,
-        ext.Assets.assetPath("ivf_q273", digest, "sqrtN"),
-        "centroid_id", digest)(
+      val index = ext.Assets.ensure(s, "q273", ext.Similarity.ivfIndex(0),
+        ext.Similarity.embeddingDigest(emb))(
         ext.Similarity.buildIvfIndex(emb))
-      ext.Similarity.ivfTopKIndexedFresh(index, digest,
-        col("vec_id") % 10 === 0, k = 5, nprobe = 4)
+      ext.Similarity.ivfTopKIndexed(index, col("vec_id") % 10 === 0,
+        k = 5, nprobe = 4)
     }),
     // CROSS-micro-batch stateful semantics driver-oracled (round 18):
     // a deterministic 2-batch replay of the collapse gate — batch 0 =
@@ -1515,13 +1509,10 @@ object SparkEntry {
     "q275_dhash_index_versioned" -> ((s: SparkSession, d: String) => {
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-      val digest = ext.Assets.textDigest(corpus)
-      val index = ext.Assets.ensure(s,
-        ext.Assets.assetPath("dhash_q275", digest, "w9h8b4"),
-        "b0", digest)(
-        ext.Dedup.buildDhashIndex(corpus))
-      ext.Dedup.dhashNewVsIndexFresh(
-        docs.filter(col("doc_id") % 5 === 0), index, digest, maxDist = 16)
+      val index = ext.Assets.ensure(s, "q275", ext.Dedup.dhashIndex,
+        ext.Assets.textDigest(corpus))(ext.Dedup.buildDhashIndex(corpus))
+      ext.Dedup.dhashNewVsIndex(
+        docs.filter(col("doc_id") % 5 === 0), index, maxDist = 16)
     }),
     // Assets.advance family (round 19): a corpus version moves v0 → v1
     // by an appended delta, and the v1 asset derives from the STANDING
@@ -1536,54 +1527,46 @@ object SparkEntry {
       val c0 = docs50(s, d).filter(col("doc_id") < 15)
       val delta = docs50(s, d)
         .filter(col("doc_id") >= 15 && col("doc_id") < 25)
+      val fam = ext.Dedup.bandIndex(16, 4, 3)
       val d0 = ext.Assets.textDigest(c0)
       val d1 = ext.Assets.textDigest(docs50(s, d).filter(col("doc_id") < 25))
-      val oldPath = ext.Assets.assetPath("band_q276base", d0, "k16b4n3")
-      ext.Assets.ensure(s, oldPath, "band_sigs", d0)(
+      ext.Assets.ensure(s, "q276", fam, d0)(
         ext.Dedup.buildBandIndex(c0, k = 16, bands = 4, n = 3))
-      val idx = ext.Assets.advance(s,
-        ext.Assets.assetPath("band_q276", d1, "k16b4n3"),
-        "band_sigs", d1, oldPath, d0)(
+      val idx = ext.Assets.advance(s, "q276", fam, d0, d1)(
         old => ext.Dedup.advanceBandIndex(old, delta, k = 16, bands = 4,
           n = 3))(
         ext.Dedup.buildBandIndex(docs50(s, d).filter(col("doc_id") < 25),
           k = 16, bands = 4, n = 3))
-      ext.Dedup.minhashNewVsIndexFresh(
-        docs50(s, d).filter(col("doc_id") >= 25), idx, d1,
+      ext.Dedup.minhashNewVsIndex(
+        docs50(s, d).filter(col("doc_id") >= 25), idx,
         k = 16, bands = 4, n = 3, minJaccard = 0.5)
     }),
     "q277_cluster_map_advance" -> ((s: SparkSession, d: String) => {
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(pmod(col("doc_id"), lit(2L)) === 0)
       val delta = docs.filter(pmod(col("doc_id"), lit(2L)) === 1)
+      val fam = ext.Dedup.clusterMap(16, 4, 5, 0.5)
       val d0 = ext.Assets.textDigest(corpus)
       val d1 = ext.Assets.textDigest(docs)
-      val idxPath = ext.Assets.assetPath("band_q277base", d0, "k16b4n5")
-      val idx = ext.Assets.ensure(s, idxPath, "band_sigs", d0)(
-        ext.Dedup.buildBandIndex(corpus, k = 16, bands = 4, n = 5))
-      val mapPath = ext.Assets.assetPath("cmap_q277base", d0, "k16b4n5j05")
-      ext.Assets.ensure(s, mapPath, "cluster_id", d0)(
+      val idx = ext.Assets.ensure(s, "q277", ext.Dedup.bandIndex(16, 4, 5),
+        d0)(ext.Dedup.buildBandIndex(corpus, k = 16, bands = 4, n = 5))
+      ext.Assets.ensure(s, "q277", fam, d0)(
         ext.Dedup.buildClusterMap(corpus))
-      val advanced = ext.Assets.advance(s,
-        ext.Assets.assetPath("cmap_q277", d1, "k16b4n5j05"),
-        "cluster_id", d1, mapPath, d0)(
-        old => ext.Dedup.advanceClusterMap(old, idx, delta))(
-        ext.Dedup.buildClusterMap(docs))
       ext.Dedup.leakageSafeSplitIndexed(
-        ext.Assets.requireFresh(advanced, "cluster_id", d1))
+        ext.Assets.advance(s, "q277", fam, d0, d1)(
+          old => ext.Dedup.advanceClusterMap(old, idx, delta))(
+          ext.Dedup.buildClusterMap(docs)))
     }),
     "q278_ivf_index_advance" -> ((s: SparkSession, d: String) => {
       val emb = Tables.embeddings(s, d)
       val corpus = emb.filter(pmod(col("vec_id"), lit(4L)) =!= 3)
       val delta = emb.filter(pmod(col("vec_id"), lit(4L)) === 3)
+      val fam = ext.Similarity.ivfIndex(0)
       val d0 = ext.Similarity.embeddingDigest(corpus)
       val d1 = ext.Similarity.embeddingDigest(emb)
-      val oldPath = ext.Assets.assetPath("ivf_q278base", d0, "sqrtN")
-      ext.Assets.ensure(s, oldPath, "centroid_id", d0)(
+      ext.Assets.ensure(s, "q278", fam, d0)(
         ext.Similarity.buildIvfIndex(corpus))
-      val idx = ext.Assets.advance(s,
-        ext.Assets.assetPath("ivf_q278", d1, "sqrtN"),
-        "centroid_id", d1, oldPath, d0)(
+      val idx = ext.Assets.advance(s, "q278", fam, d0, d1)(
         old => ext.Similarity.advanceIvfIndex(old, delta))(
         // no-standing-asset fallback ONLY: a from-scratch build on the
         // grown corpus RESAMPLES centroids (different geometry from the
@@ -1591,26 +1574,23 @@ object SparkEntry {
         // driver row always takes the advance arm because the base
         // asset is ensured above
         ext.Similarity.buildIvfIndex(emb))
-      ext.Similarity.ivfTopKIndexedFresh(idx, d1,
-        col("vec_id") % 10 === 0, k = 5, nprobe = 4)
+      ext.Similarity.ivfTopKIndexed(idx, col("vec_id") % 10 === 0,
+        k = 5, nprobe = 4)
     }),
     "q279_dhash_index_advance" -> ((s: SparkSession, d: String) => {
       val docs = Tables.documents(s, d)
       val c0 = docs.filter(col("doc_id") % 5 === 1 || col("doc_id") % 5 === 2)
       val delta = docs.filter(col("doc_id") % 5 === 3 ||
         col("doc_id") % 5 === 4)
+      val fam = ext.Dedup.dhashIndex
       val d0 = ext.Assets.textDigest(c0)
       val d1 = ext.Assets.textDigest(docs.filter(col("doc_id") % 5 =!= 0))
-      val oldPath = ext.Assets.assetPath("dhash_q279base", d0, "w9h8b4")
-      ext.Assets.ensure(s, oldPath, "b0", d0)(
-        ext.Dedup.buildDhashIndex(c0))
-      val idx = ext.Assets.advance(s,
-        ext.Assets.assetPath("dhash_q279", d1, "w9h8b4"),
-        "b0", d1, oldPath, d0)(
+      ext.Assets.ensure(s, "q279", fam, d0)(ext.Dedup.buildDhashIndex(c0))
+      val idx = ext.Assets.advance(s, "q279", fam, d0, d1)(
         old => ext.Dedup.advanceDhashIndex(old, delta))(
         ext.Dedup.buildDhashIndex(docs.filter(col("doc_id") % 5 =!= 0)))
-      ext.Dedup.dhashNewVsIndexFresh(
-        docs.filter(col("doc_id") % 5 === 0), idx, d1, maxDist = 16)
+      ext.Dedup.dhashNewVsIndex(
+        docs.filter(col("doc_id") % 5 === 0), idx, maxDist = 16)
     }),
     // LINEAR-build IVF (round 19): centroids fitted on a bounded
     // deterministic sample (one Lloyd step, integer means) + ONE

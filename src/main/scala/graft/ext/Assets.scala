@@ -58,24 +58,34 @@ object Assets {
       .agg(coalesce(pmod(sum(col("term")), lit(1L << 31)), lit(0L)))
       .head().getLong(0)
 
-  /** Stamp `digest` into `keyCol`'s metadata, PRESERVING the geometry
-    * metadata the builders already wrote (k/bands/n/minJaccard).
+  /** One standing-asset family at one build geometry: `name` labels it in
+    * error messages, `keyCol` is the column whose metadata carries the
+    * corpus digest, and `geometry` holds the build parameters — for the
+    * MinHash, dHash and cluster-map families the ones a probe or an
+    * advance must match (k/bands/n/minJaccard, or the dHash raster's
+    * w/h/bands), which their builders stamp next to the digest.
+    * Each family is declared once ([[Dedup.bandIndex]],
+    * [[Dedup.dhashIndex]], [[Dedup.clusterMap]],
+    * [[Similarity.ivfIndex]]); the stamp, the guards and the store path
+    * all read it from there.
     */
-  def stamp(asset: DataFrame, keyCol: String, digest: Long): DataFrame =
-    withGeometry(asset, keyCol, Seq(DigestKey -> digest))
+  final case class Family(name: String, keyCol: String,
+                          geometry: Seq[(String, AnyVal)])
 
-  /** Stamp an asset's build GEOMETRY (the parameters a probe or an
-    * advance must match: k/bands/n/minJaccard, or the dHash raster's
-    * w/h/bands) into `keyCol`'s metadata, next to whatever the column
-    * already carries. Spark persists field metadata through parquet (the
-    * row.metadata footer), so a reloaded asset still names the geometry
-    * it was built with. Integral values are stored as longs, fractional
-    * ones as doubles.
+  /** Stamp `family`'s build GEOMETRY into its key column's metadata, next
+    * to whatever the column already carries. Spark persists field
+    * metadata through parquet (the row.metadata footer), so a reloaded
+    * asset still names the geometry it was built with. Integral values
+    * are stored as longs, fractional ones as doubles.
     */
-  private[graft] def withGeometry(asset: DataFrame, keyCol: String,
-                                  geom: Seq[(String, AnyVal)]): DataFrame = {
+  private[graft] def withGeometry(asset: DataFrame,
+                                  family: Family): DataFrame =
+    withMeta(asset, family.keyCol, family.geometry)
+
+  private def withMeta(asset: DataFrame, keyCol: String,
+                       entries: Seq[(String, AnyVal)]): DataFrame = {
     val b = new MetadataBuilder().withMetadata(asset.schema(keyCol).metadata)
-    for ((name, v) <- geom) stored(v) match {
+    for ((name, v) <- entries) stored(v) match {
       case d: Double => b.putDouble(name, d)
       case l: Long => b.putLong(name, l)
     }
@@ -88,17 +98,18 @@ object Assets {
     case x => x.asInstanceOf[Number].longValue
   }
 
-  /** Fails loudly unless `keyCol` carries every [[withGeometry]] entry of
-    * `geom` with the caller's value — checked in order, before any join
-    * runs. Probing (or advancing) an index with other parameters would
-    * silently match zero bands, union incomparable signatures, or mix
-    * clusterings; ABSENT metadata is an error too (round-17 hardening): a
-    * frame whose column metadata was stripped by a select/union transform
-    * or a non-Spark writer would otherwise skip the check.
+  /** Fails loudly unless the key column carries every [[withGeometry]]
+    * entry of `family`'s geometry with the caller's value — checked in
+    * order, before any join runs. Probing (or advancing) an index with
+    * other parameters would silently match zero bands, union
+    * incomparable signatures, or mix clusterings; ABSENT metadata is an
+    * error too (round-17 hardening): a frame whose column metadata was
+    * stripped by a select/union transform or a non-Spark writer would
+    * otherwise skip the check.
     */
-  private[graft] def requireGeometry(asset: DataFrame, keyCol: String,
-                                     what: String,
-                                     geom: Seq[(String, AnyVal)]): Unit = {
+  private[graft] def requireGeometry(asset: DataFrame,
+                                     family: Family): Unit = {
+    val Family(what, keyCol, geom) = family
     val meta = asset.schema(keyCol).metadata
     for ((name, v) <- geom) {
       require(meta.contains(name),
@@ -146,11 +157,10 @@ object Assets {
     * before any union.
     */
   private[graft] def advanceRows(asset: DataFrame, delta: DataFrame,
-                                 keyCol: String, what: String,
-                                 geom: Seq[(String, AnyVal)])
+                                 family: Family)
                                 (build: DataFrame => DataFrame): DataFrame = {
-    requireGeometry(asset, keyCol, what, geom)
-    requireDisjointIds(asset, delta, "doc_id", what)
+    requireGeometry(asset, family)
+    requireDisjointIds(asset, delta, "doc_id", family.name)
     asset.unionByName(build(delta))
   }
 
@@ -158,13 +168,14 @@ object Assets {
     * (absent = unverifiable = error, the round-17 geometry discipline)
     * and it must equal the corpus digest the caller holds.
     */
-  def requireFresh(asset: DataFrame, keyCol: String, digest: Long)
+  def requireFresh(asset: DataFrame, family: Family, digest: Long)
       : DataFrame = {
+    val keyCol = family.keyCol
     val meta = asset.schema(keyCol).metadata
     require(meta.contains(DigestKey),
-      s"asset column '$keyCol' carries no '$DigestKey' metadata — build " +
-        "it through Assets.ensure/Assets.advance (or Assets.stamp); an " +
-        "unstamped asset cannot be validated against the corpus")
+      s"${family.name} column '$keyCol' carries no '$DigestKey' metadata — " +
+        "build it through Assets.ensure/Assets.advance; an unstamped " +
+        "asset cannot be validated against the corpus")
     require(meta.getLong(DigestKey) == digest,
       s"STALE asset: built at $DigestKey=${meta.getLong(DigestKey)}, the " +
         s"corpus is now at $digest — rebuild the asset (Assets.ensure " +
@@ -185,14 +196,14 @@ object Assets {
     * (digest, tag) key THREW instead of rebuilding, contradicting the
     * documented contract.
     */
-  private def readValid(spark: SparkSession, path: String, keyCol: String,
+  private def readValid(spark: SparkSession, path: String, family: Family,
                         digest: Long): Option[DataFrame] =
     scala.util.Try {
       val fs = fsOf(spark, path)
       if (!fs.exists(new Path(path, "_SUCCESS"))) None
       else {
         val df = graft.Tables.parquet(spark, Seq(path))
-        val m = df.schema(keyCol).metadata
+        val m = df.schema(family.keyCol).metadata
         if (m.contains(DigestKey) && m.getLong(DigestKey) == digest)
           Some(df)
         else None
@@ -210,14 +221,15 @@ object Assets {
     * asset. No reader can observe a partial write: the destination
     * appears only by rename, already complete and `_SUCCESS`-marked.
     */
-  private def publish(spark: SparkSession, path: String, keyCol: String,
+  private def publish(spark: SparkSession, path: String, family: Family,
                       digest: Long, asset: DataFrame): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val dest = new Path(path)
     val fs = dest.getFileSystem(conf)
     def writeTmp(): Path = {
       val t = new Path(path + "._tmp-" + java.util.UUID.randomUUID())
-      stamp(asset, keyCol, digest).write.parquet(t.toString)
+      withMeta(asset, family.keyCol, Seq(DigestKey -> digest))
+        .write.parquet(t.toString)
       t
     }
     def place(t: Path): Boolean = {
@@ -232,30 +244,32 @@ object Assets {
       // lost the race (or a stale/junk asset occupies the path): if what
       // is there now validates, serve it; otherwise clear it and retry
       // once — a second failure is a genuine FS error, surface it
-      if (readValid(spark, path, keyCol, digest).isEmpty) {
+      if (readValid(spark, path, family, digest).isEmpty) {
         fs.delete(dest, true)
         require(place(writeTmp()) ||
-            readValid(spark, path, keyCol, digest).nonEmpty,
+            readValid(spark, path, family, digest).nonEmpty,
           s"Assets.publish: cannot place asset at $path")
       }
     }
     graft.Tables.parquet(spark, Seq(path))
   }
 
-  /** Build-once/probe-many: if `path` already holds a PUBLISHED asset
-    * stamped with `digest`, read it back (zero build work — this is
-    * where the suite's per-query rebuild constant goes away); on a
-    * missing, in-flight, unreadable, unstamped, schema-drifted, or stale
-    * asset, run `build`, stamp, publish atomically, and serve the REREAD
-    * frame (so first call and every later call return the byte-identical
-    * parquet-backed plan). Content-addressed freshness: geometry
-    * mismatches are caught by the probes' existing metadata guards,
-    * digest mismatches here.
+  /** Build-once/probe-many: if the store holds a PUBLISHED `family`
+    * asset named `name` and stamped with `digest`, read it back (zero
+    * build work — this is where the suite's per-query rebuild constant
+    * goes away); on a missing, in-flight, unreadable, unstamped,
+    * schema-drifted, or stale asset, run `build`, stamp, publish
+    * atomically, and serve the REREAD frame (so first call and every
+    * later call return the byte-identical parquet-backed plan).
+    * Content-addressed freshness: geometry mismatches are caught by the
+    * probes' existing metadata guards, digest mismatches here.
     */
-  def ensure(spark: SparkSession, path: String, keyCol: String,
-             digest: Long)(build: => DataFrame): DataFrame =
-    readValid(spark, path, keyCol, digest).getOrElse(
-      publish(spark, path, keyCol, digest, build))
+  def ensure(spark: SparkSession, name: String, family: Family,
+             digest: Long)(build: => DataFrame): DataFrame = {
+    val at = path(name, family, digest)
+    readValid(spark, at, family, digest).getOrElse(
+      publish(spark, at, family, digest, build))
+  }
 
   /** Incremental asset maintenance — the round-19 protocol. A corpus
     * moved `oldDigest` → `newDigest` by APPENDING a delta (the admission
@@ -265,13 +279,13 @@ object Assets {
     * document costs a full shingle pass or an N·√N IVF re-assignment —
     * the exact cost the standing-asset seam exists to avoid.
     *
-    * Resolution order:
-    *   1. a published `newDigest` asset at `newPath` → serve it
-    *      (probe-many; advance already ran);
-    *   2. a published `oldDigest` asset at `oldPath` → publish
-    *      `advanceFrom(old)` at `newPath` stamped `newDigest` — cost
-    *      linear in the delta plus one index-grain rewrite, flat in the
-    *      corpus TEXT (the per-family advance functions never touch it);
+    * Resolution order (both versions are `family` assets named `name`):
+    *   1. a published `newDigest` asset → serve it (probe-many; advance
+    *      already ran);
+    *   2. a published `oldDigest` asset → publish `advanceFrom(old)`
+    *      stamped `newDigest` — cost linear in the delta plus one
+    *      index-grain rewrite, flat in the corpus TEXT (the per-family
+    *      advance functions never touch it);
     *   3. otherwise → `fullBuild` (first landing, or the old asset is
     *      itself missing/stale — advancing from an unverified base would
     *      silently drop every doc the base missed).
@@ -284,25 +298,33 @@ object Assets {
     * RESAMPLE centroids, so [[Similarity.advanceIvfIndex]] keeps the old
     * geometry under a drift guard and its query is oracled independently.
     */
-  def advance(spark: SparkSession, newPath: String, keyCol: String,
-              newDigest: Long, oldPath: String, oldDigest: Long)
+  def advance(spark: SparkSession, name: String, family: Family,
+              oldDigest: Long, newDigest: Long)
              (advanceFrom: DataFrame => DataFrame)
-             (fullBuild: => DataFrame): DataFrame =
-    readValid(spark, newPath, keyCol, newDigest).getOrElse {
-      val built = readValid(spark, oldPath, keyCol, oldDigest)
-        .map(advanceFrom).getOrElse(fullBuild)
-      publish(spark, newPath, keyCol, newDigest, built)
+             (fullBuild: => DataFrame): DataFrame = {
+    val at = path(name, family, newDigest)
+    readValid(spark, at, family, newDigest).getOrElse {
+      val built = readValid(spark, path(name, family, oldDigest), family,
+        oldDigest).map(advanceFrom).getOrElse(fullBuild)
+      publish(spark, at, family, newDigest, built)
     }
+  }
 
-  /** Deterministic content-addressed path for a driver-run asset: keyed
-    * by asset kind + corpus digest + geometry tag, under the JVM temp
-    * dir. Digest in the path keeps different corpora (and different SF
-    * dirs) from colliding; the tag keys the geometry. The `v2` namespace
-    * component is the asset FORMAT version (round 19: `_SUCCESS`-gated
-    * atomic publication; also isolates any builder output-schema change
-    * from pre-v2 cached assets — the ADVICE schema-drift hazard).
+  /** Deterministic content-addressed store path of asset `name` of
+    * `family` built from corpus `digest`, under the JVM temp dir. The
+    * name keeps two callers' assets apart even when their corpus,
+    * digest and geometry agree; the digest keeps corpora (and SF dirs)
+    * apart; the key column and the geometry (as a tag, e.g.
+    * `k16-bands4-n3`) key the family and its build parameters. The `v2`
+    * namespace component is the asset FORMAT version (round 19:
+    * `_SUCCESS`-gated atomic publication; also isolates any builder
+    * output-schema change from pre-v2 cached assets — the ADVICE
+    * schema-drift hazard).
     */
-  def assetPath(kind: String, digest: Long, tag: String): String =
+  def path(name: String, family: Family, digest: Long): String = {
+    val tag =
+      family.geometry.map { case (k, v) => s"$k${stored(v)}" }.mkString("-")
     new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-assets/v2/${kind}_${digest}_$tag").getPath
+      s"graft-assets/v2/${name}_${family.keyCol}_${digest}_$tag").getPath
+  }
 }

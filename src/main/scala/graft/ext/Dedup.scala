@@ -532,11 +532,13 @@ object Dedup {
       .select(col("doc_id"), shingleCodes(col("text"), n).as("codes"),
         graft.functions.MinhashBandSigs.bandSigsCol(col("text"), n, k, bands)
           .as("band_sigs")),
-      "band_sigs", bandGeometry(k, bands, n))
+      bandIndex(k, bands, n))
   }
 
-  private def bandGeometry(k: Int, bands: Int, n: Int): Seq[(String, AnyVal)] =
-    Seq("k" -> k, "bands" -> bands, "n" -> n)
+  /** The [[buildBandIndex]] asset family at one k/bands/n geometry. */
+  def bandIndex(k: Int, bands: Int, n: Int): Assets.Family =
+    Assets.Family("band index", "band_sigs",
+      Seq("k" -> k, "bands" -> bands, "n" -> n))
 
   /** The admission gate against a PERSISTED [[buildBandIndex]] frame —
     * [[minhashNewVsCorpus]]'s exact output contract without touching
@@ -551,8 +553,7 @@ object Dedup {
   def minhashNewVsIndex(newDocs: DataFrame, index: DataFrame, k: Int = 16,
                         bands: Int = 4, n: Int = 3,
                         minJaccard: Double = 0.5): DataFrame = {
-    Assets.requireGeometry(index, "band_sigs", "band index",
-      bandGeometry(k, bands, n))
+    Assets.requireGeometry(index, bandIndex(k, bands, n))
     val (mNew, rNew) = textCollapsed(newDocs, n)
     ExactCollapse.expandOrdered(
       minhashIndexGate(buildBandIndex(rNew, k, bands, n), index, bands,
@@ -575,22 +576,8 @@ object Dedup {
     */
   def advanceBandIndex(index: DataFrame, delta: DataFrame, k: Int = 16,
                        bands: Int = 4, n: Int = 3): DataFrame =
-    Assets.advanceRows(index, delta, "band_sigs", "band index",
-      bandGeometry(k, bands, n))(buildBandIndex(_, k, bands, n))
-
-  /** [[minhashNewVsIndex]] behind the freshness gate: `digest` is the
-    * admitting corpus's CURRENT digest (catalog-served at scale, see
-    * [[Assets]]); a stale or unstamped index fails loudly BEFORE any band
-    * join runs — a gate probing last week's index silently admits every
-    * duplicate of a doc that landed since.
-    */
-  def minhashNewVsIndexFresh(newDocs: DataFrame, index: DataFrame,
-                             digest: Long, k: Int = 16, bands: Int = 4,
-                             n: Int = 3, minJaccard: Double = 0.5)
-      : DataFrame =
-    minhashNewVsIndex(newDocs,
-      Assets.requireFresh(index, "band_sigs", digest),
-      k, bands, n, minJaccard)
+    Assets.advanceRows(index, delta, bandIndex(k, bands, n))(
+      buildBandIndex(_, k, bands, n))
 
   /** Greedy MAX-COVERAGE data selection (the submodular facility-location
     * family — pick the k documents that jointly cover the most distinct
@@ -934,11 +921,12 @@ object Dedup {
     * contract fails loudly instead of joining incomparable band values.
     */
   def buildDhashIndex(corpus: DataFrame): DataFrame =
-    Assets.withGeometry(dhashTextBands(corpus), "b0", DhashGeometry)
+    Assets.withGeometry(dhashTextBands(corpus), dhashIndex)
 
-  private val DhashGeometry: Seq[(String, AnyVal)] =
-    Seq("w" -> DhashW, "h" -> DhashH, "bands" -> DhashBands)
-  private val DhashIndex = "dhash index (raster-geometry w/h/bands)"
+  /** The [[buildDhashIndex]] asset family (one fixed raster geometry). */
+  val dhashIndex: Assets.Family =
+    Assets.Family("dhash index (raster-geometry w/h/bands)", "b0",
+      Seq("w" -> DhashW, "h" -> DhashH, "bands" -> DhashBands))
 
   /** The perceptual admission gate against a PERSISTED [[buildDhashIndex]]
     * frame — [[dhashNewVsCorpus]]'s exact output contract without
@@ -950,7 +938,7 @@ object Dedup {
     */
   def dhashNewVsIndex(newDocs: DataFrame, index: DataFrame,
                       maxDist: Int = 16): DataFrame = {
-    Assets.requireGeometry(index, "b0", DhashIndex, DhashGeometry)
+    Assets.requireGeometry(index, dhashIndex)
     val (mNew, rNew) = dhashCollapsed(newDocs)
     ExactCollapse.expandOrdered(
       dhashGateFromBands(rNew, index, maxDist), mNew,
@@ -966,14 +954,7 @@ object Dedup {
     * (q279's oracle holds the probe to the from-scratch hashes).
     */
   def advanceDhashIndex(index: DataFrame, delta: DataFrame): DataFrame =
-    Assets.advanceRows(index, delta, "b0", DhashIndex, DhashGeometry)(
-      buildDhashIndex)
-
-  /** [[dhashNewVsIndex]] behind the [[Assets]] freshness gate. */
-  def dhashNewVsIndexFresh(newDocs: DataFrame, index: DataFrame,
-                           digest: Long, maxDist: Int = 16): DataFrame =
-    dhashNewVsIndex(newDocs, Assets.requireFresh(index, "b0", digest),
-      maxDist)
+    Assets.advanceRows(index, delta, dhashIndex)(buildDhashIndex)
 
   /** The dHash gate over two (doc_id, b0..b3) hash frames: [[bandPairs]]
     * on the four band values, then the exact Hamming verify on the same
@@ -1191,12 +1172,16 @@ object Dedup {
       .join(comp, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("cluster_id")),
-      "cluster_id", clusterGeometry(k, bands, n, minJaccard))
+      clusterMap(k, bands, n, minJaccard))
   }
 
-  private def clusterGeometry(k: Int, bands: Int, n: Int,
-                              minJaccard: Double): Seq[(String, AnyVal)] =
-    bandGeometry(k, bands, n) :+ ("minJaccard" -> minJaccard)
+  /** The [[buildClusterMap]] asset family: the band geometry the
+    * clustering ran at, plus its Jaccard threshold.
+    */
+  def clusterMap(k: Int, bands: Int, n: Int,
+                 minJaccard: Double): Assets.Family =
+    Assets.Family("cluster map", "cluster_id",
+      bandIndex(k, bands, n).geometry :+ ("minJaccard" -> minJaccard))
 
   /** Incremental maintenance of a standing [[buildClusterMap]] asset —
     * the [[Assets.advance]] step for the split family, and the one
@@ -1234,9 +1219,9 @@ object Dedup {
   def advanceClusterMap(oldMap: DataFrame, oldIndex: DataFrame,
                         delta: DataFrame, k: Int = 16, bands: Int = 4,
                         n: Int = 5, minJaccard: Double = 0.5): DataFrame = {
-    val geom = clusterGeometry(k, bands, n, minJaccard)
-    Assets.requireGeometry(oldMap, "cluster_id", "cluster map", geom)
-    Assets.requireDisjointIds(oldMap, delta, "doc_id", "cluster map")
+    val family = clusterMap(k, bands, n, minJaccard)
+    Assets.requireGeometry(oldMap, family)
+    Assets.requireDisjointIds(oldMap, delta, "doc_id", family.name)
     // delta ↔ standing-cluster edges: the admission gate's pairs (member
     // grain on the delta side, corpus doc grain on the index side),
     // lifted to the corpus side's SUPER-NODE = standing cluster_id
@@ -1262,7 +1247,7 @@ object Dedup {
       .join(comp.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("cluster_id"))
-    Assets.withGeometry(remapped.unionByName(admitted), "cluster_id", geom)
+    Assets.withGeometry(remapped.unionByName(admitted), family)
   }
 
   /** [[leakageSafeSplit]] from a (persisted) [[buildClusterMap]] frame:
@@ -1315,8 +1300,8 @@ object Dedup {
                               minJaccard: Double = 0.5): DataFrame = {
     require(minJaccard <= 1.0,
       s"minJaccard $minJaccard > 1 would break exact-group inheritance")
-    Assets.requireGeometry(clusterMap, "cluster_id", "cluster map",
-      clusterGeometry(k, bands, n, minJaccard))
+    Assets.requireGeometry(clusterMap,
+      Dedup.clusterMap(k, bands, n, minJaccard))
     val gate = minhashNewVsIndex(newDocs, bandIndex, k, bands, n, minJaccard)
     val inherited = gate
       .join(clusterMap.select(col("doc_id").as("corpus_id"),
@@ -1331,22 +1316,6 @@ object Dedup {
         clusterSplit(col("cluster_id")).as("split"),
         col("inherited_cluster").isNotNull.as("inherited"))
   }
-
-  /** [[incrementalSplitIndexed]] behind the [[Assets]] freshness gate:
-    * both standing assets must have been built from the corpus version
-    * `digest` names — a stale CLUSTER MAP is the nastier failure (a new
-    * doc inherits a cluster id a full rebuild would never form, and the
-    * train/test boundary silently drifts), so both gates fail loudly
-    * before any plan runs.
-    */
-  def incrementalSplitFresh(newDocs: DataFrame, bandIndex: DataFrame,
-                            clusterMap: DataFrame, digest: Long,
-                            k: Int = 16, bands: Int = 4, n: Int = 5,
-                            minJaccard: Double = 0.5): DataFrame =
-    incrementalSplitIndexed(newDocs,
-      Assets.requireFresh(bandIndex, "band_sigs", digest),
-      Assets.requireFresh(clusterMap, "cluster_id", digest),
-      k, bands, n, minJaccard)
 
   /** Incremental leakage-safe split (round 16): assign each NEW-batch doc
     * a split CONSISTENT with the corpus's cluster-grain assignment — the

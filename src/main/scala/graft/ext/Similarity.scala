@@ -388,6 +388,13 @@ object Similarity {
   def buildIvfIndex(emb: DataFrame, nCentroids: Int = 0): DataFrame =
     ivfParts(emb, nCentroids)._1
 
+  /** The [[buildIvfIndex]] asset family at one centroid count (0 = ⌈√N⌉).
+    * The geometry keys the store path only: a probe reads the centroid
+    * set from the index itself, so nothing stamps or checks it.
+    */
+  def ivfIndex(nCentroids: Int): Assets.Family =
+    Assets.Family("IVF index", "centroid_id", Seq("nCentroids" -> nCentroids))
+
   /** The index frame plus its centroid table (centroid_id, cv, cn) —
     * [[ivfTopK]] consumes both so the one-plan form derives the centroid
     * row once, directly.
@@ -627,16 +634,6 @@ object Similarity {
         .withColumn("is_centroid", lit(false))
         .select(index.columns.map(col): _*))
   }
-
-  /** [[ivfTopKIndexed]] behind the freshness gate: a stale index answers
-    * top-k from a corpus that no longer exists (missing new vectors,
-    * ranking deleted ones) — loud failure before any probe runs.
-    */
-  def ivfTopKIndexedFresh(index: DataFrame, digest: Long, queryPred: Column,
-                          k: Int = 5, nprobe: Int = 4): DataFrame =
-    ivfTopKIndexed(
-      graft.ext.Assets.requireFresh(index, "centroid_id", digest),
-      queryPred, k, nprobe)
 
   private def ivfProbe(index: DataFrame, centRow: DataFrame,
                        queryPred: Column, k: Int, nprobe: Int): DataFrame = {

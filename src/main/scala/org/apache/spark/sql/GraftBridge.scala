@@ -15,15 +15,6 @@ object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Register a native expression under a SQL-callable name on an existing
-    * session (the extensions-free path; see `graft.GraftExtensions` for the
-    * builder-time `SparkSessionExtensions` route).
-    */
-  def registerFunction(spark: SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "built-in")
-
   /** Blocks until every event posted so far has reached the listeners
     * (the listener bus is asynchronous and `private[spark]`).
     */

@@ -41,7 +41,6 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("float_vec_dot is SQL-callable after registration") {
-    GraftExtensions.register(spark)
     Tables.embeddings(spark, sf).createOrReplaceTempView("emb_t")
     val r = spark.sql(
       """SELECT float_vec_dot(a.embedding, a.embedding) AS d
@@ -50,7 +49,6 @@ class FunctionsSpec extends SparkSuite {
   }
 
   test("string_fingerprint is SQL-callable and matches the Column kernel") {
-    GraftExtensions.register(spark)
     Tables.documents(spark, sf).createOrReplaceTempView("docs_t")
     val viaSql = spark.sql(
       """SELECT string_fingerprint(text) AS fp FROM docs_t
@@ -66,7 +64,6 @@ class FunctionsSpec extends SparkSuite {
   test("shingle_codes is SQL-callable and matches the HOF specification") {
     import org.apache.spark.sql.functions.{array_distinct, col, lit,
       sequence, transform, when, length, ascii, array}
-    GraftExtensions.register(spark)
     Tables.documents(spark, sf).createOrReplaceTempView("docs_t")
     val viaSql = spark.sql(
       """SELECT shingle_codes(text, 3) AS sh FROM docs_t
@@ -224,7 +221,6 @@ class FunctionsSpec extends SparkSuite {
       .as[Seq[Long]].head()
     assert(none == Seq(3L, 0L))
     // SQL-callable with literal words, like the rest of the native family
-    GraftExtensions.register(spark)
     val viaSql = spark.sql(
       "SELECT blocklist_counts('big the x', 'big', 'the') AS c")
       .as[Seq[Long]].head()

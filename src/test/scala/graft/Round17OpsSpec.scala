@@ -165,5 +165,21 @@ class Round17OpsSpec extends SparkSuite {
     assert(again.count() == 7L)
     Pin.release(sc)
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+    // a caller's .cache() taken before a two-leg Pin.parallel is not a
+    // pin: release drops both legs' blocks and leaves the cache alone
+    val cached = corpusFixture.withColumn("c", lit(1)).cache()
+    assert(cached.count() == 7L)
+    val cacheIds = sc.getPersistentRDDs.keySet -- before
+    assert(cacheIds.nonEmpty, "the cache must register persistent blocks")
+    val legs = Pin.parallel(Seq(
+      () => corpusFixture.withColumn("l", length(col("text"))),
+      () => corpusFixture.withColumn("u", upper(col("text")))))
+    assert(legs.map(_.count()) == Seq(7L, 7L))
+    assert((sc.getPersistentRDDs.keySet -- before -- cacheIds).size == 2,
+      "each leg pins one RDD")
+    Pin.release(sc)
+    assert(sc.getPersistentRDDs.keySet -- before == cacheIds,
+      "release must drop both pins and keep the cache")
+    cached.unpersist(blocking = true)
   }
 }

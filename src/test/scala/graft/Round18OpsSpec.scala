@@ -27,9 +27,6 @@ class Round18OpsSpec extends SparkSuite {
   private def freshFixture = mk(Seq(
     (100L, body(1)), (101L, body(2) + "zz"), (102L, body(9))))
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).resolve(tag).toString
-
   test("Assets.textDigest: layout-invariant (repartition/order can't move " +
     "it) but content- and pairing-sensitive") {
     val docs = corpusFixture
@@ -56,14 +53,15 @@ class Round18OpsSpec extends SparkSuite {
     val corpus = corpusFixture
     val nd = freshFixture
     val digest = ext.Assets.textDigest(corpus)
-    val path = tmp("bandidx")
-    val idx = ext.Assets.ensure(spark, path, "band_sigs", digest)(
+    val name = assetName("bandidx")
+    val fam = ext.Dedup.bandIndex(16, 4, 3)
+    val idx = ext.Assets.ensure(spark, name, fam, digest)(
       ext.Dedup.buildBandIndex(corpus, k = 16, bands = 4, n = 3))
     // the served frame is the PERSISTED parquet, stamped
     assert(idx.schema("band_sigs").metadata.getLong(
       ext.Assets.DigestKey) == digest)
-    val viaAsset = ext.Dedup
-      .minhashNewVsIndexFresh(nd, idx, digest, k = 16, bands = 4, n = 3)
+    val viaAsset = ext.Dedup.minhashNewVsIndex(nd,
+        ext.Assets.requireFresh(idx, fam, digest), k = 16, bands = 4, n = 3)
       .as[(Long, Long, Double)].collect().toSet
     val direct = ext.Dedup
       .minhashNewVsCorpus(nd, corpus, k = 16, bands = 4, n = 3)
@@ -73,25 +71,29 @@ class Round18OpsSpec extends SparkSuite {
         s"\n  direct: $direct")
     // second ensure with the same digest REUSES the parquet (no rebuild):
     // serve it a poisoned builder — reuse means the builder never runs
-    val idxCount = idx.count() // before the rebuild below replaces the files
-    val reused = ext.Assets.ensure(spark, path, "band_sigs", digest)(
+    val idxCount = idx.count()
+    val reused = ext.Assets.ensure(spark, name, fam, digest)(
       sys.error("ensure must not rebuild a fresh asset"))
     assert(reused.count() == idxCount)
     // STALE: corpus moved on (one new doc) → new digest, loud failure
     val digest2 = ext.Assets.textDigest(corpus.union(freshFixture.limit(1)))
     assert(digest2 != digest, "fixture digests must differ")
     val eStale = intercept[IllegalArgumentException] {
-      ext.Dedup.minhashNewVsIndexFresh(nd, idx, digest2)
+      ext.Assets.requireFresh(idx, fam, digest2)
     }
     assert(eStale.getMessage.contains("STALE"), eStale.getMessage)
     // UNSTAMPED: a plain (unversioned) index cannot be validated
     val eBare = intercept[IllegalArgumentException] {
-      ext.Dedup.minhashNewVsIndexFresh(nd,
-        ext.Dedup.buildBandIndex(corpus, k = 16, bands = 4, n = 3), digest)
+      ext.Assets.requireFresh(
+        ext.Dedup.buildBandIndex(corpus, k = 16, bands = 4, n = 3), fam,
+        digest)
     }
     assert(eBare.getMessage.contains(ext.Assets.DigestKey), eBare.getMessage)
-    // and ensure() REBUILDS on a stale path: same path, new digest
-    val rebuilt = ext.Assets.ensure(spark, path, "band_sigs", digest2)(
+    // and ensure() REBUILDS a stale asset: the old version's files sit at
+    // the new digest's path, stamped with the old digest
+    copyTree(ext.Assets.path(name, fam, digest),
+      ext.Assets.path(name, fam, digest2))
+    val rebuilt = ext.Assets.ensure(spark, name, fam, digest2)(
       ext.Dedup.buildBandIndex(corpus.union(freshFixture.limit(1)),
         k = 16, bands = 4, n = 3))
     assert(rebuilt.schema("band_sigs").metadata.getLong(
@@ -104,11 +106,16 @@ class Round18OpsSpec extends SparkSuite {
     val corpus = corpusFixture
     val nd = freshFixture
     val digest = ext.Assets.textDigest(corpus)
-    val idx = ext.Assets.ensure(spark, tmp("b18"), "band_sigs", digest)(
-      ext.Dedup.buildBandIndex(corpus, k = 16, bands = 4, n = 5))
-    val cmap = ext.Assets.ensure(spark, tmp("c18"), "cluster_id", digest)(
-      ext.Dedup.buildClusterMap(corpus))
-    val viaAssets = ext.Dedup.incrementalSplitFresh(nd, idx, cmap, digest)
+    val name = assetName("split18")
+    val mapFam = ext.Dedup.clusterMap(16, 4, 5, 0.5)
+    val idx = ext.Assets.requireFresh(
+      ext.Assets.ensure(spark, name, ext.Dedup.bandIndex(16, 4, 5), digest)(
+        ext.Dedup.buildBandIndex(corpus, k = 16, bands = 4, n = 5)),
+      ext.Dedup.bandIndex(16, 4, 5), digest)
+    val cmap = ext.Assets.requireFresh(
+      ext.Assets.ensure(spark, name, mapFam, digest)(
+        ext.Dedup.buildClusterMap(corpus)), mapFam, digest)
+    val viaAssets = ext.Dedup.incrementalSplitIndexed(nd, idx, cmap)
       .as[(Long, Long, String, Boolean)].collect().toSet
     val direct = ext.Dedup.incrementalSplit(nd, corpus)
       .as[(Long, Long, String, Boolean)].collect().toSet
@@ -118,13 +125,12 @@ class Round18OpsSpec extends SparkSuite {
     // geometry survives the stamp: the round-17 guard still fires on a
     // mis-parameterized probe of the STAMPED map
     val eGeom = intercept[IllegalArgumentException] {
-      ext.Dedup.incrementalSplitFresh(nd, idx, cmap, digest,
-        minJaccard = 0.9)
+      ext.Dedup.incrementalSplitIndexed(nd, idx, cmap, minJaccard = 0.9)
     }
     assert(eGeom.getMessage.contains("minJaccard"), eGeom.getMessage)
     // stale cluster map: loud (the split-drift failure mode)
     val eStale = intercept[IllegalArgumentException] {
-      ext.Dedup.incrementalSplitFresh(nd, idx, cmap, digest + 1)
+      ext.Assets.requireFresh(cmap, mapFam, digest + 1)
     }
     assert(eStale.getMessage.contains("STALE"), eStale.getMessage)
   }
@@ -141,10 +147,12 @@ class Round18OpsSpec extends SparkSuite {
       when(col("vec_id") === 7L,
         transform(col("embedding"), v => v * 2f)).otherwise(col("embedding")))
     assert(d != ext.Similarity.embeddingDigest(bumped))
-    val idx = ext.Assets.ensure(spark, tmp("ivf18"), "centroid_id", d)(
+    val fam = ext.Similarity.ivfIndex(0)
+    val idx = ext.Assets.ensure(spark, assetName("ivf18"), fam, d)(
       ext.Similarity.buildIvfIndex(emb))
     val pred = col("vec_id") % 10 === 0
-    val viaAsset = ext.Similarity.ivfTopKIndexedFresh(idx, d, pred)
+    val viaAsset = ext.Similarity.ivfTopKIndexed(
+        ext.Assets.requireFresh(idx, fam, d), pred)
       .as[(Long, Long, Long, Double)].collect().toSet
     val direct = ext.Similarity.ivfTopK(emb, pred)
       .as[(Long, Long, Long, Double)].collect().toSet
@@ -152,9 +160,38 @@ class Round18OpsSpec extends SparkSuite {
       s"versioned IVF probe must be bit-equal:\n  asset : $viaAsset" +
         s"\n  direct: $direct")
     val eStale = intercept[IllegalArgumentException] {
-      ext.Similarity.ivfTopKIndexedFresh(idx, d + 1, pred)
+      ext.Assets.requireFresh(idx, fam, d + 1)
     }
     assert(eStale.getMessage.contains("STALE"), eStale.getMessage)
+  }
+
+  test("Assets.path: a geometry change moves the path, the same (name, " +
+    "family, digest) reuses the warm asset") {
+    val corpus = corpusFixture
+    val digest = ext.Assets.textDigest(corpus)
+    val name = assetName("path18")
+    val b3 = ext.Dedup.bandIndex(16, 4, 3)
+    val b5 = ext.Dedup.bandIndex(16, 4, 5)
+    // two geometries of one family over one digest: two paths
+    assert(ext.Assets.path(name, b3, digest) !=
+      ext.Assets.path(name, b5, digest))
+    assert(ext.Assets.path(name, ext.Dedup.clusterMap(16, 4, 5, 0.5), digest)
+      != ext.Assets.path(name, ext.Dedup.clusterMap(16, 4, 5, 0.9), digest))
+    // the same triple, declared afresh: one path, served warm
+    assert(ext.Assets.path(name, b3, digest) ==
+      ext.Assets.path(name, ext.Dedup.bandIndex(16, 4, 3), digest))
+    val built = ext.Assets.ensure(spark, name, b3, digest)(
+      ext.Dedup.buildBandIndex(corpus, k = 16, bands = 4, n = 3))
+    val warm = ext.Assets.ensure(spark, name, ext.Dedup.bandIndex(16, 4, 3),
+      digest)(sys.error("a warm asset must be served, not rebuilt"))
+    assert(warm.count() == built.count())
+    // the other geometry is another asset: built, not served b3's rows
+    var builds = 0
+    val other = ext.Assets.ensure(spark, name, b5, digest) {
+      builds += 1
+      ext.Dedup.buildBandIndex(corpus, k = 16, bands = 4, n = 5)
+    }
+    assert(builds == 1 && other.schema("band_sigs").metadata.getLong("n") == 5)
   }
 
   test("q271/q272/q273 registry: versioned driver rows share their " +
@@ -171,9 +208,11 @@ class Round18OpsSpec extends SparkSuite {
     val corpus = corpusFixture
     val nd = freshFixture
     val digest = ext.Assets.textDigest(corpus)
-    val idx = ext.Assets.ensure(spark, tmp("dh18"), "b0", digest)(
+    val fam = ext.Dedup.dhashIndex
+    val idx = ext.Assets.ensure(spark, assetName("dh18"), fam, digest)(
       ext.Dedup.buildDhashIndex(corpus))
-    val viaAsset = ext.Dedup.dhashNewVsIndexFresh(nd, idx, digest)
+    val viaAsset = ext.Dedup.dhashNewVsIndex(nd,
+        ext.Assets.requireFresh(idx, fam, digest))
       .as[(Long, Long, Long)].collect().toSet
     val direct = ext.Dedup.dhashNewVsCorpus(nd, corpus)
       .as[(Long, Long, Long)].collect().toSet
@@ -184,13 +223,12 @@ class Round18OpsSpec extends SparkSuite {
     assert(direct.exists { case (n, c, h) => n == 100L && c == 0L && h == 0L },
       s"exact copy must gate at distance 0: $direct")
     val eStale = intercept[IllegalArgumentException] {
-      ext.Dedup.dhashNewVsIndexFresh(nd, idx, digest + 1)
+      ext.Assets.requireFresh(idx, fam, digest + 1)
     }
     assert(eStale.getMessage.contains("STALE"), eStale.getMessage)
     // unstamped plain band frame: no digest metadata
     val eBare = intercept[IllegalArgumentException] {
-      ext.Dedup.dhashNewVsIndexFresh(nd,
-        ext.Dedup.buildDhashIndex(corpus), digest)
+      ext.Assets.requireFresh(ext.Dedup.buildDhashIndex(corpus), fam, digest)
     }
     assert(eBare.getMessage.contains(ext.Assets.DigestKey), eBare.getMessage)
     // a frame with NO raster-geometry metadata at all (a foreign writer):
@@ -210,14 +248,13 @@ class Round18OpsSpec extends SparkSuite {
     corpusFixture.write.mode("overwrite").parquet(s"$corpusDir/docs.parquet")
     val corpus = spark.read.parquet(s"$corpusDir/docs.parquet")
     val digest = ext.Assets.textDigest(corpus)
-    val idxPath = tmp("gr18idxXYZ")
-    val mapPath = tmp("gr18mapXYZ")
-    val idx = ext.Assets.ensure(spark, idxPath, "band_sigs", digest)(
+    val idx = ext.Assets.ensure(spark, assetName("gr18idxXYZ"),
+      ext.Dedup.bandIndex(16, 4, 5), digest)(
       ext.Dedup.buildBandIndex(corpus, k = 16, bands = 4, n = 5))
-    val cmap = ext.Assets.ensure(spark, mapPath, "cluster_id", digest)(
+    val cmap = ext.Assets.ensure(spark, assetName("gr18mapXYZ"),
+      ext.Dedup.clusterMap(16, 4, 5, 0.5), digest)(
       ext.Dedup.buildClusterMap(corpus))
-    val gate = ext.Dedup.incrementalSplitFresh(freshFixture, idx, cmap,
-      digest)
+    val gate = ext.Dedup.incrementalSplitIndexed(freshFixture, idx, cmap)
     gate.collect() // materialize so AQE settles the final plan
     // every FileScan in the gate plan reads an ASSET, never the corpus
     // (scan locations via the formatted explain — AQE nests the physical

@@ -48,9 +48,6 @@ class Round19OpsSpec extends SparkSuite {
     (105L, "abc")))
   private def grown = corpus0.unionByName(delta0)
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).resolve(tag).toString
-
   // bands = 8 (rows = 2) for the cluster tests: the bridge doc sits near
   // j ≈ 0.55 to each standing singleton, and two-hash bands make its
   // band-collision near-certain while leaving the 20↔21 pair (j ≈ 0.3)
@@ -62,11 +59,11 @@ class Round19OpsSpec extends SparkSuite {
     "grown corpus, through Assets.advance's parquet round-trip") {
     val d0 = ext.Assets.textDigest(corpus0)
     val d1 = ext.Assets.textDigest(grown)
-    val oldPath = tmp("bandadv0")
-    ext.Assets.ensure(spark, oldPath, "band_sigs", d0)(
+    val name = assetName("bandadv")
+    val fam = ext.Dedup.bandIndex(16, 4, 3)
+    ext.Assets.ensure(spark, name, fam, d0)(
       ext.Dedup.buildBandIndex(corpus0, k = 16, bands = 4, n = 3))
-    val advanced = ext.Assets.advance(spark, tmp("bandadv1"), "band_sigs",
-      d1, oldPath, d0)(
+    val advanced = ext.Assets.advance(spark, name, fam, d0, d1)(
       old => ext.Dedup.advanceBandIndex(old, delta0, k = 16, bands = 4,
         n = 3))(
       sys.error("old asset is fresh — advance must not full-build"))
@@ -78,8 +75,8 @@ class Round19OpsSpec extends SparkSuite {
     assert(rows(advanced) == rows(scratch) && rows(scratch).size >= 10,
       "advanced band index must equal the from-scratch build")
     // stamped + geometry carried: the fresh gate accepts it as-is
-    assert(ext.Dedup.minhashNewVsIndexFresh(mk(Seq((900L, body(2)))),
-      advanced, d1, k = 16, bands = 4, n = 3)
+    assert(ext.Dedup.minhashNewVsIndex(mk(Seq((900L, body(2)))),
+      ext.Assets.requireFresh(advanced, fam, d1), k = 16, bands = 4, n = 3)
       .as[(Long, Long, Double)].collect()
       .exists { case (n, c, j) => n == 900L && c == 10L && j == 1.0 })
     // delta re-containing an indexed id: loud, names the id
@@ -195,25 +192,27 @@ class Round19OpsSpec extends SparkSuite {
     val docs = corpus0
     val d0 = ext.Assets.textDigest(docs)
     val d1 = ext.Assets.textDigest(grown)
-    val oldPath = tmp("advold")
-    val newPath = tmp("advnew")
-    ext.Assets.ensure(spark, oldPath, "band_sigs", d0)(
+    val name = assetName("adv")
+    val fam = ext.Dedup.bandIndex(16, 4, 3)
+    ext.Assets.ensure(spark, name, fam, d0)(
       ext.Dedup.buildBandIndex(docs, k = 16, bands = 4, n = 3))
     // old asset fresh → advance arm; full-build arm poisoned
-    val adv = ext.Assets.advance(spark, newPath, "band_sigs", d1,
-      oldPath, d0)(
+    val adv = ext.Assets.advance(spark, name, fam, d0, d1)(
       old => ext.Dedup.advanceBandIndex(old, delta0, k = 16, bands = 4,
         n = 3))(sys.error("must advance, not full-build"))
     assert(adv.schema("band_sigs").metadata
       .getLong(ext.Assets.DigestKey) == d1)
     // published → serve; BOTH arms poisoned
-    val served = ext.Assets.advance(spark, newPath, "band_sigs", d1,
-      oldPath, d0)(_ => sys.error("must serve, not advance"))(
+    val served = ext.Assets.advance(spark, name, fam, d0, d1)(
+      _ => sys.error("must serve, not advance"))(
       sys.error("must serve, not full-build"))
     assert(served.count() == adv.count())
-    // old asset STALE (wrong digest) → full-build; advance arm poisoned
-    val fb = ext.Assets.advance(spark, tmp("advnew2"), "band_sigs", d1,
-      oldPath, d0 + 1)(
+    // old asset STALE (stamped d0, found where d0 + 1 belongs) →
+    // full-build; advance arm poisoned
+    val name2 = assetName("adv2")
+    copyTree(ext.Assets.path(name, fam, d0),
+      ext.Assets.path(name2, fam, d0 + 1))
+    val fb = ext.Assets.advance(spark, name2, fam, d0 + 1, d1)(
       _ => sys.error("stale base must not be advanced"))(
       ext.Dedup.buildBandIndex(grown, k = 16, bands = 4, n = 3))
     assert(fb.count() == adv.count(),
@@ -225,13 +224,14 @@ class Round19OpsSpec extends SparkSuite {
     "cache miss, not an error") {
     val docs = corpus0
     val d0 = ext.Assets.textDigest(docs)
-    val path = tmp("race")
+    val name = assetName("race")
+    val fam = ext.Dedup.bandIndex(16, 4, 3)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     def one() = Future {
-      ext.Assets.ensure(spark, path, "band_sigs", d0) {
+      ext.Assets.ensure(spark, name, fam, d0) {
         builds.incrementAndGet()
         ext.Dedup.buildBandIndex(docs, k = 16, bands = 4, n = 3)
       }
@@ -247,20 +247,22 @@ class Round19OpsSpec extends SparkSuite {
     // schema drift: a cached parquet at the path that LACKS the key
     // column (builder output-schema change under an unchanged key) must
     // REBUILD — the round-18 form threw IllegalArgumentException here
-    val drifted = tmp("drift")
-    spark.range(5).toDF("not_the_key").write.parquet(drifted)
-    val fixed = ext.Assets.ensure(spark, drifted, "band_sigs", d0)(
+    val drifted = assetName("drift")
+    spark.range(5).toDF("not_the_key").write
+      .parquet(ext.Assets.path(drifted, fam, d0))
+    val fixed = ext.Assets.ensure(spark, drifted, fam, d0)(
       ext.Dedup.buildBandIndex(docs, k = 16, bands = 4, n = 3))
     assert(fixed.count() == want && fixed.schema("band_sigs").metadata
       .getLong(ext.Assets.DigestKey) == d0)
     // an asset directory WITHOUT the committer's _SUCCESS marker (a
     // write in flight or a mid-commit kill) is invisible to readers
-    val partial = tmp("partial")
-    spark.range(3).toDF("x").write.parquet(partial)
-    val fs = new org.apache.hadoop.fs.Path(partial)
+    val partial = assetName("partial")
+    val partialPath = ext.Assets.path(partial, fam, d0)
+    spark.range(3).toDF("x").write.parquet(partialPath)
+    val fs = new org.apache.hadoop.fs.Path(partialPath)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(partial, "_SUCCESS"), false)
-    val rebuilt = ext.Assets.ensure(spark, partial, "band_sigs", d0)(
+    fs.delete(new org.apache.hadoop.fs.Path(partialPath, "_SUCCESS"), false)
+    val rebuilt = ext.Assets.ensure(spark, partial, fam, d0)(
       ext.Dedup.buildBandIndex(docs, k = 16, bands = 4, n = 3))
     assert(rebuilt.count() == want)
   }

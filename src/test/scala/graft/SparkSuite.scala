@@ -43,4 +43,21 @@ trait SparkSuite extends AnyFunSuite {
       s"${gate.name} at n=$n")
     runs.map(_._2)
   }
+
+  /** An asset name no earlier run used, so a test's assets start cold in
+    * the shared store under `java.io.tmpdir`.
+    */
+  def assetName(tag: String): String =
+    s"$tag-${java.util.UUID.randomUUID()}"
+
+  /** Copies the directory tree at `from` to `to` — e.g. to plant an asset
+    * stamped with one digest at the store path of another.
+    */
+  def copyTree(from: String, to: String): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val src = new org.apache.hadoop.fs.Path(from)
+    val fs = src.getFileSystem(conf)
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
+      new org.apache.hadoop.fs.Path(to), false, conf))
+  }
 }

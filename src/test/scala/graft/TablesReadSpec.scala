@@ -34,10 +34,12 @@ class TablesReadSpec extends SparkSuite {
     } finally sc.removeSparkListener(l)
   }
 
-  private def asset(path: String): DataFrame =
-    Assets.ensure(spark, path, "doc_id", 7L)(Assets.withGeometry(
-      spark.range(5).toDF("doc_id"), "doc_id",
-      Seq("k" -> 16, "minJaccard" -> 0.5)))
+  private val family =
+    Assets.Family("test asset", "doc_id", Seq("k" -> 16, "minJaccard" -> 0.5))
+
+  private def asset(name: String): DataFrame =
+    Assets.ensure(spark, name, family, 7L)(
+      Assets.withGeometry(spark.range(5).toDF("doc_id"), family))
 
   test("building every Tables frame and a warm Assets.ensure runs no job") {
     val builders: Seq[(String, () => DataFrame)] = Seq(
@@ -55,10 +57,9 @@ class TablesReadSpec extends SparkSuite {
       val (_, jobs) = jobsDuring(build())
       assert(jobs == 0, s"Tables.$name ran $jobs job(s)")
     }
-    val path =
-      Files.createTempDirectory("graft-read-").resolve("asset").toString
-    asset(path).count() // cold: builds and publishes
-    val (warm, jobs) = jobsDuring(asset(path))
+    val name = assetName("graft-read")
+    asset(name).count() // cold: builds and publishes
+    val (warm, jobs) = jobsDuring(asset(name))
     assert(jobs == 0, s"a warm Assets.ensure ran $jobs job(s)")
     assert(warm.count() == 5)
   }
@@ -70,10 +71,9 @@ class TablesReadSpec extends SparkSuite {
         Tables.parquet(spark, Seq(p)).schema == spark.read.parquet(p).schema,
         name)
     }
-    val path =
-      Files.createTempDirectory("graft-read-").resolve("asset").toString
-    val schema = asset(path).schema
-    assert(schema == spark.read.parquet(path).schema)
+    val name = assetName("graft-read")
+    val schema = asset(name).schema
+    assert(schema == spark.read.parquet(Assets.path(name, family, 7L)).schema)
     val meta = schema("doc_id").metadata
     assert(meta.getLong(Assets.DigestKey) == 7L)
     assert(meta.getLong("k") == 16L && meta.getDouble("minJaccard") == 0.5)
